@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line with per-query seconds
   * on SPARK_GRAFT_SF_DIR. Headline set per BASELINE.md — one query per
   * heavy category — plus the tuner loop. Results are forced through the
@@ -19,19 +17,15 @@ object Bench {
     "q34_sessionization",  // sessionization windows
     "q43_minhash_lsh",     // minhash LSH dedup (scale path)
     "q_simhash",           // simhash fingerprints
-    // Round 15: the r13-item-5 AQE-off matrix times q_stratified_sample
-    // with AQE off, but the record carried no AQE-on twin to compare the
-    // skew-hardened shape against (VERDICT r14 item 4, parenthetical).
-    // The AQE-on entry joins the headline set so the twin ratio is an
-    // in-record fact like q43's.
+    // The AQE-on twin of q_stratified_sample__aqe_off, so the
+    // skew-hardened shape's off/on ratio is an in-record fact like q43's.
     "q_stratified_sample") // per-stratum quota sampling (salted)
 
-  /** Harness-paced entries (VERDICT r7 item 5): timed and gated like the
-    * headline set — same interleaved passes, same regression tolerance —
-    * but reported under a separate "meta" section so the headline total
-    * stays a pure plan-quality number. q_tuner_loop is a 3-iteration
-    * driver loop with metrics-store IO; its ~2 s measures harness + tuner
-    * overhead, ~12% of the old total, and was diluting plan regressions. */
+  /** Harness-paced entries: timed and gated like the headline set — same
+    * interleaved passes, same regression tolerance — but reported under a
+    * separate "meta" section so the headline total stays a pure
+    * plan-quality number. q_tuner_loop is a 3-iteration driver loop with
+    * metrics-store IO; its ~2 s measures harness + tuner overhead. */
   val metaSuite: Seq[String] = Seq(
     "q_tuner_loop")        // tuner record+recommend loop (3 runs of Q01)
 
@@ -44,8 +38,7 @@ object Bench {
     "q18_topk", "q31_jaccard_pairs", "q32_cosine_topk",
     "q34_sessionization", "q43_minhash_lsh", "q_simhash",
     "q_dedup_clusters", "q_ann_ivf", "q_ann_lsh", "q_span_dedup",
-    // Round-7 pipeline additions measure their exponents too — a new
-    // operator ships with scale evidence, not just a design argument.
+    // Pipeline operators: a new operator ships with scale evidence.
     "q_bm25_rank", "q_containment_pairs", "q_temperature_mix",
     "q_shard_manifest", "q_prefix_dup", "q_rare_token_ratio",
     "q_pmi_pairs", "q_bpe_merges", "q_label_centroid",
@@ -58,17 +51,17 @@ object Bench {
     "q_zorder_key", "q_key_skew", "q_cms_topk", "q_pagerank_parts",
     "q_triangle_count", "q_event_transitions", "q_decay_sum", "q_ann_pq",
     "q_bigram_lm", "q_ann_ivfpq", "q_incr_rollup",
-    // Round-8 profiling/sampling additions.
+    // Profiling/sampling.
     "q_posting_stats", "q_stratified_sample", "q_debounce_dedup",
     "q_anomaly_zscore", "q_mad_outliers", "q_equidepth_bins",
     "q_compaction_plan", "q_langid_confusion", "q_llr_keywords",
-    // Round-8 continuation: event history + sketch Aggregator.
+    // Event history + sketch Aggregator.
     "q_scd2_dim", "q_session_concurrency", "q_spacesaving_topk",
     "q_group_topk_sketch", "q_variant_json", "q_embed_standardize",
-    // Round-8 continuation: model-eval tier + frontier BFS + resampling.
+    // Model-eval tier + frontier BFS + resampling.
     "q_auc_rank", "q_linreg_closed", "q_calibration_bins",
     "q_weighted_sample", "q_ohlc_resample", "q_gap_fill", "q_bfs_hops",
-    // Round-8 continuation: interval/repetition/vocab/kNN-graph batch.
+    // Interval/repetition/vocab/kNN-graph.
     // q_knn_graph is the declared exact twin (quadratic by contract);
     // its 100 TB path is the IVF construction measured via q_ann_ivf.
     "q_interval_merge", "q_repetition_ratio", "q_vocab_cdf",
@@ -85,42 +78,28 @@ object Bench {
     // Per-block dedup contamination (rides the q31 exact-pair tier).
     "q_dedup_rate",
     // Curation-report tier (threshold curve, inflation, cluster sizes,
-    // quota capping) + the banded SimHash pair join after its round-9
-    // single-fingerprint-chain restructure.
+    // quota capping) + the banded SimHash pair join.
     "q_threshold_sweep", "q_dup_inflation", "q_cluster_size_stats",
     "q_quota_sample", "q_simhash_pairs")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // Scan-split override for evidence runs (round 14): the third decade
-    // exposed that a single-file compressed-text fixture starves the
-    // tokenize stage at the default 128 MB split (sf10 documents = ONE
-    // 79 MB file = ONE scan task on 32 cores; sf100 = 874 MB = ~7), which
-    // read as impossible sub-linear exponents. This applies the same
-    // split sizing the tuner's scan tier recommends
-    // (ComputePartitions.maxPartitionBytes: input/slots, clamped ≥ 4 MB).
-    // NEVER set by driver invocations — committed BENCH numbers stay
-    // out-of-box conf. The contract is machine-checkable, not advisory
-    // (ADVICE r14): the override (or its absence, null) is stamped into
-    // the emitted record as "max_partition_bytes_override".
+    val cpus = graft.core.Session.cpus(32)
+    // Scan-split override for evidence runs: a single-file compressed-text
+    // fixture starves the tokenize stage at the default 128 MB split (sf10
+    // documents = ONE 79 MB file = ONE scan task on 32 cores), which reads
+    // as impossible sub-linear exponents. This applies the split sizing
+    // the tuner's scan tier recommends (ComputePartitions.maxPartitionBytes).
+    // NEVER set by graded invocations, so committed BENCH numbers stay
+    // out-of-box conf; the override (or null) is stamped into the record
+    // as "max_partition_bytes_override".
     val mpbOverride = sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    mpbOverride
-      .foreach(v => builder.config("spark.sql.files.maxPartitionBytes", v))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.LogQuiet.boundedWindowWarnings()
+    val spark = graft.core.Session.local(s"local[$cpus]", cpus,
+      mpbOverride.map("spark.sql.files.maxPartitionBytes" -> _).toSeq: _*)
 
-    // Machine-load metadata (VERDICT r9 item 5): the r8→r9 gate comparison
-    // needed a narrative VM-drift adjudication twice; recording 1-min load
-    // average per pass plus the /proc/stat busy fraction over the whole
-    // run makes that adjudication mechanical (gate_diff prints it).
+    // Machine-load metadata: 1-min load average per pass plus the
+    // /proc/stat busy fraction over the whole run, so VM-drift
+    // adjudication is mechanical (gate_diff prints it).
     def readProcLine(path: String): Option[String] = scala.util.Try {
       val src = scala.io.Source.fromFile(path)
       try src.getLines().next() finally src.close()
@@ -143,13 +122,10 @@ object Bench {
     val loadPasses = scala.collection.mutable.ArrayBuffer[Double]()
     val (busy0, total0) = cpuJiffies
 
-    // Host-speed probe (round 11): a FIXED single-thread workload timed on
-    // this run, so every bench record carries a machine-speed number that
-    // survives the round boundary. The r11 gate hit a suite-wide +25-50%
-    // inflation on an idle guest — loadavg 1-2/32, stat_busy 0.07, steal
-    // 0.07% — i.e. host-level slowdown invisible to every in-guest load
-    // metric gate_diff could corroborate drift with. A fixed-work probe
-    // ratio between two rounds' records measures exactly that. xorshift64
+    // Host-speed probe: a FIXED single-thread workload timed on this run,
+    // so every record carries a machine-speed number comparable across
+    // records. Host-level slowdown on an idle guest is invisible to every
+    // in-guest load metric; a fixed-work probe ratio measures it. xorshift64
     // + sum: deterministic, allocation-free, JIT-warmed by the first
     // (discarded) rep; min-of-3 defends against a scheduler blip.
     def hostProbeSec(): Double = {
@@ -167,12 +143,9 @@ object Bench {
     }
     val probeSec = hostProbeSec()
 
-    // Memory-stream probe (round 11, follow-up): the r11c gate run saw a
-    // SECOND uniform-inflation mode — suite +28% with the disk probe
-    // healthy (417-462 MB/s) and the xorshift probe flat. The xorshift
-    // loop is register-only, blind to the memory-bandwidth / LLC
-    // contention a host neighbor can impose, which Spark's scan+shuffle
-    // working sets feel directly. A 128 MB sequential long-sum (beyond
+    // Memory-stream probe: the xorshift loop is register-only, blind to
+    // the memory-bandwidth / LLC contention a host neighbor can impose,
+    // which Spark's scan+shuffle working sets feel directly. A 128 MB sequential long-sum (beyond
     // any LLC) is the cheapest in-guest bandwidth gauge; reported as
     // GB/s, min-of-5 after a JIT/touch warmup rep.
     def memProbeGbS(): Double = {
@@ -192,58 +165,46 @@ object Bench {
     }
     val memGbS = memProbeGbS()
 
-    // Disk-write probe (round 11, same investigation): the r11 suite
-    // inflation turned out to track the DEVICE WRITE throughput of the
-    // VM's disk, measured fluctuating 12 -> 460 MB/s across minutes on an
-    // otherwise idle guest (bench_evidence/r11_drift_io.txt) — Spark
-    // shuffle/temp writes ride that device, a tight CPU loop doesn't,
-    // which is why probe_sec alone stayed flat while the suite moved.
-    // 64 MB written + fsync'd to the filesystem Spark's local dirs
-    // actually use — spark.local.dir / SPARK_LOCAL_DIRS when configured,
-    // java.io.tmpdir otherwise (ADVICE r11: probing /tmp while shuffle
-    // rides another device — or /tmp being tmpfs, where the probe reads
-    // memory speed — would silently decouple io_mb_s from the device the
-    // gate's drift corroboration reasons about). The probed path rides in
-    // the bench record so that coupling is auditable per round. Sampled
-    // before and after the suite so a mid-run throttle episode shows up
-    // in at least one sample.
-    // Shared implementation since round 13 (graft.core.IoProbe) — the
-    // StreamScale copy had drifted; one probe, two callers.
+    // Disk-write probe: suite time can track the DEVICE WRITE throughput
+    // of the VM's disk (12 -> 460 MB/s across minutes on an idle guest,
+    // bench_evidence/r11_drift_io.txt) — Spark shuffle/temp writes ride
+    // that device, a tight CPU loop doesn't. 64 MB written + fsync'd to
+    // the filesystem Spark's local dirs actually use (spark.local.dir /
+    // SPARK_LOCAL_DIRS, else java.io.tmpdir): probing another device, or
+    // a tmpfs /tmp, would decouple io_mb_s from the device gate_diff's
+    // drift corroboration reasons about. The probed path rides in the
+    // record. Sampled before and after the suite so a mid-run throttle
+    // episode shows up in at least one sample.
     val ioProbePath: String =
       graft.core.IoProbe.path(spark.conf.getOption("spark.local.dir"))
     def ioProbeMbS(): Double = graft.core.IoProbe.mbPerSec(ioProbePath)
 
-    // IO-probe-gated RECORDING (VERDICT r13 item 1): r13's committed
-    // bench was taken in a degraded-IO window (probe 176 MB/s vs the
-    // 294-466 healthy band) and carried a load tax the same round's
-    // healthy-IO evidence disproved — the harness gated its comparison
-    // on load but not its recording. Three mechanisms close that:
+    // IO-probe-gated RECORDING: a record taken in a degraded-IO window
+    // carries a load tax the code does not. Three mechanisms:
     //   (a) pre-suite, while the probe reads below the healthy band,
-    //       wait 45 s and re-probe (up to 2 retries) before starting;
+    //       wait 45 s and re-probe (up to 4 retries) before starting;
     //   (b) if the probe bracketing the suite (last pre, or post) read
-    //       degraded anyway, run ONE extra timed pass — min-of-N only
+    //       degraded anyway, run extra timed passes — min-of-N only
     //       needs one healthy-window sample per query (contention only
     //       ever adds time);
     //   (c) stamp load.healthy (+ the threshold used) in the record, so
     //       "was this number taken under healthy IO" is a field, not an
     //       arbitration narrative.
-    // Threshold: 250 MB/s ~ the floor of the r11-r13 healthy epoch band;
-    // a probe that cannot run (-1) neither loops nor certifies.
+    // Threshold: 250 MB/s ~ the floor of the healthy band; a probe that
+    // cannot run (-1) neither loops nor certifies.
     val ioHealthyMbS: Double = scala.util.Try(
       sys.env("SPARK_GRAFT_IO_HEALTHY_MBS").trim.toDouble).getOrElse(250.0)
     def ioDegraded(v: Double): Boolean = v >= 0 && v < ioHealthyMbS
     // A timed pass is certified ONLY by two probes that both RAN and both
-    // met the band (round-15 review: the earlier filter(_ >= 0) let a
-    // failed probe silently halve the requirement — one -1 next to one
-    // in-band sample certified a pass the device could have throttled
-    // through). -1 still never triggers the retry loop (it proves
-    // nothing either way); it just cannot certify. Shared by the
-    // headline bracket and the scale block's per-pass brackets.
+    // met the band: one -1 next to one in-band sample must not certify a
+    // pass the device could have throttled through. -1 never triggers the
+    // retry loop (it proves nothing either way); it just cannot certify.
+    // Shared by the headline bracket and the scale block's per-pass
+    // brackets.
     def bracketInBand(pre: Double, post: Double): Boolean =
       pre >= ioHealthyMbS && post >= ioHealthyMbS
-    // Pre-wait budget raised 3 → 5 samples in round 15: the r14 record's
-    // degraded window outlasted the two 45 s waits; two more are cheap
-    // next to a suite that cannot certify healthy without them.
+    // Up to 5 pre-suite samples: a degraded window can outlast two 45 s
+    // waits, and waits are cheap next to a suite that cannot certify.
     val ioPreSamples = scala.collection.mutable.ArrayBuffer(ioProbeMbS())
     while (ioDegraded(ioPreSamples.last) && ioPreSamples.length < 5) {
       System.err.println(f"[bench] io probe ${ioPreSamples.last}%.0f MB/s " +
@@ -267,16 +228,12 @@ object Bench {
     // Steady-state measurement: one untimed pass over the headline set
     // first, so whole-stage codegen compilation and parquet footer caches
     // are charged to warmup, not to whichever query happens to run first
-    // (round-1 charged ~1.5 s of JIT to q01). See BENCH_NOTES.md. The
-    // contract is ONE JSON line no matter what, so warmup is guarded too.
-    // Evidence-run scoping (round 14): SPARK_GRAFT_BENCH_SUITE scopes the
-    // timed headline set the same way SPARK_GRAFT_SCALE_SUITE scopes the
-    // scale block. A third-decade run whose BASE dir is sf10 pays ~8 min
-    // per full headline pass for numbers the decade doesn't use; scoping
-    // to one cheap query keeps the one-line contract (and the mirror)
-    // intact without the tax. Driver round invocations never set it —
-    // the committed BENCH_r*.json always carries the full suite. The
-    // meta and AQE-off blocks run their defaults ∩ the scoped set.
+    // (BENCH_NOTES.md). The contract is ONE JSON line no matter what, so
+    // warmup is guarded too. SPARK_GRAFT_BENCH_SUITE scopes the timed
+    // headline set for evidence runs the way SPARK_GRAFT_SCALE_SUITE
+    // scopes the scale block; graded invocations never set it, so the
+    // committed BENCH_r*.json always carries the full suite. The meta and
+    // AQE-off blocks run their defaults ∩ the scoped set.
     val benchScoped = sys.env.contains("SPARK_GRAFT_BENCH_SUITE")
     val headlineRun = graft.core.EnvSuite.scope("SPARK_GRAFT_BENCH_SUITE",
       headline, SparkEntry.queries.contains, "bench")
@@ -285,10 +242,9 @@ object Bench {
     val suiteRun = (headlineRun.filterNot(metaSuite.contains) ++ metaRun).distinct
     suiteRun.foreach(run)
 
-    // Median of 3 timed passes per query: sub-second machine-load noise
-    // was indistinguishable from real regressions in single-pass rounds
-    // (r02's q04_aqe_off "+17%" was noise). Min rides along in
-    // queries_min as the low-noise floor.
+    // Median of 3 timed passes per query: single-pass sub-second load
+    // noise is indistinguishable from real regressions. Min rides along
+    // in queries_min as the low-noise floor.
     // Guarded parse: a malformed env value must not crash main() before
     // the JSON line is emitted (the one-line contract).
     // Clamped to >= 1: zero/negative values would make every (1 to REPS)
@@ -296,51 +252,17 @@ object Bench {
     val REPS = math.max(1,
       scala.util.Try(sys.env("SPARK_GRAFT_BENCH_REPS").trim.toInt).getOrElse(3))
     // Pass-major (interleaved) repetition: run REPS full passes over the
-    // suite and take per-query stats ACROSS passes, instead of REPS
+    // suite and take per-query stats ACROSS passes, never REPS
     // back-to-back reps per query. A transient load spike then inflates
     // one rep of several queries — which the min shrugs off — rather than
-    // every rep of one query, which no statistic can recover from (the
-    // r06 driver run inflated q15/q_simhash medians AND mins 68-70% with
-    // untouched code; gate_diff now arbitrates on queries_min).
-    // SPARK_GRAFT_BENCH_MODE=grouped restores the pre-round-7 query-major
-    // loop (REPS back-to-back reps per query). Kept as an explicit mode
-    // because the two are NOT comparable: back-to-back reps inherit each
-    // other's JIT/page-cache/shuffle-file warmth, so grouped mins read
-    // systematically lower on cache-heavy queries (q43 ~-15%) — that is
-    // measurement warmth, not engine speed. Interleaved is the honest
-    // steady-state estimate and the default; gate_diff refuses cross-mode
-    // diffs (see BENCH_NOTES round-7 methodology entry for the A/B).
-    val MODE = sys.env.get("SPARK_GRAFT_BENCH_MODE") match {
-      case Some("grouped") => "grouped"
-      case _ => "interleaved"
-    }
-    def suiteReps(names: Seq[String], passes: Int): Seq[(String, Seq[Double])] = {
-      val perQuery: Map[String, Seq[Double]] =
-        if (MODE == "grouped")
-          // Grouped reps sample load ONCE PER QUERY BLOCK (one sample per
-          // query name), so BOTH modes feed the gate's drift corroboration
-          // — but the array is shaped differently per mode, so it is
-          // emitted under a MODE-SPECIFIC key (VERDICT r11 item 4):
-          // interleaved = "avg1_passes", one sample per suite pass (REPS
-          // entries); grouped = "avg1_blocks", one sample per query block
-          // (names.length entries). Same statistic either way — "1-min
-          // loadavg sampled during the run" — and gate_diff reads either
-          // key and takes the median; the split names just stop two
-          // shapes from sharing one field.
-          names.map { n =>
-            val reps = Seq.fill(passes)(run(n))
-            loadPasses += loadAvg1
-            n -> reps
-          }.toMap
-        else {
-          val allPasses = Seq.fill(passes) {
-            val p = names.map(n => n -> run(n)).toMap
-            loadPasses += loadAvg1
-            p
-          }
-          names.map(n => n -> allPasses.map(_(n))).toMap
-        }
-      names.map(n => n -> perQuery(n))
+    // every rep of one query, which no statistic can recover from; and
+    // back-to-back reps inherit each other's JIT/page-cache warmth, so
+    // their mins read measurement warmth, not engine speed. One 1-min
+    // load sample per pass feeds load.avg1_passes.
+    def suitePass(names: Seq[String]): Seq[(String, Seq[Double])] = {
+      val p = names.map(n => n -> Seq(run(n)))
+      loadPasses += loadAvg1
+      p
     }
     // (median, min) over the reps each query accumulated — including any
     // degraded-IO retry pass appended below; min-of-N is the published
@@ -356,20 +278,15 @@ object Bench {
       base.map { case (n, rs) => n -> (rs ++ em.getOrElse(n, Nil)) }
     }
     // Meta entries ride in the SAME passes as the headline queries (one
-    // combined suite), so every per-query timing keeps the exact pass
-    // composition of earlier rounds — the split below is reporting only.
+    // combined suite), so the split below is reporting only and never
+    // changes a pass's composition.
     var combinedReps = suiteRun.map(n => n -> Seq.empty[Double])
-    // AQE interaction record (BASELINE.md): headline queries with
-    // adaptive execution off, to expose what runtime re-planning buys.
-    // Widened in round 14 (VERDICT r13 item 5) from q01/q04 to the two
-    // skew-hardened shapes: q43's salted triangle-cell LSH join and
-    // q_stratified_sample's per-stratum quota — at 100 TB on a real
-    // cluster AQE's skew-split thresholds differ from local[32], so the
-    // manual salting must hold per-task bounds WITHOUT AQE's help.
-    // Round 16 (VERDICT r15 item 3): the whole headline set is paired —
-    // the remaining six entries had no __aqe_off twin, so "this plan
-    // doesn't lean on local[32]'s AQE thresholds" was an argument, not a
-    // record, for exactly the queries a cluster would run most.
+    // AQE interaction record (BASELINE.md): every headline query also runs
+    // with adaptive execution off. On a real cluster AQE's skew-split
+    // thresholds differ from local[N], so each plan — above all q43's
+    // salted triangle-cell LSH join and q_stratified_sample's per-stratum
+    // quota — must hold its per-task bounds WITHOUT AQE's help; the
+    // __aqe_off twin makes that a record, not an argument.
     val aqeOffNames = {
       val defaults = Seq("q01_pricing_summary", "q04_multiway_join",
         "q15_window_rank", "q18_topk", "q31_jaccard_pairs",
@@ -377,57 +294,44 @@ object Bench {
         "q_simhash", "q_stratified_sample")
       if (benchScoped) defaults.filter(headlineRun.contains) else defaults
     }
-    def aqeOffReps(passes: Int): Seq[(String, Seq[Double])] = {
+    def aqeOffPass(): Seq[(String, Seq[Double])] = {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val off = suiteReps(aqeOffNames, passes)
+      val off = suitePass(aqeOffNames)
         .map { case (n, rs) => s"${n}__aqe_off" -> rs }
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       off
     }
     // Warm EVERY off entry under the AQE-OFF conf its __aqe_off reps run
-    // with (generalized from the r15 q_stratified_sample special case):
-    // the headline warmup compiles only the AQE-on plans, and an
+    // with: the headline warmup compiles only the AQE-on plans, and an
     // off-variant's first whole-stage-codegen compilation must charge to
-    // warmup like everyone else's — with the matrix widened to all ten
-    // headline entries, an unwarmed first off pass would tax exactly the
-    // new twins this round exists to measure.
+    // warmup like everyone else's.
     if (aqeOffNames.nonEmpty) {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       aqeOffNames.foreach(run)
       spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
-    // AQE-off twins ride the SAME time windows as their AQE-on twins
-    // (round 15): the off entries used to run as their own tail block
-    // after ALL on passes — on a device whose throughput swings mid-suite
-    // the twin ratio then measures window drift, not AQE (the r14 record
-    // read q43 off/on 1.40×, the r15 gate rehearsal 1.51×, while a
-    // controlled same-window A/B reads 1.08× —
-    // bench_evidence/r15_q43_aqe_ab.json). Interleaved mode now runs
-    // each pass as {on suite, off suite}; grouped mode keeps its legacy
-    // query-major blocks (the two were never cross-comparable anyway).
+    // AQE-off twins ride the SAME time windows as their AQE-on twins:
+    // each pass runs {on suite, off suite}. Run as a separate tail block
+    // on a device whose throughput swings mid-suite, the twin ratio
+    // measures window drift, not AQE (q43 off/on read 1.40-1.51× that way
+    // vs 1.08× same-window — bench_evidence/r15_q43_aqe_ab.json).
     var offReps = aqeOffNames.map(n => s"${n}__aqe_off" -> Seq.empty[Double])
-    if (MODE == "grouped") {
-      combinedReps = suiteReps(suiteRun, REPS)
-      offReps = aqeOffReps(REPS)
-    } else {
-      for (_ <- 1 to REPS) {
-        combinedReps = addPass(combinedReps, suiteReps(suiteRun, 1))
-        offReps = addPass(offReps, aqeOffReps(1))
-      }
+    def timedPass(): Unit = {
+      combinedReps = addPass(combinedReps, suitePass(suiteRun))
+      offReps = addPass(offReps, aqeOffPass())
     }
+    for (_ <- 1 to REPS) timedPass()
 
-    // (b) of the recording gate, strengthened in round 15 (VERDICT r14
-    // item 2): r14's single extra pass ran IMMEDIATELY inside the degraded
-    // window — its own third post-probe read 24 MB/s and the record still
-    // shipped healthy:false. The published basis is min-of-N and
+    // (b) of the recording gate: the published basis is min-of-N and
     // contention only ever ADDS time, so health needs exactly ONE full
-    // pass bracketed by in-band probes. The retry loop now (1) WAITS for
+    // pass bracketed by in-band probes — and an extra pass spent inside
+    // the degraded window proves nothing. The retry loop (1) WAITS for
     // the device to re-enter the band before spending a pass (up to
     // 3 × 45 s per retry), (2) retries up to SPARK_GRAFT_IO_RETRIES
     // (default 2) extra passes, and (3) stamps healthy from the LAST
     // pass's own probe bracket — the pair that actually surrounds timed
     // work the min can draw from. A probe that cannot run (-1) neither
-    // loops nor certifies, as before.
+    // loops nor certifies.
     val ioPostSamples = scala.collection.mutable.ArrayBuffer(ioProbeMbS())
     var bracketPre = ioPreSamples.last
     var bracketPost = ioPostSamples.last
@@ -443,13 +347,13 @@ object Bench {
       // The wait loop's first sample is the bracketPost just taken above
       // (or at the bottom of the previous iteration) — re-probing the
       // same instant would only add 64 MB of write pressure to a device
-      // the loop is waiting OUT of degradation (round-15 review).
+      // the loop is waiting OUT of degradation.
       var waits = 0
       var probe = bracketPost
       // A -1 probe (the probe itself could not run) is not "in band" —
       // entering the timed pass with bracketPre=-1 would spend a full
       // suite pass that can NEVER certify healthy, burning the whole
-      // retry budget for nothing (ADVICE r15). Re-probe after a short
+      // retry budget for nothing. Re-probe after a short
       // wait; if the probe still cannot run, stop retrying entirely —
       // extra passes prove nothing without a working probe.
       while (probe < 0 && waits < 2) {
@@ -474,8 +378,7 @@ object Bench {
           ioProbeBroken = true
         } else {
           bracketPre = probe
-          combinedReps = addPass(combinedReps, suiteReps(suiteRun, 1))
-          offReps = addPass(offReps, aqeOffReps(1))
+          timedPass()
           ioExtraPasses += 1
           bracketPost = ioProbeMbS()
           ioPostSamples += bracketPost
@@ -496,12 +399,12 @@ object Bench {
     // stdout line the driver parses (see the 2000-char tail note below).
     // Locale.ROOT: the f interpolator uses the default JVM locale, and a
     // comma-decimal locale would emit "1,2345" — invalid JSON on the one
-    // line the driver parses (ADVICE r6).
+    // line the runner parses.
     def fmt(d: Double): String =
       if (d < 0) "-1"
       else String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
     // JSON string escape for every env-supplied path in the record
-    // (sfDir, scaleDir, io_path — round-12 review): a quote or backslash
+    // (sfDir, scaleDir, io_path): a quote or backslash
     // in any of them corrupts the single stdout line the driver parses,
     // and an embedded newline splits the one-line contract even with
     // quotes escaped, so control chars become \u escapes.
@@ -533,14 +436,13 @@ object Bench {
     // never depends on local state.
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/root/repo/localdata/sf1")
     // Factor: unset → scale block OFF. The scale sweep is ~35 min of wall
-    // clock (79 queries × 2 timed passes at two dirs) and round 10 proved
-    // the hard way that defaulting it ON blows the driver's time-boxed
-    // plain invocation (BENCH_r10.json rc:124/parsed:null — VERDICT r10
-    // item 1). Scale evidence runs opt in explicitly:
+    // clock (79 queries × 2 timed passes at two dirs), beyond the
+    // runner's time-boxed plain invocation (BENCH_r10.json rc:124).
+    // Scale evidence runs opt in explicitly:
     //   SPARK_GRAFT_SCALE_FACTOR=10 sbt "runMain graft.Bench"
     // Set but malformed or <= 1 → also SKIP: silently substituting a
     // default would emit plausible-looking but wrong exponents, and a
-    // <= 1 factor makes the log-ratio denominator meaningless (ADVICE r5).
+    // <= 1 factor makes the log-ratio denominator meaningless.
     val scaleFactorOpt: Option[Double] = sys.env.get("SPARK_GRAFT_SCALE_FACTOR") match {
       case None => None
       case Some(raw) =>
@@ -550,26 +452,24 @@ object Bench {
             "a number > 1 — scale block skipped")
         parsed
     }
-    // Factor defined implies the caller stated it explicitly (no implicit
-    // default since round 11), so the only remaining precondition is that
-    // the scaled fixture actually exists. PARTIAL fixtures are allowed
-    // (round 14): a decade whose scoped suite reads only `documents`
-    // (e.g. the sf10→sf100 token tail) ships documents alone — a query
-    // whose table is missing fails loudly into the -1 sentinel, never
-    // silently.
+    // Factor defined implies the caller stated it explicitly, so the only
+    // remaining precondition is that the scaled fixture actually exists.
+    // PARTIAL fixtures are allowed: a decade whose scoped suite reads
+    // only `documents` (e.g. the sf10→sf100 token tail) ships documents
+    // alone — a query whose table is missing fails loudly into the -1
+    // sentinel, never silently.
     val scaleEnabled = scaleFactorOpt.isDefined &&
       Seq("lineitem", "documents").exists(t =>
         new java.io.File(s"$scaleDir/$t.parquet").exists())
     // (compactScale, fullScale): the stdout line must stay SHORT — the
-    // driver parses the last line out of a 2000-char stdout tail, and
-    // round-5's line (full base/scaled maps inline) overflowed it and
-    // recorded parsed:null. stdout carries dir/factor/exponents; the
-    // per-dir timings ride the /tmp/graft_bench.json mirror + BENCH_NOTES.
+    // runner parses the last line out of a 2000-char stdout tail, which
+    // the full base/scaled maps overflow. stdout carries dir/factor/
+    // exponents; the per-dir timings ride the /tmp/graft_bench.json mirror.
     val (scaleJson, scaleJsonFull) =
       if (!scaleEnabled) ("{}", "{}")
       else {
         val factor = scaleFactorOpt.get
-        // Scale-bracket probes (ADVICE r14): the headline bracket above
+        // Scale-bracket probes: the headline bracket above
         // closes BEFORE this multi-hour sweep, so a degraded-IO window
         // during the scale passes would otherwise be invisible — the
         // record could stamp load.healthy:true over exponents measured
@@ -589,11 +489,11 @@ object Bench {
           scaleSuite, SparkEntry.queries.contains, "bench")
         val extras = suite.filterNot(suiteRun.contains)
         extras.foreach(runAt(_, sfDir)) // warm the non-headline plans
-        // Min of two timed passes per dir: the round-5 driver run showed
-        // single-pass timings inflated ~2× by transient machine load
-        // (q01 at sf1: 20 s driver vs 9.8 s reproducible), flipping
-        // sub-linear exponents super-linear. Contention only ever adds
-        // time, so the min is the defensible steady-state estimate.
+        // Min of two timed passes per dir: single-pass timings can
+        // inflate ~2× under transient machine load (q01 at sf1: 20 s vs
+        // 9.8 s reproducible), flipping sub-linear exponents super-linear.
+        // Contention only ever adds time, so the min is the defensible
+        // steady-state estimate.
         // Returns (per-query min, whether any timed pass at this dir was
         // bracketed by two in-band probes — the min can only come from a
         // pass at least that fast, so one clean bracket certifies it).
@@ -613,7 +513,7 @@ object Bench {
           }.toMap, bracketOk)
         }
         val (base, baseBracketOk) = minOfN(sfDir, 2)
-        // SCALED-dir pass budget (round 14): a third decade's scaled side
+        // SCALED-dir pass budget: a third decade's scaled side
         // runs ~10 min/query — warm + min-of-2 would triple a multi-hour
         // sweep for noise defense the probes already provide. The knobs
         // only ever bias the SCALED (slow) side UPWARD — a skipped warm
@@ -643,18 +543,15 @@ object Bench {
           "\"" + n + "\":" + (math.round(e * 100) / 100.0)
         }.mkString("{", ",", "}")
         val exps = expObj(factor)
-        // Byte-honest exponents (VERDICT r12 item 3): ScaleData's token
-        // salting LENGTHENS tokens each expansion level, so the documents
-        // corpus grows MORE than ×factor in bytes (×13.71 measured for
-        // the chained sf1→sf10 decade) and a byte-bound query's RAW time
-        // exponent overreads by up to log10(13.7)≈1.14 against a per-byte
-        // truth of 1.0. The committed record itself now carries the
-        // per-dir corpus char counts and a second exponent map normalized
-        // by the MEASURED byte growth — the honest reading for
-        // byte-bound queries (token explodes, per-char scans); row-bound
-        // queries keep the raw map as theirs. Normalization was a manual
-        // VocabProbe step in round 12; a future reader of this record no
-        // longer has to know to do it.
+        // Byte-honest exponents: ScaleData's token salting LENGTHENS
+        // tokens each expansion level, so the documents corpus grows MORE
+        // than ×factor in bytes (×13.71 for the chained sf1→sf10 decade,
+        // BENCH_NOTES.md) and a byte-bound query's RAW time exponent
+        // overreads by up to log10(13.7)≈1.14 against a per-byte truth of
+        // 1.0. The record therefore carries the per-dir corpus char counts
+        // and a second exponent map normalized by the MEASURED byte growth
+        // — the honest reading for byte-bound queries (token explodes,
+        // per-char scans); row-bound queries keep the raw map as theirs.
         def corpusChars(dir: String): Double = scala.util.Try {
           spark.read.parquet(s"$dir/documents.parquet")
             .agg(org.apache.spark.sql.functions.sum(
@@ -667,7 +564,7 @@ object Bench {
         val bytesFactor =
           if (charsBase > 0 && charsBig > 0) charsBig / charsBase else -1.0
         val expsBytes = expObj(bytesFactor)
-        // Scale samples stay OUT of load.io_mb_s (round-15 review):
+        // Scale samples stay OUT of load.io_mb_s:
         // gate_diff reads that list's min/max as "the device around the
         // HEADLINE passes" for its drift normalization — folding in a
         // throttle sample from a multi-hour scale sweep taken after the
@@ -684,10 +581,9 @@ object Bench {
         (s"""{"dir":"${jsonStr(scaleDir)}","factor":$factor,"exponents":$exps,$bytesJson,$scaleIoJson}""",
           s"""{"dir":"${jsonStr(scaleDir)}","factor":$factor,"corpus_chars":{"base":${fmt(charsBase)},"scaled":${fmt(charsBig)}},"base_sec":${obj(base)},"scaled_sec":${obj(big)},"exponents":$exps,$bytesJson,$scaleIoJson}""")
       }
-    // Load metadata: 1-min load-average samples plus the /proc/stat busy
-    // fraction across the whole run. The load-sample key is MODE-specific
-    // (see suiteStats): "avg1_passes" per suite pass when interleaved,
-    // "avg1_blocks" per query block when grouped. ncpu anchors
+    // Load metadata: 1-min load-average samples ("avg1_passes", one per
+    // suite pass) plus the /proc/stat busy fraction across the whole run.
+    // ncpu anchors
     // interpretation (load 8 on a 32-way box is idle headroom; on an
     // 8-way box it's saturation). io_path names the filesystem the disk
     // probe actually wrote, so gate_diff's io corroboration is auditable.
@@ -697,46 +593,39 @@ object Bench {
       else (busy1 - busy0).toDouble / (total1 - total0)
     val loadJson = {
       val passes = loadPasses.map(fmt).mkString("[", ",", "]")
-      val avg1Key = if (MODE == "grouped") "avg1_blocks" else "avg1_passes"
       val ioPathJson = jsonStr(ioProbePath)
       // io_mb_s carries EVERY sample (pre-wait retries + post + any
       // retry-pass re-probe); gate_diff reasons over the list's min/max.
       val ioAll = (ioPreSamples ++ ioPostSamples).map(fmt).mkString("[", ",", "]")
-      s"""{"$avg1Key":$passes,"stat_busy":${fmt(statBusy)},"ncpu":${Runtime.getRuntime.availableProcessors()},"probe_sec":${fmt(probeSec)},"mem_gb_s":${fmt(memGbS)},"io_mb_s":$ioAll,"io_path":"$ioPathJson","healthy":$ioHealthy,"healthy_thr_mb_s":${fmt(ioHealthyMbS)},"io_retried":$ioRetried}"""
+      s"""{"avg1_passes":$passes,"stat_busy":${fmt(statBusy)},"ncpu":${Runtime.getRuntime.availableProcessors()},"probe_sec":${fmt(probeSec)},"mem_gb_s":${fmt(memGbS)},"io_mb_s":$ioAll,"io_path":"$ioPathJson","healthy":$ioHealthy,"healthy_thr_mb_s":${fmt(ioHealthyMbS)},"io_retried":$ioRetried}"""
     }
-    // VERDICT r9 item 1 (BENCH_r09.json parsed:null): the compact scale
-    // block alone now carries 74 exponent entries (~1.9 kB), so ANY inline
-    // scale payload can push the headline fields out of the driver's
-    // 2000-char stdout tail. The final stdout line therefore carries ONLY
-    // the headline record (scale reduced to a summary stub); the full
-    // exponent map is printed on its own EARLIER stdout line (tagged
+    // The compact scale block alone carries ~74 exponent entries (~1.9 kB),
+    // so ANY inline scale payload can push the headline fields out of the
+    // runner's 2000-char stdout tail. The final stdout line therefore
+    // carries ONLY the headline record (scale reduced to a summary stub);
+    // the full exponent map is printed on its own EARLIER stdout line (tagged
     // "metric":"scale") and mirrored to /tmp/graft_bench.json.
     val scaleStub =
       if (!scaleEnabled) "{}"
       else s"""{"detail":"prior stdout line + /tmp/graft_bench.json"}"""
-    // reps_effective (ADVICE r14): the degraded-IO retry appends extra
-    // passes, so medians/mins are computed over MORE than REPS samples;
-    // tooling reading "reps" alone would be off by the retry count.
-    // max_partition_bytes_override (ADVICE r14): the out-of-box-conf claim
-    // is a field, not an honor-system comment — null when unset.
-    // aqe_off_window (ADVICE r15): the __aqe_off entries moved from a
-    // tail block (pre-r15) to same-window interleaved passes; nothing in
-    // the record marked that, so tooling could compare off-entries across
-    // the methodology change and read the ~1.4x→~1.1x shift as a code
-    // delta. The pass composition is now a field: "same_pass" when the
-    // off suite rides each on pass's window (interleaved), "tail_block"
-    // when it runs as its own query-major block (grouped).
-    val aqeOffWindow = if (MODE == "grouped") "tail_block" else "same_pass"
-    val confJson = s""""reps_effective":${REPS + ioExtraPasses},"max_partition_bytes_override":${mpbOverride.map(v => "\"" + jsonStr(v) + "\"").getOrElse("null")},"aqe_off_window":"$aqeOffWindow""""
+    // reps_effective: the degraded-IO retry appends extra passes, so
+    // medians/mins are computed over MORE than REPS samples; tooling
+    // reading "reps" alone would be off by the retry count.
+    // max_partition_bytes_override: the out-of-box-conf claim is a field,
+    // not an honor-system comment — null when unset. aqe_off_window
+    // "same_pass": the off suite rides each on pass's window, so tooling
+    // never compares off-entries against tail-block records and reads the
+    // window shift as a code delta.
+    val confJson = s""""reps_effective":${REPS + ioExtraPasses},"max_partition_bytes_override":${mpbOverride.map(v => "\"" + jsonStr(v) + "\"").getOrElse("null")},"aqe_off_window":"same_pass""""
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"queries_min":$qsMin,"meta":$metaQs,"meta_min":$metaQsMin,"reps":$REPS,$confJson,"mode":"$MODE","sf":"${jsonStr(sfDir)}","load":$loadJson,"scale":$scaleStub}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"queries_min":$qsMin,"meta":$metaQs,"meta_min":$metaQsMin,"reps":$REPS,$confJson,"mode":"interleaved","sf":"${jsonStr(sfDir)}","load":$loadJson,"scale":$scaleStub}"""
     val scaleLine =
       if (scaleEnabled) Some(s"""{"metric":"scale","scale":$scaleJson}""") else None
     val jsonFull =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"queries_min":$qsMin,"meta":$metaQs,"meta_min":$metaQsMin,"reps":$REPS,$confJson,"mode":"$MODE","sf":"${jsonStr(sfDir)}","load":$loadJson,"scale":$scaleJsonFull}"""
-    // Contract hardening (round-1 driver recorded parsed:null): stop Spark
-    // FIRST so no late log line can land after the JSON, mirror the JSON to
-    // a well-known file, then emit it as the final bare stdout line. Log
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"queries_min":$qsMin,"meta":$metaQs,"meta_min":$metaQsMin,"reps":$REPS,$confJson,"mode":"interleaved","sf":"${jsonStr(sfDir)}","load":$loadJson,"scale":$scaleJsonFull}"""
+    // Contract hardening: stop Spark FIRST so no late log line can land
+    // after the JSON, mirror the JSON to a well-known file, then emit it
+    // as the final bare stdout line. Log
     // level OFF before stop: if the caller merges stderr into stdout, a
     // stop-time WARN racing past the JSON would corrupt the last line.
     spark.sparkContext.setLogLevel("OFF")

@@ -1,6 +1,6 @@
 package graft.core
 
-/** Targeted log suppression for the driver-facing mains (Bench/Verify).
+/** Targeted log suppression, applied to every `Session.local` session.
   *
   * The one known offender: `WindowExec`'s "No Partition Defined for Window
   * operation" warning, emitted by AnnIvf's centroid-ranking window — which

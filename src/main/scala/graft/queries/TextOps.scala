@@ -146,8 +146,8 @@ object TextOps {
     "q31_jaccard_pairs" -> { (s, dir) =>
       val tok = exactPairTok(s, t(s, dir, "documents"))
       // sizes is consumed by both rerank sides and replays its
-      // tokenize+agg per side — MEASURED (Q31Ab, same-JVM interleaved
-      // sf0.1): a Materialize barrier here is ~10% SLOWER (2.41 vs
+      // tokenize+agg per side — MEASURED (BENCH_NOTES.md, same-JVM
+      // interleaved sf0.1): a Materialize barrier here is ~10% SLOWER (2.41 vs
       // 2.17 s min-of-5) because the replayed agg is small and overlaps
       // the self-join stages, while the barrier serializes on a write.
       // q31 is the bench-timed exact-oracle twin; its 100 TB path is q43.
@@ -440,8 +440,8 @@ object TextOps {
           i => concat_ws(" ", slice(toks, i, lit(5))))).otherwise(array())
       val spanRows = t(s, dir, "documents")
         .select(col("doc_id"), explode(array_distinct(spans)).as("span"))
-      // Plain span window key, MEASURED (r16 SpanAb, same-JVM interleaved
-      // min-of-5): the r15 hash-prefix idiom — (xxhash64(span), span) —
+      // Plain span window key, MEASURED (OPTIMIZATION_r16.md, same-JVM
+      // interleaved min-of-5): the r15 hash-prefix idiom — (xxhash64(span), span) —
       // reads 2.17 vs 2.08 s here: the sorter's built-in 8-byte string
       // prefix already covers these keys, so the extra hash column is
       // pure cost at this key width. The idiom pays off only where keys
@@ -1168,7 +1168,7 @@ object TextOps {
     "q_dedup_rate" -> { (s, dir) =>
       val tok = exactPairTok(s, t(s, dir, "documents"))
       // Unbarriered size table — the replayed agg overlaps the self-join
-      // stages and beats a write barrier at this shape (Q31Ab, q31 canon).
+      // stages and beats a write barrier here (BENCH_NOTES.md: 2.17 vs 2.41 s).
       val sizes = tok.groupBy("doc_id").agg(count(lit(1)).as("sz"))
       val inter = tok.as("a").join(tok.as("b"),
           col("a.lang") === col("b.lang") && col("a.source") === col("b.source") &&
@@ -2072,7 +2072,7 @@ object SimhashSql {
     * the (doc_id, tok) pre-aggregation and its corpus-keyed exchange
     * disappear too — ONE exchange total (the per-doc partial sums), at
     * the price of hashing each occurrence instead of each distinct pair.
-    * Same-JVM A/B (tools/SimhashAb, min-of-5 at sf0.1): one-exchange
+    * Same-JVM A/B (OPTIMIZATION_r17.md, min-of-5 at sf0.1): one-exchange
     * 0.836 / 1.489 s (AQE on/off) vs two-exchange 0.888 / 1.823 s.
     * Row-identical (exceptAll both ways = 0; oracle hash-verified). */
   private val sgnSumsOcc: String = (0 until 48).map { b =>

@@ -86,8 +86,8 @@ object AnnIvfPq {
     // Derived from the PERSISTED assignment and materialized once
     // (optimization r16, lineage truncation): the old frame reused the
     // un-truncated `assigned` plan, so every codebook-fit action replayed
-    // the full N·K assignment scoring — StageBreakdown at sf0.1 read
-    // multi-second single-task CPU stages for each replay. Same rows,
+    // the full N·K assignment scoring — OPTIMIZATION_r16.md records
+    // multi-second single-task CPU stages for each replay at sf0.1. Same rows,
     // same doubles (assignment values come from the same persisted table).
     val assignedP = s.read.parquet(s"$indexDir/assigned")
     val residuals = graft.core.Materialize(

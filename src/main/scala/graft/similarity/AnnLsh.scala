@@ -69,7 +69,7 @@ object AnnLsh {
     * Native graft_dot (optimization r16, guide §4): the HOF spelling paid
     * an interpreted fold per plane — bands·bitsPerBand = 192 folds of
     * dim 64 per corpus row was the single hottest stage of the index
-    * build (StageBreakdown: 3.7 s CPU of q_ann_lsh's 6.6 s at sf0.1).
+    * build (OPTIMIZATION_r16.md: 3.7 s CPU of q_ann_lsh's 6.6 s at sf0.1).
     * Same accumulation order, bit-identical signs. */
   private def signatureBits(emb: Column, ps: Array[Array[Double]]): Seq[Column] =
     ps.toSeq.map { plane =>

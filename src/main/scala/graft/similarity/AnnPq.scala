@@ -135,7 +135,7 @@ object AnnPq {
     * iteration via collectCodebook — but the old DataFrame carry-over
     * chain made iteration k's plan contain iterations 0..k-1's full sv
     * aggregations, so every collect and the final codebook write
-    * REPLAYED them (StageBreakdown at sf0.1: ~6 corpus-derived passes
+    * REPLAYED them (OPTIMIZATION_r16.md, sf0.1: ~6 corpus-derived passes
     * for a 2-iteration fit where 3 suffice). Each iteration now runs
     * exactly ONE job over sv; the returned frame is a local relation
     * with the same (m, code, cw) row multiset, bit-identical values. */

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.PlantedEmbeddings
 import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh}
 
@@ -28,15 +27,8 @@ import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh}
   */
 object AnnScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.Session.cpus(32)
+    val spark = graft.core.Session.local(s"local[$cpus]", cpus)
     graft.GraftExtensions.ensureRegistered(spark)
 
     val points: Seq[(Int, Int, Int)] = args.toSeq match {

@@ -9,11 +9,7 @@ import java.nio.file.{Files, Paths}
   */
 object PlanDump {
   def main(a: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.core.Session.local("local[8]", 8)
     s.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val targets = Seq(

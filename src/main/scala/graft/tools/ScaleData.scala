@@ -46,14 +46,8 @@ object ScaleData {
     // scale block (a missing table fails its query loudly with the -1
     // sentinel, never silently).
     val tables = args.lift(4).map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(
+      s"local[${graft.core.Session.cpus(32)}]", 32)
     expand(spark, src, dst, factor, tag, tables)
     spark.stop()
   }
@@ -112,8 +106,8 @@ object ScaleData {
     *   truth is 1.0. Since round 13 the Bench scale block measures the
     *   per-dir corpus chars itself and emits `bytes_factor` +
     *   `exponents_bytes` next to the raw exponents (VERDICT r12 item 3)
-    *   — read those for token/byte-bound queries; graft.tools.VocabProbe
-    *   remains the deeper diagnostic (vocab loads, chars/token). */
+    *   — read those for token/byte-bound queries. Vocab loads and
+    *   chars/token are in bench_evidence/r12_vocab_probe.txt. */
   def expand(s: SparkSession, src: String, dst: String, factor: Int,
       tag: String = "", tables: Option[Set[String]] = None): Unit = {
     // Chained-tag guard (ADVICE r13): expanding a ScaleData OUTPUT with

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Streaming-tier scale measurement — the decade evidence the batch
   * (sf0.1→sf1→sf10) and similarity (AnnScale) tiers already carry,
@@ -68,15 +67,8 @@ object StreamScale {
   def main(args: Array[String]): Unit = {
     val base = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val scaled = args.lift(1).getOrElse("/root/repo/localdata/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.LogQuiet.boundedWindowWarnings()
+    val cpus = graft.core.Session.cpus(32)
+    val spark = graft.core.Session.local(s"local[$cpus]", cpus)
 
     // Noop-sink drain (round 11): the registry queries drain to a MEMORY
     // sink so the oracle can hash the rows — but the memory sink holds

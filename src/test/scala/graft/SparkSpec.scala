@@ -10,14 +10,7 @@ object SparkSpec {
   // path is live (plain local[N] pins maxFailures to 1 and any injected
   // task failure would kill the job instead of retrying — the
   // RetryIdempotenceSpec contract needs the scheduler's real retry).
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local("local[4, 2]", 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
