@@ -9,8 +9,8 @@ import org.apache.spark.sql.DataFrame
   * reuse) only dedupes BYTE-IDENTICAL plan subtrees, and two consumers of
   * the same `val` almost never produce identical subtrees — each parent
   * pushes its own column pruning and null filters into the shared scan,
-  * so the "shared" frame recomputes per consumer. Measured r9
-  * (`tools/ReuseProbe`, executed final adaptive plans): q_rolling_dau
+  * so the "shared" frame recomputes per consumer. `tools/ReuseProbe` on
+  * executed final adaptive plans, before these barriers: q_rolling_dau
   * scanned events 3x, q_user_overlap 4x, q_temperature_mix 9x, with ZERO
   * ReusedExchange nodes across the whole audited registry.
   *
@@ -22,7 +22,7 @@ import org.apache.spark.sql.DataFrame
   * cost more than the replay (measured for MinHash token hashes,
   * MinHashDedup.nearDuplicates doc).
   *
-  * EAGER-EXECUTION CONTRACT (ADVICE r9): `apply` runs the write job at
+  * EAGER-EXECUTION CONTRACT: `apply` runs the write job at
   * DataFrame-CONSTRUCTION time, so any registry entry that uses a
   * Materialize barrier (directly or via a helper) is not lazy —
   * EXPLAIN-only tooling, schema checks, and PlanDump pay the execution
@@ -36,11 +36,20 @@ import org.apache.spark.sql.DataFrame
   * is memoized and allocates nothing). Plan-only tooling that must stay
   * cheap should target queries without barriers, or accept the cost —
   * the registry's `SparkEntry.queries` doc lists the contract.
+  *
+  * The read-back passes the schema the frame was written with, so it
+  * runs no footer-inference job; MaterializeSpec pins that a parquet
+  * round-trip infers exactly that schema.
   */
 object Materialize {
-  def apply(df: DataFrame, label: String): DataFrame = {
-    val dir = TempDirs.create(s"graft-mat-$label")
-    df.write.mode("overwrite").parquet(dir)
-    df.sparkSession.read.parquet(dir)
+  def apply(df: DataFrame, label: String): DataFrame =
+    at(df, TempDirs.create(s"graft-mat-$label"))
+
+  /** Overwrite `path` with `df` and read it back with `df`'s schema. For
+    * barriers whose files must live at a caller-owned path (an index
+    * table). */
+  def at(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 }

@@ -178,16 +178,13 @@ object MinHashDedup {
     // buildIndex does) costs a corpus-sized write that only pays off when
     // the index is queried more than once — measured at sf0.1, the write
     // is slower than the two extra tokenize passes it saves here.
-    val tmp = graft.core.TempDirs.create("graft-minhash-sigs")
-    signatures(docs, seed, shingleSize)
-      .write.mode("overwrite").parquet(s"$tmp/sigs")
-    val sigs = docs.sparkSession.read.parquet(s"$tmp/sigs")
+    val sigs = graft.core.Materialize(
+      signatures(docs, seed, shingleSize), "minhash-sigs")
     // Pair list materialized too: the rerank reads it twice (hub fan-out
     // count + join side) and a re-derivation would replay the whole band
     // self-join; the pairs table is tiny next to the corpus.
-    candidatePairs(bandSignatures(sigs))
-      .write.mode("overwrite").parquet(s"$tmp/cands")
-    val cands = docs.sparkSession.read.parquet(s"$tmp/cands")
+    val cands = graft.core.Materialize(
+      candidatePairs(bandSignatures(sigs)), "minhash-cands")
     val toks = tokens(docs, shingleSize)
       .select(col("doc_id"), xxhash64(col("tok")).as("h"))
     finishPairs(intersectionCounts(cands, toks), sigs, threshold)
@@ -214,11 +211,9 @@ object MinHashDedup {
     // writes must not leave the previous build's manifest certifying a
     // mixed-table dir (see IndexManifest.invalidate).
     graft.core.IndexManifest.invalidate(docs.sparkSession, indexDir)
-    tokens(docs, shingleSize)
+    val tk = graft.core.Materialize.at(tokens(docs, shingleSize)
       .select(col("doc_id"), col("lang"), col("source"),
-        xxhash64(col("tok")).as("h"))
-      .write.mode("overwrite").parquet(s"$indexDir/toks")
-    val tk = docs.sparkSession.read.parquet(s"$indexDir/toks")
+        xxhash64(col("tok")).as("h")), s"$indexDir/toks")
     // Identical signature values to hashing the token strings directly:
     // the universal-hash input was always pmod(xxhash64(tok), PRIME).
     val cs = coeffs(seed, NUM_HASHES)
@@ -283,10 +278,8 @@ object MinHashDedup {
       Map("family" -> "minhash-lsh", "num_hashes" -> NUM_HASHES.toString,
         "bands" -> BANDS.toString), "MinHashDedup.pairsFromIndex")
     val sigs = s.read.parquet(s"$indexDir/sigs")
-    val tmp = graft.core.TempDirs.create("graft-minhash-cands")
-    candidatePairs(bandSignatures(sigs))
-      .write.mode("overwrite").parquet(s"$tmp/cands")
-    val cands = s.read.parquet(s"$tmp/cands")
+    val cands = graft.core.Materialize(
+      candidatePairs(bandSignatures(sigs)), "minhash-cands")
     // The intersection join runs on the raw 64-bit token hash, not the
     // token string — the same distinct-per-doc rows, ~60% less shuffle
     // width. xxhash64 collisions within one doc pair (~|A||B|/2^64 ≈

@@ -37,15 +37,12 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
-  // Length-mismatched inputs yield NULL (round 17, VERDICT r16 item 6):
-  // the HOF spelling this replaced (aggregate over zip_with) padded the
-  // shorter array with nulls and so returned a null sum — the r16 cut
-  // truncated to min(length) and returned a plausible PARTIAL sum, a
-  // silent wrong-answer path for any malformed short vector. Equal-length
-  // behavior is bit-identical to before (same sequential accumulation).
-  // NULL ELEMENTS inside equal-length arrays are read as primitive slots
-  // (undefined content, typically 0.0) — every call site casts parquet
-  // non-null doubles, so this stays out of scope like it was for the HOF.
+  // NULL, never a partial or plausible sum, when the input is outside the
+  // contract: arrays of different lengths (the HOF spelling this replaced,
+  // aggregate over zip_with, padded the shorter array with nulls and so
+  // returned a null sum too), or a null element in either array (a
+  // primitive read of a null slot returns undefined content, typically
+  // 0.0). Null-free equal-length inputs accumulate exactly as before.
   override def nullable: Boolean = true
 
   override def checkInputDataTypes()
@@ -67,7 +64,10 @@ case class DotProduct(left: Expression, right: Expression)
     val n = x.numElements()
     if (n != y.numElements()) return null
     var acc = 0.0; var i = 0
-    while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      acc += x.getDouble(i) * y.getDouble(i); i += 1
+    }
     acc
   }
 
@@ -83,6 +83,10 @@ case class DotProduct(left: Expression, right: Expression)
         } else {
           double $acc = 0.0;
           for (int $i = 0; $i < $n; $i++) {
+            if ($a.isNullAt($i) || $b.isNullAt($i)) {
+              ${ev.isNull} = true;
+              break;
+            }
             $acc += $a.getDouble($i) * $b.getDouble($i);
           }
           ${ev.value} = $acc;

@@ -59,6 +59,19 @@ object GraphOps {
     * engines agree when the cap (not frontier exhaustion) terminates. */
   val BfsMaxHops = 6
 
+  /** One BFS level: the nodes one hop past `frontier` over edges `e` that
+    * the visited set under `visitedDir` does not hold yet, tagged `level`.
+    * The anti-join sees the visited files listed when this frame is BUILT
+    * (`read.parquet` lists its input at resolution): the caller writes
+    * this level's rows under `visitedDir` too, and they must not count as
+    * already visited. BfsListingSpec pins that snapshot. */
+  private[graft] def bfsLevel(s: SparkSession, frontier: DataFrame,
+      e: DataFrame, visitedDir: String, level: Int): DataFrame =
+    frontier.join(e, col("node") === col("src"))
+      .select(col("dst").as("node")).distinct()
+      .join(s.read.parquet(visitedDir).select("node"), Seq("node"), "left_anti")
+      .select(col("node"), lit(level).as("dist"))
+
   /** Part co-occurrence pairs (x ≠ y, both directions, once per order) —
     * the edge feed all four graph queries share. Built by aggregating
     * each order's distinct part set and exploding the pairs from the
@@ -254,11 +267,7 @@ object GraphOps {
         // Frontier size rides the frontier write as an observe() count —
         // the old shape ran a third read-back count job per level.
         val fObs = org.apache.spark.sql.Observation(s"bfs-front-$level")
-        frontier.join(e, col("node") === col("src"))
-          .select(col("dst").as("node")).distinct()
-          .join(s.read.parquet(s"$tmp/visited").select("node"),
-            Seq("node"), "left_anti")
-          .select(col("node"), lit(level).as("dist"))
+        bfsLevel(s, frontier, e, s"$tmp/visited", level)
           .observe(fObs, count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(s"$tmp/visited/lvl=$level")
         frontier = s.read.parquet(s"$tmp/visited/lvl=$level").select("node")

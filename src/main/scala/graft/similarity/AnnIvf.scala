@@ -150,10 +150,9 @@ object AnnIvf {
       .select(col("vec_id").as("cid"), col("emb").as("cemb"))
     val centroids =
       if (fitIters > 0) fitCentroids(e, seeds, fitIters) else seeds
-    centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
     // Assignment reads the PERSISTED centroids so the k-means lineage is
     // truncated — the assignment plan never replays the fit.
-    val persisted = e.sparkSession.read.parquet(s"$indexDir/centroids")
+    val persisted = graft.core.Materialize.at(centroids, s"$indexDir/centroids")
     assign(e, persisted).write.mode("overwrite").parquet(s"$indexDir/assigned")
     // Manifest LAST — its presence certifies that centroids AND
     // assignments both landed (a mid-build crash must not leave a dir

@@ -63,6 +63,28 @@ class DotExprSpec extends SparkSpec {
     assert(got(1).isNullAt(0))
   }
 
+  test("a null element in either array yields null on both eval paths") {
+    GraftExtensions.ensureRegistered(spark)
+    val df = Seq(
+      (1, Seq(Some(1.0), None, Some(3.0)), Seq(Some(4.0), Some(5.0), Some(6.0))),
+      (2, Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), None)),
+      (3, Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), Some(4.0)))).toDF("id", "a", "b")
+    def dots(in: org.apache.spark.sql.DataFrame) =
+      in.select(call_function("graft_dot", col("a"), col("b")).as("d"), col("id"))
+        .orderBy("id").collect()
+    // Interpreted: a local relation constant-folds through nullSafeEval.
+    val local = dots(df)
+    // Codegen: a parquet-rooted projection runs doGenCode's loop.
+    val dir = graft.core.TempDirs.create("graft-dotspec-nullelem")
+    df.write.mode("overwrite").parquet(dir)
+    val scanned = dots(spark.read.parquet(dir))
+    Seq(local, scanned).foreach { got =>
+      assert(got(0).isNullAt(0), s"null in a: got ${got(0).get(0)}")
+      assert(got(1).isNullAt(0), s"null in b: got ${got(1).get(0)}")
+      assert(!got(2).isNullAt(0) && got(2).getDouble(0) == 11.0) // 1·3 + 2·4
+    }
+  }
+
   test("non-array input fails analysis with the type-check message") {
     GraftExtensions.ensureRegistered(spark)
     val df = Seq((1.0, Array(1.0))).toDF("a", "b")

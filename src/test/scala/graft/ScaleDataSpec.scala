@@ -89,6 +89,11 @@ class ScaleDataSpec extends SparkSpec {
     assert(viaT.count() == Factor * baseEv.count())
   }
 
+  test("Tables.t reads the expanded tables with their declared schemas") {
+    val bad = TablesSchemaSpec.mismatches(spark, outDir)
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("chained expansion with a salt tag keeps token vocabularies disjoint") {
     val d2 = graft.core.TempDirs.create("graft-scaledata-chain")
     ScaleData.expand(spark, outDir, d2, 2, "b")
