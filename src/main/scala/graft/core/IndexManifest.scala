@@ -1,11 +1,20 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, Metadata, StructType}
 
 /** Persisted-index manifest: a tiny JSON sidecar (`manifest.json`) written
   * next to every index an operator persists (MinHash signature tables, IVF
   * centroids, LSH bucket tables) recording the parameters that are part of
-  * the index CONTRACT — hash-family seed, band shape, K, schema version.
+  * the index CONTRACT — hash-family seed, band shape, K, schema version —
+  * and, in one `table.<name>` field per table, the `StructType.toDDL`
+  * schema of the frame the builder wrote to `<indexDir>/<name>`.
+  *
+  * The table fields let every later read pass the schema instead of
+  * inferring it ([[table]]: no footer-inference job per read), and let
+  * appends refuse a frame whose layout differs from the index's
+  * ([[appendTables]]). Manifests from before the table fields carry
+  * schema_version "1" and fail [[verify]] with a rebuild message.
   *
   * Why: `append`/`search` only produce correct results when called with the
   * SAME family parameters the index was built with. Before the manifest the
@@ -20,8 +29,9 @@ import org.apache.spark.sql.SparkSession
 object IndexManifest {
   val FILE = "manifest.json"
 
-  /** Bump when an index layout changes shape incompatibly. */
-  val SCHEMA_VERSION = "1"
+  /** Bump when an index layout changes shape incompatibly. "2": every
+    * table's schema is recorded in a `table.<name>` field. */
+  val SCHEMA_VERSION = "2"
 
   private def fsPath(s: SparkSession, indexDir: String) = {
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/$FILE")
@@ -47,20 +57,20 @@ object IndexManifest {
       .mkString("{", ",", "}")
     val (p, fs) = fsPath(s, indexDir)
     val out = fs.create(p, true)
-    // Plain writer, not PrintWriter (round-12 review): PrintWriter
-    // swallows IOExceptions into an unchecked error flag, so a failed
-    // close-time flush (HDFS/S3 lease or quota error) would report a
-    // successful build with a missing/truncated manifest — breaking the
-    // "manifest presence certifies a complete build" invariant. Write
-    // and close must propagate.
+    // Plain writer, not PrintWriter: PrintWriter swallows IOExceptions
+    // into an unchecked error flag, so a failed close-time flush
+    // (HDFS/S3 lease or quota error) would report a successful build with
+    // a missing/truncated manifest — breaking the "manifest presence
+    // certifies a complete build" invariant. Write and close must
+    // propagate.
     val w = new java.io.OutputStreamWriter(
       out, java.nio.charset.StandardCharsets.UTF_8)
-    // try-with-resources semantics, not try/finally (ADVICE r12): when
-    // write throws, the finally-close on the same broken stream usually
-    // throws too and would MASK the original write failure — the root
-    // cause this writer exists to surface. Success path: close inside
-    // the try so a close-time flush failure still propagates. Failure
-    // path: best-effort close, suppressed onto the primary.
+    // try-with-resources semantics, not try/finally: when write throws,
+    // the finally-close on the same broken stream usually throws too and
+    // would MASK the original write failure — the root cause this writer
+    // exists to surface. Success path: close inside the try so a
+    // close-time flush failure still propagates. Failure path:
+    // best-effort close, suppressed onto the primary.
     try {
       w.write(json); w.write('\n')
       w.close()
@@ -86,8 +96,8 @@ object IndexManifest {
     // Hadoop delete reports failure by returning FALSE (permissions,
     // leases), not only by throwing — an ignored false would leave the
     // OLD manifest certifying whatever mix of tables the rebuild dies
-    // between, the exact wreck delete-first exists to prevent (round-12
-    // review). Re-check exists to tolerate a concurrent delete.
+    // between, the exact wreck delete-first exists to prevent. Re-check
+    // exists to tolerate a concurrent delete.
     if (fs.exists(p) && !fs.delete(p, false) && fs.exists(p))
       throw new java.io.IOException(
         s"IndexManifest.invalidate: could not delete $p — refusing to " +
@@ -157,14 +167,21 @@ object IndexManifest {
 
   /** Fail-fast compatibility check: every expected (param, value) must match
     * the stored manifest exactly. Throws with the full mismatch list so the
-    * caller sees seed-vs-seed, not just "incompatible". */
+    * caller sees seed-vs-seed, not just "incompatible". Returns the stored
+    * manifest, whose `table.<name>` fields [[table]] and [[appendTables]]
+    * read. */
   def verify(s: SparkSession, indexDir: String,
-      expected: Map[String, String], op: String): Unit = {
+      expected: Map[String, String], op: String): Map[String, String] = {
     val stored = read(s, indexDir)
     if (stored.isEmpty)
       throw new IllegalStateException(
         s"$op: no $FILE under $indexDir — not a graft index, or built by a " +
           "pre-manifest version; rebuild with buildIndex/fit")
+    stored.get("schema_version").filter(_ != SCHEMA_VERSION).foreach { v =>
+      throw new IllegalStateException(
+        s"$op: index at $indexDir has layout schema_version '$v', this " +
+          s"version reads '$SCHEMA_VERSION'; rebuild with buildIndex/fit")
+    }
     val want = expected + ("schema_version" -> SCHEMA_VERSION)
     val bad = want.toSeq.sortBy(_._1).flatMap { case (k, v) =>
       stored.get(k) match {
@@ -176,5 +193,56 @@ object IndexManifest {
     if (bad.nonEmpty)
       throw new IllegalStateException(
         s"$op: incompatible index at $indexDir — ${bad.mkString("; ")}")
+    stored
+  }
+
+  /** `table.<name>` fields recording the schema of each frame a builder
+    * writes to `<indexDir>/<name>`; builders add them to [[write]]. */
+  def tableFields(tables: (String, DataFrame)*): Map[String, String] =
+    tables.map { case (name, df) => s"table.$name" -> df.schema.toDDL }.toMap
+
+  /** The recorded schema of table `name`; a contract error naming the
+    * table when the manifest has none (there is no inference fallback). */
+  private def schemaOf(manifest: Map[String, String], indexDir: String,
+      name: String): StructType =
+    StructType.fromDDL(manifest.getOrElse(s"table.$name",
+      throw new IllegalStateException(
+        s"index manifest under $indexDir records no schema for table " +
+          s"'$name' (field table.$name); rebuild with buildIndex/fit")))
+
+  /** Read `<indexDir>/<name>` with its recorded schema: no footer-inference
+    * job. `manifest` is what [[verify]] returned. */
+  def table(s: SparkSession, indexDir: String, manifest: Map[String, String],
+      name: String): DataFrame =
+    s.read.schema(schemaOf(manifest, indexDir, name)).parquet(s"$indexDir/$name")
+
+  /** Parquet-append each (name, frame) to `<indexDir>/<name>`, in order.
+    * Every frame's schema is checked against the table's recorded one
+    * (ignoring nullability, which a parquet read drops anyway) before the
+    * first write, so a mismatched append — an INT key into a BIGINT
+    * table, `array<float>` into `array<double>` — fails with both schemas
+    * instead of leaving files that a declared read mis-decodes. */
+  def appendTables(indexDir: String, manifest: Map[String, String], op: String,
+      tables: (String, DataFrame)*): Unit = {
+    tables.foreach { case (name, df) =>
+      val want = schemaOf(manifest, indexDir, name)
+      if (relaxed(want) != relaxed(df.schema))
+        throw new IllegalStateException(
+          s"$op: table '$name' at $indexDir has schema ${want.toDDL}, the " +
+            s"appended frame has ${df.schema.toDDL}")
+    }
+    tables.foreach { case (name, df) =>
+      df.write.mode("append").parquet(s"$indexDir/$name")
+    }
+  }
+
+  /** `t` with every field, element and value nullable and no metadata. */
+  private def relaxed(t: DataType): DataType = t match {
+    case st: StructType => StructType(st.fields.map(f =>
+      f.copy(dataType = relaxed(f.dataType), nullable = true,
+        metadata = Metadata.empty)))
+    case ArrayType(e, _) => ArrayType(relaxed(e), containsNull = true)
+    case MapType(k, v, _) => MapType(relaxed(k), relaxed(v), valueContainsNull = true)
+    case other => other
   }
 }

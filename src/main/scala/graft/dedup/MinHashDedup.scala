@@ -70,17 +70,8 @@ object MinHashDedup {
     * n_toks = |distinct shingle set| — the set size rides the SAME single
     * shuffle as the signature (one extra count aggregate), so the exact
     * rerank never has to re-aggregate or re-ship token arrays. */
-  def signatures(docs: DataFrame, seed: Long = 42L, shingleSize: Int = 1): DataFrame = {
-    val cs = coeffs(seed, NUM_HASHES)
-    // Token hash projected once, not re-evaluated inside each of the
-    // NUM_HASHES min-aggregates (aggregate exprs are not reliably CSE'd).
-    val hashed = tokens(docs, shingleSize)
-      .withColumn("h", pmod(xxhash64(col("tok")), lit(PRIME)))
-    val aggs: Seq[Column] = cs.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * lit(a) + lit(b), lit(PRIME))).as(s"mh_$i")
-    }.toSeq :+ count(lit(1)).as("n_toks")
-    hashed.groupBy("doc_id", "lang", "source").agg(aggs.head, aggs.tail: _*)
-  }
+  def signatures(docs: DataFrame, seed: Long = 42L, shingleSize: Int = 1): DataFrame =
+    signaturesOfHashes(hashedTokens(docs, shingleSize), seed)
 
   /** (doc_id, block keys, band, band_sig) — LSH bucket keys. */
   def bandSignatures(sigs: DataFrame): DataFrame = {
@@ -146,8 +137,9 @@ object MinHashDedup {
     * bcnt is a window count over the bucket key, not a separate
     * groupBy + equi-join back onto the rows: the window rides ONE hash
     * exchange of the band table instead of aggregating it a second time
-    * and shuffling the join — the unconditional skew-insurance cost every
-    * unskewed corpus was paying in round 4 (q43 3.77 → 5.14 s). */
+    * and shuffling the join, so an unskewed corpus pays no extra shuffle
+    * for the skew insurance (the groupBy + join shape took q43 from 3.77
+    * to 5.14 s). */
   private[graft] def saltedCells(bands: DataFrame, maxBucket: Int): DataFrame = {
     val bucket = org.apache.spark.sql.expressions.Window
       .partitionBy("lang", "source", "band", "sig")
@@ -160,9 +152,9 @@ object MinHashDedup {
   /** Full pipeline: candidates reranked with exact Jaccard ≥ threshold
     * over the same shingle unit the signatures used.
     *
-    * The rerank never ships token ARRAYS (the round-1 shape joined two
-    * array<string> sides per candidate pair — expensive rows and per-pair
-    * O(|A|+|B|) array intersection). Instead: |A∩B| falls out of two
+    * The rerank never ships token ARRAYS (joining two array<string> sides
+    * per candidate pair costs wide rows and a per-pair O(|A|+|B|) array
+    * intersection). Instead: |A∩B| falls out of two
     * equi-joins over the flat (doc, token) rows restricted to candidate
     * docs followed by a partial-aggregable count, and |A|,|B| ride the
     * signature shuffle (n_toks). Jaccard = i / (n1 + n2 − i). Pairs with
@@ -190,13 +182,6 @@ object MinHashDedup {
     finishPairs(intersectionCounts(cands, toks), sigs, threshold)
   }
 
-  /** Persist the minhash index: the 64-bit token-hash table (one tokenize
-    * pass — the only time the raw corpus is touched) and the signature
-    * table computed FROM the persisted hashes. A production 100 TB
-    * pipeline builds this once per corpus version; every near-dup query
-    * (banding, rerank, sizes) is answered entirely from the index.
-    * Persisting toks also collapses what used to be three tokenize passes
-    * per query (signatures + both rerank sides) into one. */
   /** Index-contract manifest fields for [[graft.core.IndexManifest]]: the
     * parameters that must match between build and every later
     * append/search, or band buckets and signatures silently diverge. */
@@ -205,29 +190,48 @@ object MinHashDedup {
       "shingle_size" -> shingleSize.toString,
       "num_hashes" -> NUM_HASHES.toString, "bands" -> BANDS.toString)
 
+  /** Persist the minhash index: the 64-bit token-hash table (one tokenize
+    * pass — the only time the raw corpus is touched) and the signature
+    * table computed FROM the persisted hashes. A production 100 TB
+    * pipeline builds this once per corpus version; every near-dup query
+    * (banding, rerank, sizes) is answered entirely from the index.
+    * Persisting toks also collapses what used to be three tokenize passes
+    * per query (signatures + both rerank sides) into one. */
   def buildIndex(docs: DataFrame, indexDir: String, seed: Long = 42L,
       shingleSize: Int = 1): Unit = {
     // Invalidate FIRST: a rebuild that dies between the toks and sigs
     // writes must not leave the previous build's manifest certifying a
     // mixed-table dir (see IndexManifest.invalidate).
     graft.core.IndexManifest.invalidate(docs.sparkSession, indexDir)
-    val tk = graft.core.Materialize.at(tokens(docs, shingleSize)
-      .select(col("doc_id"), col("lang"), col("source"),
-        xxhash64(col("tok")).as("h")), s"$indexDir/toks")
-    // Identical signature values to hashing the token strings directly:
-    // the universal-hash input was always pmod(xxhash64(tok), PRIME).
-    val cs = coeffs(seed, NUM_HASHES)
-    val hashed = tk.withColumn("hp", pmod(col("h"), lit(PRIME)))
-    val aggs: Seq[Column] = cs.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("hp") * lit(a) + lit(b), lit(PRIME))).as(s"mh_$i")
-    }.toSeq :+ count(lit(1)).as("n_toks")
-    hashed.groupBy("doc_id", "lang", "source").agg(aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").parquet(s"$indexDir/sigs")
+    val toks = hashedTokens(docs, shingleSize)
+    val sigs = signaturesOfHashes(
+      graft.core.Materialize.at(toks, s"$indexDir/toks"), seed)
+    sigs.write.mode("overwrite").parquet(s"$indexDir/sigs")
     // Manifest LAST: its presence certifies a complete build, so a build
     // that dies mid-write leaves a dir verify() rejects, not a half-index
     // that passes the fail-fast check.
     graft.core.IndexManifest.write(docs.sparkSession, indexDir,
-      manifestFields(seed, shingleSize))
+      manifestFields(seed, shingleSize) ++
+        graft.core.IndexManifest.tableFields("toks" -> toks, "sigs" -> sigs))
+  }
+
+  /** The index's token-hash rows (doc_id, lang, source, h = xxhash64(tok)). */
+  private def hashedTokens(docs: DataFrame, shingleSize: Int): DataFrame =
+    tokens(docs, shingleSize)
+      .select(col("doc_id"), col("lang"), col("source"),
+        xxhash64(col("tok")).as("h"))
+
+  /** Signature rows from [[hashedTokens]] rows: the universal-hash input
+    * is pmod(xxhash64(tok), PRIME), projected once, not re-evaluated
+    * inside each of the NUM_HASHES min-aggregates (aggregate exprs are
+    * not reliably CSE'd). */
+  private def signaturesOfHashes(hashedToks: DataFrame, seed: Long): DataFrame = {
+    val cs = coeffs(seed, NUM_HASHES)
+    val hashed = hashedToks.withColumn("hp", pmod(col("h"), lit(PRIME)))
+    val aggs: Seq[Column] = cs.zipWithIndex.map { case ((a, b), i) =>
+      min(pmod(col("hp") * lit(a) + lit(b), lit(PRIME))).as(s"mh_$i")
+    }.toSeq :+ count(lit(1)).as("n_toks")
+    hashed.groupBy("doc_id", "lang", "source").agg(aggs.head, aggs.tail: _*)
   }
 
   /** Incremental update: tokenize + sign ONLY the new docs (same hash
@@ -239,25 +243,17 @@ object MinHashDedup {
     // Fail fast on a family mismatch: appending rows signed with a
     // different seed/shingle unit would not error — it would just stop
     // old-vs-new pairs from ever sharing a band bucket.
-    graft.core.IndexManifest.verify(newDocs.sparkSession, indexDir,
-      manifestFields(seed, shingleSize), "MinHashDedup.appendToIndex")
+    val op = "MinHashDedup.appendToIndex"
+    val manifest = graft.core.IndexManifest.verify(newDocs.sparkSession,
+      indexDir, manifestFields(seed, shingleSize), op)
     // Tokenize+hash the new docs ONCE: persist() the hashed frame so the
     // toks append materializes it and the signature aggregation reads the
     // cache instead of re-tokenizing (re-reading the whole appended toks
     // table would be worse — it scans the old corpus files too).
-    val hashedToks = tokens(newDocs, shingleSize)
-      .select(col("doc_id"), col("lang"), col("source"),
-        xxhash64(col("tok")).as("h"))
-      .persist()
+    val hashedToks = hashedTokens(newDocs, shingleSize).persist()
     try {
-      hashedToks.write.mode("append").parquet(s"$indexDir/toks")
-      val cs = coeffs(seed, NUM_HASHES)
-      val hashed = hashedToks.withColumn("hp", pmod(col("h"), lit(PRIME)))
-      val aggs: Seq[Column] = cs.zipWithIndex.map { case ((a, b), i) =>
-        min(pmod(col("hp") * lit(a) + lit(b), lit(PRIME))).as(s"mh_$i")
-      }.toSeq :+ count(lit(1)).as("n_toks")
-      hashed.groupBy("doc_id", "lang", "source").agg(aggs.head, aggs.tail: _*)
-        .write.mode("append").parquet(s"$indexDir/sigs")
+      graft.core.IndexManifest.appendTables(indexDir, manifest, op,
+        "toks" -> hashedToks, "sigs" -> signaturesOfHashes(hashedToks, seed))
     } finally hashedToks.unpersist()
   }
 
@@ -274,17 +270,18 @@ object MinHashDedup {
     // Banding layout must match what the stored sigs were built with (seed
     // and shingle unit are baked into the stored tables, so only the
     // family + band shape are checkable here).
-    graft.core.IndexManifest.verify(s, indexDir,
+    val manifest = graft.core.IndexManifest.verify(s, indexDir,
       Map("family" -> "minhash-lsh", "num_hashes" -> NUM_HASHES.toString,
         "bands" -> BANDS.toString), "MinHashDedup.pairsFromIndex")
-    val sigs = s.read.parquet(s"$indexDir/sigs")
+    val sigs = graft.core.IndexManifest.table(s, indexDir, manifest, "sigs")
     val cands = graft.core.Materialize(
       candidatePairs(bandSignatures(sigs)), "minhash-cands")
     // The intersection join runs on the raw 64-bit token hash, not the
     // token string — the same distinct-per-doc rows, ~60% less shuffle
     // width. xxhash64 collisions within one doc pair (~|A||B|/2^64 ≈
     // 1e-15) are the standard exact-in-practice hash-join trade.
-    val toks = s.read.parquet(s"$indexDir/toks").select("doc_id", "h")
+    val toks = graft.core.IndexManifest.table(s, indexDir, manifest, "toks")
+      .select("doc_id", "h")
     finishPairs(intersectionCounts(cands, toks), sigs, threshold)
   }
 

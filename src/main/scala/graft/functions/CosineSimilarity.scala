@@ -33,12 +33,21 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
 
+  // NULL, never a plausible similarity, when the input is outside the
+  // contract: arrays of different lengths, or a null element in either
+  // array (a primitive read of a null slot returns undefined content,
+  // typically 0.0). Same rule as graft_dot. Null-free equal-length inputs
+  // accumulate exactly as before.
+  override def nullable: Boolean = true
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (n != y.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xi = x.getDouble(i); val yi = y.getDouble(i)
       dot += xi * yi; na += xi * xi; nb += yi * yi; i += 1
     }
@@ -55,14 +64,22 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val xi = ctx.freshName("xi")
       val yi = ctx.freshName("yi")
       s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0, $na = 0.0, $nb = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $xi = $a.getDouble($i);
-          double $yi = $b.getDouble($i);
-          $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
+        int $n = $a.numElements();
+        if ($n != $b.numElements()) {
+          ${ev.isNull} = true;
+        } else {
+          double $dot = 0.0, $na = 0.0, $nb = 0.0;
+          for (int $i = 0; $i < $n; $i++) {
+            if ($a.isNullAt($i) || $b.isNullAt($i)) {
+              ${ev.isNull} = true;
+              break;
+            }
+            double $xi = $a.getDouble($i);
+            double $yi = $b.getDouble($i);
+            $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
+          }
+          ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
         }
-        ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
       """
     })
 

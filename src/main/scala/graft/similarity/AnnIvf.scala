@@ -60,7 +60,7 @@ object AnnIvf {
     * with a corpus-sized constant). Scores and tie-breaks are unchanged,
     * so the assignment — and every index built from it — is bit-identical.
     *
-    * Preconditions (ADVICE r13): `vec_id` must be UNIQUE in `emb` — the
+    * Preconditions: `vec_id` must be UNIQUE in `emb` — the
     * join-back fans out duplicates where the old max_by emitted one row
     * per vec_id (holds for every current caller: embeddings.parquet keys
     * vec_id, and fitCentroids passes the same frame through unchanged).
@@ -153,13 +153,16 @@ object AnnIvf {
     // Assignment reads the PERSISTED centroids so the k-means lineage is
     // truncated — the assignment plan never replays the fit.
     val persisted = graft.core.Materialize.at(centroids, s"$indexDir/centroids")
-    assign(e, persisted).write.mode("overwrite").parquet(s"$indexDir/assigned")
+    val assigned = assign(e, persisted)
+    assigned.write.mode("overwrite").parquet(s"$indexDir/assigned")
     // Manifest LAST — its presence certifies that centroids AND
     // assignments both landed (a mid-build crash must not leave a dir
     // that passes verify()).
     graft.core.IndexManifest.write(e.sparkSession, indexDir,
       Map("family" -> "ivf-cosine", "k" -> k.toString,
-        "fit_iters" -> fitIters.toString))
+        "fit_iters" -> fitIters.toString) ++
+        graft.core.IndexManifest.tableFields(
+          "centroids" -> centroids, "assigned" -> assigned))
   }
 
   /** Incremental index update: assign ONLY the new vectors against the
@@ -172,11 +175,11 @@ object AnnIvf {
     // IVF appends assign against the PERSISTED centroids, so the quantizer
     // is compatible by construction — the manifest check guards against
     // pointing append at a different index family's directory.
-    graft.core.IndexManifest.verify(s, indexDir,
+    val manifest = graft.core.IndexManifest.verify(s, indexDir,
       Map("family" -> "ivf-cosine"), "AnnIvf.append")
-    val centroids = s.read.parquet(s"$indexDir/centroids")
-    assign(newVecs, centroids)
-      .write.mode("append").parquet(s"$indexDir/assigned")
+    val centroids = graft.core.IndexManifest.table(s, indexDir, manifest, "centroids")
+    graft.core.IndexManifest.appendTables(indexDir, manifest, "AnnIvf.append",
+      "assigned" -> assign(newVecs, centroids))
   }
 
   /** Probe a persisted index: queries (qid, qemb) → top-k (qid, cand_id,
@@ -184,10 +187,10 @@ object AnnIvf {
   def search(s: SparkSession, indexDir: String, q: DataFrame,
       nprobe: Int = DEFAULT_NPROBE, topK: Int = TOP_K): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
-    graft.core.IndexManifest.verify(s, indexDir,
+    val manifest = graft.core.IndexManifest.verify(s, indexDir,
       Map("family" -> "ivf-cosine"), "AnnIvf.search")
-    val centroids = s.read.parquet(s"$indexDir/centroids")
-    val assigned = s.read.parquet(s"$indexDir/assigned")
+    val centroids = graft.core.IndexManifest.table(s, indexDir, manifest, "centroids")
+    val assigned = graft.core.IndexManifest.table(s, indexDir, manifest, "assigned")
 
     // Queries probe their nprobe nearest centroid cells. The window here
     // sorts K rows per query (K is capped), not corpus rows.

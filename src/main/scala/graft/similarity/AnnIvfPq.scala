@@ -64,12 +64,11 @@ object AnnIvfPq {
     // Corpus count rides the SAME write job as an observe() metric —
     // the separate count() job it replaces was a full extra pass.
     val cnt = org.apache.spark.sql.Observation("ivfpq-fit-n")
-    normalized(e)
+    val vectors = normalized(e)
       .select(col("vec_id"), col("emb").as("nemb"))
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
       .observe(cnt, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$indexDir/vectors")
-    val en = s.read.parquet(s"$indexDir/vectors")
+    val en = graft.core.Materialize.at(vectors, s"$indexDir/vectors")
       .select(col("vec_id"), col("nemb").as("emb"))
     val n = cnt.get("n").asInstanceOf[Long]
     val stride = math.max(1L, n / coarseK)
@@ -77,11 +76,8 @@ object AnnIvfPq {
         col("vec_id") / stride < coarseK)
       .select(col("vec_id").as("cid"), col("emb").as("cemb"))
     val centroids = AnnIvf.fitCentroids(en, seeds, iters)
-    centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val persistedC = s.read.parquet(s"$indexDir/centroids")
-    val assigned = AnnIvf.assign(en, persistedC)
-    assigned.select("vec_id", "cid").write.mode("overwrite")
-      .parquet(s"$indexDir/assigned")
+    val persistedC = graft.core.Materialize.at(centroids, s"$indexDir/centroids")
+    val assigned = AnnIvf.assign(en, persistedC).select("vec_id", "cid")
     // Residuals: vector minus its cell centroid — what PQ actually codes.
     // Derived from the PERSISTED assignment and materialized once
     // (optimization r16, lineage truncation): the old frame reused the
@@ -89,7 +85,7 @@ object AnnIvfPq {
     // the full N·K assignment scoring — OPTIMIZATION_r16.md records
     // multi-second single-task CPU stages for each replay at sf0.1. Same rows,
     // same doubles (assignment values come from the same persisted table).
-    val assignedP = s.read.parquet(s"$indexDir/assigned")
+    val assignedP = graft.core.Materialize.at(assigned, s"$indexDir/assigned")
     val residuals = graft.core.Materialize(
       en.join(assignedP, "vec_id")
         .join(broadcast(persistedC), "cid")
@@ -98,13 +94,16 @@ object AnnIvfPq {
       "ivfpq-resid")
     val rsv = AnnPq.subvectorsOf(residuals, normalize = false)
     val codes = AnnPq.chooseCodes(n)
-    AnnPq.fitCodebook(rsv, n, codes, iters)
-      .write.mode("overwrite").parquet(s"$indexDir/codebook")
-    val cb = s.read.parquet(s"$indexDir/codebook")
-    AnnPq.encode(rsv, cb).write.mode("overwrite").parquet(s"$indexDir/codes")
+    val book = AnnPq.fitCodebook(rsv, n, codes, iters)
+    val cb = graft.core.Materialize.at(book, s"$indexDir/codebook")
+    val coded = AnnPq.encode(rsv, cb)
+    coded.write.mode("overwrite").parquet(s"$indexDir/codes")
     graft.core.IndexManifest.write(s, indexDir,
       Map("family" -> "ivfpq-cosine", "coarse_k" -> coarseK.toString,
-        "m" -> AnnPq.M.toString, "codes" -> codes.toString))
+        "m" -> AnnPq.M.toString, "codes" -> codes.toString) ++
+        graft.core.IndexManifest.tableFields("vectors" -> vectors,
+          "centroids" -> centroids, "assigned" -> assigned,
+          "codebook" -> book, "codes" -> coded))
   }
 
   /** Probe nprobe cells, ADC-score their code rows, exact-rerank the
@@ -112,13 +111,14 @@ object AnnIvfPq {
   def search(s: SparkSession, indexDir: String, q: DataFrame,
       nprobe: Int = NPROBE, topK: Int = TOP_K): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
-    graft.core.IndexManifest.verify(s, indexDir,
+    val manifest = graft.core.IndexManifest.verify(s, indexDir,
       Map("family" -> "ivfpq-cosine"), "AnnIvfPq.search")
-    val centroids = s.read.parquet(s"$indexDir/centroids")
-    val assigned = s.read.parquet(s"$indexDir/assigned")
-    val cb = s.read.parquet(s"$indexDir/codebook")
-    val codesT = s.read.parquet(s"$indexDir/codes")
-    val vectors = s.read.parquet(s"$indexDir/vectors")
+    def table(name: String) = graft.core.IndexManifest.table(s, indexDir, manifest, name)
+    val centroids = table("centroids")
+    val assigned = table("assigned")
+    val cb = table("codebook")
+    val codesT = table("codes")
+    val vectors = table("vectors")
     val qn = normalized(q.select(col("qid").as("vec_id"), col("qemb").as("emb")))
       .select(col("vec_id").as("qid"), col("emb").as("qn"))
     // Probe: top-nprobe cells by ⟨q, centroid⟩; the dot rides along as

@@ -153,13 +153,7 @@ object AnnLsh {
   private def manifestFields(shape: Shape, seed: Long, dim: Int): Map[String, String] =
     Map("family" -> "lsh-hyperplane", "seed" -> seed.toString,
       "bands" -> shape.bands.toString,
-      "bits_per_band" -> shape.bitsPerBand.toString, "dim" -> dim.toString,
-      // Layout version (ADVICE r16): r16 split the index into
-      // vectors/ + payload-free buckets/ — an index written by pre-split
-      // code has no vectors/ table, and without this field it would pass
-      // verify() and then fail search with a path error instead of the
-      // contract error the manifest check exists to give.
-      "layout" -> "split-v2")
+      "bits_per_band" -> shape.bitsPerBand.toString, "dim" -> dim.toString)
 
   def buildIndex(e: DataFrame, indexDir: String, shape: Shape = Sharp,
       seed: Long = 7L, dim: Int = 64): Unit = {
@@ -176,14 +170,14 @@ object AnnLsh {
     // Vectors BEFORE buckets (the AnnPq two-table canon): an orphan
     // vector row after a crash is unreachable, while an orphan BUCKET row
     // would silently drop from the rerank join.
-    e.select(col("vec_id"), col("emb"))
-      .write.mode("overwrite").parquet(s"$indexDir/vectors")
-    bucketed(e, shape, probe = false, seed, dim)
-      .select("vec_id", "band", "sig")
-      .write.mode("overwrite").parquet(s"$indexDir/buckets")
+    val vectors = e.select(col("vec_id"), col("emb"))
+    vectors.write.mode("overwrite").parquet(s"$indexDir/vectors")
+    val buckets = bucketRows(e, shape, seed, dim)
+    buckets.write.mode("overwrite").parquet(s"$indexDir/buckets")
     // Manifest LAST: presence certifies a complete bucket table.
     graft.core.IndexManifest.write(e.sparkSession, indexDir,
-      manifestFields(shape, seed, dim))
+      manifestFields(shape, seed, dim) ++ graft.core.IndexManifest.tableFields(
+        "vectors" -> vectors, "buckets" -> buckets))
   }
 
   /** Incremental update: bucket ONLY the new vectors (same planes — the
@@ -191,15 +185,17 @@ object AnnLsh {
     * bucket files are untouched. */
   def append(indexDir: String, newVecs: DataFrame, shape: Shape = Sharp,
       seed: Long = 7L, dim: Int = 64): Unit = {
-    graft.core.IndexManifest.verify(newVecs.sparkSession, indexDir,
-      manifestFields(shape, seed, dim), "AnnLsh.append")
+    val manifest = graft.core.IndexManifest.verify(newVecs.sparkSession,
+      indexDir, manifestFields(shape, seed, dim), "AnnLsh.append")
     // Vectors before buckets — same crash-ordering rationale as buildIndex.
-    newVecs.select(col("vec_id"), col("emb"))
-      .write.mode("append").parquet(s"$indexDir/vectors")
-    bucketed(newVecs, shape, probe = false, seed, dim)
-      .select("vec_id", "band", "sig")
-      .write.mode("append").parquet(s"$indexDir/buckets")
+    graft.core.IndexManifest.appendTables(indexDir, manifest, "AnnLsh.append",
+      "vectors" -> newVecs.select(col("vec_id"), col("emb")),
+      "buckets" -> bucketRows(newVecs, shape, seed, dim))
   }
+
+  /** The stored bucket rows (vec_id, band, sig) of data-side vectors. */
+  private def bucketRows(e: DataFrame, shape: Shape, seed: Long, dim: Int): DataFrame =
+    bucketed(e, shape, probe = false, seed, dim).select("vec_id", "band", "sig")
 
   /** Probe a persisted index with query vectors (vec_id, emb): hash ONLY
     * the queries (plus their one-bit multi-probe flips), bucket-join
@@ -208,10 +204,10 @@ object AnnLsh {
       shape: Shape = Sharp, topK: Int = TOP_K,
       seed: Long = 7L, dim: Int = 64): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
-    graft.core.IndexManifest.verify(s, indexDir,
+    val manifest = graft.core.IndexManifest.verify(s, indexDir,
       manifestFields(shape, seed, dim), "AnnLsh.search")
-    val buckets = s.read.parquet(s"$indexDir/buckets")
-    val vectors = s.read.parquet(s"$indexDir/vectors")
+    val buckets = graft.core.IndexManifest.table(s, indexDir, manifest, "buckets")
+    val vectors = graft.core.IndexManifest.table(s, indexDir, manifest, "vectors")
     // qemb rides the QUERY side of the bucket join (it is probe-fan-out ×
     // |queries| rows — tiny by construction), so the queries frame is
     // scanned exactly once; only the corpus-side payload was removed

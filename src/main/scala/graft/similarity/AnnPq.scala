@@ -205,31 +205,31 @@ object AnnPq {
     // Corpus count rides the SAME write job as an observe() metric —
     // the separate count() job it replaces was a full extra pass.
     val cnt = org.apache.spark.sql.Observation("pq-fit-n")
-    normalized(e)
+    val vectors = normalized(e)
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
       .observe(cnt, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$indexDir/vectors")
-    val en = s.read.parquet(s"$indexDir/vectors")
+    val en = graft.core.Materialize.at(vectors, s"$indexDir/vectors")
       .select(col("vec_id"), col("nemb").as("emb"))
     val sv = subvectorsOf(en, normalize = false)
     val n = cnt.get("n").asInstanceOf[Long]
     val codes = chooseCodes(n)
-    fitCodebook(sv, n, codes, iters)
-      .write.mode("overwrite").parquet(s"$indexDir/codebook")
-    val cb = s.read.parquet(s"$indexDir/codebook")
-    encode(sv, cb).write.mode("overwrite").parquet(s"$indexDir/codes")
+    val book = fitCodebook(sv, n, codes, iters)
+    val cb = graft.core.Materialize.at(book, s"$indexDir/codebook")
+    val coded = encode(sv, cb)
+    coded.write.mode("overwrite").parquet(s"$indexDir/codes")
     graft.core.IndexManifest.write(s, indexDir,
       Map("family" -> "pq-adc", "m" -> M.toString,
-        "codes" -> codes.toString))
+        "codes" -> codes.toString) ++ graft.core.IndexManifest.tableFields(
+        "vectors" -> vectors, "codebook" -> book, "codes" -> coded))
   }
 
   /** Code new vectors against the frozen codebook and append — the
     * ingest path; the codebook is never refit here. */
   def append(s: SparkSession, indexDir: String, newVecs: DataFrame): Unit = {
     graft.GraftExtensions.ensureRegistered(s)
-    graft.core.IndexManifest.verify(s, indexDir,
+    val manifest = graft.core.IndexManifest.verify(s, indexDir,
       Map("family" -> "pq-adc"), "AnnPq.append")
-    val cb = s.read.parquet(s"$indexDir/codebook")
+    val cb = graft.core.IndexManifest.table(s, indexDir, manifest, "codebook")
     // Vectors BEFORE codes: every shortlist candidate originates from the
     // codes table and is inner-joined back to vectors for the exact
     // rerank, so an orphan vector row (crash after the first write) is
@@ -237,10 +237,9 @@ object AnnPq {
     // ADC shortlist and then be silently dropped by the rerank join,
     // degrading top-k quality with no error. This is the two-table
     // analogue of the sibling families' manifest-last canon.
-    normalized(newVecs)
-      .write.mode("append").parquet(s"$indexDir/vectors")
-    encode(subvectors(newVecs), cb)
-      .write.mode("append").parquet(s"$indexDir/codes")
+    graft.core.IndexManifest.appendTables(indexDir, manifest, "AnnPq.append",
+      "vectors" -> normalized(newVecs),
+      "codes" -> encode(subvectors(newVecs), cb))
   }
 
   /** ADC search: LUT join + partial-agg score sum + exact rerank of the
@@ -248,11 +247,11 @@ object AnnPq {
   def search(s: SparkSession, indexDir: String, q: DataFrame,
       topK: Int = TOP_K): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
-    graft.core.IndexManifest.verify(s, indexDir,
+    val manifest = graft.core.IndexManifest.verify(s, indexDir,
       Map("family" -> "pq-adc"), "AnnPq.search")
-    val cb = s.read.parquet(s"$indexDir/codebook")
-    val codesT = s.read.parquet(s"$indexDir/codes")
-    val vectors = s.read.parquet(s"$indexDir/vectors")
+    val cb = graft.core.IndexManifest.table(s, indexDir, manifest, "codebook")
+    val codesT = graft.core.IndexManifest.table(s, indexDir, manifest, "codes")
+    val vectors = graft.core.IndexManifest.table(s, indexDir, manifest, "vectors")
     val qsv = subvectors(q.select(col("qid").as("vec_id"), col("qemb").as("emb")))
       .select(col("vec_id").as("qid"), col("m"), col("sv").as("qsv"))
     // LUT: |queries| × M × codes rows of partial dot products — tiny, and

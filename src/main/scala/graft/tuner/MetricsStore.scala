@@ -78,40 +78,35 @@ class MetricsStore(root: String, appName: String) {
     write(flightBase("task"), listener.taskRows.map(taskJsonLine))
   }
 
-  /** Rows of one kind across both layouts (parquet runs + flight sidecar). */
+  /** Rows of one kind across both layouts (parquet runs + flight sidecar),
+    * both read with the model's schema: no footer-inference job, and every
+    * run keeps every column even when another run's files lack one. */
   private def readKind[T: Encoder](spark: SparkSession, parquetPath: String,
       jsonPath: String, cols: Seq[String]): Seq[T] = {
     val enc = implicitly[Encoder[T]]
     // Schema evolution of the store itself: a field added to the model
-    // after a store was written (e.g. TaskMetric.shuffleReadBytes) is
-    // back-filled with a zero of its type, so old runs stay readable and
+    // after a run was written (TaskMetric.shuffleReadBytes) reads as null
+    // for that run and is zero-filled, so old runs stay readable and
     // merely opt out of the analyses that need the new signal.
-    def backfill(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      enc.schema.fields.foldLeft(df) { (d, f) =>
-        if (d.columns.contains(f.name)) d
-        else d.withColumn(f.name, lit(0).cast(f.dataType))
-      }
+    val laterFields = Seq("shuffleReadBytes").filter(cols.contains)
+    def filled(df: org.apache.spark.sql.DataFrame) =
+      df.na.fill(0L, laterFields).select(cols.map(col): _*)
     val fromParquet =
       if (pathExists(spark, parquetPath))
-        backfill(spark.read.parquet(parquetPath))
-          .select(cols.map(col): _*).as[T](enc).collect().toSeq
-      else Nil
-    val fromFlight =
-      if (pathExists(spark, jsonPath)) {
-        // Flight files are the crashed-writer path by design, so a
-        // truncated trailing line is expected, not exceptional: drop
-        // malformed lines and any parsed row missing a required field
-        // instead of letting the non-nullable decode throw and poison
-        // every later tuned run against this store. Fields added to the
-        // model AFTER a flight file was written are zero-filled first so
-        // the old rows don't read as malformed.
-        val laterFields = Seq("shuffleReadBytes").filter(cols.contains)
-        spark.read.schema(enc.schema)
-          .option("mode", "DROPMALFORMED").json(jsonPath)
-          .na.fill(0L, laterFields)
-          .select(cols.map(col): _*).na.drop("any")
+        filled(spark.read.schema(enc.schema).parquet(parquetPath))
           .as[T](enc).collect().toSeq
-      } else Nil
+      else Nil
+    // Flight files are the crashed-writer path by design, so a truncated
+    // trailing line is expected, not exceptional: drop malformed lines and
+    // any parsed row missing a required field instead of letting the
+    // non-nullable decode throw and poison every later tuned run against
+    // this store.
+    val fromFlight =
+      if (pathExists(spark, jsonPath))
+        filled(spark.read.schema(enc.schema)
+            .option("mode", "DROPMALFORMED").json(jsonPath))
+          .na.drop("any").as[T](enc).collect().toSeq
+      else Nil
     fromParquet ++ fromFlight
   }
 
@@ -137,9 +132,10 @@ class MetricsStore(root: String, appName: String) {
         StageRunInfo.assemble(st, tasksByRun.getOrElse(rid, Nil))
       }
     } catch {
-      // R22 error-tolerance is ONLY for an unreadable/empty layout (e.g. a
-      // crashed writer left a dir with no parquet footer): warn + empty
-      // history. Runtime corruption (SparkException etc.) propagates.
+      // R22 error-tolerance is ONLY for a layout the read cannot resolve
+      // (AnalysisException): warn + empty history. A run dir a crashed
+      // writer left without data files reads as empty under the declared
+      // schema. Runtime corruption (SparkException etc.) propagates.
       case e: org.apache.spark.sql.AnalysisException =>
         System.err.println(s"[graft.tuner] unreadable metrics store at $base: ${e.getMessage}")
         Nil

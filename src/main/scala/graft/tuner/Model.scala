@@ -15,9 +15,9 @@ case class TaskMetric(
     durationMs: Long,
     peakMemory: Long,
     // Per-task shuffle-read volume — the reducer-skew signal
-    // (SkewAdvisor). Added after round 8 started; stores persisted by
-    // older builds lack the column and read back as 0 (MetricsStore
-    // back-fills), which simply disables skew analysis on those runs.
+    // (SkewAdvisor). Runs persisted before this field existed lack the
+    // column and read back as 0 (MetricsStore zero-fills), which simply
+    // disables skew analysis on those runs.
     shuffleReadBytes: Long = 0L)
 
 case class StageMetric(

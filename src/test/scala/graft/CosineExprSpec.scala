@@ -52,4 +52,28 @@ class CosineExprSpec extends SparkSpec {
       "SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c").collect()
     assert(math.abs(r.head.getDouble(0) - 1.0) < 1e-12)
   }
+
+  test("length mismatch or a null element yields null on both eval paths") {
+    GraftExtensions.ensureRegistered(spark)
+    val df = Seq(
+      (1, Seq(Some(1.0), None, Some(3.0)), Seq(Some(4.0), Some(5.0), Some(6.0))),
+      (2, Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), None)),
+      (3, Seq(Some(1.0), Some(2.0), Some(3.0)), Seq(Some(4.0), Some(5.0))),
+      (4, Seq(Some(1.0)), Seq.empty[Option[Double]]),
+      (5, Seq(Some(3.0), Some(4.0)), Seq(Some(3.0), Some(4.0)))).toDF("id", "a", "b")
+    def cosines(in: org.apache.spark.sql.DataFrame) =
+      in.select(call_function("graft_cosine", col("a"), col("b")).as("c"), col("id"))
+        .orderBy("id").collect()
+    // Interpreted: a local relation constant-folds through nullSafeEval.
+    val local = cosines(df)
+    // Codegen: a parquet-rooted projection runs doGenCode's loop.
+    val dir = graft.core.TempDirs.create("graft-cosspec-null")
+    df.write.mode("overwrite").parquet(dir)
+    val scanned = cosines(spark.read.parquet(dir))
+    Seq(local, scanned).foreach { got =>
+      (0 until 4).foreach(i =>
+        assert(got(i).isNullAt(0), s"row ${i + 1}: expected null, got ${got(i).get(0)}"))
+      assert(!got(4).isNullAt(0) && got(4).getDouble(0) == 25.0 / (5.0 * 5.0))
+    }
+  }
 }

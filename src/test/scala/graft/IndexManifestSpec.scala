@@ -147,4 +147,67 @@ class IndexManifestSpec extends SparkSpec {
       MinHashDedup.appendToIndex(docsFixture, idx, seed = 42L)
     }
   }
+
+  /** Overwrite the manifest with raw JSON, as an older build would have
+    * written it (IndexManifest.write always stamps the current version). */
+  private def rawManifest(dir: String, fields: Map[String, String]): Unit = {
+    new java.io.File(s"$dir/.${IndexManifest.FILE}.crc").delete()
+    java.nio.file.Files.writeString(
+      new java.io.File(s"$dir/${IndexManifest.FILE}").toPath,
+      fields.toSeq.sorted.map { case (k, v) => s""""$k":"$v"""" }
+        .mkString("{", ",", "}\n"))
+  }
+
+  test("append refuses a frame whose schema differs from the recorded table, before writing") {
+    import spark.implicits._
+    val idx = TempDirs.create("graft-mh-append-schema")
+    MinHashDedup.buildIndex(docsFixture, idx, seed = 42L)
+    def files = Seq("toks", "sigs").map(t => new java.io.File(s"$idx/$t").list().toSet)
+    val before = files
+    val intIds = Seq((5, "en", "web", "the quick brown fox jumps over the lazy dogs"))
+      .toDF("doc_id", "lang", "source", "text")
+    val ex = intercept[IllegalStateException] {
+      MinHashDedup.appendToIndex(intIds, idx, seed = 42L)
+    }
+    Seq("'toks'", "doc_id BIGINT", "doc_id INT").foreach(w =>
+      assert(ex.getMessage.contains(w), s"message lacks $w: ${ex.getMessage}"))
+    assert(files == before, "a refused append must write nothing")
+    // Nullability alone is no mismatch: the same docs read back from
+    // parquet (every column nullable) append cleanly.
+    val dir = TempDirs.create("graft-mh-append-nullable")
+    Seq((5L, "en", "web", "the quick brown fox jumps over the lazy dogs"))
+      .toDF("doc_id", "lang", "source", "text").write.mode("overwrite").parquet(dir)
+    MinHashDedup.appendToIndex(spark.read.parquet(dir), idx, seed = 42L)
+    assert(MinHashDedup.pairsFromIndex(spark, idx).select("id1", "id2").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).contains((1L, 5L)))
+
+    graft.GraftExtensions.ensureRegistered(spark)
+    val e = PlantedEmbeddings.df(spark).limit(50)
+    val ivf = TempDirs.create("graft-ivf-append-schema")
+    AnnIvf.fit(e, ivf, k = 4)
+    val assignedBefore = new java.io.File(s"$ivf/assigned").list().toSet
+    val floats = e.limit(3).select((col("vec_id") + 1000L).as("vec_id"),
+      col("emb").cast("array<float>").as("emb"))
+    val ex2 = intercept[IllegalStateException](AnnIvf.append(spark, ivf, floats))
+    Seq("'assigned'", "ARRAY<DOUBLE>", "ARRAY<FLOAT>").foreach(w =>
+      assert(ex2.getMessage.contains(w), s"message lacks $w: ${ex2.getMessage}"))
+    assert(new java.io.File(s"$ivf/assigned").list().toSet == assignedBefore)
+  }
+
+  test("search refuses an index whose manifest predates table schemas") {
+    graft.GraftExtensions.ensureRegistered(spark)
+    val e = PlantedEmbeddings.df(spark).limit(50)
+    val q = e.limit(2).select(col("vec_id").as("qid"), col("emb").as("qemb"))
+    val idx = TempDirs.create("graft-ivf-v1")
+    AnnIvf.fit(e, idx, k = 4)
+    val current = IndexManifest.read(spark, idx)
+    rawManifest(idx, current.filter(!_._1.startsWith("table.")) + ("schema_version" -> "1"))
+    val ex = intercept[IllegalStateException](AnnIvf.search(spark, idx, q))
+    assert(ex.getMessage.contains("rebuild") && ex.getMessage.contains("'1'"), ex.getMessage)
+    // A current-version manifest missing one table's schema fails the
+    // read with a contract error naming that table, not an inferred read.
+    rawManifest(idx, current - "table.assigned")
+    val ex2 = intercept[IllegalStateException](AnnIvf.search(spark, idx, q))
+    assert(ex2.getMessage.contains("'assigned'"), ex2.getMessage)
+  }
 }

@@ -1,0 +1,121 @@
+package graft
+
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, MapType, Metadata, StructType}
+import graft.core.{IndexManifest, Materialize, TempDirs}
+import graft.dedup.MinHashDedup
+import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh, AnnPq}
+import graft.tuner.{MetricsStore, StageMetric, TaskMetric}
+
+/** Persisted-index and metrics-store reads pass a recorded schema, so they
+  * launch no footer-inference job; and every index family's `table.<name>`
+  * manifest field is the schema its builder wrote. */
+class IndexReadJobsSpec extends SparkSpec {
+
+  private def docs = {
+    import spark.implicits._
+    Seq(
+      (1L, "en", "web", "the quick brown fox jumps over the lazy dog"),
+      (2L, "en", "web", "the quick brown fox jumps over the lazy cat"),
+      (3L, "en", "web", "a completely different document about spark"),
+      (4L, "de", "web", "ein ganz anderes dokument")
+    ).toDF("doc_id", "lang", "source", "text")
+  }
+
+  test("building AnnIvf.search launches no job") {
+    GraftExtensions.ensureRegistered(spark)
+    val e = PlantedEmbeddings.df(spark)
+    val idx = TempDirs.create("graft-ivf-jobs")
+    AnnIvf.fit(e, idx, k = 8)
+    val (out, jobs) = JobCount(spark)(
+      AnnIvf.search(spark, idx, PlantedEmbeddings.queries(e)))
+    assert(jobs == 0, s"AnnIvf.search ran $jobs jobs while being built")
+    assert(out.count() > 0)
+  }
+
+  test("MetricsStore.history on a two-run store runs one job per kind") {
+    val store = new MetricsStore(TempDirs.create("graft-store-jobs"), "app")
+    (0 to 1).foreach { run =>
+      store.persistRows(spark,
+        Seq(StageMetric(run, 1, 0, 5L, 100L, 0L, 0L, 1024L, 0L)),
+        Seq(TaskMetric(run, 1, 0L, "driver", 10L, 0L, 1024L)), run)
+    }
+    val (hist, jobs) = JobCount(spark)(store.history(spark))
+    assert(hist.size == 2)
+    assert(jobs == 2, s"history ran $jobs jobs, expected one collect per kind")
+  }
+
+  test("building pairsFromIndex runs only its candidate barrier's jobs") {
+    val idx = TempDirs.create("graft-mh-jobs")
+    MinHashDedup.buildIndex(docs, idx)
+    val manifest = IndexManifest.read(spark, idx)
+    val (_, barrier) = JobCount(spark)(Materialize(
+      MinHashDedup.candidatePairs(MinHashDedup.bandSignatures(
+        IndexManifest.table(spark, idx, manifest, "sigs"))), "minhash-cands"))
+    val (pairs, jobs) = JobCount(spark)(MinHashDedup.pairsFromIndex(spark, idx))
+    assert(barrier > 0 && jobs == barrier,
+      s"pairsFromIndex ran $jobs jobs while being built; its barrier runs $barrier")
+    assert(pairs.select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSet == Set((1L, 2L)))
+  }
+
+  /** The Catalyst schema Spark stored in a parquet part file's footer. */
+  private def footerSchema(tableDir: String): StructType = {
+    val part = new java.io.File(tableDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.getPath), spark.sparkContext.hadoopConfiguration))
+    try DataType.fromJson(reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType]
+    finally reader.close()
+  }
+
+  /** What DDL can express: field nullability and element types, but not
+    * array element / map value nullability or field metadata. */
+  private def ddlView(t: DataType): DataType = t match {
+    case st: StructType => StructType(st.fields.map(f =>
+      f.copy(dataType = ddlView(f.dataType), metadata = Metadata.empty)))
+    case ArrayType(e, _) => ArrayType(ddlView(e), containsNull = true)
+    case MapType(k, v, _) => MapType(ddlView(k), ddlView(v), valueContainsNull = true)
+    case other => other
+  }
+
+  test("every family records the schema it wrote and reads tables back with it") {
+    GraftExtensions.ensureRegistered(spark)
+    val e = PlantedEmbeddings.df(spark)
+    def dir(f: String) = TempDirs.create(s"graft-ddl-$f")
+    val built = Seq(
+      ("minhash", Set("toks", "sigs"), { (d: String) => MinHashDedup.buildIndex(docs, d) }),
+      ("ivf", Set("centroids", "assigned"), { (d: String) => AnnIvf.fit(e, d, k = 8) }),
+      ("lsh", Set("vectors", "buckets"), { (d: String) => AnnLsh.buildIndex(e, d) }),
+      ("pq", Set("vectors", "codebook", "codes"), { (d: String) => AnnPq.fit(e, d) }),
+      ("ivfpq", Set("vectors", "centroids", "assigned", "codebook", "codes"),
+        { (d: String) => AnnIvfPq.fit(e, d, coarseK = 8) })
+    ).map { case (family, tables, build) =>
+      val d = dir(family)
+      build(d)
+      (family, d, tables, IndexManifest.read(spark, d))
+    }
+    built.foreach { case (family, d, tables, manifest) =>
+      val recorded = manifest.collect {
+        case (k, ddl) if k.startsWith("table.") => k.stripPrefix("table.") -> ddl
+      }
+      assert(recorded.keySet == tables, s"$family records tables ${recorded.keySet}")
+      recorded.foreach { case (name, ddl) =>
+        val declared = StructType.fromDDL(ddl)
+        assert(declared.toDDL == ddl, s"$family/$name: DDL does not round-trip")
+        assert(declared == ddlView(footerSchema(s"$d/$name")),
+          s"$family/$name: recorded $ddl, wrote ${footerSchema(s"$d/$name").toDDL}")
+        assert(IndexManifest.table(spark, d, manifest, name).schema ==
+          spark.read.parquet(s"$d/$name").schema, s"$family/$name: read schema")
+      }
+    }
+    // Spot checks that NOT NULL and element types survive the DDL.
+    def field(family: String, table: String, col: String) =
+      StructType.fromDDL(built.find(_._1 == family).get._4(s"table.$table"))(col)
+    assert(!field("minhash", "sigs", "n_toks").nullable)
+    assert(!field("pq", "codebook", "code").nullable)
+    assert(field("ivf", "assigned", "emb").dataType == ArrayType(DoubleType))
+    assert(field("ivfpq", "codebook", "cw").dataType == ArrayType(DoubleType))
+  }
+}

@@ -109,4 +109,26 @@ class SkewAdvisorSpec extends SparkSpec {
     assert(hist.head.head.tasks.map(_.shuffleReadBytes) == Seq(0L, 0L),
       "legacy task rows not zero-backfilled")
   }
+
+  test("a legacy run beside a newer run keeps the newer run's shuffle-read bytes") {
+    import spark.implicits._
+    val root = graft.core.TempDirs.create("graft-skew-mixed")
+    val store = new MetricsStore(root, "mixed")
+    // Run 0 in the old layout (task parquet without shuffleReadBytes)...
+    Seq((0, 1, 0L, "driver", 10L, 0L))
+      .toDF("runId", "stageId", "taskId", "executorId", "durationMs", "peakMemory")
+      .write.parquet(s"$root/mixed/kind=task/run=0")
+    Seq((0, 1, 0, 5L, 100L, 0L, 0L, 1024L, 0L))
+      .toDF("runId", "stageId", "attempt", "executorCpuTimeMs",
+        "stageDurationMs", "bytesRead", "shuffleBytesWritten",
+        "shuffleBytesRead", "submittedAtMs")
+      .write.parquet(s"$root/mixed/kind=stage/run=0")
+    // ...and run 1 in the current one. A read that takes its schema from
+    // one file drops the column for both runs.
+    store.persistRows(spark, Seq(StageMetric(1, 1, 0, 5L, 100L, 0L, 0L, 777L, 0L)),
+      Seq(TaskMetric(1, 1, 0L, "driver", 10L, 0L, 777L)), 1)
+    val hist = store.history(spark)
+    assert(hist.map(_.flatMap(_.tasks).map(_.shuffleReadBytes)) ==
+      List(List(0L), List(777L)))
+  }
 }
