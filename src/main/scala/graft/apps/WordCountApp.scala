@@ -11,10 +11,11 @@ import graft.tuner.Tuner
   * CountingApp.scala:7-49). A named-flag parser replaces the reference's
   * positional args that silently skipped args(2) (quirk Q5).
   *
-  * Each invocation: read history → recommend partitions → apply → run the
-  * WordCount with recording → persist this run's metrics. Re-running with
-  * the same --metrics dir reproduces the reference's cross-process
-  * feedback loop.
+  * Each invocation is one `Tuner.tuneAndRunTracked` step: read history →
+  * apply the slot-floored shuffle partitions, scan split size and skew
+  * knobs → run the WordCount with recording → persist this run's metrics.
+  * Re-running with the same --metrics dir reproduces the reference's
+  * cross-process feedback loop.
   */
 object WordCountApp {
 
@@ -48,16 +49,18 @@ object WordCountApp {
     * learn from. */
   def run(spark: SparkSession, a: Args): (Int, Int) = {
     val tuner = new Tuner(a.metrics, a.appName)
-    val partitions =
-      if (a.tune) tuner.applyTo(spark)
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val (_, runId) = tuner.withRecording(spark) {
+    def wordCount(): Unit = {
       val lines = spark.read.text(a.input).withColumnRenamed("value", "text")
       TextOps.wordCount(lines, "[ ]", Seq("the"))
         .orderBy(desc("cnt"), asc("token"))
         .write.mode(SaveMode.Overwrite).csv(a.output)
     }
-    (partitions, runId)
+    if (a.tune) {
+      val r = tuner.tuneAndRunTracked(spark)(wordCount())
+      (r.partitions, r.runId)
+    } else
+      (spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        tuner.record(spark)(wordCount()).runId)
   }
 
   def main(argv: Array[String]): Unit = parseArgs(argv) match {

@@ -209,10 +209,7 @@ object LayoutOps {
       def partial(df: DataFrame) =
         df.groupBy("day", "event_type")
           .agg(sum(dec(col("value"))).as("s"), count(lit(1)).as("c"))
-      val tmp = graft.core.TempDirs.create("graft-mv")
-      partial(ev.filter(col("event_id") % 2 === 0))
-        .write.mode("overwrite").parquet(s"$tmp/rollup")
-      val mv = s.read.parquet(s"$tmp/rollup")
+      val mv = graft.core.Materialize(partial(ev.filter(col("event_id") % 2 === 0)), "mv")
       mv.unionByName(partial(ev.filter(col("event_id") % 2 === 1)))
         .groupBy("day", "event_type")
         .agg(sum("s").as("s"), sum("c").as("c"))

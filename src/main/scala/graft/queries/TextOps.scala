@@ -496,15 +496,12 @@ object TextOps {
       // carried NINE corpus scans through the factor-chain branches).
       // planned_copies = docs_l·base_l + Σ_{bucket<thr} bucket_docs —
       // identical to summing per-doc epochs.
-      val tmp = graft.core.TempDirs.create("graft-tempmix")
-      t(s, dir, "documents")
+      val langBuck = graft.core.Materialize(t(s, dir, "documents")
         .select(col("lang"),
           size(split(col("text"), " ")).cast("long").as("n_tok"),
           bucketExpr.cast("long").as("bucket"))
         .groupBy("lang", "bucket")
-        .agg(count(lit(1)).as("docs"), sum("n_tok").as("tokens"))
-        .write.mode("overwrite").parquet(tmp)
-      val langBuck = s.read.parquet(tmp)
+        .agg(count(lit(1)).as("docs"), sum("n_tok").as("tokens")), "tempmix")
       val langTok = langBuck.groupBy("lang")
         .agg(sum("docs").as("docs"), sum("tokens").as("tokens"))
       val tot = langTok.agg(sum("tokens").cast("double").as("tot_tokens"))

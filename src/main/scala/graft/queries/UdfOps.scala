@@ -107,11 +107,8 @@ object UdfOps {
       // beats persist() here: repeated registry invocations in one JVM
       // (Verify + Bench reps) were accumulating never-unpersisted cache
       // entries for the process lifetime; TempDirs sweeps the files.
-      val tmp = graft.core.TempDirs.create("graft-hll-sk")
-      t(s, dir, "orders").groupBy("o_orderstatus")
-        .agg(hll_sketch_agg(col("o_custkey")).as("sk"))
-        .write.mode("overwrite").parquet(s"$tmp/sk")
-      val sk = s.read.parquet(s"$tmp/sk")
+      val sk = graft.core.Materialize(t(s, dir, "orders").groupBy("o_orderstatus")
+        .agg(hll_sketch_agg(col("o_custkey")).as("sk")), "hll-sk")
       val per = sk.select(col("o_orderstatus"),
         hll_sketch_estimate(col("sk")).as("approx_custs"))
       val union = sk.agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_custs"))

@@ -102,17 +102,17 @@ class ComputePartitions(conf: Map[String, String]) {
       }
   }
 
-  /** Slot floor for APPLYING a recommendation (round 14, found by the
-    * sf1 tuner A/B): under AQE the recorded `numPartitionsUsed` is the
-    * post-coalesce EXECUTED count, so the plateau/regressing branches can
-    * echo a coalesced tiny stage back as the next run's INITIAL count —
-    * the A/B's q04 (aqe on) trajectory recommended 1 on iteration 3,
-    * which at cluster scale parks every slot but one behind a single
-    * shuffle task. The decision table above stays the reference's
-    * formula (it is the spec); the SESSION never applies fewer initial
-    * partitions than the cluster has slots — idling cores is never the
-    * right initial plan, and AQE can only coalesce DOWN from the initial
-    * count, never split a non-skewed stage up. */
+  /** Slot floor for APPLYING a recommendation: under AQE the recorded
+    * `numPartitionsUsed` is the post-coalesce EXECUTED count, so the
+    * plateau/regressing branches can echo a coalesced tiny stage back as
+    * the next run's INITIAL count — two runs whose biggest shuffle AQE
+    * coalesced to one task recommend 1, which at cluster scale parks
+    * every slot but one behind a single shuffle task. The decision table
+    * above stays the reference's formula (it is the spec); the SESSION
+    * never applies fewer initial partitions than the cluster has slots —
+    * idling cores is never the right initial plan, and AQE can only
+    * coalesce DOWN from the initial count, never split a non-skewed stage
+    * up. */
   def applySlotFloor(partitions: Int): Int =
     math.max(partitions, possibleConcurrentTasks())
 
@@ -139,11 +139,4 @@ class ComputePartitions(conf: Map[String, String]) {
     val mb = math.max(4.0, math.min(1024.0, math.min(byMemoryMb, bySlotsMb)))
     math.round(mb * 1024 * 1024)
   }
-
-  /** The reference's dead-code single-run policy (:76-98), kept as a
-    * documented alternative: full utilization ⇒ keep; otherwise grow
-    * toward the floor. */
-  def fromStageMetricFullUtilization(stage: StageRunInfo): Int =
-    if (stage.executorIdleTimeMs <= 0) stage.numPartitionsUsed
-    else math.max(partitionsFloor(stage.inputSizeMb), stage.numPartitionsUsed + 1)
 }

@@ -8,8 +8,9 @@ import org.apache.spark.scheduler._
   * com/highperformancespark/robinsparkles/Listener.scala:16-23), which is
   * unavailable offline (SURVEY.md §7).
   *
-  * Runs on the listener-bus thread; buffers are synchronized and flushed
-  * by [[MetricsStore.persist]] after the job completes. Buffer volume is
+  * Runs on the listener-bus thread; buffers are synchronized and
+  * snapshotted by [[Tuner.record]] after its body completes, then written
+  * by [[MetricsStore.persistRows]]. Buffer volume is
   * O(stages + tasks) of one application run — driver-side bounded, not
   * data-scale-bound.
   */
@@ -64,9 +65,10 @@ class MetricsListener(runId: Int) extends SparkListener {
   * because no Spark job can be submitted once stop() is underway; see
   * [[MetricsStore.persistDirect]].
   *
-  * Use either this (ambient recording) or [[Tuner.withRecording]]
-  * (scoped recording) for a given store — not both in one app, or the
-  * two will allocate the same run id. */
+  * Use either this (ambient recording) or [[Tuner.record]] (scoped
+  * recording, which [[Tuner.tuneAndRunTracked]] also uses) for a given
+  * store — not both in one app, or the two will allocate the same run
+  * id. */
 class FlightRecorder(store: MetricsStore, runId: Int,
     hadoopConf: org.apache.hadoop.conf.Configuration)
   extends MetricsListener(runId) {

@@ -27,13 +27,10 @@ class MetricsStore(root: String, appName: String) {
     fs.exists(path)
   }
 
-  def persist(spark: SparkSession, listener: MetricsListener, runId: Int): Unit =
-    persistRows(spark, listener.stageRows, listener.taskRows, runId)
-
-  /** Persist explicit row snapshots. Callers that also want an in-memory
-    * view of the run (Tuner.tuneAndRunTracked) snapshot the listener ONCE
-    * and pass the same rows here — the persist jobs' own stage/task events
-    * keep arriving on the still-attached listener, so two separate
+  /** Persist explicit row snapshots. A caller that also wants an
+    * in-memory view of the run (Tuner.record) snapshots the listener ONCE
+    * and passes the same rows here — the persist jobs' own stage/task
+    * events keep arriving on the still-attached listener, so two separate
     * listener reads would record different runs. */
   def persistRows(spark: SparkSession, stages: Seq[StageMetric],
       tasks: Seq[TaskMetric], runId: Int): Unit = {

@@ -44,8 +44,6 @@ case class StageRunInfo(
   def totalTaskTimeMs: Long = tasks.foldLeft(0L)(_ + _.durationMs)
   /** Partitions used = number of tasks (ComputePartitions.scala:28). */
   def numPartitionsUsed: Int = tasks.length
-  /** stageTime×numExecutors − totalTaskTime (ComputePartitions.scala:193-197). */
-  def executorIdleTimeMs: Long = stageTimeMs * numExecutors - totalTaskTimeMs
 }
 
 object StageRunInfo {

@@ -2,7 +2,7 @@ package graft.tuner
 
 /** Reducer-skew advisor — the third tuner tier next to the shuffle
   * partition count (reference decision table, `ComputePartitions`) and
-  * the scan input split (`recommendMaxPartitionBytes`): per-TASK
+  * the scan input split (`ComputePartitions.maxPartitionBytes`): per-TASK
   * shuffle-read volumes of the most shuffle-read-expensive stage expose
   * the straggler that per-STAGE totals average away. A 1000-executor
   * stage whose median task reads 64 MB but whose max reads 6 GB is a
@@ -21,9 +21,12 @@ package graft.tuner
   */
 object SkewAdvisor {
 
+  /** The classic straggler rule: max/median at or above this is skew. */
+  private val SkewRatio = 4.0
+
   /** Analysis of one run's worst shuffle-read stage. `ratio` is
-    * max/median per-task shuffle-read bytes; `skewed` applies the
-    * classic 4× straggler rule. */
+    * max/median per-task shuffle-read bytes; `skewed` applies
+    * [[SkewRatio]]. */
   case class SkewReport(maxBytes: Long, medianBytes: Long, ratio: Double,
       skewed: Boolean, recommendedFactor: Int,
       recommendedThresholdBytes: Long)
@@ -33,7 +36,7 @@ object SkewAdvisor {
     * straggler to the median. None when the run has no shuffle-reading
     * stage with per-task volumes (e.g. history persisted by a build
     * without `TaskMetric.shuffleReadBytes` — back-filled as 0). */
-  def analyze(run: List[StageRunInfo], skewRatio: Double = 4.0): Option[SkewReport] = {
+  def analyze(run: List[StageRunInfo]): Option[SkewReport] = {
     val reducer = run.filter(_.shuffle.bytesRead > 0)
       .sortBy(-_.shuffle.bytesRead).headOption
     reducer.flatMap { st =>
@@ -44,7 +47,7 @@ object SkewAdvisor {
         val mx = bytes.last
         val ratio = mx.toDouble / math.max(1L, median)
         val factor = math.min(5, math.max(2, math.ceil(ratio / 2.0).toInt))
-        Some(SkewReport(mx, median, ratio, ratio >= skewRatio, factor,
+        Some(SkewReport(mx, median, ratio, ratio >= SkewRatio, factor,
           factor.toLong * median))
       }
     }
@@ -53,7 +56,7 @@ object SkewAdvisor {
   /** Conf deltas for the next run. Balanced runs return empty — the
     * advisor never narrows AQE's defaults, it only makes a PROVEN
     * straggler eligible for splitting. */
-  def recommendedConf(report: SkewReport): Map[String, String] =
+  def knobs(report: SkewReport): Map[String, String] =
     if (!report.skewed) Map.empty
     else Map(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",

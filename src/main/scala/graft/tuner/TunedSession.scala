@@ -1,81 +1,27 @@
 package graft.tuner
 
+import org.apache.spark.graftaccess.ListenerBusAccess
 import org.apache.spark.sql.SparkSession
 
 /** The tuning loop (reference EP1, CountingApp.scala:61-84) rebuilt around
   * SparkSession: read history → pick the most-shuffle-expensive stage
   * series → recommend a partition count → apply → record this run.
   *
-  * Spark-4 adaptation: `spark.sql.shuffle.partitions` is runtime-settable,
-  * so the recommendation applies to the *current* session immediately;
-  * `spark.default.parallelism` (RDD world) only applies to the next
-  * session and is returned for the caller's builder.
+  * Spark-4 adaptation: every knob the loop sets (`spark.sql.shuffle.partitions`,
+  * `spark.sql.files.maxPartitionBytes`, the AQE skew-join thresholds) is
+  * runtime-settable, so the recommendation applies to the *current*
+  * session immediately; [[TunedRun]] carries the applied values for a
+  * caller that builds a next session.
   */
 class Tuner(metricsRoot: String, appName: String) {
   val store = new MetricsStore(metricsRoot, appName)
 
-  /** Recommendation from recorded history (empty history → cold start). */
-  def recommendPartitions(spark: SparkSession): Int = {
-    val history = store.history(spark)
-    val target = StageRunInfo.stagesWithMostExpensiveShuffle(history)
-    val conf = spark.conf.getAll
-    new ComputePartitions(conf).fromStageMetricSharedCluster(target)
-  }
-
-  /** Scan-tier input-split recommendation from the recorded scan stage's
-    * input size (most recent run = current data size; cold start falls
-    * back to the memory bound alone). Runtime-settable like the shuffle
-    * knob — it re-plans the NEXT scan's FilePartitions. */
-  def recommendMaxPartitionBytes(spark: SparkSession): Long = {
-    val scans = StageRunInfo.scanStagesWithMostInput(store.history(spark))
-    new ComputePartitions(spark.conf.getAll)
-      .maxPartitionBytes(scans.lastOption.map(_.inputSizeMb).getOrElse(0.0))
-  }
-
-  /** All tuned knobs for the NEXT session's builder (SURVEY §7:
-    * DataFrame shuffles obey spark.sql.shuffle.partitions, RDD jobs
-    * spark.default.parallelism — the tuner sets both; plus the scan-tier
-    * input-split size). */
-  def recommendedConf(spark: SparkSession): Map[String, String] = {
-    val p = recommendPartitions(spark).toString
-    // Skew tier: the latest run's straggler profile, when flagged, adds
-    // the AQE skew-join knobs (SkewAdvisor); balanced history adds none.
-    val skew = store.history(spark).lastOption
-      .flatMap(SkewAdvisor.analyze(_))
-      .map(SkewAdvisor.recommendedConf).getOrElse(Map.empty)
-    Map("spark.sql.shuffle.partitions" -> p, "spark.default.parallelism" -> p,
-      "spark.sql.files.maxPartitionBytes" ->
-        recommendMaxPartitionBytes(spark).toString) ++ skew
-  }
-
-  /** Apply recommendation to this session and return it. */
-  def applyTo(spark: SparkSession): Int = {
-    val p = recommendPartitions(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-    p
-  }
-
-  /** Run `body` with metrics recording; flush as the next run id. Returns
-    * (result, runId). */
-  def withRecording[T](spark: SparkSession)(body: => T): (T, Int) = {
-    val runId = store.nextRunId(spark)
-    val listener = new MetricsListener(runId)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val result = body
-      // Listener-bus events are async; wait for the queue to drain before
-      // flushing so the recorded run is complete.
-      org.apache.spark.graftaccess.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
-      store.persist(spark, listener, runId)
-      (result, runId)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** Attach an ambient flight recorder: metrics auto-persist on
     * application end with no further calls (reference flight-recorder
     * contract). Returns the listener so the app can flush() early if it
-    * wants the run visible before shutdown. Do not combine with
-    * withRecording on the same store in one app (run-id collision). */
+    * wants the run visible before shutdown. Do not combine with [[record]]
+    * or [[tuneAndRunTracked]] on the same store in one app (run-id
+    * collision). */
   def attachFlightRecorder(spark: SparkSession): FlightRecorder = {
     val runId = store.nextRunId(spark)
     val fr = new FlightRecorder(store, runId,
@@ -84,47 +30,19 @@ class Tuner(metricsRoot: String, appName: String) {
     fr
   }
 
-  /** Full loop step: tune from history, then record this run. */
-  def tuneAndRun[T](spark: SparkSession)(body: => T): (T, Int, Int) = {
-    val r = tuneAndRunTracked(spark)(body)
-    (r.result, r.partitions, r.runId)
-  }
-
-  /** [[tuneAndRun]] that exposes what one store read already yields: the
-    * pre-run history the recommendation was derived from, and this run's
-    * own stage infos assembled straight from the listener buffers. A
-    * caller that wants the post-run history (e.g. the demo's AQE-settle
-    * series) appends `recorded` to `priorHistory` instead of re-reading
-    * the store — one history scan per iteration, not two (round-4
-    * q_tuner_loop regression). */
-  def tuneAndRunTracked[T](spark: SparkSession)(body: => T): TunedRun[T] = {
-    val history = store.history(spark)
-    val target = StageRunInfo.stagesWithMostExpensiveShuffle(history)
-    val cp = new ComputePartitions(spark.conf.getAll)
-    // Slot-floored at the application boundary (see applySlotFloor's doc:
-    // AQE-coalesced executed counts must not feed back as sub-slot
-    // initial counts — the r14 sf1 A/B hit a recommendation of 1).
-    val partitions = cp.applySlotFloor(cp.fromStageMetricSharedCluster(target))
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    // Scan tier rides the same history read: split size from the biggest
-    // recorded input stage (cold start → memory bound alone).
-    val scans = StageRunInfo.scanStagesWithMostInput(history)
-    val splitBytes =
-      cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb).getOrElse(0.0))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
-    // Skew tier rides the same history read: the latest recorded run's
-    // per-task shuffle-read profile decides whether this run needs AQE's
-    // skew-splitting thresholds widened (SkewAdvisor). Balanced or
-    // pre-evolution history sets nothing — AQE defaults stand.
-    history.lastOption.flatMap(SkewAdvisor.analyze(_))
-      .map(SkewAdvisor.recommendedConf).getOrElse(Map.empty)
-      .foreach { case (k, v) => spark.conf.set(k, v) }
+  /** Run `body` under a scoped [[MetricsListener]] and persist what it
+    * captured as the next run id. Reads no history and sets no conf: the
+    * record-only half of the loop (reference EP2), and the only place a
+    * listener is attached for scoped recording. */
+  def record[T](spark: SparkSession)(body: => T): RecordedRun[T] = {
     val runId = store.nextRunId(spark)
     val listener = new MetricsListener(runId)
     spark.sparkContext.addSparkListener(listener)
     try {
       val result = body
-      org.apache.spark.graftaccess.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
+      // Listener-bus events are async; drain before snapshotting so the
+      // recorded run is complete.
+      ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
       // ONE snapshot feeds both the store write and the in-memory view:
       // the persist jobs' own stage events land on the still-attached
       // listener, so a second read after persist would see stages the
@@ -132,11 +50,46 @@ class Tuner(metricsRoot: String, appName: String) {
       val stageSnap = listener.stageRows
       val taskSnap = listener.taskRows
       store.persistRows(spark, stageSnap, taskSnap, runId)
-      val recorded = StageRunInfo.assemble(stageSnap, taskSnap)
-      TunedRun(result, partitions, splitBytes, runId, history, recorded)
+      RecordedRun(result, runId, StageRunInfo.assemble(stageSnap, taskSnap))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** One loop step: tune this session from ONE history read, then
+    * [[record]] `body` as the next run. The result carries the pre-run
+    * history the recommendation was derived from and this run's own stage
+    * infos, so a caller that wants the post-run history (e.g. the demo's
+    * AQE-settle series) appends `recorded` to `priorHistory` instead of
+    * re-reading the store: one history scan per iteration, shared by all
+    * three tiers. */
+  def tuneAndRunTracked[T](spark: SparkSession)(body: => T): TunedRun[T] = {
+    val history = store.history(spark)
+    val target = StageRunInfo.stagesWithMostExpensiveShuffle(history)
+    val cp = new ComputePartitions(spark.conf.getAll)
+    // Slot-floored at the application boundary (see applySlotFloor's doc):
+    // an AQE-coalesced executed count must never come back as a sub-slot
+    // initial count.
+    val partitions = cp.applySlotFloor(cp.fromStageMetricSharedCluster(target))
+    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    // Scan tier: split size from the biggest recorded input stage (cold
+    // start → memory bound alone).
+    val scans = StageRunInfo.scanStagesWithMostInput(history)
+    val splitBytes =
+      cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb).getOrElse(0.0))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
+    // Skew tier: the latest recorded run's per-task shuffle-read profile
+    // decides whether this run needs AQE's skew-splitting thresholds
+    // widened (SkewAdvisor). Balanced or pre-evolution history sets
+    // nothing — AQE defaults stand.
+    history.lastOption.flatMap(SkewAdvisor.analyze)
+      .map(SkewAdvisor.knobs).getOrElse(Map.empty)
+      .foreach { case (k, v) => spark.conf.set(k, v) }
+    val run = record(spark)(body)
+    TunedRun(run.result, partitions, splitBytes, run.runId, history, run.stages)
+  }
 }
+
+/** One recorded run — see [[Tuner.record]]. */
+case class RecordedRun[T](result: T, runId: Int, stages: List[StageRunInfo])
 
 /** One tracked tuning-loop step — see [[Tuner.tuneAndRunTracked]]. */
 case class TunedRun[T](result: T, partitions: Int, maxPartitionBytes: Long,

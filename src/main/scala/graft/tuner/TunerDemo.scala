@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     plateau) plus the scan-split and reducer-skew tiers. A pure
   *     function of the decision table, so the emitted trajectory is
   *     deterministic and the driver's DuckDB hash compare covers the
-  *     tuner tier like any relational query (VERDICT r8 item 7).
+  *     tuner tier like any relational query.
   *
   * Full integration behavior (AQE convergence, store layout, flight
   * recorder) stays spec-asserted in TunerIntegrationSpec et al. */

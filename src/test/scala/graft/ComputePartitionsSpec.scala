@@ -98,9 +98,4 @@ class ComputePartitionsSpec extends SparkSpec {
     assert(series.map(_.executorCpuTimeMs) == List(99, 88))
     assert(StageRunInfo.stagesWithMostExpensiveShuffle(Nil) == Nil)
   }
-
-  test("full-utilization alternative policy keeps config when no idle time") {
-    val busy = mkStage(100, 10, 1, 2, 4, 5) // idle = 10*2 - 20 = 0
-    assert(cp.fromStageMetricFullUtilization(busy) == 4)
-  }
 }

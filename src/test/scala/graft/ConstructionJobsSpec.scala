@@ -1,8 +1,10 @@
 package graft
 
-/** Jobs launched while a lazy analytics query is BUILT (not executed):
-  * a declared-schema table read runs none, so only the `events` read,
-  * which keeps schema inference, launches one. */
+/** Jobs launched while a query is BUILT (not executed): a declared-schema
+  * table read runs none, so only the `events` read, which keeps schema
+  * inference, launches one. A `Materialize` barrier runs its write at
+  * construction (an aggregating write is two jobs: the shuffle map stage
+  * and the write) and reads it back with no inference job. */
 class ConstructionJobsSpec extends SparkSpec {
   private val expected = Map(
     "q01_pricing_summary" -> 0,
@@ -10,7 +12,10 @@ class ConstructionJobsSpec extends SparkSpec {
     "q15_window_rank" -> 0,
     "q18_topk" -> 0,
     "q_simhash" -> 0,
-    "q34_sessionization" -> 1)
+    "q34_sessionization" -> 1,
+    "q_hll_union" -> 4, // two aggregating barriers
+    "q_temperature_mix" -> 2, // one aggregating barrier
+    "q_incr_rollup" -> 3) // the events read + one aggregating barrier
 
   expected.foreach { case (q, want) =>
     test(s"$q launches $want job(s) at construction") {

@@ -27,7 +27,7 @@ class SkewAdvisorSpec extends SparkSpec {
     val r = SkewAdvisor.analyze(run).get
     assert(r.skewed && r.ratio == 20.0)
     assert(r.medianBytes == 10L * mb && r.maxBytes == 200L * mb)
-    val conf = SkewAdvisor.recommendedConf(r)
+    val conf = SkewAdvisor.knobs(r)
     // Split requires size > factor × median AND > threshold — both must
     // hold for the OBSERVED straggler, else the advice is vacuous.
     val factor = conf("spark.sql.adaptive.skewJoin.skewedPartitionFactor").toInt
@@ -40,7 +40,7 @@ class SkewAdvisorSpec extends SparkSpec {
     val run = List(stage(Seq.fill(10)(50L * 1024 * 1024)))
     val r = SkewAdvisor.analyze(run).get
     assert(!r.skewed && r.ratio == 1.0)
-    assert(SkewAdvisor.recommendedConf(r).isEmpty)
+    assert(SkewAdvisor.knobs(r).isEmpty)
   }
 
   test("no shuffle-read volumes (pre-evolution history) yields None, not advice") {

@@ -17,25 +17,45 @@ class TunerIntegrationSpec extends SparkSpec {
     def job(): Long = spark.read.parquet(s"$sf/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
 
-    val (_, runId0) = tuner.withRecording(spark)(job())
-    assert(runId0 == 0)
+    val run0 = tuner.record(spark)(job())
+    assert(run0.runId == 0)
     val h1 = tuner.store.history(spark)
     assert(h1.length == 1, "one recorded run expected")
     assert(h1.head.nonEmpty, "stages captured")
     assert(h1.head.exists(_.tasks.nonEmpty), "tasks captured")
     assert(h1.head.exists(_.executorCpuTimeMs > 0), "cpu time recorded")
 
-    // Second recorded run → id 1, and the tuner now recommends from history.
-    val (_, runId1) = tuner.withRecording(spark)(job())
-    assert(runId1 == 1)
-    val rec = tuner.recommendPartitions(spark)
-    assert(rec > 0)
+    assert(run0.stages == h1.head, "in-memory view equals the persisted run")
 
-    // Applying sets spark.sql.shuffle.partitions on the live session.
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val applied = tuner.applyTo(spark)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == applied.toString)
-    spark.conf.set("spark.sql.shuffle.partitions", before) // restore for other specs
+    // Second recorded run → id 1; recording alone leaves the conf as is.
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(tuner.record(spark)(job()).runId == 1)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == parts)
+
+    // A tuned step recommends from both runs and applies the result to the
+    // live session.
+    restoringTunerConf {
+      val tuned = tuner.tuneAndRunTracked(spark)(job())
+      assert(tuned.priorHistory.length == 2 && tuned.runId == 2)
+      assert(tuned.partitions > 0)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == tuned.partitions.toString)
+      assert(spark.conf.get("spark.sql.files.maxPartitionBytes") ==
+        tuned.maxPartitionBytes.toString)
+    }
+  }
+
+  test("a tuned step on a store with history runs 6 jobs; recording alone 2 fewer") {
+    // 2 history reads (one collect per kind) + the body + 2 persist
+    // writes; the record-only entry skips the history read.
+    val tuner = new Tuner(Files.createTempDirectory("graft-jobs").toString, "jobs")
+    restoringTunerConf {
+      tuner.record(spark)(spark.range(10).count())
+      val (_, tunedJobs) =
+        JobCount(spark)(tuner.tuneAndRunTracked(spark)(spark.range(10).count()))
+      val (_, recordJobs) = JobCount(spark)(tuner.record(spark)(spark.range(10).count()))
+      assert(tunedJobs == 6, s"tuned step ran $tunedJobs jobs")
+      assert(recordJobs == tunedJobs - 2, s"record-only ran $recordJobs jobs")
+    }
   }
 
   test("tracked run's (priorHistory :+ recorded) equals a fresh store read") {
@@ -46,15 +66,14 @@ class TunerIntegrationSpec extends SparkSpec {
     val tuner = new Tuner(dir, "tracked")
     def job(): Long = spark.read.parquet(s"$sf/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
+    restoringTunerConf {
       val r1 = tuner.tuneAndRunTracked(spark)(job())
       val r2 = tuner.tuneAndRunTracked(spark)(job())
       assert(r1.priorHistory.isEmpty && r2.priorHistory.length == 1)
       val reread = tuner.store.history(spark)
       assert(reread == r2.priorHistory :+ r2.recorded,
         "tracked view diverged from the persisted store")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
   }
 
   test("tuner loop reports AQE's settled counts and converges toward them") {
@@ -64,8 +83,7 @@ class TunerIntegrationSpec extends SparkSpec {
     // trajectory to the post-AQE settle series.
     val dir = Files.createTempDirectory("graft-loop").toString
     val tuner = new Tuner(dir, "loop")
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val (recs, settled) = try {
+    val (recs, settled) = restoringTunerConf {
       val runs = (0 until 3).map { _ =>
         tuner.tuneAndRunTracked(spark) {
           graft.queries.RelationalA.queries("q01_pricing_summary")(spark, sf).count()
@@ -76,7 +94,7 @@ class TunerIntegrationSpec extends SparkSpec {
       (runs.map(_.partitions),
         graft.tuner.StageRunInfo.reducersOfMostExpensiveShuffle(fullHistory)
           .map(_.numPartitionsUsed))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
     assert(settled.forall(_ > 0), s"AQE-settled series missing: $settled")
     // Convergence direction: the tuner learns from post-AQE task counts,
     // so the gap between its initial-count recommendation and AQE's
@@ -124,8 +142,12 @@ class TunerIntegrationSpec extends SparkSpec {
 
   test("empty store yields cold-start recommendation, not an error (Q2)") {
     val tuner = new Tuner(Files.createTempDirectory("graft-empty").toString, "none")
-    assert(tuner.recommendPartitions(spark) > 0)
     assert(tuner.store.nextRunId(spark) == 0)
+    restoringTunerConf {
+      val r = tuner.tuneAndRunTracked(spark)(spark.range(10).count())
+      assert(r.priorHistory.isEmpty && r.runId == 0)
+      assert(r.partitions > 0)
+    }
   }
 
   test("truncated flight jsonl line is tolerated, not fatal (crashed-writer path)") {
@@ -156,7 +178,10 @@ class TunerIntegrationSpec extends SparkSpec {
     val h = tuner.store.history(spark)
     assert(h.length == 1, s"corrupt lines dropped, got ${h.length} runs")
     assert(h.head.map(_.executorCpuTimeMs).sorted == clean.head.map(_.executorCpuTimeMs).sorted)
-    assert(tuner.recommendPartitions(spark) > 0)
+    restoringTunerConf {
+      val r = tuner.tuneAndRunTracked(spark)(spark.range(10).count())
+      assert(r.priorHistory == h && r.partitions > 0)
+    }
   }
 
   test("run ids never reuse an existing id even when a run recorded zero stages") {
@@ -172,23 +197,11 @@ class TunerIntegrationSpec extends SparkSpec {
     assert(tuner.store.history(spark).isEmpty, "zero-stage run assembles to empty history")
     assert(tuner.store.nextRunId(spark) == 1,
       "id allocation must clear the zero-stage run-0 files, not reuse id 0")
-    val (_, runId) = tuner.withRecording(spark) {
+    val run = tuner.record(spark) {
       spark.read.parquet(s"$sf/lineitem.parquet").groupBy("l_returnflag").count().count()
     }
-    assert(runId == 1)
+    assert(run.runId == 1)
     assert(tuner.store.nextRunId(spark) == 2)
-  }
-
-  test("recommendedConf targets both parallelism knobs and the scan split size") {
-    val tuner = new Tuner(Files.createTempDirectory("graft-conf").toString, "none")
-    val conf = tuner.recommendedConf(spark)
-    assert(conf.keySet == Set("spark.sql.shuffle.partitions",
-      "spark.default.parallelism", "spark.sql.files.maxPartitionBytes"))
-    assert(conf("spark.sql.shuffle.partitions") == conf("spark.default.parallelism"),
-      "both parallelism knobs must carry the same recommendation")
-    val split = conf("spark.sql.files.maxPartitionBytes").toLong
-    assert(split >= 4L * 1024 * 1024 && split <= 1024L * 1024 * 1024,
-      s"split recommendation outside the [4MB, 1GB] clamp: $split")
   }
 
   test("input-split recommendation changes the scan stage's task count across runs") {

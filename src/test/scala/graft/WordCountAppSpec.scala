@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.apps.WordCountApp
+import graft.tuner.ComputePartitions
 
 /** EP1 app port: arg parsing (quirk Q5 fix) and the cross-run tuning loop
   * through the text-file surface. */
@@ -35,24 +36,38 @@ class WordCountAppSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  test("two tuned runs share history through the metrics store") {
+  private def fixtureArgs(app: String): WordCountApp.Args = {
     val in = Files.createTempFile("words", ".txt")
     Files.writeString(in, "I am some words\nWords And words Woooooooooooo\nPanda words\n")
-    val out = Files.createTempDirectory("wc-out").toString
-    val metrics = Files.createTempDirectory("wc-metrics").toString
-    val args = WordCountApp.Args(in.toString, out, metrics, "wc-spec")
+    WordCountApp.Args(in.toString, Files.createTempDirectory("wc-out").toString,
+      Files.createTempDirectory("wc-metrics").toString, app)
+  }
 
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
+  test("two tuned runs share history through the metrics store") {
+    val args = fixtureArgs("wc-spec")
+    restoringTunerConf {
       val (_, run0) = WordCountApp.run(spark, args)
       val (_, run1) = WordCountApp.run(spark, args)
       assert(run0 == 0 && run1 == 1, "run ids must advance via the store")
       // Output is the reference fixture's expectation: words→4 (case-folded).
-      val rows = spark.read.csv(out).collect()
+      val rows = spark.read.csv(args.output).collect()
         .map(r => r.getString(0) -> r.getString(1).toLong).toMap
       assert(rows("words") == 4L)
       assert(rows("panda") == 1L)
       assert(!rows.contains("the"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
+  }
+
+  test("tuned runs never apply fewer shuffle partitions than the session has slots") {
+    // AQE coalesces this fixture's shuffle to one task, so from the third
+    // run the decision table's plateau recommends 1; the tuned run must
+    // apply the slot floor instead.
+    val args = fixtureArgs("wc-floor")
+    val slots = new ComputePartitions(spark.conf.getAll).possibleConcurrentTasks()
+    restoringTunerConf {
+      val runs = (0 until 3).map(_ => WordCountApp.run(spark, args))
+      assert(runs.map(_._2) == Seq(0, 1, 2))
+      assert(runs(2)._1 == slots, s"(partitions, runId) per run: $runs")
+    }
   }
 }
