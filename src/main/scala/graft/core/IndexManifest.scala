@@ -56,32 +56,9 @@ object IndexManifest {
       .map { case (k, v) => s""""$k":"$v"""" }
       .mkString("{", ",", "}")
     val (p, fs) = fsPath(s, indexDir)
-    val out = fs.create(p, true)
-    // Plain writer, not PrintWriter: PrintWriter swallows IOExceptions
-    // into an unchecked error flag, so a failed close-time flush
-    // (HDFS/S3 lease or quota error) would report a successful build with
-    // a missing/truncated manifest — breaking the "manifest presence
-    // certifies a complete build" invariant. Write and close must
-    // propagate.
-    val w = new java.io.OutputStreamWriter(
-      out, java.nio.charset.StandardCharsets.UTF_8)
-    // try-with-resources semantics, not try/finally: when write throws,
-    // the finally-close on the same broken stream usually throws too and
-    // would MASK the original write failure — the root cause this writer
-    // exists to surface. Success path: close inside the try so a
-    // close-time flush failure still propagates. Failure path:
-    // best-effort close, suppressed onto the primary.
-    try {
-      w.write(json); w.write('\n')
-      w.close()
-    } catch {
-      case primary: Throwable =>
-        try w.close() catch {
-          case closeErr: Throwable if closeErr ne primary =>
-            primary.addSuppressed(closeErr)
-        }
-        throw primary
-    }
+    // A write that returns is a complete manifest: its presence certifies
+    // a complete build.
+    TextFile.write(fs, p, json + "\n", overwrite = true)
   }
 
   /** Delete the manifest if present. Builders call this FIRST, before
@@ -112,13 +89,7 @@ object IndexManifest {
     * would let verify() accept a manifest whose real content it never saw. */
   def read(s: SparkSession, indexDir: String): Map[String, String] = {
     val (p, fs) = fsPath(s, indexDir)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(
-        in, "UTF-8").mkString finally in.close()
-      parseFlat(text)
-    }
+    if (!fs.exists(p)) Map.empty else parseFlat(TextFile.read(fs, p))
   }
 
   /** Strict parser for exactly the flat `{"k":"v",...}` shape [[write]]

@@ -253,11 +253,14 @@ object TextOps {
       val grams = when(size(toks) >= 2,
         transform(sequence(lit(1), size(toks) - 1),
           i => concat_ws(" ", slice(toks, i, lit(2))))).otherwise(array())
+      // dup2 is computed in its own select below the explode: in the
+      // explode's select it would be evaluated above Generate, once per
+      // token instead of once per document.
       val base = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          explode(split(col("text"), " ")).as("tok"),
+        .select(col("doc_id"), col("text"),
           (lit(1.0) - size(array_distinct(grams)).cast("double") /
             greatest(size(grams), lit(1))).as("dup2"))
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"), col("dup2"))
         .filter(col("tok") =!= "")
       val tf = base.groupBy("doc_id", "tok")
         .agg(count(lit(1)).as("tf"), first(col("dup2")).as("dup2"))

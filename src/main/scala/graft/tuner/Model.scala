@@ -7,61 +7,40 @@ package graft.tuner
   */
 case class ShuffleVolume(bytesWritten: Long, bytesRead: Long)
 
-case class TaskMetric(
-    runId: Int,
-    stageId: Int,
-    taskId: Long,
-    executorId: String,
-    durationMs: Long,
-    peakMemory: Long,
-    // Per-task shuffle-read volume — the reducer-skew signal
-    // (SkewAdvisor). Runs persisted before this field existed lack the
-    // column and read back as 0 (MetricsStore zero-fills), which simply
-    // disables skew analysis on those runs.
-    shuffleReadBytes: Long = 0L)
-
-case class StageMetric(
-    runId: Int,
-    stageId: Int,
-    attempt: Int,
-    executorCpuTimeMs: Long,
-    stageDurationMs: Long,
-    bytesRead: Long,
-    shuffleBytesWritten: Long,
-    shuffleBytesRead: Long,
-    submittedAtMs: Long)
-
-/** One stage of one historical run, with its tasks attached — mirrors the
-  * reference's StageInfo (ComputePartitions.scala:17-30). */
+/** One stage of one run, as the store keeps it: the per-stage facts the
+  * three tuner tiers read, and nothing per task. Every field is an
+  * integer, so a run re-read from the store equals the run the listener
+  * summarized. Mirrors the reference's StageInfo
+  * (ComputePartitions.scala:17-30).
+  *
+  * `numPartitionsUsed` is the stage's task count
+  * (ComputePartitions.scala:28). The two task-read fields are the max and
+  * the upper median of the stage's positive per-task shuffle-read bytes,
+  * 0 when no task read any: the straggler signal [[SkewAdvisor]] reads. */
 case class StageRunInfo(
     executorCpuTimeMs: Long,
     stageTimeMs: Long,
-    inputSizeMb: Double,
+    inputBytes: Long,
     numExecutors: Int,
     shuffle: ShuffleVolume,
-    tasks: Seq[TaskMetric]) {
-  /** Sum of task times (ComputePartitions.scala:26). */
-  def totalTaskTimeMs: Long = tasks.foldLeft(0L)(_ + _.durationMs)
-  /** Partitions used = number of tasks (ComputePartitions.scala:28). */
-  def numPartitionsUsed: Int = tasks.length
+    numPartitionsUsed: Int,
+    maxTaskShuffleReadBytes: Long,
+    medianTaskShuffleReadBytes: Long) {
+  def inputSizeMb: Double = inputBytes.toDouble / (1024 * 1024)
 }
 
 object StageRunInfo {
-  /** Join stage rows to their tasks by stageId — inner-join semantics like
-    * the reference (Listener.scala:63-67), but a stage with zero tasks is
-    * kept with an empty list instead of throwing. */
-  def assemble(stages: Seq[StageMetric], tasks: Seq[TaskMetric]): List[StageRunInfo] = {
-    val byStage = tasks.groupBy(_.stageId)
-    stages.sortBy(_.stageId).map { st =>
-      val ts = byStage.getOrElse(st.stageId, Seq.empty)
-      StageRunInfo(
-        executorCpuTimeMs = st.executorCpuTimeMs,
-        stageTimeMs = st.stageDurationMs,
-        inputSizeMb = st.bytesRead.toDouble / (1024 * 1024),
-        numExecutors = ts.map(_.executorId).distinct.size.max(1),
-        shuffle = ShuffleVolume(st.shuffleBytesWritten, st.shuffleBytesRead),
-        tasks = ts)
-    }.toList
+  /** The summary of one stage from its tasks: one entry of
+    * `taskShuffleReadBytes` per task, so its length is the task count.
+    * The only place the max/median skew rule is applied. */
+  def summarize(executorCpuTimeMs: Long, stageTimeMs: Long, inputBytes: Long,
+      numExecutors: Int, shuffle: ShuffleVolume,
+      taskShuffleReadBytes: Seq[Long]): StageRunInfo = {
+    val reads = taskShuffleReadBytes.filter(_ > 0).sorted
+    StageRunInfo(executorCpuTimeMs, stageTimeMs, inputBytes, numExecutors.max(1),
+      shuffle, taskShuffleReadBytes.length,
+      maxTaskShuffleReadBytes = reads.lastOption.getOrElse(0L),
+      medianTaskShuffleReadBytes = if (reads.isEmpty) 0L else reads(reads.length / 2))
   }
 
   /** Per run, the stage with the largest shuffle bytesWritten; history is
@@ -86,7 +65,7 @@ object StageRunInfo {
       case None => Nil
       case Some(first) if first.isEmpty => Nil
       case Some(first) =>
-        val idx = first.zipWithIndex.maxBy(_._1.inputSizeMb)._2
+        val idx = first.zipWithIndex.maxBy(_._1.inputBytes)._2
         runs.flatMap(r => r.lift(idx)).toList
     }
 

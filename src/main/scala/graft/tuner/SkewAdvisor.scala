@@ -2,13 +2,14 @@ package graft.tuner
 
 /** Reducer-skew advisor — the third tuner tier next to the shuffle
   * partition count (reference decision table, `ComputePartitions`) and
-  * the scan input split (`ComputePartitions.maxPartitionBytes`): per-TASK
-  * shuffle-read volumes of the most shuffle-read-expensive stage expose
-  * the straggler that per-STAGE totals average away. A 1000-executor
-  * stage whose median task reads 64 MB but whose max reads 6 GB is a
-  * one-hot-key job — wall-clock pinned to one task — and no partition-
-  * count change fixes it; the fix is AQE skew-join splitting (or
-  * salting, which `operators.SaltedJoin` demonstrates plan-side).
+  * the scan input split (`ComputePartitions.maxPartitionBytes`): the max
+  * and median per-TASK shuffle-read volumes of the most
+  * shuffle-read-expensive stage expose the straggler that per-STAGE totals
+  * average away. A 1000-executor stage whose median task reads 64 MB but
+  * whose max reads 6 GB is a one-hot-key job — wall-clock pinned to one
+  * task — and no partition-count change fixes it; the fix is AQE
+  * skew-join splitting (or salting, which `operators.SaltedJoin`
+  * demonstrates plan-side).
   *
   * The advisor turns the observed max/median ratio into the two AQE
   * knobs that govern splitting: a partition is split when its size
@@ -32,26 +33,20 @@ object SkewAdvisor {
       recommendedThresholdBytes: Long)
 
   /** Inspect the latest run: pick the stage with the largest total
-    * shuffle read, rank its tasks by shuffle-read bytes, and compare the
-    * straggler to the median. None when the run has no shuffle-reading
-    * stage with per-task volumes (e.g. history persisted by a build
-    * without `TaskMetric.shuffleReadBytes` — back-filled as 0). */
-  def analyze(run: List[StageRunInfo]): Option[SkewReport] = {
-    val reducer = run.filter(_.shuffle.bytesRead > 0)
-      .sortBy(-_.shuffle.bytesRead).headOption
-    reducer.flatMap { st =>
-      val bytes = st.tasks.map(_.shuffleReadBytes).filter(_ > 0).sorted
-      if (bytes.isEmpty) None
-      else {
-        val median = bytes(bytes.length / 2) // upper median, exact
-        val mx = bytes.last
+    * shuffle read and compare its straggler task to its median task
+    * (the stage summary's max and upper-median positive per-task reads).
+    * None when the run has no shuffle-reading stage with a positive
+    * per-task read. */
+  def analyze(run: List[StageRunInfo]): Option[SkewReport] =
+    run.filter(_.shuffle.bytesRead > 0).sortBy(-_.shuffle.bytesRead).headOption
+      .filter(_.maxTaskShuffleReadBytes > 0).map { st =>
+        val median = st.medianTaskShuffleReadBytes
+        val mx = st.maxTaskShuffleReadBytes
         val ratio = mx.toDouble / math.max(1L, median)
         val factor = math.min(5, math.max(2, math.ceil(ratio / 2.0).toInt))
-        Some(SkewReport(mx, median, ratio, ratio >= SkewRatio, factor,
-          factor.toLong * median))
+        SkewReport(mx, median, ratio, ratio >= SkewRatio, factor,
+          factor.toLong * median)
       }
-    }
-  }
 
   /** Conf deltas for the next run. Balanced runs return empty — the
     * advisor never narrows AQE's defaults, it only makes a PROVEN

@@ -16,41 +16,31 @@ import org.apache.spark.sql.SparkSession
 class Tuner(metricsRoot: String, appName: String) {
   val store = new MetricsStore(metricsRoot, appName)
 
-  /** Attach an ambient flight recorder: metrics auto-persist on
-    * application end with no further calls (reference flight-recorder
-    * contract). Returns the listener so the app can flush() early if it
-    * wants the run visible before shutdown. Do not combine with [[record]]
-    * or [[tuneAndRunTracked]] on the same store in one app (run-id
-    * collision). */
+  /** Attach an ambient flight recorder: the run is written on application
+    * end with no further calls (reference flight-recorder contract).
+    * Returns the listener so the app can flush() early if it wants the run
+    * visible before shutdown. */
   def attachFlightRecorder(spark: SparkSession): FlightRecorder = {
-    val runId = store.nextRunId(spark)
-    val fr = new FlightRecorder(store, runId,
-      spark.sparkContext.hadoopConfiguration)
+    val fr = new FlightRecorder(store, spark.sparkContext.hadoopConfiguration)
     spark.sparkContext.addSparkListener(fr)
     fr
   }
 
-  /** Run `body` under a scoped [[MetricsListener]] and persist what it
-    * captured as the next run id. Reads no history and sets no conf: the
+  /** Run `body` under a scoped [[MetricsListener]] and write what it
+    * captured as the next run. Reads no history and sets no conf: the
     * record-only half of the loop (reference EP2), and the only place a
-    * listener is attached for scoped recording. */
+    * listener is attached for scoped recording. Launches no job besides
+    * the body's. */
   def record[T](spark: SparkSession)(body: => T): RecordedRun[T] = {
-    val runId = store.nextRunId(spark)
-    val listener = new MetricsListener(runId)
+    val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
     try {
       val result = body
       // Listener-bus events are async; drain before snapshotting so the
       // recorded run is complete.
       ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
-      // ONE snapshot feeds both the store write and the in-memory view:
-      // the persist jobs' own stage events land on the still-attached
-      // listener, so a second read after persist would see stages the
-      // store never wrote (asserted equal in TunerIntegrationSpec).
-      val stageSnap = listener.stageRows
-      val taskSnap = listener.taskRows
-      store.persistRows(spark, stageSnap, taskSnap, runId)
-      RecordedRun(result, runId, StageRunInfo.assemble(stageSnap, taskSnap))
+      val stages = listener.stages
+      RecordedRun(result, store.write(spark.sparkContext.hadoopConfiguration, stages), stages)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -78,8 +68,8 @@ class Tuner(metricsRoot: String, appName: String) {
     spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
     // Skew tier: the latest recorded run's per-task shuffle-read profile
     // decides whether this run needs AQE's skew-splitting thresholds
-    // widened (SkewAdvisor). Balanced or pre-evolution history sets
-    // nothing — AQE defaults stand.
+    // widened (SkewAdvisor). A balanced run, or one with no per-task
+    // shuffle reads, sets nothing — AQE defaults stand.
     history.lastOption.flatMap(SkewAdvisor.analyze)
       .map(SkewAdvisor.knobs).getOrElse(Map.empty)
       .foreach { case (k, v) => spark.conf.set(k, v) }

@@ -36,15 +36,14 @@ object TunerDemo {
 
   /** Synthetic single-stage run: `parts` tasks whose shuffle-read bytes
     * are `reads` (balanced 64 MB unless a straggler is planted). */
-  private def mkRun(runId: Int, parts: Int, cpuMs: Long,
-      reads: Int => Long): List[StageRunInfo] = List(StageRunInfo(
-    executorCpuTimeMs = cpuMs,
-    stageTimeMs = cpuMs / 8,
-    inputSizeMb = 2048.0,
-    numExecutors = 8,
-    shuffle = ShuffleVolume(bytesWritten = 1L << 30, bytesRead = 1L << 30),
-    tasks = Seq.tabulate(parts)(i =>
-      TaskMetric(runId, 0, i.toLong, "exec", 1000L, 0L, reads(i)))))
+  private def mkRun(parts: Int, cpuMs: Long, reads: Int => Long): List[StageRunInfo] =
+    List(StageRunInfo.summarize(
+      executorCpuTimeMs = cpuMs,
+      stageTimeMs = cpuMs / 8,
+      inputBytes = 2048L << 20,
+      numExecutors = 8,
+      shuffle = ShuffleVolume(bytesWritten = 1L << 30, bytesRead = 1L << 30),
+      taskShuffleReadBytes = Seq.tabulate(parts)(reads)))
 
   def query(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -79,11 +78,11 @@ object TunerDemo {
     // Deterministic walk: fixed history visiting every decision branch.
     val balanced: Int => Long = _ => 64L << 20
     val straggler: Int => Long = i => if (i == 0) 512L << 20 else 64L << 20
-    val h1 = mkRun(0, 32, 90000L, balanced)
-    val h2 = mkRun(1, 40, 70000L, balanced) // fewer CPU-ms at more parts
-    val h3 = mkRun(2, 48, 80000L, balanced) // regression past the sweet spot
-    val h4 = mkRun(3, 40, 70000L, balanced)
-    val h5 = mkRun(4, 40, 70000L, straggler) // plateau + planted skew
+    val h1 = mkRun(32, 90000L, balanced)
+    val h2 = mkRun(40, 70000L, balanced) // fewer CPU-ms at more parts
+    val h3 = mkRun(48, 80000L, balanced) // regression past the sweet spot
+    val h4 = mkRun(40, 70000L, balanced)
+    val h5 = mkRun(40, 70000L, straggler) // plateau + planted skew
     val steps = Seq(
       ("cold_start", Seq.empty[List[StageRunInfo]]),
       ("single_run", Seq(h1)),

@@ -8,11 +8,10 @@ import graft.tuner._
   * plus the quirk fixes Q1/Q2. */
 class ComputePartitionsSpec extends SparkSpec {
 
-  private def mkStage(cpuMs: Long, stageMs: Long, inputMb: Double,
-      execs: Int, partitions: Int, taskMs: Long): StageRunInfo =
-    StageRunInfo(cpuMs, stageMs, inputMb, execs,
-      ShuffleVolume(20, 30),
-      (0 until partitions).map(i => TaskMetric(0, 0, i.toLong, s"e${i % execs}", taskMs, 0)))
+  private def mkStage(cpuMs: Long, stageMs: Long, inputMb: Long,
+      execs: Int, partitions: Int): StageRunInfo =
+    StageRunInfo.summarize(cpuMs, stageMs, inputMb << 20, execs,
+      ShuffleVolume(20, 30), Seq.fill(partitions)(0L))
 
   // Reference fixture: executor mem chosen so taskMem = 1024*2 MB / cores
   // cancels the 0.6 * 0.5 factor (FIXTURES.md §A2).
@@ -25,8 +24,8 @@ class ComputePartitionsSpec extends SparkSpec {
   test("reference test point: improving history recommends more partitions") {
     // run1: 19 partitions, cpu 105; run2: 20 partitions, cpu 90 → grow.
     val history = List(
-      mkStage(105, 105, 6144, 3, 19, 11),
-      mkStage(90, 95, 3072, 3, 20, 10))
+      mkStage(105, 105, 6144, 3, 19),
+      mkStage(90, 95, 3072, 3, 20))
     val rec = cp.fromStageMetricSharedCluster(history)
     assert(rec > 20, s"expected growth beyond 20, got $rec")
   }
@@ -38,25 +37,25 @@ class ComputePartitionsSpec extends SparkSpec {
   }
 
   test("single run ramps by executor count, floored by memory") {
-    val rec = cp.fromStageMetricSharedCluster(List(mkStage(100, 100, 10, 3, 10, 10)))
+    val rec = cp.fromStageMetricSharedCluster(List(mkStage(100, 100, 10, 3, 10)))
     assert(rec == 13) // 10 used + 3 executors; floor is small here
   }
 
   test("plateau converges (fixpoint)") {
-    val h = List(mkStage(90, 95, 100, 3, 20, 10), mkStage(88, 93, 100, 3, 20, 10))
+    val h = List(mkStage(90, 95, 100, 3, 20), mkStage(88, 93, 100, 3, 20))
     assert(cp.fromStageMetricSharedCluster(h) == 20)
   }
 
   test("regression falls back to best historical run by cpu time") {
     val h = List(
-      mkStage(80, 85, 100, 3, 19, 10),  // best cpu
-      mkStage(105, 110, 100, 3, 25, 11)) // more partitions, worse cpu
+      mkStage(80, 85, 100, 3, 19),  // best cpu
+      mkStage(105, 110, 100, 3, 25)) // more partitions, worse cpu
     assert(cp.fromStageMetricSharedCluster(h) == 19)
   }
 
   test("memory floor dominates when input is large") {
     // taskMem ≈ 1024 MB ⇒ 64 GB input needs ≥ 64 partitions.
-    val rec = cp.fromStageMetricSharedCluster(List(mkStage(100, 100, 65536, 3, 10, 10)))
+    val rec = cp.fromStageMetricSharedCluster(List(mkStage(100, 100, 65536, 3, 10)))
     assert(rec >= 64, s"memory floor ignored: $rec")
   }
 
@@ -76,8 +75,8 @@ class ComputePartitionsSpec extends SparkSpec {
     // And the raw formula is unchanged: a regressing history whose best
     // run used fewer partitions than the slot count still RETURNS it.
     val h = List(
-      mkStage(80, 85, 100, 3, 5, 10),   // best cpu, 5 partitions < 8 slots
-      mkStage(105, 110, 100, 3, 25, 11))
+      mkStage(80, 85, 100, 3, 5),   // best cpu, 5 partitions < 8 slots
+      mkStage(105, 110, 100, 3, 25))
     assert(cp.fromStageMetricSharedCluster(h) == 5)
   }
 
@@ -89,11 +88,11 @@ class ComputePartitionsSpec extends SparkSpec {
 
   test("most-expensive-shuffle selection aligns by stage ordinal") {
     val run1 = List(
-      mkStage(10, 10, 1, 1, 2, 5),
-      mkStage(99, 99, 1, 1, 2, 5).copy(shuffle = ShuffleVolume(1000, 0)))
+      mkStage(10, 10, 1, 1, 2),
+      mkStage(99, 99, 1, 1, 2).copy(shuffle = ShuffleVolume(1000, 0)))
     val run2 = List(
-      mkStage(11, 11, 1, 1, 2, 5),
-      mkStage(88, 88, 1, 1, 2, 5).copy(shuffle = ShuffleVolume(900, 0)))
+      mkStage(11, 11, 1, 1, 2),
+      mkStage(88, 88, 1, 1, 2).copy(shuffle = ShuffleVolume(900, 0)))
     val series = StageRunInfo.stagesWithMostExpensiveShuffle(Seq(run1, run2))
     assert(series.map(_.executorCpuTimeMs) == List(99, 88))
     assert(StageRunInfo.stagesWithMostExpensiveShuffle(Nil) == Nil)

@@ -15,7 +15,8 @@ class ConstructionJobsSpec extends SparkSpec {
     "q34_sessionization" -> 1,
     "q_hll_union" -> 4, // two aggregating barriers
     "q_temperature_mix" -> 2, // one aggregating barrier
-    "q_incr_rollup" -> 3) // the events read + one aggregating barrier
+    "q_incr_rollup" -> 3, // the events read + one aggregating barrier
+    "q_tuner_loop" -> 9) // three tuned q01 counts; the tuner itself runs none
 
   expected.foreach { case (q, want) =>
     test(s"$q launches $want job(s) at construction") {

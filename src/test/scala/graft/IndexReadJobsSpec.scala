@@ -4,11 +4,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, MapType, Met
 import graft.core.{IndexManifest, Materialize, TempDirs}
 import graft.dedup.MinHashDedup
 import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh, AnnPq}
-import graft.tuner.{MetricsStore, StageMetric, TaskMetric}
+import graft.tuner.{MetricsStore, ShuffleVolume, StageRunInfo}
 
-/** Persisted-index and metrics-store reads pass a recorded schema, so they
-  * launch no footer-inference job; and every index family's `table.<name>`
-  * manifest field is the schema its builder wrote. */
+/** Persisted-index reads pass a recorded schema, so they launch no
+  * footer-inference job; the metrics store is read on the driver and
+  * launches none at all; and every index family's `table.<name>` manifest
+  * field is the schema its builder wrote. */
 class IndexReadJobsSpec extends SparkSpec {
 
   private def docs = {
@@ -32,16 +33,13 @@ class IndexReadJobsSpec extends SparkSpec {
     assert(out.count() > 0)
   }
 
-  test("MetricsStore.history on a two-run store runs one job per kind") {
+  test("MetricsStore.history on a two-run store launches no job") {
     val store = new MetricsStore(TempDirs.create("graft-store-jobs"), "app")
-    (0 to 1).foreach { run =>
-      store.persistRows(spark,
-        Seq(StageMetric(run, 1, 0, 5L, 100L, 0L, 0L, 1024L, 0L)),
-        Seq(TaskMetric(run, 1, 0L, "driver", 10L, 0L, 1024L)), run)
-    }
+    val stage = StageRunInfo(5L, 100L, 0L, 1, ShuffleVolume(0L, 1024L), 1, 1024L, 1024L)
+    (0 to 1).foreach(_ => store.write(spark.sparkContext.hadoopConfiguration, Seq(stage)))
     val (hist, jobs) = JobCount(spark)(store.history(spark))
     assert(hist.size == 2)
-    assert(jobs == 2, s"history ran $jobs jobs, expected one collect per kind")
+    assert(jobs == 0, s"history ran $jobs jobs")
   }
 
   test("building pairsFromIndex runs only its candidate barrier's jobs") {

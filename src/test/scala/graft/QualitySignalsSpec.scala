@@ -79,6 +79,20 @@ class QualitySignalsSpec extends SparkSpec {
     }
   }
 
+  test("q_gopher_quality evaluates its 2-gram ratio per document, not per token") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    def distinct(es: Seq[Expression]) = es.exists(_.exists(_.isInstanceOf[ArrayDistinct]))
+    val plan = TextOps.queries("q_gopher_quality")(spark, sf).queryExecution.optimizedPlan
+    assert(plan.exists(n => distinct(n.expressions)), "no 2-gram ratio in the plan")
+    // A node that evaluates array_distinct over a Generate evaluates it
+    // once per generated row.
+    val perToken = plan.collect {
+      case n if distinct(n.expressions) && n.exists(_.isInstanceOf[Generate]) => n
+    }
+    assert(perToken.isEmpty, s"array_distinct above the explode:\n${perToken.mkString("\n")}")
+  }
+
   test("vocab CDF crossings are exact against brute token-count ranking") {
     val cf = docs.collect()
       .flatMap(_.getString(1).split(" ").filter(_.nonEmpty))

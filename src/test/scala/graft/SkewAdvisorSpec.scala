@@ -3,23 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.tuner._
 
-/** SkewAdvisor correctness on three axes: the decision table on
-  * synthetic task metrics, a LIVE skewed aggregation recorded through
-  * the real listener (per-task shuffle-read bytes captured end-to-end),
-  * and store schema evolution (task rows persisted WITHOUT
-  * shuffleReadBytes read back zero-filled instead of failing). */
+/** SkewAdvisor correctness: the decision table on stage summaries built
+  * from synthetic per-task reads, and a LIVE skewed aggregation recorded
+  * through the real listener (per-task shuffle-read bytes captured
+  * end-to-end). A store in an older layout is refused. */
 class SkewAdvisorSpec extends SparkSpec {
 
   private def stage(taskBytes: Seq[Long]): StageRunInfo =
-    StageRunInfo(
-      executorCpuTimeMs = 1000L, stageTimeMs = 1000L, inputSizeMb = 0.0,
-      numExecutors = 1,
-      shuffle = ShuffleVolume(0L, taskBytes.sum),
-      tasks = taskBytes.zipWithIndex.map { case (b, i) =>
-        TaskMetric(runId = 0, stageId = 1, taskId = i.toLong,
-          executorId = "driver", durationMs = 10L, peakMemory = 0L,
-          shuffleReadBytes = b)
-      })
+    StageRunInfo.summarize(executorCpuTimeMs = 1000L, stageTimeMs = 1000L,
+      inputBytes = 0L, numExecutors = 1, shuffle = ShuffleVolume(0L, taskBytes.sum),
+      taskShuffleReadBytes = taskBytes)
 
   test("one-hot-key stage is flagged; knobs make the straggler eligible") {
     val mb = 1024L * 1024L
@@ -91,44 +84,14 @@ class SkewAdvisorSpec extends SparkSpec {
     }
   }
 
-  test("store reads task rows persisted without shuffleReadBytes (zero-filled)") {
-    import spark.implicits._
+  test("a store holding an older layout is refused with its dir in the message") {
     val root = graft.core.TempDirs.create("graft-skew-legacy")
+    val legacy = new java.io.File(s"$root/legacy/kind=task/run=0")
+    assert(legacy.mkdirs())
     val store = new MetricsStore(root, "legacy")
-    // Persist an old-layout run: the task parquet lacks the new column.
-    Seq((0, 1, 0L, "driver", 10L, 0L), (0, 1, 1L, "driver", 12L, 0L))
-      .toDF("runId", "stageId", "taskId", "executorId", "durationMs", "peakMemory")
-      .write.parquet(s"$root/legacy/kind=task/run=0")
-    Seq((0, 1, 0, 5L, 100L, 0L, 0L, 1024L, 0L))
-      .toDF("runId", "stageId", "attempt", "executorCpuTimeMs",
-        "stageDurationMs", "bytesRead", "shuffleBytesWritten",
-        "shuffleBytesRead", "submittedAtMs")
-      .write.parquet(s"$root/legacy/kind=stage/run=0")
-    val hist = store.history(spark)
-    assert(hist.nonEmpty && hist.head.nonEmpty)
-    assert(hist.head.head.tasks.map(_.shuffleReadBytes) == Seq(0L, 0L),
-      "legacy task rows not zero-backfilled")
-  }
-
-  test("a legacy run beside a newer run keeps the newer run's shuffle-read bytes") {
-    import spark.implicits._
-    val root = graft.core.TempDirs.create("graft-skew-mixed")
-    val store = new MetricsStore(root, "mixed")
-    // Run 0 in the old layout (task parquet without shuffleReadBytes)...
-    Seq((0, 1, 0L, "driver", 10L, 0L))
-      .toDF("runId", "stageId", "taskId", "executorId", "durationMs", "peakMemory")
-      .write.parquet(s"$root/mixed/kind=task/run=0")
-    Seq((0, 1, 0, 5L, 100L, 0L, 0L, 1024L, 0L))
-      .toDF("runId", "stageId", "attempt", "executorCpuTimeMs",
-        "stageDurationMs", "bytesRead", "shuffleBytesWritten",
-        "shuffleBytesRead", "submittedAtMs")
-      .write.parquet(s"$root/mixed/kind=stage/run=0")
-    // ...and run 1 in the current one. A read that takes its schema from
-    // one file drops the column for both runs.
-    store.persistRows(spark, Seq(StageMetric(1, 1, 0, 5L, 100L, 0L, 0L, 777L, 0L)),
-      Seq(TaskMetric(1, 1, 0L, "driver", 10L, 0L, 777L)), 1)
-    val hist = store.history(spark)
-    assert(hist.map(_.flatMap(_.tasks).map(_.shuffleReadBytes)) ==
-      List(List(0L), List(777L)))
+    Seq(() => store.history(spark), () => store.nextRunId(spark)).foreach { read =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains(s"$root/legacy/kind=task"), e.getMessage)
+    }
   }
 }

@@ -19,12 +19,11 @@ class TunerPropertySpec extends AnyFunSuite {
   private val stageGen: Gen[StageRunInfo] = for {
     cpu <- Gen.choose(1L, 10000L)
     stageMs <- Gen.choose(1L, 10000L)
-    inputMb <- Gen.choose(1, 100000).map(_.toDouble)
+    inputMb <- Gen.choose(1, 100000)
     execs <- Gen.choose(1, 16)
     parts <- Gen.choose(1, 256)
-    taskMs <- Gen.choose(1L, 100L)
-  } yield StageRunInfo(cpu, stageMs, inputMb, execs, ShuffleVolume(1, 1),
-    (0 until parts).map(i => TaskMetric(0, 0, i.toLong, s"e${i % execs}", taskMs, 0)))
+  } yield StageRunInfo.summarize(cpu, stageMs, inputMb.toLong << 20, execs, ShuffleVolume(1, 1),
+    Seq.fill(parts)(0L))
 
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
@@ -44,9 +43,8 @@ class TunerPropertySpec extends AnyFunSuite {
 
   test("improving history always grows beyond both runs") {
     samples(stageGen, 100).foreach { s =>
-      val better = StageRunInfo(
-        s.executorCpuTimeMs / 2, s.stageTimeMs, s.inputSizeMb, s.numExecutors,
-        s.shuffle, s.tasks ++ Seq(TaskMetric(0, 0, 9999L, "e0", 1, 0)))
+      val better = s.copy(executorCpuTimeMs = s.executorCpuTimeMs / 2,
+        numPartitionsUsed = s.numPartitionsUsed + 1)
       val rec = cp.fromStageMetricSharedCluster(List(s, better))
       assert(rec > better.numPartitionsUsed)
     }
