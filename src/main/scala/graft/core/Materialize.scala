@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.col
 
 /** Explicit multi-consumer barrier: write a frame to scratch parquet once
   * and hand every consumer the read-back.
@@ -40,6 +41,15 @@ import org.apache.spark.sql.DataFrame
   * The read-back passes the schema the frame was written with, so it
   * runs no footer-inference job; MaterializeSpec pins that a parquet
   * round-trip infers exactly that schema.
+  *
+  * LOOP CONTRACT (`iterate`): a driver loop whose state is a frame, for
+  * the iterative queries (PageRank, connected components). Each step is
+  * - eager: written at once, with its convergence scalar collected by
+  *   that same write job (`observed`), so a step costs its write alone;
+  * - lineage-truncating: the next step reads the snapshot back, so step
+  *   k never replays steps 0..k-1 and the loop stays linear;
+  * - bounded on disk: once step k is written, the snapshot step k read
+  *   (step k-1's) is deleted, because no later plan scans it.
   */
 object Materialize {
   def apply(df: DataFrame, label: String): DataFrame =
@@ -51,5 +61,42 @@ object Materialize {
   def at(df: DataFrame, path: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
     df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
+  /** `at`, plus the value of the aggregate `metric` over `df`, collected
+    * by the write job itself (an `observe()` under a name unique to this
+    * call), so the scalar costs no second pass. */
+  def observed[T](df: DataFrame, path: String, metric: Column): (DataFrame, T) =
+    observedThen[T](df, path, metric, identity)
+
+  /** Run `step` from `init` until `converged` holds for its metric value,
+    * or `maxIters` steps have run; at least one step runs. `step` returns
+    * the next state and the metric over it; the state frame may carry
+    * extra columns the metric reads (a join to the previous state), and
+    * only `init`'s columns are written. Step k is written to
+    * `<scratch>/iter=k` (see the loop contract above). Returns the last
+    * state, the steps run and the last metric value. */
+  def iterate[T](init: DataFrame, label: String, maxIters: Int)(
+      step: DataFrame => (DataFrame, Column))(
+      converged: T => Boolean): (DataFrame, Int, T) = {
+    require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
+    val dir = TempDirs.create(s"graft-iter-$label")
+    val cols = init.columns.map(c => col(s"`$c`")).toSeq
+    @annotation.tailrec
+    def loop(state: DataFrame, k: Int): (DataFrame, Int, T) = {
+      val (next, metric) = step(state)
+      val (back, v) = observedThen[T](next, s"$dir/iter=$k", metric,
+        _.select(cols: _*))
+      if (k >= 2) TempDirs.delete(s"$dir/iter=${k - 1}")
+      if (k == maxIters || converged(v)) (back, k, v) else loop(back, k + 1)
+    }
+    loop(init, 1)
+  }
+
+  private def observedThen[T](df: DataFrame, path: String, metric: Column,
+      project: DataFrame => DataFrame): (DataFrame, T) = {
+    val obs = Observation()
+    val back = at(project(df.observe(obs, metric.as("value"))), path)
+    (back, obs.get("value").asInstanceOf[T])
   }
 }

@@ -5,8 +5,8 @@ import scala.collection.mutable
 
 /** Process-scoped temp-dir registry with eager delete + JVM-shutdown
   * cleanup. Every scratch directory the operator library creates (format
-  * roundtrips, CC iteration snapshots, streaming chunk stages, minhash
-  * signature scratch) goes through here, so one Verify/Bench/test run
+  * roundtrips, Materialize barriers and loop snapshots, streaming chunk
+  * stages) goes through here, so one Verify/Bench/test run
   * leaves /tmp clean instead of accumulating hundreds of MB per run.
   *
   * Artifacts that are semantically an INDEX (persisted minhash signatures,
@@ -55,12 +55,12 @@ object TempDirs {
     registered.clear()
   }
 
-  // Round-12 review hardening: the walk Stream must be closed (javadoc
-  // contract), and a traversal failure on ONE dir (AccessDenied subdir,
-  // entry vanishing mid-walk — surfaces as UncheckedIOException from the
-  // iterator) must not escape: in cleanupAll's loop it would abort the
-  // sweep before registered.clear(), leaking every later-registered dir,
-  // and in the shutdown hook it would silently kill the hook thread.
+  // The walk Stream must be closed (javadoc contract), and a traversal
+  // failure on ONE dir (AccessDenied subdir, entry vanishing mid-walk —
+  // surfaces as UncheckedIOException from the iterator) must not escape:
+  // in cleanupAll's loop it would abort the sweep before
+  // registered.clear(), leaking every later-registered dir, and in the
+  // shutdown hook it would silently kill the hook thread.
   private def deleteRecursively(p: Path): Unit =
     try {
       if (Files.exists(p)) {

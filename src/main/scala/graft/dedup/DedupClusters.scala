@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.{Materialize, TempDirs}
 
 /** Near-duplicate CLUSTERS: a pair list is not actionable for dedup until
   * it is grouped into connected components with a canonical
@@ -14,9 +15,10 @@ import org.apache.spark.sql.functions._
   * the standard CC-on-Spark shape (GraphX/GraphFrames ship the
   * small-star/large-star variant of the same idea, which converges in
   * fewer rounds on high-diameter graphs; near-dup components are
-  * low-diameter, so plain propagation converges in a handful). Labels are
-  * materialized to parquet every round to truncate lineage — without
-  * this, round k replays rounds 0..k-1 and the loop goes quadratic.
+  * low-diameter, so plain propagation converges in a handful). The rounds
+  * run through `Materialize.iterate`, which snapshots the labels every
+  * round to truncate lineage — without this, round k replays rounds
+  * 0..k-1 and the loop goes quadratic.
   *
   * The driver-side loop holds only a changed-row COUNT per round, never
   * data; convergence detection is part of the algorithm (same pattern as
@@ -24,79 +26,45 @@ import org.apache.spark.sql.functions._
   */
 object DedupClusters {
 
-  /** Component label (min doc_id reachable) for every doc in `pairs`. */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame =
-    connectedComponentsWithRounds(pairs, maxIters)._1
-
-  /** [[connectedComponents]] plus the number of propagation rounds it ran
-    * until fixpoint — the scale diagnostic (rounds track component
-    * diameter, which must NOT grow with corpus size when the expansion
-    * adds disjoint copies; reported at both scale points in
-    * BENCH_NOTES.md). */
-  def connectedComponentsWithRounds(pairs: DataFrame,
-      maxIters: Int = 20): (DataFrame, Int) = {
-    val s = pairs.sparkSession
-    val tmp = graft.core.TempDirs.create("graft-cc")
-    // Materialize the edge list ONCE: `pairs` is usually an expensive
-    // plan (q31's blocked token self-join), and every propagation round
-    // joins the edges — an unmaterialized edge frame replays that plan
-    // per round, turning k rounds into k full pair recomputations
-    // (measured: 110 s for q_dedup_clusters at the 10× scale point,
-    // ~q31-per-round; materialized it is pairs-once + k cheap joins).
-    // Both orientations from ONE pass over the pair plan (a union of two
-    // selects would scan it twice even inside the single write).
-    pairs.select(explode(array(
+  /** Component label (min doc_id reachable) for every doc in `pairs`.
+    * Throws if labels still change after `maxIters` rounds. */
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+    // The edge list is one barrier: `pairs` is usually an expensive plan
+    // (q31's blocked token self-join) and every round joins the edges, so
+    // an unmaterialized edge frame would recompute the pairs per round.
+    // Both orientations come from ONE pass over the pair plan (a union
+    // of two selects would scan it twice even inside the single write).
+    val edgeDir = TempDirs.create("graft-cc-edges")
+    val edges = Materialize.at(pairs.select(explode(array(
         struct(col("id1").as("a"), col("id2").as("b")),
         struct(col("id2").as("a"), col("id1").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .write.mode("overwrite").parquet(s"$tmp/edges")
-    val edges = s.read.parquet(s"$tmp/edges")
-    var labels = edges.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      // ONE job per round (optimization r16, the PageRank observe canon):
-      // the changed-row count rides the snapshot write as an observe()
-      // metric over a prev-label join — the old shape wrote the snapshot
-      // and then ran a second read-back join job just for the count.
-      // updated's id set equals labels' id set (labels start as every
-      // edge endpoint and propagation never drops a node), so the inner
-      // prev-join preserves every row and the written labels are
-      // identical. count(when(...)) not sum(): count is 0 — never null —
-      // on an empty graph, keeping the empty-pairs exit path.
-      val cObs = org.apache.spark.sql.Observation(s"cc-changed-$iter")
+      .select(col("e.a").as("a"), col("e.b").as("b")), edgeDir)
+    // The changed-label count is observed on a join to the previous
+    // labels. Propagation never drops a node (labels start as every edge
+    // endpoint), so the inner join keeps every row. count(when(...)), not
+    // sum(): it is 0, never null, on an empty graph.
+    val (labels, _, changed) = Materialize.iterate[Long](
+        edges.select(col("a").as("id")).distinct()
+          .select(col("id"), col("id").as("comp")), "cc", maxIters) { labels =>
       val neighborMin = edges
         .join(labels.select(col("id").as("b"), col("comp")), "b")
         .select(col("a").as("id"), col("comp"))
-      val updated = neighborMin.union(labels)
+      (neighborMin.union(labels)
         .groupBy("id").agg(min("comp").as("comp"))
-      updated
-        .join(labels.withColumnRenamed("comp", "old"), "id")
-        .observe(cObs,
-          count(when(col("comp") =!= col("old"), lit(1))).as("changed"))
-        .select("id", "comp")
-        .write.mode("overwrite").parquet(s"$tmp/iter=$iter")
-      changed = cObs.get("changed").asInstanceOf[Long]
-      labels = s.read.parquet(s"$tmp/iter=$iter")
-      // The snapshot write above is the last reader of iter-1: every
-      // later job rescans only the newest snapshot, so earlier iterations
-      // can be dropped immediately (bounded scratch, not O(iters) disk).
-      if (iter >= 1) graft.core.TempDirs.delete(s"$tmp/iter=${iter - 1}")
-      iter += 1
-    }
+        .join(labels.withColumnRenamed("comp", "old"), "id"),
+        count(when(col("comp") =!= col("old"), lit(1))))
+    }(_ == 0L)
     if (changed > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge after $maxIters iterations " +
           s"($changed labels still changing) — labels would be wrong; raise maxIters " +
           "(component diameter exceeds the iteration budget)")
-    // The final round's join was the last reader of the edge table (the
-    // returned labels plan scans only the newest iter snapshot), so the
-    // corpus-pair-sized edges can be dropped NOW — leaving them until
-    // process-exit cleanup inflates the scratch-disk high-water mark
-    // across a multi-query bench run (ADVICE r5).
-    graft.core.TempDirs.delete(s"$tmp/edges")
-    (labels, iter)
+    // The returned labels scan only the last snapshot, so the last round
+    // was the edge table's last reader: drop the pair-sized edges now
+    // rather than at process exit, which bounds the scratch-disk
+    // high-water mark of a run that builds several cluster queries.
+    TempDirs.delete(edgeDir)
+    labels
   }
 
   /** Registry entry: cluster every doc that appears in an exact Q31

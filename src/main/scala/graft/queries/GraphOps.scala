@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
+import graft.core.{Materialize, TempDirs}
 import graft.core.Tables._
 
 /** Graph and pairwise-comparison operators.
@@ -12,10 +14,10 @@ import graft.core.Tables._
   *   = rank/out-degree shipped along edges) plus one partial-aggregable
   *   sum per destination — the classic Pregel-as-SQL shape that scales:
   *   the edge list partitions on src, the rank vector on node. The edge
-  *   list and rank snapshots materialize to parquet per round (the
-  *   DedupClusters lineage-truncation pattern — without it round k
-  *   replays rounds 0..k-1 and the loop goes quadratic); the driver
-  *   holds only the 1-row convergence scalar per round, never data.
+  *   table is one barrier and the rounds run through
+  *   `Materialize.iterate`, which snapshots each rank vector (without
+  *   that, round k replays rounds 0..k-1 and the loop goes quadratic);
+  *   the driver holds only the 1-row convergence scalar per round.
   *   Termination: stop after the first iteration whose max |Δrank|,
   *   relative to the uniform rank 1/N (i.e. N·max|Δ|), drops below
   *   [[PrEps]], else after [[PrMaxIter]] iterations; the executed count
@@ -61,27 +63,30 @@ object GraphOps {
 
   /** One BFS level: the nodes one hop past `frontier` over edges `e` that
     * the visited set under `visitedDir` does not hold yet, tagged `level`.
+    * The visited set is read with the frontier's `node` type declared.
     * The anti-join sees the visited files listed when this frame is BUILT
     * (`read.parquet` lists its input at resolution): the caller writes
     * this level's rows under `visitedDir` too, and they must not count as
     * already visited. BfsListingSpec pins that snapshot. */
   private[graft] def bfsLevel(s: SparkSession, frontier: DataFrame,
-      e: DataFrame, visitedDir: String, level: Int): DataFrame =
-    frontier.join(e, col("node") === col("src"))
+      e: DataFrame, visitedDir: String, level: Int): DataFrame = {
+    val node = frontier.select("node")
+    node.join(e, col("node") === col("src"))
       .select(col("dst").as("node")).distinct()
-      .join(s.read.parquet(visitedDir).select("node"), Seq("node"), "left_anti")
+      .join(s.read.schema(node.schema).parquet(visitedDir).select("node"),
+        Seq("node"), "left_anti")
       .select(col("node"), lit(level).as("dist"))
+  }
 
   /** Part co-occurrence pairs (x ≠ y, both directions, once per order) —
     * the edge feed all four graph queries share. Built by aggregating
     * each order's distinct part set and exploding the pairs from the
-    * array (optimization r16, guide §2.4): the old spelling paid a
-    * distinct shuffle on (orderkey, partkey) and then RE-shuffled both
-    * sides of a self-join on orderkey — three corpus-sized exchanges
-    * where one grouping does the same work (collect_set dedupes exactly
-    * like the distinct; per-order pair fan-out is identical to the
-    * self-join's). Row multiset out is unchanged, so every downstream
-    * support count / distinct is byte-identical. */
+    * array, so the corpus is shuffled once, on orderkey: collect_set
+    * dedupes (orderkey, partkey) exactly like a distinct, and the
+    * per-order pair fan-out equals an orderkey self-join's, which would
+    * need a distinct shuffle plus a re-shuffle of both join sides. The
+    * row multiset is that of the self-join, so every downstream support
+    * count and distinct is unchanged. */
   private def coPairs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .groupBy("l_orderkey").agg(collect_set("l_partkey").as("ps"))
@@ -91,62 +96,34 @@ object GraphOps {
 
   val queries: Map[String, Q] = Map(
     "q_pagerank_parts" -> { (s, dir) =>
-      val tmp = graft.core.TempDirs.create("graft-pr")
-      coPairs(s, dir)
-        .distinct()
-        .write.mode("overwrite").parquet(s"$tmp/edges")
-      val e = s.read.parquet(s"$tmp/edges")
-      // Degree folded INTO the edge table in ONE init job (optimization
-      // r17, VERDICT r16 item 4; guide §2.4): the degree used to be its
-      // own corpus-derived write (deg) that edeg then re-joined — but
-      // d = count per src IS a window over the same src key the edeg
-      // table already groups on, so the deg write/read/join is gone
-      // (init jobs 4 → 3, edge-table passes 2 → 2, one table fewer).
-      // Same (src, dst, d) row multiset, so every rank is identical.
-      e.withColumn("d", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("src")))
-        .write.mode("overwrite").parquet(s"$tmp/edeg")
-      val edeg = s.read.parquet(s"$tmp/edeg")
-      // The node count rides the iter-0 write as an observe() metric and
-      // the snapshot stores NODES ONLY — the uniform rank 1/n cannot be
-      // computed before n is known, so it is projected as the same
-      // lit(1.0 / n) onto the read-back instead of being stored (the
-      // loop's first join sees identical (node, rank) rows either way).
-      val nObs = org.apache.spark.sql.Observation("pr-n")
-      edeg.select(col("src").as("node")).distinct()
-        .observe(nObs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$tmp/iter=0")
-      val n = nObs.get("n").asInstanceOf[Long].toDouble
-      var r = s.read.parquet(s"$tmp/iter=0")
-        .withColumn("rank", lit(1.0 / n))
-      var iter = 0
-      var deltaRel = Double.MaxValue
-      while (iter < PrMaxIter && deltaRel >= PrEps) {
-        // ONE job per iteration (was two): the convergence delta rides
-        // the same write as an observe() max — the old shape wrote the
-        // snapshot, then ran a second read-back join job for the delta.
-        // The prev-rank join adds nothing the delta job didn't already
-        // pay, and every node keeps a row (undirected graph ⇒ every node
-        // receives contributions), so the written ranks are identical.
-        val dObs = org.apache.spark.sql.Observation(s"pr-delta-$iter")
-        edeg.join(r, col("src") === col("node"))
+      // The edge table carries each src's out-degree d as a window over
+      // the src key it already groups on, so the rank step needs no
+      // separate degree table or join; one barrier holds (src, dst, d).
+      val edeg = Materialize(coPairs(s, dir).distinct()
+        .withColumn("d", count(lit(1)).over(Window.partitionBy("src"))),
+        "pr-edeg")
+      // The uniform rank 1/n needs n before the first step, so the node
+      // snapshot stores nodes only, n rides its write, and the rank is
+      // projected onto the read-back.
+      val (nodes, nNodes) = Materialize.observed[Long](
+        edeg.select(col("src").as("node")).distinct(),
+        TempDirs.create("graft-pr-nodes"), count(lit(1)))
+      val n = nNodes.toDouble
+      // One write per step: the delta is observed on a join to the
+      // previous ranks. Every node keeps a row (undirected graph, so every
+      // node receives contributions), so the inner join drops none.
+      val (r, iters, _) = Materialize.iterate[Double](
+          nodes.withColumn("rank", lit(1.0 / n)), "pr", PrMaxIter) { r =>
+        (edeg.join(r, col("src") === col("node"))
           .select(col("dst"), (col("rank") / col("d")).as("c"))
           .groupBy("dst").agg(sum("c").as("m"))
           .select(col("dst").as("node"),
             (lit(0.15 / n) + lit(0.85) * col("m")).as("rank"))
-          .join(r.select(col("node"), col("rank").as("prev")), "node")
-          .observe(dObs, max(abs(col("rank") - col("prev"))).as("delta"))
-          .select("node", "rank")
-          .write.mode("overwrite").parquet(s"$tmp/iter=${iter + 1}")
-        val d = dObs.get("delta").asInstanceOf[Double]
-        deltaRel = math.round(d * n * 1e9) / 1e9
-        // The write above was the last reader of iter-1's snapshot.
-        if (iter >= 1) graft.core.TempDirs.delete(s"$tmp/iter=${iter - 1}")
-        r = s.read.parquet(s"$tmp/iter=${iter + 1}")
-        iter += 1
-      }
+          .join(r.select(col("node"), col("rank").as("prev")), "node"),
+          max(abs(col("rank") - col("prev"))))
+      }(d => math.round(d * n * 1e9) / 1e9 < PrEps)
       r.select(col("node"), round(col("rank"), 6).as("rank"),
-          lit(iter).as("iters"))
+          lit(iters).as("iters"))
         .orderBy(desc("rank"), asc("node"))
         .limit(20)
     },
@@ -165,8 +142,8 @@ object GraphOps {
       // join and the edge count. Unbarriered the replays CASCADE — every
       // consumer of e replays e0, which replays the pair build and the
       // degree branches — and the executed plan carried 44 corpus
-      // scans (ReuseProbe r9). With the two barriers: one pair-build pass.
-      val e0 = graft.core.Materialize(
+      // scans. With the two barriers: one pair-build pass.
+      val e0 = Materialize(
         coPairs(s, dir)
           .where(col("src") < col("dst"))
           .distinct(),
@@ -175,7 +152,7 @@ object GraphOps {
         .union(e0.select(col("dst").as("node")))
         .groupBy("node").agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") <= 128).select("node")
-      val e = graft.core.Materialize(
+      val e = Materialize(
         e0.join(keep.withColumnRenamed("node", "src"), "src")
           .join(keep.withColumnRenamed("node", "dst"), "dst")
           .select("src", "dst"),
@@ -234,46 +211,37 @@ object GraphOps {
     // Oracle: DuckDB WITH RECURSIVE, UNION-distinct on (node, dist),
     // same BfsMaxHops cap, min(dist) collapse outside the recursion.
     "q_bfs_hops" -> { (s, dir) =>
-      val tmp = graft.core.TempDirs.create("graft-bfs")
-      coPairs(s, dir)
+      val e = Materialize(coPairs(s, dir)
         .groupBy(col("src"), col("dst"))
         .agg(count(lit(1)).as("support"))
         .filter(col("support") >= 2)
-        .select("src", "dst")
-        .write.mode("overwrite").parquet(s"$tmp/edges")
-      val e = s.read.parquet(s"$tmp/edges")
+        .select("src", "dst"), "bfs-edges")
       val nodes = e.select(col("src").as("node")).distinct()
-      // The visited set accumulates as lvl=<k> SUBDIRS of one dir
-      // (optimization r17, refining the r16 append-mode cut): the r16
-      // loop wrote each level's frontier TWICE — once to its own
-      // frontier=<k> dir, then appended the same rows to visited (two
-      // jobs per level). Writing the frontier directly into
-      // visited/lvl=<k> makes the level's ONE write serve both readers:
-      // the next level's anti-join reads the visited root (whose eager
-      // file listing happens at DataFrame creation, BEFORE the level's
-      // subdir exists — so it sees exactly the pre-level snapshot, same
-      // as the r16 append), and the next frontier reads the lvl=<k> leaf
-      // path directly. Jobs per level 2 → 1, write volume halved; the
-      // same (node, dist) rows land in visited either way.
-      nodes.join(t(s, dir, "part").filter(col("p_size") === 50)
+      // The visited set is one dir with a lvl=<k> subdir per level, and
+      // each level's one write serves both of its readers: the next
+      // frontier reads the lvl=<k> leaf back, and the next level's
+      // anti-join reads the visited root (see bfsLevel for why it never
+      // sees its own level). Each write observes the level's row count,
+      // the frontier size that stops the loop.
+      val visited = s"${TempDirs.create("graft-bfs")}/visited"
+      val (seeds, nSeeds) = Materialize.observed[Long](
+        nodes.join(t(s, dir, "part").filter(col("p_size") === 50)
             .select(col("p_partkey").as("node")), "node")
-        .select(col("node"), lit(0).as("dist"))
-        .write.mode("overwrite").parquet(s"$tmp/visited/lvl=0")
-      var frontier = s.read.parquet(s"$tmp/visited/lvl=0").select("node")
+          .select(col("node"), lit(0).as("dist")),
+        s"$visited/lvl=0", count(lit(1)))
+      var frontier = seeds.select("node")
+      var frontierSize = nSeeds
       var level = 0
-      var frontierSize = frontier.count()
       while (level < BfsMaxHops && frontierSize > 0) {
         level += 1
-        // Frontier size rides the frontier write as an observe() count —
-        // the old shape ran a third read-back count job per level.
-        val fObs = org.apache.spark.sql.Observation(s"bfs-front-$level")
-        bfsLevel(s, frontier, e, s"$tmp/visited", level)
-          .observe(fObs, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$tmp/visited/lvl=$level")
-        frontier = s.read.parquet(s"$tmp/visited/lvl=$level").select("node")
-        frontierSize = fObs.get("n").asInstanceOf[Long]
+        val (next, size) = Materialize.observed[Long](
+          bfsLevel(s, frontier, e, visited, level),
+          s"$visited/lvl=$level", count(lit(1)))
+        frontier = next.select("node")
+        frontierSize = size
       }
-      nodes.join(s.read.parquet(s"$tmp/visited"), Seq("node"), "left_outer")
+      nodes.join(s.read.schema(seeds.schema).parquet(visited), Seq("node"),
+          "left_outer")
         .select(col("node"), coalesce(col("dist"), lit(-1)).as("dist"))
         .groupBy("dist")
         .agg(count(lit(1)).as("n_nodes"), sum("node").as("node_sum"))

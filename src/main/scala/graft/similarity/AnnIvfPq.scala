@@ -54,23 +54,19 @@ object AnnIvfPq {
     val s = e.sparkSession
     graft.GraftExtensions.ensureRegistered(s)
     graft.core.IndexManifest.invalidate(s, indexDir)
-    // Normalize ONCE into the index's vectors table (optimization r16 —
-    // same rationale as AnnPq.fit): every fit-side consumer (count,
-    // seeds, each k-means iteration's two assign sides, the assignment,
-    // residuals, the final vectors copy) used to replay the interpreted
-    // normalize kernel, single-threaded on the one-file fixture scan.
+    // Normalize ONCE into the index's vectors table (as in AnnPq.fit),
+    // so no fit-side consumer (seeds, each k-means iteration's two assign
+    // sides, the assignment, residuals) replays the interpreted normalize
+    // kernel, which runs single-threaded on a one-file fixture scan.
     // Repartitioned by vec_id to the session's default parallelism so the
     // kernel work is spread across cores whatever the input file count.
-    // Corpus count rides the SAME write job as an observe() metric —
-    // the separate count() job it replaces was a full extra pass.
-    val cnt = org.apache.spark.sql.Observation("ivfpq-fit-n")
+    // The corpus count rides the same write job, so it costs no pass.
     val vectors = normalized(e)
       .select(col("vec_id"), col("emb").as("nemb"))
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-      .observe(cnt, count(lit(1)).as("n"))
-    val en = graft.core.Materialize.at(vectors, s"$indexDir/vectors")
-      .select(col("vec_id"), col("nemb").as("emb"))
-    val n = cnt.get("n").asInstanceOf[Long]
+    val (written, n) = graft.core.Materialize.observed[Long](vectors,
+      s"$indexDir/vectors", count(lit(1)))
+    val en = written.select(col("vec_id"), col("nemb").as("emb"))
     val stride = math.max(1L, n / coarseK)
     val seeds = en.filter(col("vec_id") % stride === 0 &&
         col("vec_id") / stride < coarseK)

@@ -195,23 +195,19 @@ object AnnPq {
     graft.GraftExtensions.ensureRegistered(s)
     graft.core.IndexManifest.invalidate(s, indexDir)
     // Normalize ONCE into the index's vectors table and derive the whole
-    // fit (seed book, iterations, encode) from the read-back
-    // (optimization r16): the old shape re-ran the per-row normalize
-    // kernel in every codebook job, and on a single-file fixture scan
-    // all of it ran in ONE task. Repartitioned by vec_id to the
-    // session's default parallelism so kernel work spreads across cores
-    // whatever the input's file count (scale-adaptive, no constant).
+    // fit (seed book, iterations, encode) from the read-back, so no
+    // codebook job re-runs the per-row normalize kernel (on a
+    // single-file fixture scan it would run in ONE task). Repartitioned
+    // by vec_id to the session's default parallelism so kernel work
+    // spreads across cores whatever the input's file count.
     // Same doubles after the parquet round-trip — bit-identical index.
-    // Corpus count rides the SAME write job as an observe() metric —
-    // the separate count() job it replaces was a full extra pass.
-    val cnt = org.apache.spark.sql.Observation("pq-fit-n")
+    // The corpus count rides the same write job, so it costs no pass.
     val vectors = normalized(e)
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-      .observe(cnt, count(lit(1)).as("n"))
-    val en = graft.core.Materialize.at(vectors, s"$indexDir/vectors")
-      .select(col("vec_id"), col("nemb").as("emb"))
+    val (written, n) = graft.core.Materialize.observed[Long](vectors,
+      s"$indexDir/vectors", count(lit(1)))
+    val en = written.select(col("vec_id"), col("nemb").as("emb"))
     val sv = subvectorsOf(en, normalize = false)
-    val n = cnt.get("n").asInstanceOf[Long]
     val codes = chooseCodes(n)
     val book = fitCodebook(sv, n, codes, iters)
     val cb = graft.core.Materialize.at(book, s"$indexDir/codebook")

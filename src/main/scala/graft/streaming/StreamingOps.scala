@@ -36,20 +36,18 @@ object StreamingOps {
   // One chunk dir per (source dir, dupCount) per JVM: six streaming
   // queries share one replay fixture instead of re-sorting and rewriting
   // events six times (and leaking six temp dirs) per Verify run.
-  // BoundedMemo (VERDICT r11 item 6): LRU-capped so a long-lived session
+  // BoundedMemo: LRU-capped so a long-lived session
   // sweeping many fixture dirs can't grow the memo monotonically; an
   // evicted entry just rebuilds its chunk dir on the next visit.
   private val chunkCache = new graft.core.BoundedMemo[(String, Int), String]()
 
-  // Outer-join comparison cutoff, hoisted (VERDICT r9 item 3): the left/
-  // right/full outer stream joins each need max(ts) over the batch events
-  // table to window out still-pending watermark tails, and each used to
-  // run its own identical max() aggregation — three corpus scans per
-  // verify sweep for one scalar. Cached per source dir alongside the
-  // chunk fixture all three already share.
-  // Keyed on (dir, events inputFiles hash) like exactPairGuardCache
-  // (ADVICE r10): a fixture regenerated in-JVM at the same path with a
-  // different max(ts) must recompute the cutoff, not reuse a stale one.
+  // Outer-join comparison cutoff, computed once per source dir: the
+  // left/right/full outer stream joins each need max(ts) over the batch
+  // events table to window out still-pending watermark tails, and one
+  // cached scalar spares two of three identical corpus scans.
+  // Keyed on (dir, events inputFiles hash) like exactPairGuardCache: a
+  // fixture regenerated in-JVM at the same path with a different max(ts)
+  // must recompute the cutoff, not reuse a stale one.
   private val cutoffCache = new graft.core.BoundedMemo[(String, Int), Long]()
 
   /** max(unix_micros(ts)) over `events` minus 36 min (30-min watermark +
@@ -80,15 +78,14 @@ object StreamingOps {
     val ev = Tables.t(s, dir, "events")
     val n = ev.count()
     val perChunk = math.max(1, math.ceil(n.toDouble / nChunks).toLong)
-    // Distributed global rank (VERDICT r10 item 4): the old
-    // orderBy.coalesce(1) pulled the whole events table through ONE task,
-    // which needed a 48 GiB driver at sf10 — for fixture prep. Instead:
-    // range-partition + sort within partitions (Spark's own total-sort
-    // shape, every partition a bounded slice), then zipWithIndex, whose
-    // cumulative per-partition offsets reproduce the exact global
-    // (ts, event_id) rank regardless of where the sampled range
-    // boundaries fall — event_id is unique, so the order is total and
-    // the chunk assignment stays deterministic across runs.
+    // Distributed global rank, so no single task holds the whole events
+    // table (an orderBy.coalesce(1) needed a 48 GiB driver at sf10, for
+    // fixture prep): range-partition + sort within partitions (Spark's
+    // own total-sort shape, every partition a bounded slice), then
+    // zipWithIndex, whose cumulative per-partition offsets reproduce the
+    // exact global (ts, event_id) rank regardless of where the sampled
+    // range boundaries fall — event_id is unique, so the order is total
+    // and the chunk assignment stays deterministic across runs.
     val sortParts = math.max(s.sparkContext.defaultParallelism,
       (n / 2000000L).toInt + 1)
     val sorted = ev
@@ -98,14 +95,11 @@ object StreamingOps {
       org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
     }
     val indexedSchema = sorted.schema.add(StructField("rn", LongType, false))
-    // Stage the ranked table to scratch parquet ONCE: the per-chunk
-    // writes below then read a filtered slice each, instead of re-running
-    // the sort+zip pipeline 6-7 times (the old code recomputed it per
-    // chunk through the indexed lineage).
-    val rankStage = graft.core.TempDirs.create("graft-ranked")
-    s.createDataFrame(indexedRdd, indexedSchema)
-      .write.mode("overwrite").parquet(rankStage)
-    val indexed = s.read.parquet(rankStage)
+    // Stage the ranked table ONCE: the per-chunk writes below then read
+    // a filtered slice each instead of re-running the sort+zip pipeline
+    // per chunk.
+    val indexed = graft.core.Materialize(
+      s.createDataFrame(indexedRdd, indexedSchema), "ranked")
     (0 until nChunks).foreach { i =>
       val chunk = indexed
         .filter(col("rn") >= i * perChunk && col("rn") < (i + 1) * perChunk)
@@ -680,8 +674,8 @@ object StreamingOps {
   }
 
   /** RIGHT OUTER stream-stream interval join — the batch join matrix has
-    * q_right_outer, so the streaming matrix carries the symmetric twin
-    * (VERDICT r8 item 8): events with no EARLIER same-user event within
+    * q_right_outer, so the streaming matrix carries the symmetric twin:
+    * events with no EARLIER same-user event within
     * 5 minutes surface with a null left partner. A right row's potential
     * partners have `lts ∈ [rts − 5 min, rts]`, so its state is droppable
     * (and its null-extension final) once the watermark passes `rts`;

@@ -16,7 +16,11 @@ class ConstructionJobsSpec extends SparkSpec {
     "q_hll_union" -> 4, // two aggregating barriers
     "q_temperature_mix" -> 2, // one aggregating barrier
     "q_incr_rollup" -> 3, // the events read + one aggregating barrier
-    "q_tuner_loop" -> 9) // three tuned q01 counts; the tuner itself runs none
+    "q_tuner_loop" -> 9, // three tuned q01 counts; the tuner itself runs none
+    // Iterative queries: every step's write jobs, no read-back inference.
+    "q_pagerank_parts" -> 21,
+    "q_bfs_hops" -> 18,
+    "q_dedup_clusters" -> 20)
 
   expected.foreach { case (q, want) =>
     test(s"$q launches $want job(s) at construction") {

@@ -33,4 +33,31 @@ class MaterializeSpec extends SparkSpec {
     val (_, jobs) = JobCount(spark)(Materialize(frame, "spec-jobs"))
     assert(jobs == 1, s"$jobs jobs, expected the write alone")
   }
+
+  test("observed: the metric equals a recount and rides the write job") {
+    val df = frame.filter(col("id") > 0)
+    val dir = graft.core.TempDirs.create("graft-mat-observed")
+    val ((back, n), jobs) = JobCount(spark)(
+      Materialize.observed[Long](df, dir, count(lit(1))))
+    assert(jobs == 1, s"$jobs jobs, expected the write alone")
+    assert(n == df.count())
+    assert(back.schema == spark.read.parquet(dir).schema)
+    assert(back.count() == n)
+  }
+
+  test("iterate: steps until converged or the cap, keeps only the last snapshot") {
+    def run(maxIters: Int, stopAt: Long) =
+      Materialize.iterate[Long](spark.range(1).select(lit(1L).as("x")),
+          "spec", maxIters) { st =>
+        val next = st.select((col("x") * 2).as("x"))
+        (next, max(col("x")))
+      }(_ >= stopAt)
+    val (st, iters, v) = run(10, 8L)
+    assert((iters, v) == (3, 8L))
+    assert(st.head().getLong(0) == 8L)
+    val scratch = new java.io.File(new Path(st.inputFiles.head).toUri).getParentFile.getParentFile
+    assert(scratch.list().toSeq == Seq("iter=3"), "consumed snapshots are deleted")
+    assert(run(2, 8L)._2 == 2, "maxIters caps the loop")
+    assert(run(10, 0L)._2 == 1, "one step runs even when already converged")
+  }
 }

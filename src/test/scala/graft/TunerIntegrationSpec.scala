@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
+import graft.core.TempDirs
 import graft.tuner._
 
 /** Listener + store integration (fills the reference's empty
@@ -11,7 +12,7 @@ import graft.tuner._
 class TunerIntegrationSpec extends SparkSpec {
 
   test("recording a job captures stage+task metrics and advances run ids") {
-    val dir = Files.createTempDirectory("graft-metrics").toString
+    val dir = TempDirs.create("graft-metrics")
     val tuner = new Tuner(dir, "itest")
 
     def job(): Long = spark.read.parquet(s"$sf/lineitem.parquet")
@@ -46,7 +47,7 @@ class TunerIntegrationSpec extends SparkSpec {
 
   test("a tuned step and a recorded step launch only the body's jobs") {
     // Reading history and writing the run happen on the driver.
-    val tuner = new Tuner(Files.createTempDirectory("graft-jobs").toString, "jobs")
+    val tuner = new Tuner(TempDirs.create("graft-jobs"), "jobs")
     restoringTunerConf {
       tuner.record(spark)(spark.range(10).count())
       val (_, bodyJobs) = JobCount(spark)(spark.range(10).count())
@@ -63,7 +64,7 @@ class TunerIntegrationSpec extends SparkSpec {
     // The q_tuner_loop one-read optimization rests on this equality: the
     // listener-assembled current run plus the pre-run history must be
     // indistinguishable from re-reading the persisted store afterward.
-    val dir = Files.createTempDirectory("graft-tracked").toString
+    val dir = TempDirs.create("graft-tracked")
     val tuner = new Tuner(dir, "tracked")
     def job(): Long = spark.read.parquet(s"$sf/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
@@ -82,7 +83,7 @@ class TunerIntegrationSpec extends SparkSpec {
     // cycle TunerDemo runs internally before emitting its canonical
     // walk): record → re-tune → record, then compare the recommendation
     // trajectory to the post-AQE settle series.
-    val dir = Files.createTempDirectory("graft-loop").toString
+    val dir = TempDirs.create("graft-loop")
     val tuner = new Tuner(dir, "loop")
     val (recs, settled) = restoringTunerConf {
       val runs = (0 until 3).map { _ =>
@@ -121,7 +122,7 @@ class TunerIntegrationSpec extends SparkSpec {
   }
 
   test("flight recorder persists on application end without explicit persist") {
-    val dir = Files.createTempDirectory("graft-flight").toString
+    val dir = TempDirs.create("graft-flight")
     val tuner = new Tuner(dir, "flight")
     val fr = tuner.attachFlightRecorder(spark)
     try {
@@ -142,7 +143,7 @@ class TunerIntegrationSpec extends SparkSpec {
   }
 
   test("empty store yields cold-start recommendation, not an error (Q2)") {
-    val tuner = new Tuner(Files.createTempDirectory("graft-empty").toString, "none")
+    val tuner = new Tuner(TempDirs.create("graft-empty"), "none")
     assert(tuner.store.nextRunId(spark) == 0)
     restoringTunerConf {
       val r = tuner.tuneAndRunTracked(spark)(spark.range(10).count())
@@ -152,7 +153,7 @@ class TunerIntegrationSpec extends SparkSpec {
   }
 
   test("truncated flight jsonl line is tolerated, not fatal (crashed-writer path)") {
-    val dir = Files.createTempDirectory("graft-corrupt").toString
+    val dir = TempDirs.create("graft-corrupt")
     val tuner = new Tuner(dir, "crash")
     val fr = tuner.attachFlightRecorder(spark)
     try {
@@ -186,7 +187,7 @@ class TunerIntegrationSpec extends SparkSpec {
   }
 
   test("run ids never reuse an existing id even when a run recorded zero stages") {
-    val dir = Files.createTempDirectory("graft-runid").toString
+    val dir = TempDirs.create("graft-runid")
     val tuner = new Tuner(dir, "gap")
     // A recorded run that captured NO stages (e.g. flight recorder attached
     // but the app did no work): its run file exists but holds no stage —
@@ -206,7 +207,7 @@ class TunerIntegrationSpec extends SparkSpec {
   }
 
   test("a flight recorder and a recorded run in one app take distinct run ids") {
-    val tuner = new Tuner(graft.core.TempDirs.create("graft-both"), "both")
+    val tuner = new Tuner(TempDirs.create("graft-both"), "both")
     val fr = tuner.attachFlightRecorder(spark)
     val run = try {
       val r = tuner.record(spark) {
@@ -225,7 +226,7 @@ class TunerIntegrationSpec extends SparkSpec {
     val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
     conf.set("fs.failclose.impl", classOf[CloseFailingFileSystem].getName)
     conf.setBoolean("fs.failclose.impl.disable.cache", true)
-    val root = "failclose://" + graft.core.TempDirs.create("graft-failclose")
+    val root = "failclose://" + TempDirs.create("graft-failclose")
     val fr = new FlightRecorder(new MetricsStore(root, "lost"), conf)
     spark.sparkContext.addSparkListener(fr)
     try {
@@ -255,7 +256,7 @@ class TunerIntegrationSpec extends SparkSpec {
     assert(new graft.tuner.ComputePartitions(Map(
       "spark.executor.cores" -> "32", "spark.executor.instances" -> "4"))
       .maxPartitionBytes(64.0) == 4L * 1024 * 1024)
-    val dir = Files.createTempDirectory("graft-split").toString
+    val dir = TempDirs.create("graft-split")
     // ~20-30 MB of incompressible-ish parquet (md5 strings).
     spark.range(1200000L)
       .selectExpr("id", "md5(cast(id as string)) AS a",

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import graft.core.TempDirs
 import graft.apps.WordCountApp
 import graft.tuner.ComputePartitions
 
@@ -17,10 +18,10 @@ class WordCountAppSpec extends SparkSpec {
   }
 
   test("--tune off records metrics without touching conf (reference EP2)") {
-    val in = Files.createTempFile("words2", ".txt")
+    val in = Paths.get(TempDirs.create("words2"), "words.txt")
     Files.writeString(in, "alpha beta beta\n")
-    val out = Files.createTempDirectory("wc2-out").toString
-    val metrics = Files.createTempDirectory("wc2-metrics").toString
+    val out = TempDirs.create("wc2-out")
+    val metrics = TempDirs.create("wc2-metrics")
     val args = WordCountApp.Args(in.toString, out, metrics, "wc2-spec", tune = false)
 
     val before = spark.conf.get("spark.sql.shuffle.partitions")
@@ -37,10 +38,10 @@ class WordCountAppSpec extends SparkSpec {
   }
 
   private def fixtureArgs(app: String): WordCountApp.Args = {
-    val in = Files.createTempFile("words", ".txt")
+    val in = Paths.get(TempDirs.create("words"), "words.txt")
     Files.writeString(in, "I am some words\nWords And words Woooooooooooo\nPanda words\n")
-    WordCountApp.Args(in.toString, Files.createTempDirectory("wc-out").toString,
-      Files.createTempDirectory("wc-metrics").toString, app)
+    WordCountApp.Args(in.toString, TempDirs.create("wc-out"),
+      TempDirs.create("wc-metrics"), app)
   }
 
   test("two tuned runs share history through the metrics store") {
