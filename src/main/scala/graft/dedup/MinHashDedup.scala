@@ -150,7 +150,9 @@ object MinHashDedup {
   }
 
   /** Full pipeline: candidates reranked with exact Jaccard ≥ threshold
-    * over the same shingle unit the signatures used.
+    * over the same shingle unit the signatures used. Returns (id1 < id2,
+    * jaccard) rows as [[finishPairs]] does: unordered, so no caller may
+    * rely on row order (sort on (id1, id2) if you need it).
     *
     * The rerank never ships token ARRAYS (joining two array<string> sides
     * per candidate pair costs wide rows and a per-pair O(|A|+|B|) array
@@ -263,7 +265,7 @@ object MinHashDedup {
     * Materializing sigs also means the band join's two sides share one
     * scan instead of recomputing the signature aggregation per consumer
     * (the broadcast side of a bucket join cannot reuse the stream side's
-    * exchange). */
+    * exchange). Rows are unordered, as [[finishPairs]] returns them. */
   def pairsFromIndex(s: SparkSession, indexDir: String,
       threshold: Double = 0.5): DataFrame = {
     require(threshold > 0.0, "threshold must be positive (zero-overlap pairs are never emitted)")
@@ -335,7 +337,11 @@ object MinHashDedup {
   }
 
   /** Jaccard = i / (n1 + n2 − i) from intersection counts plus the n_toks
-    * sizes riding the signature table; threshold filter + stable order. */
+    * sizes riding the signature table, then the threshold filter. The
+    * (id1, id2, jaccard) rows are NOT sorted: no caller may rely on row
+    * order (sort on (id1, id2) if you need it). A terminal sort would cost
+    * every pair read a range-partitioning exchange plus its sampling job,
+    * and at scale range-shuffle the whole pair set. */
   private def finishPairs(inter: DataFrame, sigs: DataFrame,
       threshold: Double): DataFrame = {
     val sizes = sigs.select(col("doc_id"), col("n_toks"))
@@ -346,7 +352,6 @@ object MinHashDedup {
         round(col("inter").cast("double") /
           (col("n1") + col("n2") - col("inter")), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .orderBy("id1", "id2")
   }
 
   /** Registry entry (rows-only driver check; recall vs Q31 in the spec). */

@@ -13,11 +13,15 @@ import graft.core.Tables._
   * k-means|| fit persisted once; a fixed stride keeps the POC
   * deterministic). K growing as √N bounds BOTH sides of the IVF cost:
   * assignment is O(N·K) = O(N^1.5) map-side work against a broadcast
-  * centroid table, and a probe reranks O(nprobe·N/K) = O(N^0.5) rows per
-  * query; MAX_K caps the broadcast size. The argmin itself is a single
-  * partial-aggregable max_by groupBy (map-side combine shuffles one row
-  * per vec_id per mapper) — NOT a row_number window, which would shuffle
-  * and sort all N×K scored rows.
+  * centroid table, and the exact cosine rerank of a probe is limited to
+  * the O(nprobe·N/K) = O(N^0.5) rows of its probed cells; MAX_K caps the
+  * broadcast size. The probe does NOT read only those cells: `assigned`
+  * is stored unclustered, so every [[search]] scans the whole table and
+  * equi-joins it against the probed cell ids (at bench size the planner
+  * broadcasts all of `assigned` for that join). The argmin itself is a
+  * single partial-aggregable max_by groupBy (map-side combine shuffles
+  * one row per vec_id per mapper) — NOT a row_number window, which would
+  * shuffle and sort all N×K scored rows.
   *
   * nprobe: the fixture embeddings are near-uniform-random, so recall ≈
   * fraction of cells probed — the default probes ~30% of cells to keep
@@ -32,10 +36,11 @@ object AnnIvf {
   val TOP_K = 5
 
   /** Production-default probe width: a small FIXED cell count independent
-    * of K, the setting that makes IVF sublinear (probe cost ~ nprobe·N/K
-    * rows per query). On clustered corpora — the case IVF exists for —
-    * recall ≥ 0.9 holds at this default (AnnIvfSpec planted gate); only
-    * near-uniform-random corpora need coverage-proportional probing. */
+    * of K, the setting that makes the rerank sublinear (~ nprobe·N/K
+    * scored rows per query; the `assigned` scan stays O(N)). On clustered
+    * corpora — the case IVF exists for — recall ≥ 0.9 holds at this
+    * default (AnnIvfSpec planted gate); only near-uniform-random corpora
+    * need coverage-proportional probing. */
   val DEFAULT_NPROBE = 16
 
   def chooseK(n: Long): Int =
@@ -182,8 +187,11 @@ object AnnIvf {
       "assigned" -> assign(newVecs, centroids))
   }
 
-  /** Probe a persisted index: queries (qid, qemb) → top-k (qid, cand_id,
-    * cos_sim). Runs only scan + broadcast-probe + rerank jobs — no fit. */
+  /** Probe a persisted index: queries (qid, qemb) → the top-`topK` rows
+    * (qid, cand_id, cos_sim, rn) per query, as [[topKPerQuery]] ranks them.
+    * Rows are NOT ordered across queries, and no caller may rely on row
+    * order: sort on (qid, rn) if you need it. Runs only scan +
+    * broadcast-probe + rerank jobs — no fit and no global sort. */
   def search(s: SparkSession, indexDir: String, q: DataFrame,
       nprobe: Int = DEFAULT_NPROBE, topK: Int = TOP_K): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
@@ -202,13 +210,21 @@ object AnnIvf {
       .select(col("qid"), col("qemb"), col("cid"))
 
     // Exact rerank inside probed cells only (equi-join on cell id).
-    val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("cand_id"))
-    probes.join(assigned, "cid")
+    topKPerQuery(probes.join(assigned, "cid")
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"),
-        round(cosine(col("qemb"), col("emb")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .orderBy("qid", "rn")
+        round(cosine(col("qemb"), col("emb")), 6).as("cos_sim")), topK)
   }
+
+  /** The tail every ANN family's search shares: scored (qid, cand_id,
+    * cos_sim) rows → the `topK` best per query, with rn = 1-based rank
+    * within the query (cos_sim descending, then cand_id ascending), so for
+    * each qid rn runs 1..k over non-increasing cos_sim. The window's
+    * exchange clusters rows by qid only; nothing sorts across queries,
+    * because no caller needs it and a global sort would add a
+    * range-partitioning exchange plus its sampling job to every search. */
+  private[similarity] def topKPerQuery(scored: DataFrame, topK: Int): DataFrame =
+    scored.withColumn("rn", row_number().over(
+        Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("cand_id"))))
+      .filter(col("rn") <= topK)
 }

@@ -33,15 +33,14 @@ object AnnIvfPq {
   val TOP_K = 5
   val RERANK_FACTOR = 4
 
-  /** Native single-pass dot (optimization r16, guide §4 — the HOF
-    * spelling was an interpreted fold; bit-identical accumulation). */
+  /** Native single-pass dot, never the HOF spelling, which is an
+    * interpreted fold; bit-identical accumulation. */
   private def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct.dot(a, b)
 
-  /** Unit-normalize with the norm hoisted into its own column
-    * (optimization r16): inlined inside the transform lambda the dot-fold
-    * re-evaluated per ELEMENT — dim² interpreted work per row. Same norm
-    * value, same divisions — bit-identical. */
+  /** Unit-normalize with the norm hoisted into its own column: inlined
+    * inside the transform lambda the dot-fold re-evaluates per ELEMENT —
+    * dim² interpreted work per row. */
   private def normalized(e: DataFrame): DataFrame =
     e.select(col("vec_id"), col("emb"),
         sqrt(dot(col("emb"), col("emb"))).as("nrm"))
@@ -75,12 +74,11 @@ object AnnIvfPq {
     val persistedC = graft.core.Materialize.at(centroids, s"$indexDir/centroids")
     val assigned = AnnIvf.assign(en, persistedC).select("vec_id", "cid")
     // Residuals: vector minus its cell centroid — what PQ actually codes.
-    // Derived from the PERSISTED assignment and materialized once
-    // (optimization r16, lineage truncation): the old frame reused the
-    // un-truncated `assigned` plan, so every codebook-fit action replayed
-    // the full N·K assignment scoring — OPTIMIZATION_r16.md records
-    // multi-second single-task CPU stages for each replay at sf0.1. Same rows,
-    // same doubles (assignment values come from the same persisted table).
+    // Derived from the PERSISTED assignment and materialized once, so the
+    // lineage is truncated: built on the un-truncated `assigned` plan,
+    // every codebook-fit action would replay the full N·K assignment
+    // scoring (OPTIMIZATION_r16.md records multi-second single-task CPU
+    // stages for each replay at sf0.1).
     val assignedP = graft.core.Materialize.at(assigned, s"$indexDir/assigned")
     val residuals = graft.core.Materialize(
       en.join(assignedP, "vec_id")
@@ -103,7 +101,10 @@ object AnnIvfPq {
   }
 
   /** Probe nprobe cells, ADC-score their code rows, exact-rerank the
-    * shortlist. Scan-and-join jobs only — no fit machinery. */
+    * shortlist → the top-`topK` rows (qid, cand_id, cos_sim, rn) per
+    * query, ranked as [[AnnIvf.topKPerQuery]] ranks them. Rows are NOT
+    * ordered across queries, and no caller may rely on row order: sort on
+    * (qid, rn) if you need it. Scan-and-join jobs only — no fit machinery. */
   def search(s: SparkSession, indexDir: String, q: DataFrame,
       nprobe: Int = NPROBE, topK: Int = TOP_K): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
@@ -148,14 +149,10 @@ object AnnIvfPq {
       .withColumn("rn", row_number().over(shortW))
       .filter(col("rn") <= topK * RERANK_FACTOR)
       .select(col("qid"), col("vec_id"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("cand_id"))
-    shortlist.join(vectors, "vec_id")
+    AnnIvf.topKPerQuery(shortlist.join(vectors, "vec_id")
       .join(qn.select(col("qid"), col("qn")), "qid")
       .select(col("qid"), col("vec_id").as("cand_id"),
-        round(dot(col("qn"), col("nemb")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .orderBy("qid", "rn")
+        round(dot(col("qn"), col("nemb")), 6).as("cos_sim")), topK)
   }
 
   /** Registry query: fit-once-search-once through a scratch index dir

@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
 
@@ -14,7 +13,7 @@ import graft.core.Tables._
   *
   * The band shape is the recall/cost dial and is now a first-class
   * parameter. With b bits per band a bucket holds ~N/2^b of the corpus, so
-  * candidate volume scales as N²·bands/2^b: 2-bit bands (round-1 shape)
+  * candidate volume scales as N²·bands/2^b: 2-bit bands ([[Loose]])
   * are near-all-pairs at scale, while the default [[Sharp]] shape
   * (12-bit bands) keeps buckets at ~N/4096. Sharp bands lose recall on
   * weakly-similar corpora, which multi-probe recovers for free on the
@@ -50,8 +49,8 @@ object AnnLsh {
     * neighbors two sign-flips away; data-side state is unchanged. */
   val Sharp2 = Shape(bands = 16, bitsPerBand = 12, multiProbe = 2)
 
-  /** Recall-ceiling shape for near-orthogonal corpora (the round-1 shape).
-    * Near-all-pairs at scale — use only when the corpus is small or
+  /** Recall-ceiling shape for near-orthogonal corpora. Its 4-way buckets
+    * make it near-all-pairs at scale — use only when the corpus is small or
     * neighbors are weakly similar AND exhaustive rerank is affordable. */
   val Loose = Shape(bands = 8, bitsPerBand = 2, multiProbe = 0)
 
@@ -66,10 +65,10 @@ object AnnLsh {
     graft.functions.CosineSimilarity.cosine(a, b)
 
   /** Bit b of the signature = sign of ⟨v, plane_b⟩, as an int column.
-    * Native graft_dot (optimization r16, guide §4): the HOF spelling paid
-    * an interpreted fold per plane — bands·bitsPerBand = 192 folds of
-    * dim 64 per corpus row was the single hottest stage of the index
-    * build (OPTIMIZATION_r16.md: 3.7 s CPU of q_ann_lsh's 6.6 s at sf0.1).
+    * Native graft_dot, never a higher-order-function fold: an interpreted
+    * fold per plane — bands·bitsPerBand = 192 folds of dim 64 per corpus
+    * row — made this the hottest stage of the index build
+    * (OPTIMIZATION_r16.md: 3.7 s CPU of q_ann_lsh's 6.6 s at sf0.1).
     * Same accumulation order, bit-identical signs. */
   private def signatureBits(emb: Column, ps: Array[Array[Double]]): Seq[Column] =
     ps.toSeq.map { plane =>
@@ -160,13 +159,12 @@ object AnnLsh {
     // Invalidate FIRST (see IndexManifest.invalidate): rebuilds must not
     // leave a stale manifest over a partially overwritten bucket table.
     graft.core.IndexManifest.invalidate(e.sparkSession, indexDir)
-    // Index layout split (optimization r16, guide §2.3 "shuffle keys and
-    // metadata instead of payloads"): bucket rows used to carry the full
-    // emb array on every one of the `bands` rows per vector — a 16×
-    // payload duplication in the stored table, the band-join shuffle AND
-    // the candidate distinct (which deduped ~550 B rows instead of 16 B
-    // id pairs). Buckets now store (vec_id, band, sig) only; the rerank
-    // fetches vectors by id from the once-stored vectors table.
+    // Buckets store keys, never payloads: (vec_id, band, sig) only, and
+    // the rerank fetches vectors by id from the once-stored vectors
+    // table. An emb array on each of the `bands` rows per vector would be
+    // a 16× payload duplication in the stored table, the band-join
+    // shuffle AND the candidate distinct (~550 B rows deduped instead of
+    // 16 B id pairs).
     // Vectors BEFORE buckets (the AnnPq two-table canon): an orphan
     // vector row after a crash is unreachable, while an orphan BUCKET row
     // would silently drop from the rerank join.
@@ -199,7 +197,11 @@ object AnnLsh {
 
   /** Probe a persisted index with query vectors (vec_id, emb): hash ONLY
     * the queries (plus their one-bit multi-probe flips), bucket-join
-    * against the stored corpus table, rerank exactly. */
+    * against the stored corpus table, rerank exactly. Returns the top-
+    * `topK` rows (qid, cand_id, cos_sim, rn) per query, ranked as
+    * [[AnnIvf.topKPerQuery]] ranks them. Rows are NOT ordered across
+    * queries, and no caller may rely on row order: sort on (qid, rn) if
+    * you need it. */
   def search(s: SparkSession, indexDir: String, queries: DataFrame,
       shape: Shape = Sharp, topK: Int = TOP_K,
       seed: Long = 7L, dim: Int = 64): DataFrame = {
@@ -210,9 +212,9 @@ object AnnLsh {
     val vectors = graft.core.IndexManifest.table(s, indexDir, manifest, "vectors")
     // qemb rides the QUERY side of the bucket join (it is probe-fan-out ×
     // |queries| rows — tiny by construction), so the queries frame is
-    // scanned exactly once; only the corpus-side payload was removed
-    // (optimization r16). The candidate distinct still dedupes before the
-    // vectors join fetches each candidate's embedding once.
+    // scanned exactly once; the corpus side carries ids only. The
+    // candidate distinct dedupes before the vectors join fetches each
+    // candidate's embedding once.
     val qb = bucketed(queries, shape, probe = true, seed, dim)
       .select(col("vec_id").as("qid"), col("emb").as("qemb"),
         col("band"), col("sig"))
@@ -220,12 +222,8 @@ object AnnLsh {
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("qemb"), col("vec_id").as("cand_id"))
       .distinct()
-    val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("cand_id"))
-    cands.join(vectors, col("cand_id") === vectors("vec_id"))
+    AnnIvf.topKPerQuery(cands.join(vectors, col("cand_id") === vectors("vec_id"))
       .select(col("qid"), col("cand_id"),
-        round(cosine(col("qemb"), col("emb")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .orderBy("qid", "rn")
+        round(cosine(col("qemb"), col("emb")), 6).as("cos_sim")), topK)
   }
 }

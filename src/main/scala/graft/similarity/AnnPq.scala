@@ -40,18 +40,17 @@ object AnnPq {
   def chooseCodes(n: Long): Int =
     math.min(MAX_CODES, math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
 
-  /** Native single-pass dot (graft.functions.DotProduct) — optimization
-    * r16, guide §4: the HOF aggregate(zip_with(...)) spelling here was an
-    * interpreted fold; bit-identical accumulation order. Callers go
-    * through an entry point that calls GraftExtensions.ensureRegistered. */
+  /** Native single-pass dot (graft.functions.DotProduct), never the HOF
+    * aggregate(zip_with(...)) spelling, which is an interpreted fold;
+    * bit-identical accumulation order. Callers go through an entry point
+    * that calls GraftExtensions.ensureRegistered. */
   private def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct.dot(a, b)
 
   /** (vec_id, nemb) unit-normalized rows. The norm is hoisted into its
-    * own projected column (optimization r16): spelled inline inside the
-    * transform lambda, the full dot-fold re-evaluated PER ELEMENT
-    * (interpreted HOF lambdas get no subexpression elimination) — dim²
-    * work per row. Same norm value, same divisions — bit-identical. */
+    * own projected column: spelled inline inside the transform lambda,
+    * the full dot-fold re-evaluates PER ELEMENT (interpreted HOF lambdas
+    * get no subexpression elimination) — dim² work per row. */
   private[similarity] def normalized(e: DataFrame): DataFrame =
     e.select(col("vec_id"), col("emb"),
         sqrt(dot(col("emb"), col("emb"))).as("nrm"))
@@ -129,16 +128,15 @@ object AnnPq {
     * whose cell empties keep their previous codeword (seed carry-over)
     * so ids stay dense and the kernel layout stays rectangular.
     *
-    * The book lives as a LOCAL array between iterations (optimization
-    * r16, lineage truncation): it is driver-scale by construction
-    * (≤ M·codes rows ≈ 16 KB) and ALREADY crossed the driver once per
-    * iteration via collectCodebook — but the old DataFrame carry-over
-    * chain made iteration k's plan contain iterations 0..k-1's full sv
-    * aggregations, so every collect and the final codebook write
-    * REPLAYED them (OPTIMIZATION_r16.md, sf0.1: ~6 corpus-derived passes
-    * for a 2-iteration fit where 3 suffice). Each iteration now runs
-    * exactly ONE job over sv; the returned frame is a local relation
-    * with the same (m, code, cw) row multiset, bit-identical values. */
+    * The book lives as a LOCAL array between iterations, which truncates
+    * the lineage: it is small by construction (≤ M·codes rows ≈ 16 KB)
+    * and is collected once per iteration anyway. Carried
+    * as a DataFrame, iteration k's plan would contain iterations
+    * 0..k-1's full sv aggregations, so every collect and the final
+    * codebook write would replay them (OPTIMIZATION_r16.md, sf0.1: ~6
+    * corpus-derived passes for a 2-iteration fit where 3 suffice). Each
+    * iteration runs exactly ONE job over sv; the returned frame is a
+    * local relation of (m, code, cw) rows. */
   def fitCodebook(sv: DataFrame, n: Long, codes: Int, iters: Int): DataFrame = {
     val s = sv.sparkSession
     val stride = math.max(1L, n / codes)
@@ -148,9 +146,9 @@ object AnnPq {
     def layout(b: Array[(Int, Int, Seq[Double])]): Array[Array[Array[Double]]] = {
       val byM = b.groupBy(_._1)
       (0 until M).toArray.map { m =>
-        // Diagnosable failure instead of a bare NoSuchElementException
-        // (ADVICE r16): sparse / non-contiguous vec_ids can leave a
-        // subspace with no stride-sampled seed rows at all.
+        // Diagnosable failure instead of a bare NoSuchElementException:
+        // sparse / non-contiguous vec_ids can leave a subspace with no
+        // stride-sampled seed rows at all.
         require(byM.contains(m),
           s"no seed codewords for subspace $m — vec_ids may not cover the stride sample")
         byM(m).sortBy(_._2).map(_._3.toArray)
@@ -239,7 +237,10 @@ object AnnPq {
   }
 
   /** ADC search: LUT join + partial-agg score sum + exact rerank of the
-    * shortlist. q = (qid, qemb). */
+    * shortlist. q = (qid, qemb) → the top-`topK` rows (qid, cand_id,
+    * cos_sim, rn) per query, ranked as [[AnnIvf.topKPerQuery]] ranks them.
+    * Rows are NOT ordered across queries, and no caller may rely on row
+    * order: sort on (qid, rn) if you need it. */
   def search(s: SparkSession, indexDir: String, q: DataFrame,
       topK: Int = TOP_K): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
@@ -268,13 +269,9 @@ object AnnPq {
     // Exact rerank: true cosine (normalized dot) on the shortlist only.
     val qn = normalized(q.select(col("qid").as("vec_id"), col("qemb").as("emb")))
       .select(col("vec_id").as("qid"), col("nemb").as("qn"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("cand_id"))
-    shortlist.join(vectors, "vec_id").join(qn, "qid")
+    AnnIvf.topKPerQuery(shortlist.join(vectors, "vec_id").join(qn, "qid")
       .select(col("qid"), col("vec_id").as("cand_id"),
-        round(dot(col("qn"), col("nemb")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .orderBy("qid", "rn")
+        round(dot(col("qn"), col("nemb")), 6).as("cos_sim")), topK)
   }
 
   /** Registry query: fit-once-search-once through a scratch index dir on

@@ -6,8 +6,19 @@ import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md from the live registry:
   * `sbt "runMain graft.tools.PlanDump"`. Run after plan-affecting changes.
+  * Plans are printed with the per-run parts masked (see [[stable]]), so
+  * regenerating on unchanged code rewrites no line and a diff of the file
+  * is a diff of operators.
   */
 object PlanDump {
+  /** `plan`'s tree string with expression ids (`#123`), exchange ids
+    * (`plan_id=45`) and the random suffix of scratch dirs
+    * (`graft-ivf-idx2106001860300811563`) replaced by fixed tokens. */
+  def stable(plan: String): String =
+    plan.replaceAll("#\\d+", "#x")
+      .replaceAll("plan_id=\\d+", "plan_id=x")
+      .replaceAll("(graft-[\\w-]*?)\\d{6,}", "$1*")
+
   def main(a: Array[String]): Unit = {
     val s = graft.core.Session.local("local[8]", 8)
     s.sparkContext.setLogLevel("ERROR")
@@ -23,9 +34,9 @@ object PlanDump {
       "q_simhash" -> "De-amplified vote shuffle: one row per (doc, token) with 48 partial-aggregable sum columns (was 48 rows per pair)",
       "q_asof_left" -> "LEFT outer as-of: same merge exec, right side null-extended",
       "q_hll_union" -> "Mergeable-sketch rollup: per-group HLL sketches, union re-merges sketch column (objHashAggregate)",
-      "q43_minhash_lsh" -> "Salted LSH dedup: window bucket-counts ride the band exchange (no count-join); hot buckets split into bounded triangle cells; rerank joins hub-salted with broadcast fan-out table",
-      "q_ann_lsh" -> "Radius-2 multi-probe LSH search from the persisted bucket table: fixed 79-lookup/band probe fan-out on the query side only, windowed top-k rerank",
-      "q_ann_ivf" -> "IVF search at the fixed production nprobe=16: broadcast centroid probe, cell-restricted exact rerank, windowed top-k",
+      "q43_minhash_lsh" -> "Salted LSH dedup: window bucket-counts ride the band exchange (no count-join); hot buckets split into bounded triangle cells; rerank joins hub-salted with broadcast fan-out table; pairs end at the threshold filter (no global sort, no range exchange)",
+      "q_ann_lsh" -> "Radius-2 multi-probe LSH search from the persisted bucket table: fixed 79-lookup/band probe fan-out on the query side only, windowed top-k rerank; rows end at the per-query rank (no global sort, no range exchange)",
+      "q_ann_ivf" -> "IVF search at the fixed production nprobe=16: broadcast centroid probe; the whole assigned table is scanned (broadcast at this size) and equi-joined on the probed cell ids, so only the exact rerank is cell-restricted; windowed top-k per query, no global sort",
       "q_span_dedup" -> "Cross-doc span ownership: window min over the span partition (one exchange, ONE corpus scan — no groupBy+join-back), then a partial-aggregable per-doc rollup; never doc×doc",
       "q_bm25_rank" -> "BM25 retrieval: explode filtered to query tokens before any shuffle; match-set tf and doc-length tables MATERIALIZED so df/stats branches read them instead of re-tokenizing (ReuseProbe r9); df + (N, avgdl) broadcast, top-20 as TakeOrdered",
       "q_rare_token_ratio" -> "Corpus-frequency quality signal: the (doc, tok) count table is MATERIALIZED once — cf rollup and the rare-flag join both read it (the exchange-reuse this previously relied on does not fire: per-consumer pruning breaks plan identity, ReuseProbe r9); mean_cf is a one-row broadcast",
@@ -60,7 +71,7 @@ object PlanDump {
     targets.foreach { case (name, note) =>
       val df = graft.SparkEntry.queries(name)(s, dir)
       sb ++= s"## $name\n\n$note\n\n```\n"
-      sb ++= df.queryExecution.executedPlan.toString.trim
+      sb ++= stable(df.queryExecution.executedPlan.toString.trim)
       sb ++= "\n```\n\n"
     }
     Files.write(Paths.get("PLANS.md"), sb.toString.getBytes(StandardCharsets.UTF_8))

@@ -53,7 +53,7 @@ object ReuseProbe {
     * semantics the committed budgets were calibrated against.
     * ReusedExchange/ReusedSubquery are reuse MARKERS (leaf pointers at
     * another node's output): counted, never descended into. */
-  private[tools] def nodes(p: SparkPlan): Seq[SparkPlan] = {
+  private[graft] def nodes(p: SparkPlan): Seq[SparkPlan] = {
     val below = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)

@@ -67,11 +67,13 @@ class AnnPqSpec extends SparkSpec {
       .collect().map(_.toString).toSeq == cbBefore,
       "append must not refit the codebook")
     val q = newVecs.select(col("vec_id").as("qid"), col("emb").as("qemb"))
-    val got = AnnPq.search(spark, idx, q)
+    // Each appended copy's top hit (rank 1; search rows carry no order)
+    // must be its identical original.
+    val topHit = AnnPq.search(spark, idx, q).filter(col("rn") === 1)
       .select("qid", "cand_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    // Each appended copy's top hit must be its identical original.
-    val topHit = got.groupBy(_._1).map { case (qid, xs) => qid -> xs.head._2 }
+    assert(topHit.map(_._1).toSet == Set(100000L, 100001L, 100002L, 100003L, 100004L),
+      s"one rank-1 hit per appended copy expected, got ${topHit.toSeq}")
     topHit.foreach { case (qid, cand) =>
       assert(cand == qid - 100000L,
         s"appended copy $qid should retrieve its original, got $cand")

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, MapType, Metadata, StructType}
 import graft.core.{IndexManifest, Materialize, TempDirs}
 import graft.dedup.MinHashDedup
@@ -9,7 +12,10 @@ import graft.tuner.{MetricsStore, ShuffleVolume, StageRunInfo}
 /** Persisted-index reads pass a recorded schema, so they launch no
   * footer-inference job; the metrics store is read on the driver and
   * launches none at all; and every index family's `table.<name>` manifest
-  * field is the schema its builder wrote. */
+  * field is the schema its index build wrote. Index reads end at the
+  * per-query top-k (ANN) or the threshold filter (pairs): no global sort,
+  * so no range-partitioning exchange or sampling job, and the ANN rank
+  * column carries the order a caller may need. */
 class IndexReadJobsSpec extends SparkSpec {
 
   private def docs = {
@@ -31,6 +37,47 @@ class IndexReadJobsSpec extends SparkSpec {
       AnnIvf.search(spark, idx, PlantedEmbeddings.queries(e)))
     assert(jobs == 0, s"AnnIvf.search ran $jobs jobs while being built")
     assert(out.count() > 0)
+  }
+
+  /** Range-partitioning exchanges in `df`'s executed plan; call after
+    * `df` has run, so an adaptive plan reports its final stages. */
+  private def rangeExchanges(df: DataFrame) =
+    graft.tools.ReuseProbe.nodes(df.queryExecution.executedPlan).collect {
+      case x: ShuffleExchangeLike if x.outputPartitioning.isInstanceOf[RangePartitioning] => x
+    }
+
+  test("AnnIvf.search: no global sort, 4 jobs per collect, rn ranks each query 1..k") {
+    GraftExtensions.ensureRegistered(spark)
+    val e = PlantedEmbeddings.df(spark)
+    val idx = TempDirs.create("graft-ivf-topk")
+    AnnIvf.fit(e, idx, k = 8)
+    val out = AnnIvf.search(spark, idx, PlantedEmbeddings.queries(e))
+    val (rows, jobs) = JobCount(spark)(out.collect())
+    // Two broadcasts (centroids, assigned), the map stage of the one qid
+    // exchange both windows share, and the result stage. A terminal sort
+    // added a sampling job and a range-exchange stage (6 jobs).
+    assert(jobs == 4, s"one AnnIvf.search collect ran $jobs jobs")
+    assert(rangeExchanges(out).isEmpty,
+      s"search plan has a range exchange:\n${out.queryExecution.executedPlan}")
+    val byQuery = rows.groupBy(_.getAs[Long]("qid"))
+    assert(byQuery.size == 10)
+    byQuery.foreach { case (qid, hits) =>
+      val ranked = hits.sortBy(_.getAs[Int]("rn"))
+      assert(ranked.map(_.getAs[Int]("rn")).toSeq == (1 to AnnIvf.TOP_K),
+        s"qid $qid ranks ${ranked.map(_.getAs[Int]("rn")).toSeq}")
+      val sims = ranked.map(_.getAs[Double]("cos_sim"))
+      assert(sims.zip(sims.tail).forall { case (a, b) => a >= b },
+        s"qid $qid cos_sim not non-increasing in rn: ${sims.toSeq}")
+    }
+  }
+
+  test("pairsFromIndex ends at the threshold filter: no range exchange") {
+    val idx = TempDirs.create("graft-mh-nosort")
+    MinHashDedup.buildIndex(docs, idx)
+    val pairs = MinHashDedup.pairsFromIndex(spark, idx)
+    assert(pairs.collect().length == 1)
+    assert(rangeExchanges(pairs).isEmpty,
+      s"pair plan has a range exchange:\n${pairs.queryExecution.executedPlan}")
   }
 
   test("MetricsStore.history on a two-run store launches no job") {
