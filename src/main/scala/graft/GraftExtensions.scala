@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{CosineSimilarity, DotProduct}
+import graft.functions.{CosineSimilarity, DotProduct, SimHash}
 
 /** Session extension: registers the engine's native expressions AND its
   * custom operator strategies. Attach with
@@ -28,6 +28,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "", "", "", "", "", "", ""),
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         DotProduct(children(0), children(1))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_simhash"),
+      new ExpressionInfo("graft", null, "graft_simhash",
+        "graft_simhash(v) - 48-bit SimHash of a group's 48-bit token hashes",
+        "", "", "", "", "", "", ""),
+      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+        SimHash(children(0))))
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }
@@ -44,5 +51,9 @@ object GraftExtensions {
       spark, "graft_dot",
       "graft_dot(a, b) - dot product of two double arrays",
       children => DotProduct(children(0), children(1)))
+    org.apache.spark.sql.graftaccess.FunctionAccess.register(
+      spark, "graft_simhash",
+      "graft_simhash(v) - 48-bit SimHash of a group's 48-bit token hashes",
+      children => SimHash(children(0)))
   }
 }

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md from the live registry:
   * `sbt "runMain graft.tools.PlanDump"`. Run after plan-affecting changes.
+  * Each entry is the initial adaptive plan (the query is not run); the
+  * final plans AQE reaches at run time are [[ReuseProbe]]'s to audit.
   * Plans are printed with the per-run parts masked (see [[stable]]), so
   * regenerating on unchanged code rewrites no line and a diff of the file
   * is a diff of operators.
@@ -31,7 +33,7 @@ object PlanDump {
       "q_asof_join" -> "Custom AsOfJoin node; EnsureRequirements inserts one exchange+sort per side",
       "q34_sessionization" -> "Window + groupBy share the user_id hash partitioning (single exchange)",
       "q_dpp_prune" -> "Dynamic partition pruning: fact scan's PartitionFilters carries dynamicpruningexpression fed by the dim join",
-      "q_simhash" -> "De-amplified vote shuffle: one row per (doc, token) with 48 partial-aggregable sum columns (was 48 rows per pair)",
+      "q_simhash" -> "One corpus scan, one per-doc exchange: the 48 bit votes are ONE native graft_simhash aggregate (partial/final ObjectHashAggregate over the token hashes), not 48 sum columns",
       "q_asof_left" -> "LEFT outer as-of: same merge exec, right side null-extended",
       "q_hll_union" -> "Mergeable-sketch rollup: per-group HLL sketches, union re-merges sketch column (objHashAggregate)",
       "q43_minhash_lsh" -> "Salted LSH dedup: window bucket-counts ride the band exchange (no count-join); hot buckets split into bounded triangle cells; rerank joins hub-salted with broadcast fan-out table; pairs end at the threshold filter (no global sort, no range exchange)",
@@ -68,6 +70,9 @@ object PlanDump {
     val sb = new StringBuilder
     sb ++= "# PLANS — physical plans of representative queries (sf0.01, AQE on)\n\n"
     sb ++= "Generated by `sbt \"runMain graft.tools.PlanDump\"`; regenerate after plan-affecting changes.\n\n"
+    sb ++= "Each entry is the initial adaptive plan (`isFinalPlan=false`), printed without running the query: " +
+      "the broadcast conversions, partition coalescing and skew splits AQE makes at run time are not shown. " +
+      "`graft.tools.ReuseProbe` executes queries and walks their final plans.\n\n"
     targets.foreach { case (name, note) =>
       val df = graft.SparkEntry.queries(name)(s, dir)
       sb ++= s"## $name\n\n$note\n\n```\n"

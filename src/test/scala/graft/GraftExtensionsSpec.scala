@@ -14,11 +14,10 @@ class GraftExtensionsSpec extends SparkSpec {
   test("extensions class injects the native expressions and the as-of strategy") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    // Order-insensitive set compare: the registry grew graft_dot in the
-    // r16 optimization round (ANN hot-loop dot product) next to the
-    // original graft_cosine.
+    // Order-insensitive set compare: every native function the engine
+    // registers, and nothing else.
     assert(ExtensionsAccess.registeredFunctionNames(ext).toSet
-      == Set("graft_cosine", "graft_dot"))
+      == Set("graft_cosine", "graft_dot", "graft_simhash"))
     assert(ExtensionsAccess.plannerStrategies(ext, spark)
       == Seq(graft.plans.AsOfJoinStrategy))
   }
