@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deterministic clustered embedding fixture with PLANTED near-duplicate
@@ -46,11 +45,9 @@ object PlantedEmbeddings {
 
   /** Exact brute-force top-k ground truth for the given query frame. */
   def exactTopK(e: DataFrame, k: Int, q: DataFrame): Set[(Long, Long)] = {
-    val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("cand_id"))
-    q.join(e, col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cand_id"),
-        graft.functions.CosineSimilarity.cosine(col("qemb"), col("emb")).as("cos_sim"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    graft.similarity.AnnIvf.topKPerQuery(q.join(e, col("vec_id") =!= col("qid"))
+        .select(col("qid"), col("vec_id").as("cand_id"),
+          graft.functions.CosineSimilarity.cosine(col("qemb"), col("emb")).as("cos_sim")), k)
       .select("qid", "cand_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
   }

@@ -84,7 +84,7 @@ object IndexManifest {
   /** Read the manifest; empty map if absent (callers decide how to fail).
     * Throws on any content [[write]] could not have produced — a nested or
     * hand-edited manifest must fail loudly, not parse silently-wrong: this
-    * file guards the build parameters of three index families, and a
+    * file guards the build parameters of five index families, and a
     * lenient parse that "finds" some pairs inside unexpected structure
     * would let verify() accept a manifest whose real content it never saw. */
   def read(s: SparkSession, indexDir: String): Map[String, String] = {

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
+import graft.functions.CosineSimilarity.cosine
+import graft.similarity.AnnIvf.topKPerQuery
 
 /** Embedding similarity + multimodal-column operators (SURVEY.md §2B Q32,
   * Q47 + the training-pipeline extensions).
@@ -17,13 +18,6 @@ import graft.core.Tables._
 object SimilarityOps {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Native codegen'd single-pass cosine (graft.functions.CosineSimilarity)
-    * — same sequential accumulation order as DuckDB's
-    * list_cosine_similarity, so IEEE results agree to the last ulp in
-    * practice; outputs are still rounded to 6 dp. */
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.CosineSimilarity.cosine(a, b)
-
   val queries: Map[String, Q] = Map(
     // Q32 — exact cosine top-5 for query vectors vec_id < 10.
     "q32_cosine_topk" -> { (s, dir) =>
@@ -32,12 +26,9 @@ object SimilarityOps {
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("emb").as("qemb"))
-      val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("cand_id"),
-          round(cosine(col("qemb"), col("emb")), 6).as("cos_sim"))
-      val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("cand_id"))
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
+      topKPerQuery(e.join(broadcast(q), col("vec_id") =!= col("qid"))
+          .select(col("qid"), col("vec_id").as("cand_id"),
+            round(cosine(col("qemb"), col("emb")), 6).as("cos_sim")), 5)
         .orderBy("qid", "rn")
     },
 
@@ -174,12 +165,9 @@ object SimilarityOps {
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val q = e.select(col("vec_id").as("qid"), col("emb").as("qemb"))
-      val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("cand_id"))
-      e.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("cand_id"),
-          round(cosine(col("qemb"), col("emb")), 6).as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 4)
+      topKPerQuery(e.join(broadcast(q), col("vec_id") =!= col("qid"))
+          .select(col("qid"), col("vec_id").as("cand_id"),
+            round(cosine(col("qemb"), col("emb")), 6).as("cos_sim")), 4)
         .orderBy("qid", "rn")
     }
   )

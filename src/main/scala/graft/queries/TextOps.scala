@@ -2046,27 +2046,31 @@ object TextOps {
   *    spelling is oracle-checked against; it is not a scale path.
   */
 object SimhashSql {
-  private val fpChain: String = """
+  /** The chain grouped by `keys` (doc_id first; any further key is a
+    * per-document column of `documents`, carried through the scan). */
+  private def fpChain(keys: String): String = s"""
     WITH occ AS (
-      SELECT doc_id,
+      SELECT $keys,
              CAST(conv(substring(md5(tok), 1, 12), 16, 10) AS BIGINT) AS v
-      FROM (SELECT doc_id, explode(split(text, ' ')) AS tok FROM documents)
+      FROM (SELECT $keys, explode(split(text, ' ')) AS tok FROM documents)
       WHERE tok <> ''),
     fp AS (
-      SELECT doc_id, graft_simhash(v) AS simhash
+      SELECT $keys, graft_simhash(v) AS simhash
       FROM occ
-      GROUP BY doc_id)"""
+      GROUP BY $keys)"""
 
-  val spark: String = s"""$fpChain
+  val spark: String = s"""${fpChain("doc_id")}
     SELECT doc_id, simhash FROM fp ORDER BY doc_id"""
 
-  /** Fingerprints joined to their (lang, source) block keys, for the pairs
+  /** Fingerprints with their (lang, source) block keys, for the pairs
     * query: it materializes this doc-count-sized table once so both sides
     * of the band self-join read it instead of each re-running the chain
-    * over the corpus (inline CTEs re-execute per reference). */
-  val fpSql: String = s"""$fpChain
-    SELECT f.doc_id, f.simhash, d.lang, d.source
-    FROM fp f JOIN documents d ON f.doc_id = d.doc_id"""
+    * over the corpus (inline CTEs re-execute per reference). The block
+    * keys are grouping keys of the chain, since doc_id determines them,
+    * so the corpus is scanned once and no join back to `documents` is
+    * needed. */
+  val fpSql: String = s"""${fpChain("doc_id, lang, source")}
+    SELECT doc_id, simhash, lang, source FROM fp"""
 
   /** Near-dup PAIRS by banded SimHash over the materialized `simhash_fp`
     * view: split the 48-bit fingerprint into 6 bands of 8 bits; by

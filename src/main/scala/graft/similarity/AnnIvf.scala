@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
+import graft.functions.CosineSimilarity
 
 /** IVF-style approximate nearest neighbor over the embedding column — the
   * scale path behind Q32's exact brute-force top-k.
@@ -46,9 +47,6 @@ object AnnIvf {
   def chooseK(n: Long): Int =
     math.min(MAX_K, math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt))
 
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.CosineSimilarity.cosine(a, b)
-
   /** Assign each embedding row to its nearest centroid id: broadcast the
     * centroids, score map-side, reduce with max_by (partial aggregation —
     * one surviving row per vec_id per mapper reaches the shuffle).
@@ -76,7 +74,7 @@ object AnnIvf {
   def assign(emb: DataFrame, centroids: DataFrame): DataFrame = {
     val best = emb.join(broadcast(centroids))
       .select(col("vec_id"), col("cid"),
-        cosine(col("emb"), col("cemb")).as("csim"))
+        CosineSimilarity.cosine(col("emb"), col("cemb")).as("csim"))
       .groupBy(col("vec_id"))
       .agg(max_by(col("cid"), struct(col("csim"), (-col("cid")).as("ord"))).as("cid"))
     emb.join(best, "vec_id").select(col("vec_id"), col("emb"), col("cid"))
@@ -106,7 +104,6 @@ object AnnIvf {
     // Dense, order-stable ids (windowless: small K rows, but rank via
     // zipWithIndex-free expression — row_number over a single partition
     // of K rows is fine since K ≤ MAX_K).
-    import org.apache.spark.sql.expressions.Window
     centroids
       .withColumn("cid", row_number().over(
         Window.orderBy(col("cid"))).cast("long") - 1L)
@@ -200,31 +197,44 @@ object AnnIvf {
     val centroids = graft.core.IndexManifest.table(s, indexDir, manifest, "centroids")
     val assigned = graft.core.IndexManifest.table(s, indexDir, manifest, "assigned")
 
-    // Queries probe their nprobe nearest centroid cells. The window here
-    // sorts K rows per query (K is capped), not corpus rows.
-    val probeW = Window.partitionBy("qid").orderBy(desc("qcsim"), asc("cid"))
-    val probes = q.join(broadcast(centroids))
-      .select(col("qid"), col("qemb"), col("cid"),
-        cosine(col("qemb"), col("cemb")).as("qcsim"))
-      .withColumn("rn", row_number().over(probeW)).filter(col("rn") <= nprobe)
+    val probes = probeCells(q, "qemb", centroids, CosineSimilarity.cosine, nprobe)
       .select(col("qid"), col("qemb"), col("cid"))
-
-    // Exact rerank inside probed cells only (equi-join on cell id).
-    topKPerQuery(probes.join(assigned, "cid")
-      .filter(col("vec_id") =!= col("qid"))
+    // Exact rerank inside probed cells only.
+    topKPerQuery(cellMembers(probes, assigned)
       .select(col("qid"), col("vec_id").as("cand_id"),
-        round(cosine(col("qemb"), col("emb")), 6).as("cos_sim")), topK)
+        round(CosineSimilarity.cosine(col("qemb"), col("emb")), 6).as("cos_sim")), topK)
   }
 
-  /** The tail every ANN family's search shares: scored (qid, cand_id,
-    * cos_sim) rows → the `topK` best per query, with rn = 1-based rank
-    * within the query (cos_sim descending, then cand_id ascending), so for
-    * each qid rn runs 1..k over non-increasing cos_sim. The window's
-    * exchange clusters rows by qid only; nothing sorts across queries,
-    * because no caller needs it and a global sort would add a
-    * range-partitioning exchange plus its sampling job to every search. */
-  private[similarity] def topKPerQuery(scored: DataFrame, topK: Int): DataFrame =
+  /** Each query's `nprobe` best centroid cells: (qid, `qvec`, cid, qcsim,
+    * rn), where qcsim = `score(query vector, cemb)` and ties go to the
+    * lower cid. The ranking window sorts K rows per query (K is capped),
+    * not corpus rows. */
+  private[similarity] def probeCells(q: DataFrame, qvec: String,
+      centroids: DataFrame, score: (Column, Column) => Column,
+      nprobe: Int): DataFrame =
+    topKPerQuery(q.join(broadcast(centroids))
+        .select(col("qid"), col(qvec), col("cid"),
+          score(col(qvec), col("cemb")).as("qcsim")),
+      nprobe, score = "qcsim", id = "cid")
+
+  /** The members of the probed cells, each query's own vector excluded:
+    * the one read of `assigned` every IVF search makes (an equi-join on
+    * cid over the whole unclustered table, see the class doc). */
+  private[similarity] def cellMembers(probes: DataFrame,
+      assigned: DataFrame): DataFrame =
+    probes.join(assigned, "cid").filter(col("vec_id") =!= col("qid"))
+
+  /** The one per-query ranker: the `topK` best rows per qid with rn =
+    * 1-based rank within the query (`score` descending, then `id`
+    * ascending), so for each qid rn runs 1..k over non-increasing scores.
+    * The window's exchange clusters rows by qid only; nothing sorts
+    * across queries, because no caller needs it and a global sort would
+    * add a range-partitioning exchange plus its sampling job to every
+    * search. The defaults rank scored (qid, cand_id, cos_sim) rows, the
+    * tail of every search. */
+  private[graft] def topKPerQuery(scored: DataFrame, topK: Int,
+      score: String = "cos_sim", id: String = "cand_id"): DataFrame =
     scored.withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("cos_sim"), asc("cand_id"))))
+        Window.partitionBy("qid").orderBy(desc(score), asc(id))))
       .filter(col("rn") <= topK)
 }

@@ -61,9 +61,6 @@ object AnnLsh {
     Array.fill(bits, dim)(rng.nextSignedUnit())
   }
 
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.CosineSimilarity.cosine(a, b)
-
   /** Bit b of the signature = sign of ⟨v, plane_b⟩, as an int column.
     * Native graft_dot, never a higher-order-function fold: an interpreted
     * fold per plane — bands·bitsPerBand = 192 folds of dim 64 per corpus
@@ -224,6 +221,7 @@ object AnnLsh {
       .distinct()
     AnnIvf.topKPerQuery(cands.join(vectors, col("cand_id") === vectors("vec_id"))
       .select(col("qid"), col("cand_id"),
-        round(cosine(col("qemb"), col("emb")), 6).as("cos_sim")), topK)
+        round(graft.functions.CosineSimilarity.cosine(col("qemb"), col("emb")), 6)
+          .as("cos_sim")), topK)
   }
 }

@@ -1,9 +1,9 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
+import graft.functions.DotProduct
 
 /** Product-quantization ANN (ADC flavor) — the third index family next to
   * IVF cells ([[AnnIvf]]) and hyperplane buckets ([[AnnLsh]]), and the one
@@ -30,6 +30,9 @@ import graft.core.Tables._
   * (family=pq-adc); search() runs scan+join jobs only; append() codes new
   * vectors against the FROZEN codebook (daily-ingest path, no refit).
   * Recall ≥ 0.9 on planted clusters is a requirement (AnnPqSpec).
+  *
+  * The codec is shared with [[AnnIvfPq]]: [[normalized]], [[writeVectors]],
+  * [[subvectors]], [[fitCodebook]], [[encode]] and [[adcSearch]].
   */
 object AnnPq {
   val M = 8               // subspaces
@@ -40,39 +43,49 @@ object AnnPq {
   def chooseCodes(n: Long): Int =
     math.min(MAX_CODES, math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
 
-  /** Native single-pass dot (graft.functions.DotProduct), never the HOF
-    * aggregate(zip_with(...)) spelling, which is an interpreted fold;
-    * bit-identical accumulation order. Callers go through an entry point
-    * that calls GraftExtensions.ensureRegistered. */
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.DotProduct.dot(a, b)
-
   /** (vec_id, nemb) unit-normalized rows. The norm is hoisted into its
     * own projected column: spelled inline inside the transform lambda,
     * the full dot-fold re-evaluates PER ELEMENT (interpreted HOF lambdas
     * get no subexpression elimination) — dim² work per row. */
   private[similarity] def normalized(e: DataFrame): DataFrame =
     e.select(col("vec_id"), col("emb"),
-        sqrt(dot(col("emb"), col("emb"))).as("nrm"))
+        sqrt(DotProduct.dot(col("emb"), col("emb"))).as("nrm"))
       .select(col("vec_id"), transform(col("emb"), x => x / col("nrm")).as("nemb"))
 
-  /** Explode pre-normalized/pre-centered (vec_id, emb) rows into the
-    * (vec_id, m, sv) long form; dim must divide evenly into M subspaces
-    * (the fixture dim 64 → 8×8). Callers normalize first where the PQ
-    * family requires unit vectors — IVFPQ feeds centered residuals. */
-  private[similarity] def subvectorsOf(e: DataFrame, normalize: Boolean): DataFrame = {
-    val base =
-      if (normalize) normalized(e).select(col("vec_id"), col("nemb").as("emb"))
-      else e
-    base.select(col("vec_id"), col("emb").as("nemb"),
-        (size(col("emb")) / M).cast("int").as("sd"))
-      .select(col("vec_id"), col("nemb"), col("sd"),
-        explode(sequence(lit(0), lit(M - 1))).as("m"))
-      .select(col("vec_id"), col("m"),
-        slice(col("nemb"), col("m") * col("sd") + 1, col("sd")).as("sv"))
+  /** Queries (qid, qemb) → (qid, qn), unit-normalized by [[normalized]]. */
+  private[similarity] def normalizedQueries(q: DataFrame): DataFrame =
+    normalized(q.select(col("qid").as("vec_id"), col("qemb").as("emb")))
+      .select(col("vec_id").as("qid"), col("nemb").as("qn"))
+
+  /** Write the unit-normalized corpus `e` (vec_id, emb) as the index's
+    * `vectors` table (vec_id, nemb). Returns the frame written (its schema
+    * is what the manifest records), the table read back as (vec_id, emb),
+    * and its row count. The fit derives everything from the read-back, so
+    * no fit job re-runs the interpreted normalize kernel (on a single-file
+    * fixture scan it would run in ONE task); the repartition by vec_id to
+    * the session's default parallelism spreads that kernel across cores
+    * whatever the input's file count. The count rides the write job, so it
+    * costs no pass. The doubles survive the parquet round-trip, so the
+    * index is bit-identical. */
+  private[similarity] def writeVectors(e: DataFrame,
+      indexDir: String): (DataFrame, DataFrame, Long) = {
+    val vectors = normalized(e)
+      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
+    val (written, n) = graft.core.Materialize.observed[Long](vectors,
+      s"$indexDir/vectors", count(lit(1)))
+    (vectors, written.select(col("vec_id"), col("nemb").as("emb")), n)
   }
 
-  private def subvectors(e: DataFrame): DataFrame = subvectorsOf(e, normalize = true)
+  /** Explode (vec_id, emb) rows into the (vec_id, m, sv) long form; dim
+    * must divide evenly into M subspaces (the fixture dim 64 → 8×8). PQ
+    * feeds unit vectors, IVF-PQ centered residuals. */
+  private[similarity] def subvectors(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("emb"),
+        (size(col("emb")) / M).cast("int").as("sd"))
+      .select(col("vec_id"), col("emb"), col("sd"),
+        explode(sequence(lit(0), lit(M - 1))).as("m"))
+      .select(col("vec_id"), col("m"),
+        slice(col("emb"), col("m") * col("sd") + 1, col("sd")).as("sv"))
 
   /** Nearest codeword per (vec_id, m): L2 argmin over the codebook as a
     * tight primitive-loop kernel. The codebook is BOUNDED (≤ M·256 rows ·
@@ -83,9 +96,20 @@ object AnnPq {
     * per-pair array allocation, which measured SUPER-linear (exponent
     * 1.14) at the sf0.1→sf1 decade, while this kernel keeps encode a
     * pure map — zero shuffles — and restores linear scaling. Min-code
-    * tie-break = first-hit-wins scan order. */
-  private def encodeUdf(cb: Array[Array[Array[Double]]])
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    * tie-break = first-hit-wins scan order.
+    *
+    * The kernel reads the book in the layout [m][code][dim]. Code ids are
+    * dense per subspace (fit's seed carry-over guarantees no cell ever
+    * vanishes); a subspace with no codewords at all fails here with its
+    * cause, not with a bare NoSuchElementException. */
+  private def encodeUdf(book: Array[(Int, Int, Seq[Double])])
+      : org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val byM = book.groupBy(_._1)
+    val cb = (0 until M).toArray.map { m =>
+      require(byM.contains(m), s"no codewords for subspace $m — the codebook " +
+        "table is incomplete, or the vec_ids do not cover the stride sample")
+      byM(m).sortBy(_._2).map(_._3.toArray)
+    }
     udf { (m: Int, sv: Seq[Double]) =>
       val cws = cb(m)
       val x = sv.toArray
@@ -100,24 +124,15 @@ object AnnPq {
       }
       best
     }
-
-  /** Collect a codebook frame into the kernel layout [m][code][dim];
-    * code ids are dense per subspace (fit's seed carry-over guarantees
-    * no cell ever vanishes). */
-  private def collectCodebook(cbDf: DataFrame): Array[Array[Array[Double]]] = {
-    val rows = cbDf.collect()
-      .map(r => (r.getAs[Int]("m"), r.getAs[Int]("code"),
-        r.getAs[Seq[Double]]("cw").toArray))
-    val byM = rows.groupBy(_._1)
-    (0 until M).toArray.map { m =>
-      require(byM.contains(m),
-        s"no codewords for subspace $m — codebook table is incomplete")
-      byM(m).sortBy(_._2).map(_._3)
-    }
   }
 
+  /** Codebook rows (m, code, cw), collected to the driver. */
+  private def bookRows(df: DataFrame): Array[(Int, Int, Seq[Double])] =
+    df.collect().map(r => (r.getAs[Int]("m"), r.getAs[Int]("code"),
+      r.getAs[Seq[Double]]("cw")))
+
   private[similarity] def encode(sv: DataFrame, cbDf: DataFrame): DataFrame = {
-    val kernel = encodeUdf(collectCodebook(cbDf))
+    val kernel = encodeUdf(bookRows(cbDf))
     sv.select(col("vec_id"), col("m"),
       kernel(col("m"), col("sv")).as("code"))
   }
@@ -140,27 +155,13 @@ object AnnPq {
   def fitCodebook(sv: DataFrame, n: Long, codes: Int, iters: Int): DataFrame = {
     val s = sv.sparkSession
     val stride = math.max(1L, n / codes)
-    def rowsOf(df: DataFrame): Array[(Int, Int, Seq[Double])] =
-      df.collect().map(r => (r.getAs[Int]("m"), r.getAs[Int]("code"),
-        r.getAs[Seq[Double]]("cw")))
-    def layout(b: Array[(Int, Int, Seq[Double])]): Array[Array[Array[Double]]] = {
-      val byM = b.groupBy(_._1)
-      (0 until M).toArray.map { m =>
-        // Diagnosable failure instead of a bare NoSuchElementException:
-        // sparse / non-contiguous vec_ids can leave a subspace with no
-        // stride-sampled seed rows at all.
-        require(byM.contains(m),
-          s"no seed codewords for subspace $m — vec_ids may not cover the stride sample")
-        byM(m).sortBy(_._2).map(_._3.toArray)
-      }
-    }
-    var book = rowsOf(sv
+    var book = bookRows(sv
       .filter(col("vec_id") % stride === 0 && col("vec_id") / stride < codes)
       .select(col("m"), (col("vec_id") / stride).cast("int").as("code"),
         col("sv").as("cw")))
     for (_ <- 0 until iters) {
-      val kernel = encodeUdf(layout(book))
-      val updated = rowsOf(sv
+      val kernel = encodeUdf(book)
+      val updated = bookRows(sv
         .select(col("m"), kernel(col("m"), col("sv")).as("code"), col("sv"))
         .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy(col("m"), col("code"), col("pos")).agg(avg(col("x")).as("v"))
@@ -192,20 +193,8 @@ object AnnPq {
     val s = e.sparkSession
     graft.GraftExtensions.ensureRegistered(s)
     graft.core.IndexManifest.invalidate(s, indexDir)
-    // Normalize ONCE into the index's vectors table and derive the whole
-    // fit (seed book, iterations, encode) from the read-back, so no
-    // codebook job re-runs the per-row normalize kernel (on a
-    // single-file fixture scan it would run in ONE task). Repartitioned
-    // by vec_id to the session's default parallelism so kernel work
-    // spreads across cores whatever the input's file count.
-    // Same doubles after the parquet round-trip — bit-identical index.
-    // The corpus count rides the same write job, so it costs no pass.
-    val vectors = normalized(e)
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-    val (written, n) = graft.core.Materialize.observed[Long](vectors,
-      s"$indexDir/vectors", count(lit(1)))
-    val en = written.select(col("vec_id"), col("nemb").as("emb"))
-    val sv = subvectorsOf(en, normalize = false)
+    val (vectors, en, n) = writeVectors(e, indexDir)
+    val sv = subvectors(en)
     val codes = chooseCodes(n)
     val book = fitCodebook(sv, n, codes, iters)
     val cb = graft.core.Materialize.at(book, s"$indexDir/codebook")
@@ -231,14 +220,14 @@ object AnnPq {
     // ADC shortlist and then be silently dropped by the rerank join,
     // degrading top-k quality with no error. This is the two-table
     // analogue of the sibling families' manifest-last canon.
+    val nv = normalized(newVecs)
     graft.core.IndexManifest.appendTables(indexDir, manifest, "AnnPq.append",
-      "vectors" -> normalized(newVecs),
-      "codes" -> encode(subvectors(newVecs), cb))
+      "vectors" -> nv,
+      "codes" -> encode(subvectors(nv.select(col("vec_id"), col("nemb").as("emb"))), cb))
   }
 
-  /** ADC search: LUT join + partial-agg score sum + exact rerank of the
-    * shortlist. q = (qid, qemb) → the top-`topK` rows (qid, cand_id,
-    * cos_sim, rn) per query, ranked as [[AnnIvf.topKPerQuery]] ranks them.
+  /** ADC search: q = (qid, qemb) → the top-`topK` rows (qid, cand_id,
+    * cos_sim, rn) per query, as [[adcSearch]] scores and ranks them.
     * Rows are NOT ordered across queries, and no caller may rely on row
     * order: sort on (qid, rn) if you need it. */
   def search(s: SparkSession, indexDir: String, q: DataFrame,
@@ -246,32 +235,45 @@ object AnnPq {
     graft.GraftExtensions.ensureRegistered(s)
     val manifest = graft.core.IndexManifest.verify(s, indexDir,
       Map("family" -> "pq-adc"), "AnnPq.search")
-    val cb = graft.core.IndexManifest.table(s, indexDir, manifest, "codebook")
-    val codesT = graft.core.IndexManifest.table(s, indexDir, manifest, "codes")
-    val vectors = graft.core.IndexManifest.table(s, indexDir, manifest, "vectors")
-    val qsv = subvectors(q.select(col("qid").as("vec_id"), col("qemb").as("emb")))
+    def table(name: String) = graft.core.IndexManifest.table(s, indexDir, manifest, name)
+    adcSearch(normalizedQueries(q), table("codebook"), table("codes"),
+      table("vectors"), cells = None, topK)
+  }
+
+  /** The ADC search PQ and IVF-PQ share, as the class doc's Search
+    * paragraph describes it: lookup table, approximate score, a
+    * `topK`·RERANK_FACTOR shortlist, exact rerank, ranked by
+    * [[AnnIvf.topKPerQuery]]. `qn` holds the (qid, qn) unit-normalized
+    * queries. `cells` holds IVF-PQ's per-query candidates (qid, vec_id,
+    * qcsim): only their codes are scored, and the coarse term qcsim is
+    * added to the lookup sum. Without it every coded vector but the
+    * query's own is scored. */
+  private[similarity] def adcSearch(qn: DataFrame, cb: DataFrame,
+      codesT: DataFrame, vectors: DataFrame, cells: Option[DataFrame],
+      topK: Int): DataFrame = {
+    val qsv = subvectors(qn.select(col("qid").as("vec_id"), col("qn").as("emb")))
       .select(col("vec_id").as("qid"), col("m"), col("sv").as("qsv"))
-    // LUT: |queries| × M × codes rows of partial dot products — tiny, and
-    // broadcast so the big codes table never shuffles for scoring.
     val lut = qsv.join(broadcast(cb), "m")
       .select(col("qid"), col("m"), col("code"),
-        dot(col("qsv"), col("cw")).as("pd"))
-    val approx = codesT.join(broadcast(lut), Seq("m", "code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("pd")).as("approx_sim"))
-      .filter(col("vec_id") =!= col("qid"))
-    val shortW = Window.partitionBy("qid")
-      .orderBy(desc("approx_sim"), asc("vec_id"))
-    val shortlist = approx
-      .withColumn("rn", row_number().over(shortW))
-      .filter(col("rn") <= topK * RERANK_FACTOR)
+        DotProduct.dot(col("qsv"), col("cw")).as("pd"))
+    val approx = cells match {
+      case None =>
+        codesT.join(broadcast(lut), Seq("m", "code"))
+          .groupBy(col("qid"), col("vec_id"))
+          .agg(sum(col("pd")).as("approx_sim"))
+          .filter(col("vec_id") =!= col("qid"))
+      case Some(c) =>
+        c.join(codesT, "vec_id")
+          .join(broadcast(lut), Seq("qid", "m", "code"))
+          .groupBy(col("qid"), col("vec_id"))
+          .agg((first(col("qcsim")) + sum(col("pd"))).as("approx_sim"))
+    }
+    val shortlist = AnnIvf.topKPerQuery(approx, topK * RERANK_FACTOR,
+        score = "approx_sim", id = "vec_id")
       .select(col("qid"), col("vec_id"))
-    // Exact rerank: true cosine (normalized dot) on the shortlist only.
-    val qn = normalized(q.select(col("qid").as("vec_id"), col("qemb").as("emb")))
-      .select(col("vec_id").as("qid"), col("nemb").as("qn"))
     AnnIvf.topKPerQuery(shortlist.join(vectors, "vec_id").join(qn, "qid")
       .select(col("qid"), col("vec_id").as("cand_id"),
-        round(dot(col("qn"), col("nemb")), 6).as("cos_sim")), topK)
+        round(DotProduct.dot(col("qn"), col("nemb")), 6).as("cos_sim")), topK)
   }
 
   /** Registry query: fit-once-search-once through a scratch index dir on

@@ -36,22 +36,15 @@ object AnnScale {
       case _ => Seq((500, 64, 8), (5000, 256, 32))
     }
     // Restrict to one family via SPARK_GRAFT_ANN_FAMILIES=ivf,lsh,ivfpq.
-    // Unknown names are dropped LOUDLY (same treatment as Bench's
-    // SPARK_GRAFT_SCALE_SUITE): a typo must not buy a zero-line run that
-    // still pays the fixture/ground-truth cost and exits 0.
+    // A selection with no known family fails: a typo must not buy a
+    // zero-line run that still pays the fixture/ground-truth cost and
+    // exits 0.
     val Known = Seq("ivfpq", "ivf", "lsh")
-    val families = sys.env.get("SPARK_GRAFT_ANN_FAMILIES") match {
-      case None => Known
-      case Some(csv) =>
-        val asked = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val (known, unknown) = asked.partition(Known.contains)
-        if (unknown.nonEmpty)
-          System.err.println(s"[annscale] unknown families skipped: " +
-            s"${unknown.mkString(",")} (known: ${Known.mkString(",")})")
-        if (known.isEmpty)
-          sys.error(s"SPARK_GRAFT_ANN_FAMILIES='$csv' selects no known family")
-        known
-    }
+    val families = graft.core.EnvSuite.scope("SPARK_GRAFT_ANN_FAMILIES", Known,
+      Known.contains, "annscale")
+    if (families.isEmpty)
+      sys.error(s"SPARK_GRAFT_ANN_FAMILIES='${sys.env("SPARK_GRAFT_ANN_FAMILIES")}' " +
+        "selects no known family")
     points.foreach { case (numClusters, coarseK, nprobe) =>
       val e = PlantedEmbeddings.df(spark, numClusters)
         .repartition(cpus.toInt).cache()

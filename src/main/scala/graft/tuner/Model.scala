@@ -43,43 +43,25 @@ object StageRunInfo {
       medianTaskShuffleReadBytes = if (reads.isEmpty) 0L else reads(reads.length / 2))
   }
 
-  /** Per run, the stage with the largest shuffle bytesWritten; history is
-    * aligned by stage ordinal across runs (ComputePartitions.scala:52-61).
-    * Returns Nil on empty history (fixes reference quirk Q2 — MatchError
-    * on a first-ever run). */
-  def stagesWithMostExpensiveShuffle(runs: Seq[List[StageRunInfo]]): List[StageRunInfo] =
-    runs.headOption match {
+  /** Per run, the stage at the ordinal where the FIRST run's `key` peaks
+    * (ComputePartitions.scala:52-61): the series each tuner tier reads.
+    * `_.shuffle.bytesWritten` picks the most expensive shuffle (the
+    * partition-count tier), `_.inputBytes` the biggest scan (the
+    * input-split tier, `spark.sql.files.maxPartitionBytes`), and
+    * `_.shuffle.bytesRead` the biggest shuffle's reducer side, whose task
+    * count is what AQE settled on after coalescing. Runs without that ordinal
+    * are skipped. Empty history gives Nil (fixes reference quirk Q2 — a
+    * MatchError on a first-ever run).
+    *
+    * Alignment is by position only: a run whose AQE skipped a stage the
+    * first run had shifts every later ordinal, and its entry is then a
+    * different stage. Stable per-stage tags would fix that; none exist
+    * yet. */
+  def series(runs: Seq[List[StageRunInfo]])(key: StageRunInfo => Long): List[StageRunInfo] =
+    runs.headOption.filter(_.nonEmpty) match {
       case None => Nil
-      case Some(first) if first.isEmpty => Nil
       case Some(first) =>
-        val idx = first.zipWithIndex.maxBy(_._1.shuffle.bytesWritten)._2
-        runs.flatMap(r => r.lift(idx)).toList
-    }
-
-  /** The scan tier: the stage with the largest INPUT read (file bytes, not
-    * shuffle bytes), positionally aligned across runs like
-    * [[stagesWithMostExpensiveShuffle]] — the series that feeds the
-    * input-split recommendation (`spark.sql.files.maxPartitionBytes`). */
-  def scanStagesWithMostInput(runs: Seq[List[StageRunInfo]]): List[StageRunInfo] =
-    runs.headOption match {
-      case None => Nil
-      case Some(first) if first.isEmpty => Nil
-      case Some(first) =>
-        val idx = first.zipWithIndex.maxBy(_._1.inputBytes)._2
-        runs.flatMap(r => r.lift(idx)).toList
-    }
-
-  /** The REDUCER side of the biggest shuffle (max bytes read), positionally
-    * aligned across runs like [[stagesWithMostExpensiveShuffle]]. Its task
-    * count is what AQE actually settled on after post-shuffle coalescing —
-    * the series the tuner demo reports next to its own recommendation to
-    * show the two mechanisms converging rather than fighting. */
-  def reducersOfMostExpensiveShuffle(runs: Seq[List[StageRunInfo]]): List[StageRunInfo] =
-    runs.headOption match {
-      case None => Nil
-      case Some(first) if first.isEmpty => Nil
-      case Some(first) =>
-        val idx = first.zipWithIndex.maxBy(_._1.shuffle.bytesRead)._2
-        runs.flatMap(r => r.lift(idx)).toList
+        val idx = first.zipWithIndex.maxBy(p => key(p._1))._2
+        runs.flatMap(_.lift(idx)).toList
     }
 }

@@ -53,7 +53,7 @@ class Tuner(metricsRoot: String, appName: String) {
     * three tiers. */
   def tuneAndRunTracked[T](spark: SparkSession)(body: => T): TunedRun[T] = {
     val history = store.history(spark)
-    val target = StageRunInfo.stagesWithMostExpensiveShuffle(history)
+    val target = StageRunInfo.series(history)(_.shuffle.bytesWritten)
     val cp = new ComputePartitions(spark.conf.getAll)
     // Slot-floored at the application boundary (see applySlotFloor's doc):
     // an AQE-coalesced executed count must never come back as a sub-slot
@@ -62,7 +62,7 @@ class Tuner(metricsRoot: String, appName: String) {
     spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     // Scan tier: split size from the biggest recorded input stage (cold
     // start → memory bound alone).
-    val scans = StageRunInfo.scanStagesWithMostInput(history)
+    val scans = StageRunInfo.series(history)(_.inputBytes)
     val splitBytes =
       cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb).getOrElse(0.0))
     spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)

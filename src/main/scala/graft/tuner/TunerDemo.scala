@@ -60,8 +60,7 @@ object TunerDemo {
       // AQE-settled series: reducer task count of the biggest shuffle per
       // recorded run — present iff the listener captured complete runs.
       val fullHistory = runs.last.priorHistory :+ runs.last.recorded
-      val settled = StageRunInfo
-        .reducersOfMostExpensiveShuffle(fullHistory)
+      val settled = StageRunInfo.series(fullHistory)(_.shuffle.bytesRead)
         .map(_.numPartitionsUsed)
       runs.length == 3 &&
         runs.map(_.runId) == Seq(0, 1, 2) &&
@@ -91,9 +90,9 @@ object TunerDemo {
       ("plateau", Seq(h1, h2, h3, h4, h5)))
     val cp = new ComputePartitions(canonConf)
     val rows = steps.zipWithIndex.map { case ((branch, hist), i) =>
-      val target = StageRunInfo.stagesWithMostExpensiveShuffle(hist)
+      val target = StageRunInfo.series(hist)(_.shuffle.bytesWritten)
       val rec = cp.fromStageMetricSharedCluster(target)
-      val scans = StageRunInfo.scanStagesWithMostInput(hist)
+      val scans = StageRunInfo.series(hist)(_.inputBytes)
       val splitMb = math.round(
         cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb)
           .getOrElse(0.0)) / (1024.0 * 1024.0)).toInt

@@ -93,8 +93,8 @@ class ComputePartitionsSpec extends SparkSpec {
     val run2 = List(
       mkStage(11, 11, 1, 1, 2),
       mkStage(88, 88, 1, 1, 2).copy(shuffle = ShuffleVolume(900, 0)))
-    val series = StageRunInfo.stagesWithMostExpensiveShuffle(Seq(run1, run2))
+    val series = StageRunInfo.series(Seq(run1, run2))(_.shuffle.bytesWritten)
     assert(series.map(_.executorCpuTimeMs) == List(99, 88))
-    assert(StageRunInfo.stagesWithMostExpensiveShuffle(Nil) == Nil)
+    assert(StageRunInfo.series(Nil)(_.shuffle.bytesWritten) == Nil)
   }
 }

@@ -23,6 +23,13 @@ class ReuseProbeSpec extends SparkSpec {
       s"single-branch scan-filter-project cannot reuse anything: $a")
   }
 
+  test("the simhash-fp barrier reads the corpus once") {
+    graft.GraftExtensions.ensureRegistered(spark)
+    graft.core.Tables.t(spark, sf, "documents").createOrReplaceTempView("documents")
+    val a = ReuseProbe.audit(spark.sql(graft.queries.SimhashSql.fpSql))
+    assert(a.corpus == 1, s"fingerprints and block keys come from one scan: $a")
+  }
+
   test("self-union of an aggregate: AQE runtime stage reuse is detected") {
     val dir = graft.core.TempDirs.create("graft-reuseprobe-spec")
     import spark.implicits._

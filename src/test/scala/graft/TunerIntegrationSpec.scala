@@ -94,7 +94,7 @@ class TunerIntegrationSpec extends SparkSpec {
       assert(runs.map(_.runId) == Seq(0, 1, 2), "run ids advance")
       val fullHistory = runs.last.priorHistory :+ runs.last.recorded
       (runs.map(_.partitions),
-        graft.tuner.StageRunInfo.reducersOfMostExpensiveShuffle(fullHistory)
+        graft.tuner.StageRunInfo.series(fullHistory)(_.shuffle.bytesRead)
           .map(_.numPartitionsUsed))
     }
     assert(settled.forall(_ > 0), s"AQE-settled series missing: $settled")
