@@ -192,8 +192,7 @@ object Bench {
     //       arbitration narrative.
     // Threshold: 250 MB/s ~ the floor of the healthy band; a probe that
     // cannot run (-1) neither loops nor certifies.
-    val ioHealthyMbS: Double = scala.util.Try(
-      sys.env("SPARK_GRAFT_IO_HEALTHY_MBS").trim.toDouble).getOrElse(250.0)
+    val ioHealthyMbS: Double = 250.0
     def ioDegraded(v: Double): Boolean = v >= 0 && v < ioHealthyMbS
     // A timed pass is certified ONLY by two probes that both RAN and both
     // met the band: one -1 next to one in-band sample must not certify a
@@ -327,16 +326,14 @@ object Bench {
     // pass bracketed by in-band probes — and an extra pass spent inside
     // the degraded window proves nothing. The retry loop (1) WAITS for
     // the device to re-enter the band before spending a pass (up to
-    // 3 × 45 s per retry), (2) retries up to SPARK_GRAFT_IO_RETRIES
-    // (default 2) extra passes, and (3) stamps healthy from the LAST
-    // pass's own probe bracket — the pair that actually surrounds timed
-    // work the min can draw from. A probe that cannot run (-1) neither
-    // loops nor certifies.
+    // 3 × 45 s per retry), (2) retries up to ioRetryBudget extra
+    // passes, and (3) stamps healthy from the LAST pass's own probe
+    // bracket — the pair that actually surrounds timed work the min can
+    // draw from. A probe that cannot run (-1) neither loops nor certifies.
     val ioPostSamples = scala.collection.mutable.ArrayBuffer(ioProbeMbS())
     var bracketPre = ioPreSamples.last
     var bracketPost = ioPostSamples.last
-    val ioRetryBudget = math.max(0, scala.util.Try(
-      sys.env("SPARK_GRAFT_IO_RETRIES").trim.toInt).getOrElse(2))
+    val ioRetryBudget = 2
     var ioExtraPasses = 0
     var ioProbeBroken = false
     while (!ioProbeBroken &&

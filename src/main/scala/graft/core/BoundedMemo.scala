@@ -1,15 +1,16 @@
 package graft.core
 
-/** Bounded per-JVM memo for driver-side fixture/validation caches
-  * (VERDICT r11 item 6): the engine memoizes a handful of once-per-fixture
-  * artifacts — chunked streaming replay dirs, multimodal payload dirs,
-  * outer-join cutoffs, the exact-pair guard validation — keyed on
-  * (dir, inputFiles hash). Entries are ~100 bytes, but the keys track
-  * every fixture directory the session ever touches, so a long-lived
-  * session sweeping many dirs (exactly what ScaleData and the gate loops
-  * do) grows an unbounded map monotonically. This is that map with an
-  * LRU cap: access-ordered [[java.util.LinkedHashMap]], eldest entry
-  * evicted past `maxEntries`.
+/** Bounded per-JVM memo for driver-side fixture/validation caches: the
+  * engine memoizes three once-per-fixture artifacts — the streaming
+  * replay (chunk dir and outer-join cutoff, `StreamingOps.chunkCache`),
+  * the multimodal payload dir (`MediaPipeline.payloadCache`) and the
+  * exact-pair guard validation (`TextOps.exactPairGuardCache`) — keyed on
+  * the fixture they were built from. Entries are ~100 bytes, but the
+  * keys track every fixture directory the session ever touches, so a
+  * long-lived session sweeping many dirs (exactly what ScaleData and the
+  * gate loops do) grows an unbounded map monotonically. This is that map
+  * with an LRU cap: access-ordered [[java.util.LinkedHashMap]], eldest
+  * entry evicted past `maxEntries`.
   *
   * Eviction is always SAFE here by construction: every cached value is
   * either re-derivable (a recompute costs one bounded Spark job) or a
@@ -22,7 +23,7 @@ package graft.core
   * (never per-row), and running `build` inside the lock means one
   * concurrent constructor pays the fixture build while the rest wait for
   * the cached value instead of racing duplicate builds of the same
-  * multi-second fixture (the pre-r12 caches synchronized the same way).
+  * multi-second fixture.
   */
 final class BoundedMemo[K, V](maxEntries: Int = BoundedMemo.DefaultMax) {
   require(maxEntries > 0, s"BoundedMemo cap must be positive: $maxEntries")

@@ -1,9 +1,12 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger,
+  ValueState}
 import org.apache.spark.sql.types._
 import graft.core.Tables
 
@@ -11,8 +14,8 @@ import graft.core.Tables
   * streaming twin of an H-verified batch query. The harness replays
   * `events.parquet` as a timestamp-ordered file stream (FIXTURES.md §C):
   * chunks are written sequentially so the file source's modification-time
-  * order matches event time, and `Trigger.AvailableNow` + a memory sink
-  * drains the stream to a final table the driver can hash-compare.
+  * order matches event time, and [[runToEnd]] drains the stream into a
+  * final table the DuckDB oracle compare can hash.
   *
   * Windowed aggregations run in `complete` output mode so windows still
   * open at end-of-stream are emitted — required for exact equality with
@@ -33,50 +36,44 @@ object StreamingOps {
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double, props: String)
 
-  // One chunk dir per (source dir, dupCount) per JVM: six streaming
-  // queries share one replay fixture instead of re-sorting and rewriting
-  // events six times (and leaking six temp dirs) per Verify run.
-  // BoundedMemo: LRU-capped so a long-lived session
-  // sweeping many fixture dirs can't grow the memo monotonically; an
-  // evicted entry just rebuilds its chunk dir on the next visit.
-  private val chunkCache = new graft.core.BoundedMemo[(String, Int), String]()
+  /** A prepared replay: its chunk dir and the outer-join comparison
+    * cutoff, max(ts) over the replayed events minus 36 min (the 30-min
+    * outer-join watermark + the 5-min interval + a 1-min strictness
+    * margin), in µs. Rows whose join horizon lies past the cutoff may
+    * still be pending when the drain stops, so the outer joins compare
+    * only rows at or before it. Both come from one fixture build, so the
+    * cutoff always belongs to the replay it windows. */
+  private case class Replay(dir: String, cutoffUs: Long)
 
-  // Outer-join comparison cutoff, computed once per source dir: the
-  // left/right/full outer stream joins each need max(ts) over the batch
-  // events table to window out still-pending watermark tails, and one
-  // cached scalar spares two of three identical corpus scans.
-  // Keyed on (dir, events inputFiles hash) like exactPairGuardCache: a
-  // fixture regenerated in-JVM at the same path with a different max(ts)
-  // must recompute the cutoff, not reuse a stale one.
-  private val cutoffCache = new graft.core.BoundedMemo[(String, Int), Long]()
+  // One replay per (source dir, dupCount) per JVM, shared by every
+  // streaming query over that dir. An evicted or swept entry rebuilds.
+  private val chunkCache = new graft.core.BoundedMemo[(String, Int), Replay]()
 
-  /** max(unix_micros(ts)) over `events` minus 36 min (30-min watermark +
-    * 5-min interval + 1-min strictness margin) — the post-drain
-    * comparison window shared by the three outer stream-stream joins. */
-  private def outerJoinCutoff(s: SparkSession, dir: String): Long = {
-    val events = Tables.t(s, dir, "events")
-    cutoffCache.getOrElseUpdate((dir, events.inputFiles.toSeq.hashCode)) {
-      events.agg(max(unix_micros(col("ts"))).as("m"))
-        .head().getLong(0) - 36L * 60L * 1000000L
+  private def fixture(s: SparkSession, dir: String, nChunks: Int = 6,
+      dupCount: Int = 0): Replay =
+    // Revalidate: a TempDirs.cleanupAll() in the same JVM may have swept
+    // the cached dir; rebuild instead of handing out a dangling path.
+    chunkCache.getOrRebuild((dir, dupCount))(r => Files.exists(Paths.get(r.dir))) {
+      buildChunks(s, dir, nChunks, dupCount)
     }
-  }
 
   /** Write `events` as nChunks timestamp-ordered parquet files into a
     * cached temp dir; optionally re-append the first `dupCount` events at
     * the end (late duplicates for the dedup query). Returns the dir. */
   def prepareChunks(s: SparkSession, dir: String, nChunks: Int = 6,
       dupCount: Int = 0): String =
-    // Revalidate: a TempDirs.cleanupAll() in the same JVM may have swept
-    // the cached dir; rebuild instead of handing out a dangling path.
-    chunkCache.getOrRebuild((dir, dupCount))(p => Files.exists(Paths.get(p))) {
-      buildChunks(s, dir, nChunks, dupCount)
-    }
+    fixture(s, dir, nChunks, dupCount).dir
 
   private def buildChunks(s: SparkSession, dir: String, nChunks: Int,
-      dupCount: Int): String = {
+      dupCount: Int): Replay = {
     val streamDir = graft.core.TempDirs.create("graft-stream")
     val ev = Tables.t(s, dir, "events")
-    val n = ev.count()
+    val stats = ev.agg(count(lit(1)), max(unix_micros(col("ts")))).head()
+    val n = stats.getLong(0)
+    // The late duplicates copy the earliest events, so max(ts) over
+    // `events` is max(ts) over the replay.
+    val cutoffUs =
+      if (stats.isNullAt(1)) Long.MinValue else stats.getLong(1) - 36L * 60L * 1000000L
     val perChunk = math.max(1, math.ceil(n.toDouble / nChunks).toLong)
     // Distributed global rank, so no single task holds the whole events
     // table (an orderBy.coalesce(1) needed a 48 GiB driver at sf10, for
@@ -92,7 +89,7 @@ object StreamingOps {
       .repartitionByRange(sortParts, col("ts"), col("event_id"))
       .sortWithinPartitions("ts", "event_id")
     val indexedRdd = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
+      Row.fromSeq(r.toSeq :+ i)
     }
     val indexedSchema = sorted.schema.add(StructField("rn", LongType, false))
     // Stage the ranked table ONCE: the per-chunk writes below then read
@@ -110,7 +107,7 @@ object StreamingOps {
       val dups = indexed.filter(col("rn") < dupCount).sort("rn").drop("rn")
       writeChunk(dups, streamDir, s"chunk_dup", nChunks)
     }
-    streamDir
+    Replay(streamDir, cutoffUs)
   }
 
   private def writeChunk(df: DataFrame, streamDir: String, name: String,
@@ -135,11 +132,15 @@ object StreamingOps {
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir)
 
+  /** Run a stream over everything its source holds at start, then stop.
+    * Every streaming query here starts and ends in this call, whatever its
+    * sink, so a change to per-micro-batch cost is made once. */
+  def runToEnd(writer: DataStreamWriter[Row]): Unit =
+    writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
   /** Drain a streaming frame into a memory sink and return the final table. */
   def drain(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    runToEnd(df.writeStream.format("memory").queryName(name).outputMode(mode))
     df.sparkSession.table(name)
   }
 
@@ -219,29 +220,7 @@ object StreamingOps {
   // state handles (ValueState/ListState/MapState) with TTL and timer
   // support, and it REQUIRES the RocksDB state store provider — the
   // scale-tier store where state lives off-heap instead of in executor
-  // memory, which is the point at 100 TB streaming state. Tracks a
-  // running (count, max value) per user; both are monotone, so the final
-  // state per key is the max over its Update-mode emission trajectory. ----
-  private class UserRunningStats
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, (Long, Long, Double)] {
-    @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[(Long, Double)] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Double)]("stats",
-        org.apache.spark.sql.Encoders.product[(Long, Double)],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Double)] = {
-      var (c, m) =
-        if (st.exists()) st.get() else (0L, Double.NegativeInfinity)
-      rows.foreach { e => c += 1; m = math.max(m, e.value) }
-      st.update((c, m))
-      Iterator((key, c, m))
-    }
-  }
+  // memory, which is the point at 100 TB streaming state. ----
 
   /** transformWithState refuses any provider but RocksDB; set it for the
     * duration of the query and hand the session conf back unchanged. */
@@ -256,18 +235,55 @@ object StreamingOps {
     }
   }
 
-  def qStreamTws(s: SparkSession, dir: String): DataFrame = withRocksDb(s) {
+  /** Replay `dir` through `processor`, keyed by user, and drain its
+    * Update-mode output into the memory sink `sink` with columns `cols`.
+    * The sink holds each key's emission trajectory, not one row per key.
+    * Every processor here emits a measure that only grows (a count or an
+    * observed span), so a query recovers each key's final state from the
+    * emission where that measure is largest. */
+  private def perUser[T <: Product : TypeTag](s: SparkSession, dir: String,
+      processor: StatefulProcessor[Long, Event, T], sink: String,
+      cols: String*): DataFrame = withRocksDb(s) {
     import s.implicits._
     val stream = replay(s, prepareChunks(s, dir)).as[Event]
       .groupByKey(_.user_id)
-      .transformWithState(new UserRunningStats,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update)
-      .toDF("user_id", "n_events", "max_value")
-    val out = drain(stream, "q_tws_sink", OutputMode.Update())
-    out.groupBy("user_id")
+      .transformWithState(processor, TimeMode.None(), OutputMode.Update)
+      .toDF(cols: _*)
+    drain(stream, sink, OutputMode.Update())
+  }
+
+  /** Epoch microseconds of a timestamp, exact for pre-1970 instants too. */
+  private def us(t: java.sql.Timestamp): Long =
+    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  /** Encoder of the per-user state the interval union and TWA carry. */
+  private def fourLongs: Encoder[(Long, Long, Long, Long)] =
+    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaLong)
+
+  // Running (count, max value) per user.
+  private class UserRunningStats
+      extends StatefulProcessor[Long, Event, (Long, Long, Double)] {
+    @transient private var st: ValueState[(Long, Double)] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[(Long, Double)]("stats",
+        Encoders.product[(Long, Double)], TTLConfig.NONE)
+    override def handleInputRows(key: Long, rows: Iterator[Event],
+        timers: TimerValues): Iterator[(Long, Long, Double)] = {
+      var (c, m) =
+        if (st.exists()) st.get() else (0L, Double.NegativeInfinity)
+      rows.foreach { e => c += 1; m = math.max(m, e.value) }
+      st.update((c, m))
+      Iterator((key, c, m))
+    }
+  }
+
+  def qStreamTws(s: SparkSession, dir: String): DataFrame =
+    perUser(s, dir, new UserRunningStats, "q_tws_sink",
+        "user_id", "n_events", "max_value")
+      .groupBy("user_id")
       .agg(max("n_events").as("n_events"), max("max_value").as("max_value"))
       .orderBy("user_id")
-  }
 
   // ---- MapState variant: per-user map of event_type → running count.
   // The typed map lives as individual (grouping key, user key) entries in
@@ -276,19 +292,13 @@ object StreamingOps {
   // is wide (the GroupState/ValueState shape rewrites everything every
   // batch). Only types touched in a batch are re-emitted. ----
   private class UserTypeCounts
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, (Long, String, Long)] {
-    @transient private var m:
-        org.apache.spark.sql.streaming.MapState[String, Long] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+      extends StatefulProcessor[Long, Event, (Long, String, Long)] {
+    @transient private var m: MapState[String, Long] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       m = getHandle.getMapState[String, Long]("type_counts",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
     override def handleInputRows(key: Long, rows: Iterator[Event],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, String, Long)] = {
+        timers: TimerValues): Iterator[(Long, String, Long)] = {
       val touched = scala.collection.mutable.LinkedHashSet.empty[String]
       rows.foreach { e =>
         val c = if (m.containsKey(e.event_type)) m.getValue(e.event_type) else 0L
@@ -299,36 +309,30 @@ object StreamingOps {
     }
   }
 
+  def qStreamTwsMap(s: SparkSession, dir: String): DataFrame =
+    perUser(s, dir, new UserTypeCounts, "q_tws_map_sink",
+        "user_id", "event_type", "cnt")
+      .groupBy("user_id", "event_type")
+      .agg(max("cnt").as("cnt"))
+      .orderBy("user_id", "event_type")
+
   // ---- Streaming interval union: the stateful twin of the batch
   // q_interval_merge. Per user, ValueState carries (closed-block count,
   // closed-covered µs, open-block start, open-block end); each batch's
   // rows are sorted by (ts, event_id) inside the handler (the iterator
   // order within a micro-batch is not guaranteed), and cross-batch order
   // is supplied by the ts-ordered chunk replay. The emitted running
-  // total (blocks, covered-including-open-block) is monotone, so the
-  // Update-trajectory max IS the final state — the same recovery rule
-  // as qStreamUpdate. State is 4 longs per user regardless of event
-  // volume: the 100 TB property that makes interval union streamable. ----
+  // total (blocks, covered-including-open-block) is monotone. State is
+  // 4 longs per user regardless of event volume: the 100 TB property
+  // that makes interval union streamable. ----
   private class UserIntervalUnion
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, (Long, Long, Long)] {
+      extends StatefulProcessor[Long, Event, (Long, Long, Long)] {
     private val HoldUs = 600L * 1000000L
-    @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[(Long, Long, Long, Long)] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Long, Long)]("iv",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    private def us(t: java.sql.Timestamp): Long =
-      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+    @transient private var st: ValueState[(Long, Long, Long, Long)] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[(Long, Long, Long, Long)]("iv", fourLongs, TTLConfig.NONE)
     override def handleInputRows(key: Long, rows: Iterator[Event],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Long)] = {
+        timers: TimerValues): Iterator[(Long, Long, Long)] = {
       var (closed, covered, b0, b1) =
         if (st.exists()) st.get() else (0L, 0L, Long.MinValue, Long.MinValue)
       rows.toSeq.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
@@ -343,20 +347,12 @@ object StreamingOps {
   }
 
   def qStreamIntervalMerge(s: SparkSession, dir: String): DataFrame =
-    withRocksDb(s) {
-      import s.implicits._
-      val stream = replay(s, prepareChunks(s, dir)).as[Event]
-        .groupByKey(_.user_id)
-        .transformWithState(new UserIntervalUnion,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update)
-        .toDF("user_id", "n_blocks", "covered_us")
-      val out = drain(stream, "q_interval_sink", OutputMode.Update())
-      out.groupBy("user_id")
-        .agg(max("n_blocks").as("n_blocks"),
-          round(max("covered_us").cast("double") / 1000000d, 6)
-            .as("covered_s"))
-        .orderBy("user_id")
-    }
+    perUser(s, dir, new UserIntervalUnion, "q_interval_sink",
+        "user_id", "n_blocks", "covered_us")
+      .groupBy("user_id")
+      .agg(max("n_blocks").as("n_blocks"),
+        round(max("covered_us").cast("double") / 1000000d, 6).as("covered_s"))
+      .orderBy("user_id")
 
   // ---- Streaming time-weighted average: stateful twin of the batch
   // q_time_weighted_avg. State per user is (last µs, last 10⁻⁴-unit
@@ -365,24 +361,12 @@ object StreamingOps {
   // trajectory recovers the final value; users whose span is still zero
   // (single event so far) emit nothing, matching the batch exclusion. ----
   private class UserTwa
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, (Long, Long, Long)] {
-    @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[(Long, Long, Long, Long)] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Long, Long)]("twa",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    private def us(t: java.sql.Timestamp): Long =
-      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+      extends StatefulProcessor[Long, Event, (Long, Long, Long)] {
+    @transient private var st: ValueState[(Long, Long, Long, Long)] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[(Long, Long, Long, Long)]("twa", fourLongs, TTLConfig.NONE)
     override def handleInputRows(key: Long, rows: Iterator[Event],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Long)] = {
+        timers: TimerValues): Iterator[(Long, Long, Long)] = {
       var (lastUs, lastV, num, den) =
         if (st.exists()) st.get() else (Long.MinValue, 0L, 0L, 0L)
       rows.toSeq.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
@@ -399,35 +383,14 @@ object StreamingOps {
     }
   }
 
-  def qStreamTwa(s: SparkSession, dir: String): DataFrame = withRocksDb(s) {
-    import s.implicits._
-    val stream = replay(s, prepareChunks(s, dir)).as[Event]
-      .groupByKey(_.user_id)
-      .transformWithState(new UserTwa,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update)
-      .toDF("user_id", "num", "den")
-    val out = drain(stream, "q_twa_sink", OutputMode.Update())
-    out.groupBy("user_id")
+  def qStreamTwa(s: SparkSession, dir: String): DataFrame =
+    perUser(s, dir, new UserTwa, "q_twa_sink", "user_id", "num", "den")
+      .groupBy("user_id")
       .agg(max_by(col("num"), col("den")).as("num"), max("den").as("den"))
       .select(col("user_id"),
         round(col("num").cast("double") / col("den") / 10000d, 6).as("twa"),
         round(col("den").cast("double") / 1000000d, 6).as("obs_s"))
       .orderBy("user_id")
-  }
-
-  def qStreamTwsMap(s: SparkSession, dir: String): DataFrame = withRocksDb(s) {
-    import s.implicits._
-    val stream = replay(s, prepareChunks(s, dir)).as[Event]
-      .groupByKey(_.user_id)
-      .transformWithState(new UserTypeCounts,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update)
-      .toDF("user_id", "event_type", "cnt")
-    val out = drain(stream, "q_tws_map_sink", OutputMode.Update())
-    // Per-(user, type) counts are monotone across the Update trajectory.
-    out.groupBy("user_id", "event_type")
-      .agg(max("cnt").as("cnt"))
-      .orderBy("user_id", "event_type")
-  }
 
   // ---- Update-mode stateful aggregation (the third output mode: Q38-Q40
   // drain Complete, qLateDrop Append, q42 is Update but through
@@ -452,55 +415,48 @@ object StreamingOps {
       .orderBy("event_type")
   }
 
+  /** Hour-window counts per event type under a 30-minute watermark, with
+    * the window rendered as `hour_start`. In Append mode a window is
+    * emitted once, when the watermark passes its end, and rows arriving
+    * behind the watermark are dropped; because the replay is time-ordered,
+    * the emitted set is exactly the windows ending at or before
+    * max(ts) − 30 min. */
+  private def closedHourCounts(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(Tables.tsStr(col("window.start")).as("hour_start"),
+        col("event_type"), col("cnt"))
+
   // ---- Append-mode watermark eviction: the production contract the
   // Complete-mode equivalence harness can only declare. The replay ends
   // with a chunk of COPIES of the first 100 events (hours older than the
   // watermark by then), so append mode (a) emits each closed window
   // exactly once and (b) DROPS the late rows — if eviction were broken,
   // the early windows would double-count and the hash compare would fail.
-  // Because chunks are globally time-ordered, the emitted set is exactly
-  // the windows with end ≤ max(ts) − 30 min, which the DuckDB twin states
-  // in closed form. The dropped-row COUNT is asserted in StreamingSpec
-  // via numRowsDroppedByWatermark. ----
-  def qLateDrop(s: SparkSession, dir: String): DataFrame = {
-    val out = drain(
-      replay(s, prepareChunks(s, dir, dupCount = 100))
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt")),
-      "q_late_drop_sink", OutputMode.Append())
-    out.select(Tables.tsStr(col("window.start")).as("hour_start"),
-        col("event_type"), col("cnt"))
+  // The dropped-row COUNT is asserted in StreamingSpec via
+  // numRowsDroppedByWatermark. ----
+  def qLateDrop(s: SparkSession, dir: String): DataFrame =
+    drain(closedHourCounts(replay(s, prepareChunks(s, dir, dupCount = 100))),
+        "q_late_drop_sink", OutputMode.Append())
       .orderBy("hour_start", "event_type")
-  }
 
   // ---- Parquet FILE sink with checkpointed exactly-once semantics: the
-  // production sink shape (every other query here drains to a memory
-  // sink, which exists only for tests). Append-mode windowed agg writes
-  // watermark-closed windows to parquet; the sink's _spark_metadata
-  // commit log plus the checkpoint make the write exactly-once — proven,
-  // not declared, by draining the SAME chunks a second time through the
-  // SAME checkpoint and reading the sink back: the second drain finds
-  // every source file already committed and adds nothing. Oracle = the
-  // batch aggregation over closed windows (the q_stream_late_drop twin
-  // shape, without its planted late rows). ----
+  // production sink shape (the memory sink exists only for tests). The
+  // sink's _spark_metadata commit log plus the checkpoint make the write
+  // exactly-once — proven, not declared, by draining the SAME chunks a
+  // second time through the SAME checkpoint and reading the sink back:
+  // the second drain finds every source file already committed and adds
+  // nothing. ----
   def qStreamFileSink(s: SparkSession, dir: String): DataFrame = {
     val chunks = prepareChunks(s, dir)
     val outDir = graft.core.TempDirs.create("graft-file-sink")
-    def drainOnce(): Unit = {
-      val q = replay(s, chunks)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(Tables.tsStr(col("window.start")).as("hour_start"),
-          col("event_type"), col("cnt"))
-        .writeStream.format("parquet")
+    def drainOnce(): Unit =
+      runToEnd(closedHourCounts(replay(s, chunks)).writeStream.format("parquet")
         .option("path", s"$outDir/data")
         .option("checkpointLocation", s"$outDir/chk")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+        .outputMode(OutputMode.Append()))
     drainOnce()
     drainOnce() // second drain over the same checkpoint must add nothing
     s.read.parquet(s"$outDir/data")
@@ -519,17 +475,16 @@ object StreamingOps {
       .orderBy("c_mktsegment")
   }
 
-  // ---- foreachBatch sink: per-micro-batch parquet appends ----
-  // Sink dir cached per source dir like chunkCache: repeated invocations
-  // in one JVM reuse the first drain instead of leaking a fresh copy of
-  // the dataset into /tmp each time.
-  private val febSinkCache = new graft.core.BoundedMemo[String, String]()
-
+  // ---- foreachBatch sink: per-micro-batch parquet appends, drained
+  // into a fresh dir on every call so the result is always this call's. ----
   def qForeachBatch(s: SparkSession, dir: String): DataFrame = {
-    val sinkDir =
-      febSinkCache.getOrRebuild(dir)(p => Files.exists(Paths.get(p))) {
-        buildForeachBatchSink(s, dir)
-      }
+    val sinkDir = graft.core.TempDirs.create("graft-feb")
+    runToEnd(replay(s, prepareChunks(s, dir)).writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        // The canonical custom-sink shape: arbitrary batch-level logic;
+        // here an append-mode parquet write per micro-batch.
+        batch.write.mode("append").parquet(sinkDir)
+      })
     s.read.parquet(sinkDir)
       .groupBy("event_type").agg(count(lit(1)).as("cnt"))
       .orderBy("event_type")
@@ -587,16 +542,12 @@ object StreamingOps {
     * the versioned state table, then read the final version — which must
     * equal the batch group-by (the oracle). */
   def qStreamUpsert(s: SparkSession, dir: String): DataFrame = {
-    val chunks = prepareChunks(s, dir)
     val tableDir = graft.core.TempDirs.create("graft-upsert")
-    val q = replay(s, chunks)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+    runToEnd(replay(s, prepareChunks(s, dir)).writeStream
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
         mergeBatch(s, tableDir, batch.toDF(), id)
       }
-      .option("checkpointLocation", s"$tableDir/chk")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .option("checkpointLocation", s"$tableDir/chk"))
     val applied = new String(Files.readAllBytes(Paths.get(tableDir, "MANIFEST")),
       "UTF-8").trim.toLong
     s.read.parquet(s"$tableDir/v$applied")
@@ -605,130 +556,74 @@ object StreamingOps {
       .orderBy("user_id", "event_type")
   }
 
-  private def buildForeachBatchSink(s: SparkSession, dir: String): String = {
-    val sinkDir = graft.core.TempDirs.create("graft-feb")
-    val q = replay(s, prepareChunks(s, dir))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // The canonical custom-sink shape: arbitrary batch-level logic;
-        // here an append-mode parquet write per micro-batch.
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    sinkDir
-  }
+  // ---- Stream-stream interval joins: inner, left, right and full outer
+  // over one pair shape. ----
 
-  // ---- Stream-stream interval join: same-user event pairs ≤ 5 min apart.
-  // Watermarks on both sides + the time-range condition bound the join
-  // state; pairs are drained raw (append) and ordered in batch.
-  private[graft] def innerJoinPairsStream(s: SparkSession, dir: String): DataFrame = {
+  private val InnerWatermark = "2 hours"
+
+  /** Watermark of the three outer joins; Replay.cutoffUs is derived
+    * from it. */
+  private val OuterWatermark = "30 minutes"
+
+  /** Same-user event pairs at most 5 minutes apart, `lid < rid`, from two
+    * replays of `dir` aliased lid/luser/lts and rid/ruser/rts and joined
+    * under `joinType`. The watermark on both sides plus the time-range
+    * bound make both sides' join state watermark-evictable. */
+  private[graft] def intervalPairs(s: SparkSession, dir: String,
+      joinType: String, watermark: String): DataFrame = {
     val chunks = prepareChunks(s, dir)
-    val l = replay(s, chunks).withWatermark("ts", "2 hours")
-      .select(col("event_id").as("lid"), col("user_id").as("luser"), col("ts").as("lts"))
-    val r = replay(s, chunks).withWatermark("ts", "2 hours")
-      .select(col("event_id").as("rid"), col("user_id").as("ruser"), col("ts").as("rts"))
-    l.join(r,
-      col("luser") === col("ruser") &&
-      col("rts") >= col("lts") &&
-      col("rts") <= col("lts") + expr("INTERVAL 5 MINUTES") &&
-      col("lid") < col("rid"))
-  }
-
-  def qStreamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    drain(innerJoinPairsStream(s, dir), "q_ssj2_sink", OutputMode.Append())
-      .select(col("lid"), col("rid"), col("luser").as("user_id"))
-      .orderBy("lid", "rid")
-  }
-
-  /** LEFT OUTER stream-stream interval join: events with no later
-    * same-user event within 5 minutes surface with a null partner — the
-    * outer-join capability class the inner join above cannot show.
-    * Outer rows only materialize once the watermark passes the row's
-    * join horizon (lts + 5 min), so rows near end-of-stream are still
-    * legitimately pending when the drain stops; the comparison window
-    * is therefore restricted to lts ≤ max_ts − 36 min (watermark 30 min
-    * + 5 min interval + 1 min strictness margin), applied POST-drain and
-    * mirrored exactly by the batch oracle. Same state-eviction contract
-    * as production: the interval bound makes both sides' state
-    * watermark-evictable. */
-  def qStreamStreamLeft(s: SparkSession, dir: String): DataFrame = {
-    val chunks = prepareChunks(s, dir)
-    val cutoff = outerJoinCutoff(s, dir)
-    val l = replay(s, chunks).withWatermark("ts", "30 minutes")
-      .select(col("event_id").as("lid"), col("user_id").as("luser"),
-        col("ts").as("lts"))
-    val r = replay(s, chunks).withWatermark("ts", "30 minutes")
-      .select(col("event_id").as("rid"), col("user_id").as("ruser"),
-        col("ts").as("rts"))
-    val pairs = l.join(r,
+    def side(p: String): DataFrame = replay(s, chunks).withWatermark("ts", watermark)
+      .select(col("event_id").as(s"${p}id"), col("user_id").as(s"${p}user"),
+        col("ts").as(s"${p}ts"))
+    side("l").join(side("r"),
       col("luser") === col("ruser") &&
       col("rts") >= col("lts") &&
       col("rts") <= col("lts") + expr("INTERVAL 5 MINUTES") &&
       col("lid") < col("rid"),
-      "leftOuter")
-    drain(pairs, "q_ssj_left_sink", OutputMode.Append())
+      joinType)
+  }
+
+  /** INNER join; pairs are drained raw (append) and ordered in batch. */
+  def qStreamStreamJoin(s: SparkSession, dir: String): DataFrame =
+    drain(intervalPairs(s, dir, "inner", InnerWatermark), "q_ssj2_sink", OutputMode.Append())
+      .select(col("lid"), col("rid"), col("luser").as("user_id"))
+      .orderBy("lid", "rid")
+
+  /** LEFT OUTER join: events with no later same-user event within
+    * 5 minutes surface with a null partner. A left row is final once the
+    * watermark passes lts + 5 min, so the comparison window is
+    * lts ≤ cutoff, applied post-drain and mirrored by the oracle. */
+  def qStreamStreamLeft(s: SparkSession, dir: String): DataFrame = {
+    val cutoff = fixture(s, dir).cutoffUs
+    drain(intervalPairs(s, dir, "leftOuter", OuterWatermark), "q_ssj_left_sink",
+        OutputMode.Append())
       .filter(unix_micros(col("lts")) <= cutoff)
       .select(col("lid"), col("rid"), col("luser").as("user_id"))
       .orderBy(col("lid"), col("rid").asc_nulls_first)
   }
 
-  /** RIGHT OUTER stream-stream interval join — the batch join matrix has
-    * q_right_outer, so the streaming matrix carries the symmetric twin:
-    * events with no EARLIER same-user event within
-    * 5 minutes surface with a null left partner. A right row's potential
-    * partners have `lts ∈ [rts − 5 min, rts]`, so its state is droppable
-    * (and its null-extension final) once the watermark passes `rts`;
-    * the comparison window is rts ≤ max_ts − 36 min (30-min watermark +
-    * 5-min interval + margin), mirrored exactly by the oracle. */
-  private[graft] def rightJoinPairsStream(s: SparkSession, dir: String): DataFrame = {
-    val chunks = prepareChunks(s, dir)
-    val l = replay(s, chunks).withWatermark("ts", "30 minutes")
-      .select(col("event_id").as("lid"), col("user_id").as("luser"),
-        col("ts").as("lts"))
-    val r = replay(s, chunks).withWatermark("ts", "30 minutes")
-      .select(col("event_id").as("rid"), col("user_id").as("ruser"),
-        col("ts").as("rts"))
-    l.join(r,
-      col("luser") === col("ruser") &&
-      col("rts") >= col("lts") &&
-      col("rts") <= col("lts") + expr("INTERVAL 5 MINUTES") &&
-      col("lid") < col("rid"),
-      "rightOuter")
-  }
-
+  /** RIGHT OUTER join, the twin of the batch q_right_outer: events with
+    * no EARLIER same-user event within 5 minutes surface with a null left
+    * partner. A right row's partners have `lts ∈ [rts − 5 min, rts]`, so
+    * it is final once the watermark passes `rts`; the comparison window
+    * is rts ≤ cutoff, mirrored by the oracle. */
   def qStreamStreamRight(s: SparkSession, dir: String): DataFrame = {
-    val cutoff = outerJoinCutoff(s, dir)
-    drain(rightJoinPairsStream(s, dir), "q_ssj_right_sink", OutputMode.Append())
+    val cutoff = fixture(s, dir).cutoffUs
+    drain(intervalPairs(s, dir, "rightOuter", OuterWatermark), "q_ssj_right_sink",
+        OutputMode.Append())
       .filter(unix_micros(col("rts")) <= cutoff)
       .select(col("lid"), col("rid"), col("ruser").as("user_id"))
       .orderBy(col("rid"), col("lid").asc_nulls_first)
   }
 
-  /** FULL OUTER watermarked stream-stream interval join — completes the
-    * streaming join matrix (inner / left / full). Both sides' unmatched
-    * rows are null-extended on watermark finalization: a right row's
-    * potential partners have `lts ∈ [rts − 5 min, rts]`, so its state is
-    * droppable once the watermark passes `rts` — symmetric to the left
-    * side. The comparison window therefore excludes BOTH streams' still-
-    * pending tails (36-min cutoff = 30-min watermark + margin), mirrored
-    * exactly by the oracle's two-sided WHERE. */
+  /** FULL OUTER join: both sides' unmatched rows are null-extended when
+    * the watermark finalizes them, so the comparison window excludes
+    * BOTH streams' pending tails, mirrored by the oracle's two-sided
+    * WHERE. */
   def qStreamStreamFull(s: SparkSession, dir: String): DataFrame = {
-    val chunks = prepareChunks(s, dir)
-    val cutoff = outerJoinCutoff(s, dir)
-    val l = replay(s, chunks).withWatermark("ts", "30 minutes")
-      .select(col("event_id").as("lid"), col("user_id").as("luser"),
-        col("ts").as("lts"))
-    val r = replay(s, chunks).withWatermark("ts", "30 minutes")
-      .select(col("event_id").as("rid"), col("user_id").as("ruser"),
-        col("ts").as("rts"))
-    val pairs = l.join(r,
-      col("luser") === col("ruser") &&
-      col("rts") >= col("lts") &&
-      col("rts") <= col("lts") + expr("INTERVAL 5 MINUTES") &&
-      col("lid") < col("rid"),
-      "fullOuter")
-    drain(pairs, "q_ssj_full_sink", OutputMode.Append())
+    val cutoff = fixture(s, dir).cutoffUs
+    drain(intervalPairs(s, dir, "fullOuter", OuterWatermark), "q_ssj_full_sink",
+        OutputMode.Append())
       .filter((col("lts").isNull || unix_micros(col("lts")) <= cutoff) &&
         (col("rts").isNull || unix_micros(col("rts")) <= cutoff))
       .select(col("lid"), col("rid"),
@@ -773,9 +668,17 @@ object StreamingOps {
     "q41_stream_dedup" ->
       ((s, d) => (q41Stream(s, d), OutputMode.Append())),
     "q_stream_stream_join" ->
-      ((s, d) => (innerJoinPairsStream(s, d), OutputMode.Append())),
+      ((s, d) => (intervalPairs(s, d, "inner", InnerWatermark), OutputMode.Append())),
     "q_stream_join_right" ->
-      ((s, d) => (rightJoinPairsStream(s, d), OutputMode.Append())))
+      ((s, d) => (intervalPairs(s, d, "rightOuter", OuterWatermark), OutputMode.Append())))
+
+  private val closedHourOracle = """
+      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
+             event_type, count(*) AS cnt
+      FROM events
+      WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR
+              <= (SELECT max(ts) FROM events) - INTERVAL 30 MINUTE
+      GROUP BY 1, 2 ORDER BY 1, 2"""
 
   /** DuckDB twins: the streaming results must equal these batch queries. */
   val oracle: Map[String, String] = Map(
@@ -838,21 +741,10 @@ object StreamingOps {
              CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
                AS sum_value
       FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_stream_file_sink" -> """
-      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-             event_type, count(*) AS cnt
-      FROM events
-      WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR
-              <= (SELECT max(ts) FROM events) - INTERVAL 30 MINUTE
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q_stream_late_drop" -> """
-      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-             event_type, count(*) AS cnt
-      FROM events
-      WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR
-              <= (SELECT max(ts) FROM events) - INTERVAL 30 MINUTE
-      GROUP BY 1, 2 ORDER BY 1, 2""",
+    // Both drain closedHourCounts; the late drop's planted rows fall
+    // behind the watermark, so the two emit the same closed windows.
+    "q_stream_late_drop" -> closedHourOracle,
+    "q_stream_file_sink" -> closedHourOracle,
 
     "q_stream_update" -> """
       SELECT event_type, count(*) AS cnt,

@@ -19,27 +19,22 @@ package graft.tools
   * Prints one JSON line per (query, dir) with min-of-two wall seconds.
   *
   * SPARK_GRAFT_STREAM_SUITE (csv of query names) scopes the suite and
-  * SPARK_GRAFT_STREAM_RUNS overrides the timed-run count (default 2) —
-  * the re-adjudication knobs for a stream_diff FAIL on one query: this
-  * tier's wall times carry checkpoint/shuffle IO noise the epoch itself
-  * shows as a 1.7× same-binary spread (r11 q_stream_join_right@sf10
-  * runs: [58.989, 34.588]), so a single borderline reading is retested
-  * min-of-N in isolation before being believed (BENCH_NOTES round 12).
+  * SPARK_GRAFT_STREAM_RUNS overrides the timed-run count (default 2):
+  * this tier's wall times carry checkpoint and shuffle IO noise (a
+  * same-binary spread of 1.7× has been seen on one query at sf10), so a
+  * borderline reading is retested min-of-N in isolation before it is
+  * believed.
   *
-  * Round 13 (VERDICT r12 item 2): the run brackets itself with the same
-  * 64 MB fsync'd write probe Bench uses, emitted as `#`-comment JSON
-  * lines stream_diff skips — so a recorded epoch file carries its own
-  * IO-health evidence (the r11 epoch baked in one sample from a
-  * throttled window, which forced a manual adjudication in round 12).
-  * Capture with `grep -E '^#|\"query\"'` to keep the probe lines.
+  * The run brackets itself with the same 64 MB fsync'd write probe Bench
+  * uses, emitted as `#`-comment JSON lines that stream_diff skips, so a
+  * recorded epoch file carries the IO health of the window it was taken
+  * in. Capture with `grep -E '^#|\"query\"'` to keep the probe lines.
   */
 object StreamScale {
 
-  /** Locale-pinned decimal rendering for every number on a parsed line
-    * (ADVICE r6, and a round-13 review catch HERE: the f interpolator
-    * uses the default JVM locale, so a comma-decimal locale would emit
-    * invalid JSON on the record lines and silently split each probe
-    * sample in two). */
+  /** Locale-pinned decimal rendering for every number on a parsed line:
+    * the f interpolator uses the default JVM locale, so a comma-decimal
+    * locale would emit invalid JSON and split each probe sample in two. */
   private def fmt(d: Double, digits: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(d))
 
@@ -48,8 +43,7 @@ object StreamScale {
     * not the environment (measured: 93 MB/s immediately after a sf10
     * drain, 438+ within a minute). Contention only ever subtracts, so
     * the MAX sample is the environment's capability — that is what the
-    * healthy-band check (≥ 179 MB/s, r11 drift audit) applies to; the
-    * spread documents the artifact. */
+    * healthy-band check applies to; the spread documents the artifact. */
   private def printIoProbe(when: String, path: String): Unit = {
     val samples = (0 until 3).map { i =>
       if (i > 0) Thread.sleep(5000)
@@ -70,23 +64,19 @@ object StreamScale {
     val cpus = graft.core.Session.cpus(32)
     val spark = graft.core.Session.local(s"local[$cpus]", cpus)
 
-    // Noop-sink drain (round 11): the registry queries drain to a MEMORY
-    // sink so the oracle can hash the rows — but the memory sink holds
-    // every output row on the driver heap, which at sf10 (10 M events,
-    // 10 M-row dedup/join outputs) OOMs the default 8 g heap and charges
-    // driver-side row accumulation to the state machine being measured.
-    // measurementStreams exposes the identical pre-sink pipelines; the
-    // noop sink executes them fully with zero row retention. (Numbers
-    // from rounds <= 10 included memory-sink cost — both dirs here are
-    // measured under the same sink, so the decade exponents stay
-    // internally consistent; see BENCH_NOTES.)
+    // Noop sink: the registry queries drain to a memory sink so the
+    // oracle can hash the rows, but that sink holds every output row on
+    // the driver heap — at sf10 it OOMs an 8 g heap and charges row
+    // accumulation to the state machine being measured. The noop sink
+    // runs the same pre-sink pipelines (measurementStreams) to the end
+    // with no rows retained; both dirs are measured under it, so the
+    // decade exponents stay comparable.
     def runOnce(name: String, dir: String): Double = {
       val (stream, mode) = graft.streaming.StreamingOps
         .measurementStreams(name)(spark, dir)
       val t0 = System.nanoTime()
-      val q = stream.writeStream.format("noop").outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      graft.streaming.StreamingOps.runToEnd(
+        stream.writeStream.format("noop").outputMode(mode))
       (System.nanoTime() - t0) / 1e9
     }
     // Suite scope + run count: unknown names are dropped loudly (the

@@ -53,10 +53,12 @@ object SkewAdvisor {
     * straggler eligible for splitting. */
   def knobs(report: SkewReport): Map[String, String] =
     if (!report.skewed) Map.empty
-    else Map(
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" ->
-        report.recommendedFactor.toString,
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
-        report.recommendedThresholdBytes.toString)
+    else Keys.zip(Seq("true", report.recommendedFactor.toString,
+      report.recommendedThresholdBytes.toString)).toMap
+
+  /** The AQE skew-join confs [[knobs]] sets: enabled, factor, threshold. */
+  val Keys: Seq[String] = Seq(
+    "spark.sql.adaptive.skewJoin.enabled",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
 }

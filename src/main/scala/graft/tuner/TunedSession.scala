@@ -53,29 +53,58 @@ class Tuner(metricsRoot: String, appName: String) {
     * three tiers. */
   def tuneAndRunTracked[T](spark: SparkSession)(body: => T): TunedRun[T] = {
     val history = store.history(spark)
-    val target = StageRunInfo.series(history)(_.shuffle.bytesWritten)
-    val cp = new ComputePartitions(spark.conf.getAll)
-    // Slot-floored at the application boundary (see applySlotFloor's doc):
-    // an AQE-coalesced executed count must never come back as a sub-slot
-    // initial count.
-    val partitions = cp.applySlotFloor(cp.fromStageMetricSharedCluster(target))
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    // Scan tier: split size from the biggest recorded input stage (cold
-    // start → memory bound alone).
-    val scans = StageRunInfo.series(history)(_.inputBytes)
-    val splitBytes =
-      cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb).getOrElse(0.0))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
-    // Skew tier: the latest recorded run's per-task shuffle-read profile
-    // decides whether this run needs AQE's skew-splitting thresholds
-    // widened (SkewAdvisor). A balanced run, or one with no per-task
-    // shuffle reads, sets nothing — AQE defaults stand.
-    history.lastOption.flatMap(SkewAdvisor.analyze)
-      .map(SkewAdvisor.knobs).getOrElse(Map.empty)
-      .foreach { case (k, v) => spark.conf.set(k, v) }
+    val rec = Tuner.recommend(new ComputePartitions(spark.conf.getAll), history)
+    rec.conf.foreach { case (k, v) => spark.conf.set(k, v) }
     val run = record(spark)(body)
-    TunedRun(run.result, partitions, splitBytes, run.runId, history, run.stages)
+    TunedRun(run.result, rec.partitions, rec.splitBytes, run.runId, history, run.stages)
   }
+}
+
+object Tuner {
+  private[tuner] val PartitionsKey = "spark.sql.shuffle.partitions"
+  private[tuner] val SplitKey = "spark.sql.files.maxPartitionBytes"
+
+  /** Every session conf a tuned step can set. */
+  val TunedKeys: Seq[String] = Seq(PartitionsKey, SplitKey) ++ SkewAdvisor.Keys
+
+  /** The three tiers' decisions from one history, under `cp`'s cluster
+    * profile. Pure: reads no conf and launches no job.
+    *  - partitions: the decision table over the most shuffle-expensive
+    *    stage series, slot-floored (see applySlotFloor's doc: an
+    *    AQE-coalesced executed count must never come back as a sub-slot
+    *    initial count);
+    *  - split bytes: from the biggest recorded input stage (cold start →
+    *    memory bound alone);
+    *  - skew: the latest run's per-task shuffle-read profile. A balanced
+    *    run, or one with no per-task shuffle reads, adds no conf, so
+    *    AQE's defaults stand. */
+  def recommend(cp: ComputePartitions,
+      history: Seq[List[StageRunInfo]]): Recommendation = {
+    val target = StageRunInfo.series(history)(_.shuffle.bytesWritten)
+    val scans = StageRunInfo.series(history)(_.inputBytes)
+    Recommendation(
+      cp.applySlotFloor(cp.fromStageMetricSharedCluster(target)),
+      cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb).getOrElse(0.0)),
+      history.lastOption.flatMap(SkewAdvisor.analyze))
+  }
+
+  /** Runs `body`, then puts every [[TunedKeys]] conf of `spark` back as
+    * it found it, so a tuned step inside leaves the session unchanged. */
+  def restoringConf[T](spark: SparkSession)(body: => T): T = {
+    val saved = TunedKeys.map(k => k -> spark.conf.getOption(k))
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+}
+
+/** See [[Tuner.recommend]]. `conf` is what a tuned step applies. */
+case class Recommendation(partitions: Int, splitBytes: Long,
+    skew: Option[SkewAdvisor.SkewReport]) {
+  def conf: Map[String, String] =
+    Map(Tuner.PartitionsKey -> partitions.toString, Tuner.SplitKey -> splitBytes.toString) ++
+      skew.map(SkewAdvisor.knobs).getOrElse(Map.empty)
 }
 
 /** One recorded run — see [[Tuner.record]]. */

@@ -49,9 +49,10 @@ object TunerDemo {
     import s.implicits._
     val tmp = graft.core.TempDirs.create("graft-tuner-demo")
     val tuner = new Tuner(tmp, "demo")
-    val before = s.conf.get("spark.sql.shuffle.partitions")
-    val beforeSplit = s.conf.getOption("spark.sql.files.maxPartitionBytes")
-    val liveOk = try {
+    // Every conf the live loop's tuned steps set is handed back, so a
+    // skewed live run leaves no AQE skew-join conf behind for later
+    // queries in the session.
+    val liveOk = Tuner.restoringConf(s) {
       val runs = (0 until 3).map { _ =>
         tuner.tuneAndRunTracked(s) {
           graft.queries.RelationalA.queries("q01_pricing_summary")(s, dir).count()
@@ -66,12 +67,6 @@ object TunerDemo {
         runs.map(_.runId) == Seq(0, 1, 2) &&
         runs.forall(_.partitions > 0) &&
         settled.nonEmpty && settled.forall(_ > 0)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", before)
-      beforeSplit match {
-        case Some(v) => s.conf.set("spark.sql.files.maxPartitionBytes", v)
-        case None => s.conf.unset("spark.sql.files.maxPartitionBytes")
-      }
     }
 
     // Deterministic walk: fixed history visiting every decision branch.
@@ -89,17 +84,14 @@ object TunerDemo {
       ("regressing", Seq(h1, h2, h3)),
       ("plateau", Seq(h1, h2, h3, h4, h5)))
     val cp = new ComputePartitions(canonConf)
+    // Every recommendation is at or above the canonical 32 slots, so the
+    // slot floor in Tuner.recommend leaves the table's values as they are.
     val rows = steps.zipWithIndex.map { case ((branch, hist), i) =>
-      val target = StageRunInfo.series(hist)(_.shuffle.bytesWritten)
-      val rec = cp.fromStageMetricSharedCluster(target)
-      val scans = StageRunInfo.series(hist)(_.inputBytes)
-      val splitMb = math.round(
-        cp.maxPartitionBytes(scans.lastOption.map(_.inputSizeMb)
-          .getOrElse(0.0)) / (1024.0 * 1024.0)).toInt
-      val skew = hist.lastOption.flatMap(SkewAdvisor.analyze(_))
-      (i, branch, rec, splitMb,
-        skew.map(r => math.round(r.ratio * 100.0) / 100.0).getOrElse(-1.0),
-        skew.exists(_.skewed), liveOk)
+      val rec = Tuner.recommend(cp, hist)
+      val splitMb = math.round(rec.splitBytes / (1024.0 * 1024.0)).toInt
+      (i, branch, rec.partitions, splitMb,
+        rec.skew.map(r => math.round(r.ratio * 100.0) / 100.0).getOrElse(-1.0),
+        rec.skew.exists(_.skewed), liveOk)
     }
     rows.toDF("step", "branch", "recommended_partitions",
         "recommended_split_mb", "skew_ratio", "skew_flag", "live_loop_ok")

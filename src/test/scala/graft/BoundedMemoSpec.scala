@@ -4,10 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.BoundedMemo
 
-/** Contract of the LRU-capped per-JVM memo (VERDICT r11 item 6) that
-  * backs the fixture/validation caches (chunkCache, cutoffCache,
-  * payloadCache, exactPairGuardCache, febSinkCache). Pure JVM — no
-  * SparkSession needed. */
+/** Contract of the LRU-capped per-JVM memo that backs the
+  * fixture/validation caches (chunkCache, payloadCache,
+  * exactPairGuardCache). Pure JVM — no SparkSession needed. */
 class BoundedMemoSpec extends AnyFunSuite {
 
   test("memoizes: build runs once per key, cached value returned after") {

@@ -24,16 +24,6 @@ abstract class SparkSpec extends AnyFunSuite {
   /** Runs `body`, then puts back every session knob a tuned run
     * (`Tuner.tuneAndRunTracked`) may set, so a spec that tunes leaves the
     * shared session as it found it. */
-  def restoringTunerConf[T](body: => T): T = {
-    val saved = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.files.maxPartitionBytes",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-      .map(k => k -> spark.conf.getOption(k))
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  def restoringTunerConf[T](body: => T): T =
+    graft.tuner.Tuner.restoringConf(spark)(body)
 }

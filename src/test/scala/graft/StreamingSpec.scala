@@ -39,8 +39,8 @@ class StreamingSpec extends SparkSpec {
     // fails query startup (no silent fallback), so green here proves the
     // state of EVERY stateful query — windowed/sliding/session aggs,
     // dedup, arbitrary flatMapGroupsWithState, update-mode agg,
-    // watermark eviction, and both stream-stream join state layouts —
-    // really lived in RocksDB. Equivalence target is the default-provider
+    // watermark eviction, and the inner and all three outer stream-stream
+    // join state layouts — really lived in RocksDB. Equivalence target is the default-provider
     // run of the same query: the batch twins and the sf0.01 oracle gate
     // already pin that side, so provider-equivalence transfers the full
     // correctness argument to the scale tier. (q_stream_tws/_tws_map are
@@ -49,7 +49,7 @@ class StreamingSpec extends SparkSpec {
       "q38_stream_tumbling", "q39_stream_sliding", "q40_stream_session",
       "q41_stream_dedup", "q42_stream_stateful", "q_stream_update",
       "q_stream_late_drop", "q_stream_stream_join", "q_stream_join_left",
-      "q_stream_join_right")
+      "q_stream_join_right", "q_stream_join_full")
     val key = "spark.sql.streaming.stateStore.providerClass"
     stateful.foreach { name =>
       val dflt = StreamingOps.queries(name)(spark, sf)

@@ -142,6 +142,27 @@ class TunerIntegrationSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(fr)
   }
 
+  test("a tuned step inside Tuner.restoringConf leaves no skew-join conf behind") {
+    // A planted straggler (one task reads 512 MB, the rest 64 MB) makes
+    // the tuned step set AQE's skew-join confs; the save/restore the
+    // q_tuner_loop live loop runs under must hand all of them back.
+    val tuner = new Tuner(TempDirs.create("graft-skew-restore"), "skew")
+    tuner.store.write(spark.sparkContext.hadoopConfiguration, List(
+      StageRunInfo.summarize(executorCpuTimeMs = 1000L, stageTimeMs = 100L,
+        inputBytes = 0L, numExecutors = 1,
+        shuffle = ShuffleVolume(bytesWritten = 1L << 30, bytesRead = 1L << 30),
+        taskShuffleReadBytes =
+          Seq.tabulate(8)(i => if (i == 0) 512L << 20 else 64L << 20))))
+    val factorKey = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
+    val before = SkewAdvisor.Keys.map(spark.conf.getOption)
+    Tuner.restoringConf(spark) {
+      tuner.tuneAndRunTracked(spark)(spark.range(10).count())
+      assert(spark.conf.get(factorKey) == "4", "the planted skew was not acted on")
+    }
+    assert(SkewAdvisor.Keys.map(spark.conf.getOption) == before,
+      "skew-join confs leaked out of the tuned step")
+  }
+
   test("empty store yields cold-start recommendation, not an error (Q2)") {
     val tuner = new Tuner(TempDirs.create("graft-empty"), "none")
     assert(tuner.store.nextRunId(spark) == 0)
