@@ -21,18 +21,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // Remove any stale output from a previous run so the compare step
         // reports a hard failure instead of silently passing on old data.
-        // Recursive (round-12 review): a failed write can leave a nested
-        // _temporary tree that a flat listFiles().delete() skips, and
-        // listFiles() is null on a plain file — either would leave stale
-        // output (or abort the remaining queries) exactly when the dump
-        // is already in a failure path.
-        def rmRec(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rmRec)
-          f.delete()
-        }
-        val stale = new java.io.File(s"$outDir/$name")
-        if (stale.exists) rmRec(stale)
+        // Recursive: a failed write can leave a nested _temporary tree.
+        graft.core.TempDirs.delete(s"$outDir/$name")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,11 +40,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Full registry listing (round 11): oracle_sql.json is only the
-    // SQL-expressible SUBSET of the registry by contract, so tools that
-    // need "every registered query" (scan_check's budgeted-but-unprobed
-    // cross-check) must not use it as the registry — a future oracle-less
-    // query would silently fall outside their guarantee.
+    // Full registry listing: oracle_sql.json is only the SQL-expressible
+    // SUBSET of the registry by contract, so tools that need "every
+    // registered query" (scan_check's budgeted-but-unprobed cross-check)
+    // must not use it as the registry — a future oracle-less query would
+    // silently fall outside their guarantee.
     Files.writeString(Paths.get(s"$outDir/registry.json"),
       SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
     graft.core.TempDirs.cleanupAll()

@@ -1,9 +1,9 @@
 package graft.core
 
 /** Env-var suite scoping shared by the measurement mains (Bench's
-  * SPARK_GRAFT_SCALE_SUITE, StreamScale's SPARK_GRAFT_STREAM_SUITE —
-  * round-12 review: two hand-maintained copies of the same parse/
-  * partition/warn block had already shipped). Contract: csv of query
+  * SPARK_GRAFT_SCALE_SUITE, StreamScale's SPARK_GRAFT_STREAM_SUITE,
+  * AnnScale's SPARK_GRAFT_ANN_FAMILIES), so every main parses,
+  * partitions and warns the same way. Contract: csv of query
   * names; unknown names are dropped LOUDLY to stderr, never run and
   * never silently kept; an unset var means the caller's full default
   * suite. */

@@ -2,22 +2,21 @@ package graft.core
 
 /** Shared disk-write probe: 64 × 1 MB writes + fsync, MB/s. Bench and
   * StreamScale bracket their timed runs with this so every committed
-  * record carries its own IO-health evidence (healthy band on this VM
-  * per the r11 drift audit: ≥ 179 MB/s). One implementation, not two —
-  * the round-13 review found StreamScale's copy had already drifted
-  * from Bench's (it passed the raw SPARK_LOCAL_DIRS value to File(),
-  * mishandling the comma-separated list format and ignoring
-  * spark.local.dir entirely).
+  * record carries its own IO-health evidence (the healthy band on the
+  * 4-vCPU reference VM is ≥ 179 MB/s). One implementation for both, so
+  * they probe the same device: a second copy had drifted to passing the
+  * raw SPARK_LOCAL_DIRS value to File(), mishandling the comma-separated
+  * list format and ignoring spark.local.dir entirely.
   */
 object IoProbe {
 
   /** The filesystem Spark's local dirs actually use: SPARK_LOCAL_DIRS /
     * spark.local.dir are comma-separated lists — take the first
     * non-empty entry (probing the raw list string would mkdir a junk
-    * path named after the whole list); fall back to java.io.tmpdir
-    * (ADVICE r11: probing /tmp while shuffle rides another device would
-    * silently decouple io_mb_s from the device the drift corroboration
-    * reasons about — callers record the probed path for auditability).
+    * path named after the whole list); fall back to java.io.tmpdir.
+    * Probing /tmp while shuffle rides another device would silently
+    * decouple io_mb_s from the device the drift corroboration reasons
+    * about, so callers record the probed path for auditability.
     *
     * @param localDirConf the session's spark.local.dir, when a session
     *   is available to ask.

@@ -25,6 +25,7 @@ object Session {
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     LogQuiet.boundedWindowWarnings()
+    LogQuiet.streamingJoinWarnings()
     s
   }
 }

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.IndexManifest
 import graft.core.Tables._
 
 /** MinHash + LSH near-duplicate detection — the 100 TB scale path for
@@ -200,22 +201,12 @@ object MinHashDedup {
     * Persisting toks also collapses what used to be three tokenize passes
     * per query (signatures + both rerank sides) into one. */
   def buildIndex(docs: DataFrame, indexDir: String, seed: Long = 42L,
-      shingleSize: Int = 1): Unit = {
-    // Invalidate FIRST: a rebuild that dies between the toks and sigs
-    // writes must not leave the previous build's manifest certifying a
-    // mixed-table dir (see IndexManifest.invalidate).
-    graft.core.IndexManifest.invalidate(docs.sparkSession, indexDir)
-    val toks = hashedTokens(docs, shingleSize)
-    val sigs = signaturesOfHashes(
-      graft.core.Materialize.at(toks, s"$indexDir/toks"), seed)
-    sigs.write.mode("overwrite").parquet(s"$indexDir/sigs")
-    // Manifest LAST: its presence certifies a complete build, so a build
-    // that dies mid-write leaves a dir verify() rejects, not a half-index
-    // that passes the fail-fast check.
-    graft.core.IndexManifest.write(docs.sparkSession, indexDir,
-      manifestFields(seed, shingleSize) ++
-        graft.core.IndexManifest.tableFields("toks" -> toks, "sigs" -> sigs))
-  }
+      shingleSize: Int = 1): Unit =
+    IndexManifest.build(docs.sparkSession, indexDir,
+        manifestFields(seed, shingleSize)) { b =>
+      val toks = b.write("toks", hashedTokens(docs, shingleSize))
+      b.write("sigs", signaturesOfHashes(toks, seed))
+    }
 
   /** The index's token-hash rows (doc_id, lang, source, h = xxhash64(tok)). */
   private def hashedTokens(docs: DataFrame, shingleSize: Int): DataFrame =
@@ -245,18 +236,16 @@ object MinHashDedup {
     // Fail fast on a family mismatch: appending rows signed with a
     // different seed/shingle unit would not error — it would just stop
     // old-vs-new pairs from ever sharing a band bucket.
-    val op = "MinHashDedup.appendToIndex"
-    val manifest = graft.core.IndexManifest.verify(newDocs.sparkSession,
-      indexDir, manifestFields(seed, shingleSize), op)
+    val index = IndexManifest.open(newDocs.sparkSession, indexDir,
+      manifestFields(seed, shingleSize), "MinHashDedup.appendToIndex")
     // Tokenize+hash the new docs ONCE: persist() the hashed frame so the
     // toks append materializes it and the signature aggregation reads the
     // cache instead of re-tokenizing (re-reading the whole appended toks
     // table would be worse — it scans the old corpus files too).
     val hashedToks = hashedTokens(newDocs, shingleSize).persist()
-    try {
-      graft.core.IndexManifest.appendTables(indexDir, manifest, op,
-        "toks" -> hashedToks, "sigs" -> signaturesOfHashes(hashedToks, seed))
-    } finally hashedToks.unpersist()
+    try index.append("toks" -> hashedToks,
+      "sigs" -> signaturesOfHashes(hashedToks, seed))
+    finally hashedToks.unpersist()
   }
 
   /** Near-dup pairs served ENTIRELY from a persisted index: banding, the
@@ -272,18 +261,17 @@ object MinHashDedup {
     // Banding layout must match what the stored sigs were built with (seed
     // and shingle unit are baked into the stored tables, so only the
     // family + band shape are checkable here).
-    val manifest = graft.core.IndexManifest.verify(s, indexDir,
+    val index = IndexManifest.open(s, indexDir,
       Map("family" -> "minhash-lsh", "num_hashes" -> NUM_HASHES.toString,
         "bands" -> BANDS.toString), "MinHashDedup.pairsFromIndex")
-    val sigs = graft.core.IndexManifest.table(s, indexDir, manifest, "sigs")
+    val sigs = index.table("sigs")
     val cands = graft.core.Materialize(
       candidatePairs(bandSignatures(sigs)), "minhash-cands")
     // The intersection join runs on the raw 64-bit token hash, not the
     // token string — the same distinct-per-doc rows, ~60% less shuffle
     // width. xxhash64 collisions within one doc pair (~|A||B|/2^64 ≈
     // 1e-15) are the standard exact-in-practice hash-join trade.
-    val toks = graft.core.IndexManifest.table(s, indexDir, manifest, "toks")
-      .select("doc_id", "h")
+    val toks = index.table("toks").select("doc_id", "h")
     finishPairs(intersectionCounts(cands, toks), sigs, threshold)
   }
 

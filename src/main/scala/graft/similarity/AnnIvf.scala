@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.IndexManifest
 import graft.core.Tables._
 import graft.functions.CosineSimilarity
 
@@ -109,24 +110,31 @@ object AnnIvf {
         Window.orderBy(col("cid"))).cast("long") - 1L)
   }
 
-  def query(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(s)
+  def query(s: SparkSession, dir: String): DataFrame =
+    fitOnceSearchOnce(s, dir, "ivf") { (e, idx) =>
+      val n = e.count()
+      val k = chooseK(n)
+      fit(e, idx, k, fitIters = 2, knownN = n)
+      // Production default: fixed nprobe (capped at K for tiny corpora).
+      // The uniform-random fixture keeps its recall floor in AnnIvfSpec
+      // via an explicit coverage-proportional nprobe there; the registry
+      // query runs the setting a real clustered corpus would.
+      search(s, idx, _, math.min(k, DEFAULT_NPROBE))
+    }
+
+  /** The registry shape of every ANN entry: load `embeddings` as
+    * (vec_id, emb array<double>), let `fit` build an index in a scratch
+    * dir, and run the search `fit` returns on the vec_id < 10 batch as
+    * (qid, qemb). Fit-once-search-once through a persisted index is the
+    * path a production pipeline takes: the fit is never inlined into the
+    * search plan. */
+  private[similarity] def fitOnceSearchOnce(s: SparkSession, dir: String,
+      family: String)(fit: (DataFrame, String) => DataFrame => DataFrame): DataFrame = {
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val n = e.count()
-    val k = chooseK(n)
-    // Production default: fixed nprobe (capped at K for tiny corpora).
-    // The uniform-random fixture keeps its recall floor in AnnIvfSpec via
-    // an explicit coverage-proportional nprobe there; the registry query
-    // runs the setting a real clustered corpus would.
-    val nprobe = math.min(k, DEFAULT_NPROBE)
-    // Registry shape = fit-once-search-once through a scratch index dir,
-    // exactly the persisted path a production pipeline takes (fit is NOT
-    // inlined into the search plan).
-    val idx = graft.core.TempDirs.create("graft-ivf-idx")
-    fit(e, idx, k, fitIters = 2, knownN = n)
-    search(s, idx, e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("emb").as("qemb")), nprobe)
+    val search = fit(e, graft.core.TempDirs.create(s"graft-$family-idx"))
+    search(e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("emb").as("qemb")))
   }
 
   /** Fit the IVF index once and persist it: centroids (the coarse
@@ -140,31 +148,21 @@ object AnnIvf {
     // graft_cosine call_function, which resolves only after the extension
     // registers it (idempotent — no-op when query()/search() already did).
     graft.GraftExtensions.ensureRegistered(e.sparkSession)
-    // Invalidate FIRST (see IndexManifest.invalidate): a re-fit that dies
-    // between the centroids and assigned writes must not leave the prior
-    // build's manifest certifying a mixed-table dir.
-    graft.core.IndexManifest.invalidate(e.sparkSession, indexDir)
-    // knownN lets a caller that already counted the corpus (query() does,
-    // for chooseK) skip a second full-scan count job here.
-    val n = if (knownN >= 0) knownN else e.count()
-    val stride = math.max(1L, n / k)
-    val seeds = e.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cid"), col("emb").as("cemb"))
-    val centroids =
-      if (fitIters > 0) fitCentroids(e, seeds, fitIters) else seeds
-    // Assignment reads the PERSISTED centroids so the k-means lineage is
-    // truncated — the assignment plan never replays the fit.
-    val persisted = graft.core.Materialize.at(centroids, s"$indexDir/centroids")
-    val assigned = assign(e, persisted)
-    assigned.write.mode("overwrite").parquet(s"$indexDir/assigned")
-    // Manifest LAST — its presence certifies that centroids AND
-    // assignments both landed (a mid-build crash must not leave a dir
-    // that passes verify()).
-    graft.core.IndexManifest.write(e.sparkSession, indexDir,
-      Map("family" -> "ivf-cosine", "k" -> k.toString,
-        "fit_iters" -> fitIters.toString) ++
-        graft.core.IndexManifest.tableFields(
-          "centroids" -> centroids, "assigned" -> assigned))
+    IndexManifest.build(e.sparkSession, indexDir, Map("family" -> "ivf-cosine",
+        "k" -> k.toString, "fit_iters" -> fitIters.toString)) { b =>
+      // knownN lets a caller that already counted the corpus (query()
+      // does, for chooseK) skip a second full-scan count job here.
+      val n = if (knownN >= 0) knownN else e.count()
+      val stride = math.max(1L, n / k)
+      val seeds = e.filter(col("vec_id") % stride === 0)
+        .select(col("vec_id").as("cid"), col("emb").as("cemb"))
+      val centroids =
+        if (fitIters > 0) fitCentroids(e, seeds, fitIters) else seeds
+      // Assignment reads the PERSISTED centroids so the k-means lineage is
+      // truncated — the assignment plan never replays the fit.
+      val persisted = b.write("centroids", centroids)
+      b.write("assigned", assign(e, persisted))
+    }
   }
 
   /** Incremental index update: assign ONLY the new vectors against the
@@ -177,11 +175,9 @@ object AnnIvf {
     // IVF appends assign against the PERSISTED centroids, so the quantizer
     // is compatible by construction — the manifest check guards against
     // pointing append at a different index family's directory.
-    val manifest = graft.core.IndexManifest.verify(s, indexDir,
+    val index = IndexManifest.open(s, indexDir,
       Map("family" -> "ivf-cosine"), "AnnIvf.append")
-    val centroids = graft.core.IndexManifest.table(s, indexDir, manifest, "centroids")
-    graft.core.IndexManifest.appendTables(indexDir, manifest, "AnnIvf.append",
-      "assigned" -> assign(newVecs, centroids))
+    index.append("assigned" -> assign(newVecs, index.table("centroids")))
   }
 
   /** Probe a persisted index: queries (qid, qemb) → the top-`topK` rows
@@ -192,15 +188,13 @@ object AnnIvf {
   def search(s: SparkSession, indexDir: String, q: DataFrame,
       nprobe: Int = DEFAULT_NPROBE, topK: Int = TOP_K): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
-    val manifest = graft.core.IndexManifest.verify(s, indexDir,
+    val index = IndexManifest.open(s, indexDir,
       Map("family" -> "ivf-cosine"), "AnnIvf.search")
-    val centroids = graft.core.IndexManifest.table(s, indexDir, manifest, "centroids")
-    val assigned = graft.core.IndexManifest.table(s, indexDir, manifest, "assigned")
-
-    val probes = probeCells(q, "qemb", centroids, CosineSimilarity.cosine, nprobe)
+    val probes = probeCells(q, "qemb", index.table("centroids"),
+        CosineSimilarity.cosine, nprobe)
       .select(col("qid"), col("qemb"), col("cid"))
     // Exact rerank inside probed cells only.
-    topKPerQuery(cellMembers(probes, assigned)
+    topKPerQuery(cellMembers(probes, index.table("assigned"))
       .select(col("qid"), col("vec_id").as("cand_id"),
         round(CosineSimilarity.cosine(col("qemb"), col("emb")), 6).as("cos_sim")), topK)
   }

@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables._
+import graft.core.IndexManifest
 import graft.functions.DotProduct
 
 /** IVF-PQ hybrid — the billion-scale ANN composition (FAISS IVFPQ): a
@@ -34,45 +34,39 @@ object AnnIvfPq {
   val TOP_K = 5
 
   /** Fit coarse cells on the normalized corpus, code the residuals, and
-    * persist the whole index (manifest last — crash-consistency canon). */
+    * persist the whole index through [[IndexManifest.build]]. */
   def fit(e: DataFrame, indexDir: String, coarseK: Int = COARSE_K,
       iters: Int = 2): Unit = {
     val s = e.sparkSession
     graft.GraftExtensions.ensureRegistered(s)
-    graft.core.IndexManifest.invalidate(s, indexDir)
-    val (vectors, en, n) = AnnPq.writeVectors(e, indexDir)
-    val stride = math.max(1L, n / coarseK)
-    val seeds = en.filter(col("vec_id") % stride === 0 &&
-        col("vec_id") / stride < coarseK)
-      .select(col("vec_id").as("cid"), col("emb").as("cemb"))
-    val centroids = AnnIvf.fitCentroids(en, seeds, iters)
-    val persistedC = graft.core.Materialize.at(centroids, s"$indexDir/centroids")
-    val assigned = AnnIvf.assign(en, persistedC).select("vec_id", "cid")
-    // Residuals: vector minus its cell centroid — what PQ actually codes.
-    // Derived from the PERSISTED assignment and materialized once, so the
-    // lineage is truncated: built on the un-truncated `assigned` plan,
-    // every codebook-fit action would replay the full N·K assignment
-    // scoring (OPTIMIZATION_r16.md records multi-second single-task CPU
-    // stages for each replay at sf0.1).
-    val assignedP = graft.core.Materialize.at(assigned, s"$indexDir/assigned")
-    val residuals = graft.core.Materialize(
-      en.join(assignedP, "vec_id")
-        .join(broadcast(persistedC), "cid")
-        .select(col("vec_id"),
-          zip_with(col("emb"), col("cemb"), (x, c) => x - c).as("emb")),
-      "ivfpq-resid")
-    val rsv = AnnPq.subvectors(residuals)
-    val codes = AnnPq.chooseCodes(n)
-    val book = AnnPq.fitCodebook(rsv, n, codes, iters)
-    val cb = graft.core.Materialize.at(book, s"$indexDir/codebook")
-    val coded = AnnPq.encode(rsv, cb)
-    coded.write.mode("overwrite").parquet(s"$indexDir/codes")
-    graft.core.IndexManifest.write(s, indexDir,
-      Map("family" -> "ivfpq-cosine", "coarse_k" -> coarseK.toString,
-        "m" -> AnnPq.M.toString, "codes" -> codes.toString) ++
-        graft.core.IndexManifest.tableFields("vectors" -> vectors,
-          "centroids" -> centroids, "assigned" -> assigned,
-          "codebook" -> book, "codes" -> coded))
+    IndexManifest.build(s, indexDir, Map("family" -> "ivfpq-cosine",
+        "coarse_k" -> coarseK.toString, "m" -> AnnPq.M.toString)) { b =>
+      val (en, n) = AnnPq.writeVectors(e, b)
+      val stride = math.max(1L, n / coarseK)
+      val seeds = en.filter(col("vec_id") % stride === 0 &&
+          col("vec_id") / stride < coarseK)
+        .select(col("vec_id").as("cid"), col("emb").as("cemb"))
+      val centroids = b.write("centroids", AnnIvf.fitCentroids(en, seeds, iters))
+      // Residuals: vector minus its cell centroid — what PQ actually codes.
+      // Derived from the PERSISTED assignment and materialized once, so the
+      // lineage is truncated: built on the un-truncated assignment plan,
+      // every codebook-fit action would replay the full N·K assignment
+      // scoring (OPTIMIZATION_r16.md records multi-second single-task CPU
+      // stages for each replay at sf0.1).
+      val assigned = b.write("assigned",
+        AnnIvf.assign(en, centroids).select("vec_id", "cid"))
+      val residuals = graft.core.Materialize(
+        en.join(assigned, "vec_id")
+          .join(broadcast(centroids), "cid")
+          .select(col("vec_id"),
+            zip_with(col("emb"), col("cemb"), (x, c) => x - c).as("emb")),
+        "ivfpq-resid")
+      val rsv = AnnPq.subvectors(residuals)
+      val codes = AnnPq.chooseCodes(n)
+      b.param("codes", codes.toString)
+      val book = b.write("codebook", AnnPq.fitCodebook(rsv, n, codes, iters))
+      b.write("codes", AnnPq.encode(rsv, book))
+    }
   }
 
   /** Probe nprobe cells, ADC-score their code rows, exact-rerank the
@@ -83,24 +77,21 @@ object AnnIvfPq {
   def search(s: SparkSession, indexDir: String, q: DataFrame,
       nprobe: Int = NPROBE, topK: Int = TOP_K): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
-    val manifest = graft.core.IndexManifest.verify(s, indexDir,
+    val index = IndexManifest.open(s, indexDir,
       Map("family" -> "ivfpq-cosine"), "AnnIvfPq.search")
-    def table(name: String) = graft.core.IndexManifest.table(s, indexDir, manifest, name)
     val qn = AnnPq.normalizedQueries(q)
-    val probes = AnnIvf.probeCells(qn, "qn", table("centroids"), DotProduct.dot, nprobe)
+    val probes = AnnIvf.probeCells(qn, "qn", index.table("centroids"),
+        DotProduct.dot, nprobe)
       .select(col("qid"), col("cid"), col("qcsim"))
-    AnnPq.adcSearch(qn, table("codebook"), table("codes"), table("vectors"),
-      cells = Some(AnnIvf.cellMembers(probes, table("assigned"))), topK)
+    AnnPq.adcSearch(qn, index.table("codebook"), index.table("codes"),
+      index.table("vectors"),
+      cells = Some(AnnIvf.cellMembers(probes, index.table("assigned"))), topK)
   }
 
-  /** Registry query: fit-once-search-once through a scratch index dir
-    * (sibling-family shape). */
-  def query(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val idx = graft.core.TempDirs.create("graft-ivfpq-idx")
-    fit(e, idx)
-    search(s, idx, e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("emb").as("qemb")))
-  }
+  /** Registry query ([[AnnIvf.fitOnceSearchOnce]]). */
+  def query(s: SparkSession, dir: String): DataFrame =
+    AnnIvf.fitOnceSearchOnce(s, dir, "ivfpq") { (e, idx) =>
+      fit(e, idx)
+      search(s, idx, _)
+    }
 }

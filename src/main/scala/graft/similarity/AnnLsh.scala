@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables._
+import graft.core.IndexManifest
 
 /** Random-hyperplane LSH approximate nearest neighbor — the second scale
   * path for similarity search (complements AnnIvf): fixed pseudo-random
@@ -128,74 +128,59 @@ object AnnLsh {
 
   def query(s: SparkSession, dir: String): DataFrame = query(s, dir, Sharp)
 
-  def query(s: SparkSession, dir: String, shape: Shape): DataFrame = {
-    val e = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    // Registry shape = build-once-search-once through a scratch index dir
-    // (the persisted path a production pipeline takes).
-    val idx = graft.core.TempDirs.create("graft-lsh-idx")
-    buildIndex(e, idx, shape)
-    search(s, idx, e.filter(col("vec_id") < 10), shape)
-  }
+  def query(s: SparkSession, dir: String, shape: Shape): DataFrame =
+    AnnIvf.fitOnceSearchOnce(s, dir, "lsh") { (e, idx) =>
+      buildIndex(e, idx, shape)
+      search(s, idx, _, shape)
+    }
 
-  /** Persist the data-side bucket table — the LSH index. Build once per
-    * corpus version; every [[search]] equi-joins against it without
-    * re-hashing the corpus. */
   /** Index-contract fields ([[graft.core.IndexManifest]]): seed, band
     * shape and dim pin the hyperplane family — a mismatch on any of them
     * makes stored and probed signatures unrelated (silently zero recall),
-    * so append/search verify before touching the bucket table. multiProbe
-    * is deliberately NOT part of the contract: it is a query-side knob. */
+    * so append/search check them before touching the bucket table.
+    * multiProbe is deliberately NOT part of the contract: it is a
+    * query-side knob. */
   private def manifestFields(shape: Shape, seed: Long, dim: Int): Map[String, String] =
     Map("family" -> "lsh-hyperplane", "seed" -> seed.toString,
       "bands" -> shape.bands.toString,
       "bits_per_band" -> shape.bitsPerBand.toString, "dim" -> dim.toString)
 
+  /** Persist the LSH index: the vectors table and the data-side bucket
+    * table. Build once per corpus version; every [[search]] equi-joins
+    * against the buckets without re-hashing the corpus.
+    *
+    * Buckets store keys, never payloads: (vec_id, band, sig) only, and the
+    * rerank fetches vectors by id from the once-stored vectors table. An
+    * emb array on each of the `bands` rows per vector would be a 16×
+    * payload duplication in the stored table, the band-join shuffle AND
+    * the candidate distinct (~550 B rows deduped instead of 16 B id
+    * pairs). */
   def buildIndex(e: DataFrame, indexDir: String, shape: Shape = Sharp,
-      seed: Long = 7L, dim: Int = 64): Unit = {
-    // Invalidate FIRST (see IndexManifest.invalidate): rebuilds must not
-    // leave a stale manifest over a partially overwritten bucket table.
-    graft.core.IndexManifest.invalidate(e.sparkSession, indexDir)
-    // Buckets store keys, never payloads: (vec_id, band, sig) only, and
-    // the rerank fetches vectors by id from the once-stored vectors
-    // table. An emb array on each of the `bands` rows per vector would be
-    // a 16× payload duplication in the stored table, the band-join
-    // shuffle AND the candidate distinct (~550 B rows deduped instead of
-    // 16 B id pairs).
-    // Vectors BEFORE buckets (the AnnPq two-table canon): an orphan
-    // vector row after a crash is unreachable, while an orphan BUCKET row
-    // would silently drop from the rerank join.
-    val vectors = e.select(col("vec_id"), col("emb"))
-    vectors.write.mode("overwrite").parquet(s"$indexDir/vectors")
-    val buckets = bucketRows(e, shape, seed, dim)
-    buckets.write.mode("overwrite").parquet(s"$indexDir/buckets")
-    // Manifest LAST: presence certifies a complete bucket table.
-    graft.core.IndexManifest.write(e.sparkSession, indexDir,
-      manifestFields(shape, seed, dim) ++ graft.core.IndexManifest.tableFields(
-        "vectors" -> vectors, "buckets" -> buckets))
-  }
+      seed: Long = 7L, dim: Int = 64): Unit =
+    IndexManifest.build(e.sparkSession, indexDir,
+        manifestFields(shape, seed, dim)) { b =>
+      b.write("vectors", e.select(col("vec_id"), col("emb")))
+      b.write("buckets", bucketRows(e, shape, seed, dim))
+    }
 
   /** Incremental update: bucket ONLY the new vectors (same planes — the
     * hash family is the index contract) and parquet-append; existing
     * bucket files are untouched. */
   def append(indexDir: String, newVecs: DataFrame, shape: Shape = Sharp,
-      seed: Long = 7L, dim: Int = 64): Unit = {
-    val manifest = graft.core.IndexManifest.verify(newVecs.sparkSession,
-      indexDir, manifestFields(shape, seed, dim), "AnnLsh.append")
-    // Vectors before buckets — same crash-ordering rationale as buildIndex.
-    graft.core.IndexManifest.appendTables(indexDir, manifest, "AnnLsh.append",
-      "vectors" -> newVecs.select(col("vec_id"), col("emb")),
-      "buckets" -> bucketRows(newVecs, shape, seed, dim))
-  }
+      seed: Long = 7L, dim: Int = 64): Unit =
+    IndexManifest.open(newVecs.sparkSession, indexDir,
+        manifestFields(shape, seed, dim), "AnnLsh.append")
+      .append("vectors" -> newVecs.select(col("vec_id"), col("emb")),
+        "buckets" -> bucketRows(newVecs, shape, seed, dim))
 
   /** The stored bucket rows (vec_id, band, sig) of data-side vectors. */
   private def bucketRows(e: DataFrame, shape: Shape, seed: Long, dim: Int): DataFrame =
     bucketed(e, shape, probe = false, seed, dim).select("vec_id", "band", "sig")
 
-  /** Probe a persisted index with query vectors (vec_id, emb): hash ONLY
-    * the queries (plus their one-bit multi-probe flips), bucket-join
-    * against the stored corpus table, rerank exactly. Returns the top-
-    * `topK` rows (qid, cand_id, cos_sim, rn) per query, ranked as
+  /** Probe a persisted index with queries (qid, qemb): hash ONLY the
+    * queries (plus their multi-probe flips), bucket-join against the
+    * stored corpus table, rerank exactly. Returns the top-`topK` rows
+    * (qid, cand_id, cos_sim, rn) per query, ranked as
     * [[AnnIvf.topKPerQuery]] ranks them. Rows are NOT ordered across
     * queries, and no caller may rely on row order: sort on (qid, rn) if
     * you need it. */
@@ -203,19 +188,19 @@ object AnnLsh {
       shape: Shape = Sharp, topK: Int = TOP_K,
       seed: Long = 7L, dim: Int = 64): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
-    val manifest = graft.core.IndexManifest.verify(s, indexDir,
+    val index = IndexManifest.open(s, indexDir,
       manifestFields(shape, seed, dim), "AnnLsh.search")
-    val buckets = graft.core.IndexManifest.table(s, indexDir, manifest, "buckets")
-    val vectors = graft.core.IndexManifest.table(s, indexDir, manifest, "vectors")
+    val vectors = index.table("vectors")
     // qemb rides the QUERY side of the bucket join (it is probe-fan-out ×
     // |queries| rows — tiny by construction), so the queries frame is
     // scanned exactly once; the corpus side carries ids only. The
     // candidate distinct dedupes before the vectors join fetches each
     // candidate's embedding once.
-    val qb = bucketed(queries, shape, probe = true, seed, dim)
+    val qb = bucketed(queries.select(col("qid").as("vec_id"), col("qemb").as("emb")),
+        shape, probe = true, seed, dim)
       .select(col("vec_id").as("qid"), col("emb").as("qemb"),
         col("band"), col("sig"))
-    val cands = qb.join(buckets, Seq("band", "sig"))
+    val cands = qb.join(index.table("buckets"), Seq("band", "sig"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("qemb"), col("vec_id").as("cand_id"))
       .distinct()

@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables._
+import graft.core.IndexManifest
 import graft.functions.DotProduct
 
 /** Product-quantization ANN (ADC flavor) — the third index family next to
@@ -58,22 +58,20 @@ object AnnPq {
       .select(col("vec_id").as("qid"), col("nemb").as("qn"))
 
   /** Write the unit-normalized corpus `e` (vec_id, emb) as the index's
-    * `vectors` table (vec_id, nemb). Returns the frame written (its schema
-    * is what the manifest records), the table read back as (vec_id, emb),
-    * and its row count. The fit derives everything from the read-back, so
-    * no fit job re-runs the interpreted normalize kernel (on a single-file
-    * fixture scan it would run in ONE task); the repartition by vec_id to
-    * the session's default parallelism spreads that kernel across cores
-    * whatever the input's file count. The count rides the write job, so it
-    * costs no pass. The doubles survive the parquet round-trip, so the
-    * index is bit-identical. */
+    * `vectors` table (vec_id, nemb). Returns the table read back as
+    * (vec_id, emb) and its row count. The fit derives everything from the
+    * read-back, so no fit job re-runs the interpreted normalize kernel (on
+    * a single-file fixture scan it would run in ONE task); the repartition
+    * by vec_id to the session's default parallelism spreads that kernel
+    * across cores whatever the input's file count. The count rides the
+    * write job, so it costs no pass. The doubles survive the parquet
+    * round-trip, so the index is bit-identical. */
   private[similarity] def writeVectors(e: DataFrame,
-      indexDir: String): (DataFrame, DataFrame, Long) = {
+      b: IndexManifest.Builder): (DataFrame, Long) = {
     val vectors = normalized(e)
       .repartition(e.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-    val (written, n) = graft.core.Materialize.observed[Long](vectors,
-      s"$indexDir/vectors", count(lit(1)))
-    (vectors, written.select(col("vec_id"), col("nemb").as("emb")), n)
+    val (written, n) = b.observed[Long]("vectors", vectors, count(lit(1)))
+    (written.select(col("vec_id"), col("nemb").as("emb")), n)
   }
 
   /** Explode (vec_id, emb) rows into the (vec_id, m, sv) long form; dim
@@ -187,43 +185,32 @@ object AnnPq {
       schema)
   }
 
-  /** Fit once, persist codebook + codes + normalized vectors, manifest
-    * last (crash-consistency canon shared with the sibling families). */
+  /** Fit once and persist normalized vectors, codebook and codes through
+    * [[IndexManifest.build]]. */
   def fit(e: DataFrame, indexDir: String, iters: Int = 2): Unit = {
     val s = e.sparkSession
     graft.GraftExtensions.ensureRegistered(s)
-    graft.core.IndexManifest.invalidate(s, indexDir)
-    val (vectors, en, n) = writeVectors(e, indexDir)
-    val sv = subvectors(en)
-    val codes = chooseCodes(n)
-    val book = fitCodebook(sv, n, codes, iters)
-    val cb = graft.core.Materialize.at(book, s"$indexDir/codebook")
-    val coded = encode(sv, cb)
-    coded.write.mode("overwrite").parquet(s"$indexDir/codes")
-    graft.core.IndexManifest.write(s, indexDir,
-      Map("family" -> "pq-adc", "m" -> M.toString,
-        "codes" -> codes.toString) ++ graft.core.IndexManifest.tableFields(
-        "vectors" -> vectors, "codebook" -> book, "codes" -> coded))
+    IndexManifest.build(s, indexDir,
+        Map("family" -> "pq-adc", "m" -> M.toString)) { b =>
+      val (en, n) = writeVectors(e, b)
+      val sv = subvectors(en)
+      val codes = chooseCodes(n)
+      b.param("codes", codes.toString)
+      val book = b.write("codebook", fitCodebook(sv, n, codes, iters))
+      b.write("codes", encode(sv, book))
+    }
   }
 
   /** Code new vectors against the frozen codebook and append — the
     * ingest path; the codebook is never refit here. */
   def append(s: SparkSession, indexDir: String, newVecs: DataFrame): Unit = {
     graft.GraftExtensions.ensureRegistered(s)
-    val manifest = graft.core.IndexManifest.verify(s, indexDir,
+    val index = IndexManifest.open(s, indexDir,
       Map("family" -> "pq-adc"), "AnnPq.append")
-    val cb = graft.core.IndexManifest.table(s, indexDir, manifest, "codebook")
-    // Vectors BEFORE codes: every shortlist candidate originates from the
-    // codes table and is inner-joined back to vectors for the exact
-    // rerank, so an orphan vector row (crash after the first write) is
-    // unreachable and harmless — but an orphan CODE row would enter the
-    // ADC shortlist and then be silently dropped by the rerank join,
-    // degrading top-k quality with no error. This is the two-table
-    // analogue of the sibling families' manifest-last canon.
     val nv = normalized(newVecs)
-    graft.core.IndexManifest.appendTables(indexDir, manifest, "AnnPq.append",
-      "vectors" -> nv,
-      "codes" -> encode(subvectors(nv.select(col("vec_id"), col("nemb").as("emb"))), cb))
+    index.append("vectors" -> nv,
+      "codes" -> encode(subvectors(nv.select(col("vec_id"), col("nemb").as("emb"))),
+        index.table("codebook")))
   }
 
   /** ADC search: q = (qid, qemb) → the top-`topK` rows (qid, cand_id,
@@ -233,11 +220,10 @@ object AnnPq {
   def search(s: SparkSession, indexDir: String, q: DataFrame,
       topK: Int = TOP_K): DataFrame = {
     graft.GraftExtensions.ensureRegistered(s)
-    val manifest = graft.core.IndexManifest.verify(s, indexDir,
+    val index = IndexManifest.open(s, indexDir,
       Map("family" -> "pq-adc"), "AnnPq.search")
-    def table(name: String) = graft.core.IndexManifest.table(s, indexDir, manifest, name)
-    adcSearch(normalizedQueries(q), table("codebook"), table("codes"),
-      table("vectors"), cells = None, topK)
+    adcSearch(normalizedQueries(q), index.table("codebook"), index.table("codes"),
+      index.table("vectors"), cells = None, topK)
   }
 
   /** The ADC search PQ and IVF-PQ share, as the class doc's Search
@@ -276,14 +262,10 @@ object AnnPq {
         round(DotProduct.dot(col("qn"), col("nemb")), 6).as("cos_sim")), topK)
   }
 
-  /** Registry query: fit-once-search-once through a scratch index dir on
-    * the driver embeddings table (same shape as q_ann_ivf / q_ann_lsh). */
-  def query(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val idx = graft.core.TempDirs.create("graft-pq-idx")
-    fit(e, idx, iters = 2)
-    search(s, idx, e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("emb").as("qemb")))
-  }
+  /** Registry query ([[AnnIvf.fitOnceSearchOnce]]). */
+  def query(s: SparkSession, dir: String): DataFrame =
+    AnnIvf.fitOnceSearchOnce(s, dir, "pq") { (e, idx) =>
+      fit(e, idx, iters = 2)
+      search(s, idx, _)
+    }
 }

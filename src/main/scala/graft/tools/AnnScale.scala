@@ -90,10 +90,7 @@ object AnnScale {
       if (families.contains("lsh"))
         measure("lsh")(
           idx => AnnLsh.buildIndex(e, idx, AnnLsh.Sharp),
-          idx => AnnLsh.search(spark, idx,
-            q.select(org.apache.spark.sql.functions.col("qid").as("vec_id"),
-              org.apache.spark.sql.functions.col("qemb").as("emb")),
-            AnnLsh.Sharp))
+          idx => AnnLsh.search(spark, idx, q, AnnLsh.Sharp))
       e.unpersist()
     }
     graft.core.TempDirs.cleanupAll()

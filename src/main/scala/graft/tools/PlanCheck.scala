@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec
   SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
-/** Plan-SHAPE regression gate (VERDICT r13 item 6): PLANS.md is
-  * regenerated every gate run but only eyeballed — a removed
+/** Plan-SHAPE regression gate: PLANS.md is regenerated every gate run
+  * but only eyeballed — a removed
   * `broadcast()` hint or a join that degenerates to a cartesian product
   * would ship as a diff nobody reads. This main EXECUTES the headline
   * queries (same object-walk ground truth as ReuseProbe — the final
@@ -33,9 +33,9 @@ import org.apache.spark.sql.execution.window.WindowExec
   */
 object PlanCheck {
 
-  /** Executed-plan shape counts, via ReuseProbe's node walk. Extended in
-    * round 16 (VERDICT r15 item 1, carrying r14 task 5) with the fields
-    * that pin the restructured q_bigram_lm / q_ngram_novelty plans:
+  /** Executed-plan shape counts, via ReuseProbe's node walk. Beyond the
+    * join and scan counts, these fields pin the q_bigram_lm /
+    * q_ngram_novelty plans that keep those queries corpus-linear:
     *   - matScans: scans of a Materialize scratch dir ("graft-mat-") —
     *     the barrier's read-back consumers; 0 means the barrier is gone
     *     and its producer replays once per consumer.
@@ -52,8 +52,8 @@ object PlanCheck {
     *   - corpusJoinKeys: equi-key arity of each join whose subtree scans
     *     the corpus — q_bigram_lm's ONE corpus-sized join must ride
     *     (hp, pair), arity 2; a second entry means the vocab-scale model
-    *     join regressed to a corpus-sided shape (the r14 super-linear
-    *     mechanism), arity 1 means the hash prefix fell off. */
+    *     join regressed to a corpus-sided shape (which measured
+    *     super-linear), arity 1 means the hash prefix fell off. */
   final case class Shape(bhj: Int, shuffleJoins: Int, cartesian: Int,
       bnlj: Int, corpusScans: Int, pushedCorpusScans: Int, matScans: Int,
       exchanges: Int, xxhash: Int, windowParts: Seq[Int],
@@ -104,8 +104,8 @@ object PlanCheck {
   }
 
   /** name -> invariant (None = pass, Some(violation)). Calibrated against
-    * the committed plans these queries are SUPPOSED to have (VERDICT r13's
-    * plan audit), not whatever they happened to produce. */
+    * the plans these queries are SUPPOSED to have (the committed,
+    * audited PLANS.md shapes), not whatever they happened to produce. */
   val checks: Seq[(String, Shape => Option[String])] = Seq(
     // q01: the date-range filter must reach the parquet scan. A scan
     // reading all row groups for a filtered aggregate is the first thing
@@ -143,15 +143,15 @@ object PlanCheck {
       if (s.corpusScans == 2 && s.cartesian + s.bnlj == 0) None
       else Some(s"want corpusScans=2 no-cartesian/bnlj, got ($s)")
     },
-    // q_bigram_lm (round 16, pinning the r15 restructure that cleared the
-    // sf10→sf100 super-linear reading): ONE corpus pass (corpusScans=1 —
-    // the c2 bigram count is assembled behind a Materialize barrier at
-    // construction time, so the final plan re-reads scratch, not corpus);
+    // q_bigram_lm (the shape that keeps it linear from sf10 to sf100):
+    // ONE corpus pass (corpusScans=1 — the c2 bigram count is assembled
+    // behind a Materialize barrier at construction time, so the final
+    // plan re-reads scratch, not corpus);
     // the barrier feeds BOTH consumers (matScans=2: the c1 prefix rollup
     // and the probability join); the model is assembled at VOCAB scale
     // (exactly one join subtree touches the corpus — a second entry in
     // corpusJoinKeys means the w1-keyed model join regressed to a
-    // corpus-sided shape, the r14 super-linear mechanism); and the one
+    // corpus-sided shape, which measured super-linear); and the one
     // corpus-sized scoring join rides the (xxhash64(pair), pair)
     // hash-prefix key (arity 2, xxhash>=2 for the two prefix projections).
     "q_bigram_lm" -> { s =>
@@ -160,12 +160,11 @@ object PlanCheck {
       else Some("want corpusScans=1 matScans=2 corpusJoinKeys=[2] xxhash>=2 " +
         s"no-cartesian/bnlj, got ($s)")
     },
-    // q_ngram_novelty (same round): ONE corpus scan, NO join at all (the
-    // r14 shape re-joined the corpus-sized stream against its own groupBy
-    // and measured super-linear; first-seen detection is now a window
-    // min), the first-seen window keyed on (xxhash64(ng), ng) — arity 2
-    // with at least one XxHash64 in the plan — and exactly the two
-    // corpus-linear shuffles the restructure promised plus the final
+    // q_ngram_novelty: ONE corpus scan, NO join at all (re-joining the
+    // corpus-sized stream against its own groupBy measured super-linear;
+    // first-seen detection is a window min), the first-seen window keyed
+    // on (xxhash64(ng), ng) — arity 2 with at least one XxHash64 in the
+    // plan — and exactly the two corpus-linear shuffles plus the final
     // per-doc range sort (exchanges=3; a revived corpus distinct() or
     // self-join adds a fourth).
     "q_ngram_novelty" -> { s =>
@@ -175,15 +174,13 @@ object PlanCheck {
       else Some("want corpusScans=1 no-joins windowParts=[2] xxhash>=1 " +
         s"exchanges<=3 no-cartesian/bnlj, got ($s)")
     },
-    // q_cooccur_window (round 16 — pinned the same round its plan
-    // changed, so the guard ships with the change it guards): ONE corpus
-    // scan, NO join (pairs are GENERATED by array transform, never a
-    // positional self-join — the quadratic shape this query must never
-    // regress to), the pair aggregation keyed with an xxhash64 prefix
-    // (xxhash>=1; 0 means the 8-byte sort-key trick fell off and sf100
-    // spill-sorts compare wide token strings again), and exactly ONE
-    // exchange (the partial->final agg shuffle; the top-30 is a
-    // TakeOrdered, not a global sort exchange).
+    // q_cooccur_window: ONE corpus scan, NO join (pairs are GENERATED by
+    // array transform, never a positional self-join — the quadratic shape
+    // this query must never regress to), the pair aggregation keyed with
+    // an xxhash64 prefix (xxhash>=1; 0 means the 8-byte sort-key trick
+    // fell off and sf100 spill-sorts compare wide token strings again),
+    // and exactly ONE exchange (the partial->final agg shuffle; the
+    // top-30 is a TakeOrdered, not a global sort exchange).
     "q_cooccur_window" -> { s =>
       if (s.corpusScans == 1 && s.corpusJoinKeys.isEmpty && s.xxhash >= 1 &&
           s.exchanges <= 1 && s.cartesian + s.bnlj == 0) None

@@ -12,25 +12,21 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   * runtime. This probe EXECUTES each query and walks the final adaptive
   * plan, counting FileScans vs ReusedExchange/ReusedSubquery nodes — the
   * ground truth for "does this corpus actually get scanned twice".
-  * (Found r9: q_threshold_sweep / q_dedup_rate / q_temperature_mix were
-  * NOT reused — their shared subtrees ended in broadcast joins or
-  * differing partial aggs, which AQE cannot dedupe — and were rewritten;
-  * the distinct/agg-shared shapes below reuse fine.)
+  * Shared subtrees that end in broadcast joins or differing partial
+  * aggregates are NOT deduped by AQE (q_threshold_sweep, q_dedup_rate and
+  * q_temperature_mix were rewritten for that reason); distinct- and
+  * aggregate-shared shapes reuse fine.
   *
-  * Round 13 (VERDICT r12 item 5): the audit walks the executed plan
-  * OBJECTS, not their string rendering. The previous regex-over-
-  * `plan.toString` was brittle against plan-format changes — and the
-  * switch immediately exposed two defects in its counts (177/179 rows
-  * identical, the 2 subquery-bearing plans corrected —
-  * bench_evidence/r13_scan_audit_treewalk.txt): (1) a nested adaptive
-  * subquery prints BOTH its "== Final Plan ==" and "== Initial Plan =="
-  * sections, so the regex double-counted that subquery's FileScan
-  * (q29_subqueries corpus 4→3, q_dpp_prune scratch 3→2); (2) its
-  * duplicate-stage-id reuse detection compared ids across nested
-  * adaptive plans, which each number stages from 0 — a cross-plan id
-  * collision is not reuse (see auditPlan). The walk is pinned by
-  * ReuseProbeSpec against one known-reused and one known-not-reused
-  * shape.
+  * The audit walks the executed plan OBJECTS, never their string
+  * rendering, because the rendering miscounts:
+  *   - a nested adaptive subquery prints BOTH its "== Final Plan ==" and
+  *     "== Initial Plan ==" sections, so a text scan double-counts that
+  *     subquery's FileScan (q29_subqueries reads corpus 3, not 4;
+  *     bench_evidence/r13_scan_audit_treewalk.txt);
+  *   - nested adaptive plans each number stages from 0, so equal stage
+  *     ids across plans are no reuse (see auditPlan).
+  * The walk is pinned by ReuseProbeSpec against one known-reused and one
+  * known-not-reused shape.
   */
 object ReuseProbe {
 
@@ -62,9 +58,9 @@ object ReuseProbe {
     (p +: below) ++ p.subqueries.flatMap(nodes)
   }
 
-  /** Object-walk audit of an executed plan (call after the plan has
-    * actually run — on an un-executed AdaptiveSparkPlanExec this would
-    * see the initial plan, the exact blindness fixed in round 12). */
+  /** Object-walk audit of an executed plan. Call it after the plan has
+    * actually run: an un-executed AdaptiveSparkPlanExec shows its initial
+    * plan, without the reuse and stage choices AQE makes at run time. */
   def auditPlan(plan: SparkPlan): Audit = {
     val all = nodes(plan)
     // v1 FileSourceScanExec covers every format this engine reads
@@ -86,8 +82,8 @@ object ReuseProbe {
     // its own AdaptiveSparkPlan with stage ids numbered from 0, so
     // comparing ids across plans manufactures false "reuse" whenever the
     // subquery's ShuffleQueryStage 0 meets the outer plan's
-    // BroadcastQueryStage 0 (the r12 string audit's reusedStages=1 on
-    // q29_subqueries was exactly this collision). AQE's actual reuse
+    // BroadcastQueryStage 0 (a reusedStages=1 reading on q29_subqueries
+    // was exactly this collision). AQE's actual reuse
     // path wraps a ReusedExchangeExec in a fresh stage, so the real
     // runtime-reuse signal is reusedNodes; this counter stays as the
     // defensive net for a literally-shared stage object.
@@ -105,14 +101,14 @@ object ReuseProbe {
       })
   }
 
-  /** Execute df's OWN QueryExecution and audit the finalized plan.
-    * (Round-12 review: a df.write...save() builds and runs a SEPARATE
-    * QueryExecution for the write command, leaving df.queryExecution
-    * un-executed — its AdaptiveSparkPlanExec then reports the INITIAL
-    * plan, so reuse read 0 structurally and scan counts came from the
-    * pre-AQE tree. toRdd is the same instance's executedPlan.execute();
-    * count() drives it to completion distributed-side with zero
-    * driver-side row materialization, and AQE finalizes in doExecute.) */
+  /** Execute df's OWN QueryExecution and audit the finalized plan. A
+    * df.write...save() would build and run a SEPARATE QueryExecution for
+    * the write command, leaving df.queryExecution un-executed: its
+    * AdaptiveSparkPlanExec would report the INITIAL plan, with reuse 0 by
+    * construction and scan counts from the pre-AQE tree. toRdd is the
+    * same instance's executedPlan.execute(); count() drives it to
+    * completion distributed-side with zero driver-side row
+    * materialization, and AQE finalizes in doExecute. */
   def audit(df: DataFrame): Audit = {
     df.queryExecution.toRdd.count()
     auditPlan(df.queryExecution.executedPlan)

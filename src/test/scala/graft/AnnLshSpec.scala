@@ -42,10 +42,7 @@ class AnnLshSpec extends SparkSpec {
     val e = PlantedEmbeddings.df(spark)
     val idx = graft.core.TempDirs.create("graft-lsh-planted")
     AnnLsh.buildIndex(e, idx, AnnLsh.Sharp)
-    val approx = AnnLsh.search(spark, idx, PlantedEmbeddings.queries(e)
-        .select(org.apache.spark.sql.functions.col("qid").as("vec_id"),
-          org.apache.spark.sql.functions.col("qemb").as("emb")),
-        AnnLsh.Sharp)
+    val approx = AnnLsh.search(spark, idx, PlantedEmbeddings.queries(e), AnnLsh.Sharp)
       .select("qid", "cand_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = PlantedEmbeddings.exactTopK(e, AnnLsh.TOP_K)
@@ -55,14 +52,12 @@ class AnnLshSpec extends SparkSpec {
   }
 
   test("radius-2 multi-probe: planted recall >= 0.9 at a bounded probe budget") {
-    import org.apache.spark.sql.functions._
     graft.GraftExtensions.ensureRegistered(spark)
     val e = PlantedEmbeddings.df(spark)
     val idx = graft.core.TempDirs.create("graft-lsh-r2")
     // Data side is radius-independent: one Sharp index serves all radii.
     AnnLsh.buildIndex(e, idx, AnnLsh.Sharp)
     val q = PlantedEmbeddings.queries(e)
-      .select(col("qid").as("vec_id"), col("qemb").as("emb"))
     val exact = PlantedEmbeddings.exactTopK(e, AnnLsh.TOP_K)
     def recallAt(shape: AnnLsh.Shape): Double = {
       val approx = AnnLsh.search(spark, idx, q, shape)
@@ -77,7 +72,7 @@ class AnnLshSpec extends SparkSpec {
     // The probe budget is the closed-form fixed fan-out, not data-driven:
     // per query per band 1 + C(12,1) + C(12,2) = 79 bucket lookups.
     val perBand = 1 + 12 + 12 * 11 / 2
-    val fanout = AnnLsh.bucketed(q.limit(1), AnnLsh.Sharp2, probe = true).count()
+    val fanout = AnnLsh.bucketed(e.limit(1), AnnLsh.Sharp2, probe = true).count()
     assert(fanout == AnnLsh.Sharp2.bands * perBand,
       s"radius-2 fan-out $fanout != ${AnnLsh.Sharp2.bands} * $perBand")
   }
@@ -94,6 +89,7 @@ class AnnLshSpec extends SparkSpec {
       .toDF("vec_id", "emb")
     AnnLsh.append(idx, newVecs, AnnLsh.Sharp)
     val q = e.filter(col("vec_id") === 0)
+      .select(col("vec_id").as("qid"), col("emb").as("qemb"))
     val top = AnnLsh.search(spark, idx, q, AnnLsh.Sharp)
       .select("cand_id").collect().map(_.getLong(0)).toSet
     assert(Set(9001L, 9002L).subsetOf(top),

@@ -1,15 +1,16 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{IndexManifest, TempDirs}
 import graft.dedup.MinHashDedup
-import graft.similarity.{AnnIvf, AnnLsh}
+import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh, AnnPq}
 
-/** Index-contract manifests (round-3 judge "What's missing #2"): every
-  * persisted index carries a manifest.json pinning its hash-family
-  * parameters, and append/search fail FAST on a mismatch instead of
-  * silently corrupting the index (an append signed with a different seed
-  * produces no error — just pairs that can never match). */
+/** Index-contract manifests: every persisted index carries a
+  * manifest.json pinning its hash-family parameters, and append/search
+  * fail FAST on a mismatch instead of silently corrupting the index (an
+  * append signed with a different seed produces no error — just pairs
+  * that can never match). */
 class IndexManifestSpec extends SparkSpec {
 
   private def docsFixture = {
@@ -24,17 +25,22 @@ class IndexManifestSpec extends SparkSpec {
 
   test("manifest write/read roundtrip with schema version") {
     val dir = TempDirs.create("graft-manifest-rt")
-    IndexManifest.write(spark, dir, Map("family" -> "test", "seed" -> "42"))
+    IndexManifest.build(spark, dir, Map("family" -> "test", "seed" -> "42")) { b =>
+      b.write("t", spark.range(3).toDF("id"))
+      b.param("k", "3")
+    }
     val m = IndexManifest.read(spark, dir)
-    assert(m("family") == "test" && m("seed") == "42")
+    assert(m("family") == "test" && m("seed") == "42" && m("k") == "3")
     assert(m("schema_version") == IndexManifest.SCHEMA_VERSION)
-    IndexManifest.verify(spark, dir, Map("family" -> "test"), "spec")
+    assert(m("table.t") == "id BIGINT NOT NULL", m)
+    assert(IndexManifest.open(spark, dir, Map("family" -> "test"), "spec")
+      .table("t").count() == 3)
   }
 
   test("strict parse: nested or hand-edited manifests throw, never parse partially") {
-    // The old regex parse would "find" the inner pairs of a nested object
-    // and silently verify against them; the strict parser must reject
-    // everything write() could not have produced (round-6 judge item #2).
+    // A lenient parse would "find" the inner pairs of a nested object and
+    // silently check against them; the strict parser must reject
+    // everything a build could not have written.
     val good = """{"family":"minhash-lsh","seed":"42"}"""
     assert(IndexManifest.parseFlat(good) ==
       Map("family" -> "minhash-lsh", "seed" -> "42"))
@@ -54,16 +60,16 @@ class IndexManifestSpec extends SparkSpec {
       val ex = intercept[IllegalStateException](IndexManifest.parseFlat(s))
       assert(ex.getMessage.contains("malformed index manifest"), s"input: $s")
     }
-    // End-to-end: a hand-edited manifest on disk fails verify loudly
+    // End-to-end: a hand-edited manifest on disk fails open loudly
     // instead of being accepted via a lenient partial parse.
     val dir = TempDirs.create("graft-manifest-tamper")
-    IndexManifest.write(spark, dir, Map("family" -> "test"))
+    IndexManifest.build(spark, dir, Map("family" -> "test"))(_ => ())
     val p = new java.io.File(s"$dir/${IndexManifest.FILE}")
     new java.io.File(s"$dir/.${IndexManifest.FILE}.crc").delete()
     java.nio.file.Files.writeString(p.toPath,
       """{"family":{"inner":"test"},"schema_version":"1"}""" + "\n")
     intercept[IllegalStateException] {
-      IndexManifest.verify(spark, dir, Map("family" -> "test"), "spec")
+      IndexManifest.open(spark, dir, Map("family" -> "test"), "spec")
     }
   }
 
@@ -91,10 +97,11 @@ class IndexManifestSpec extends SparkSpec {
   test("lsh search/append with a different seed or shape fails fast") {
     graft.GraftExtensions.ensureRegistered(spark)
     val e = PlantedEmbeddings.df(spark).limit(50)
+    val q = e.limit(1).select(col("vec_id").as("qid"), col("emb").as("qemb"))
     val idx = TempDirs.create("graft-lsh-manifest")
     AnnLsh.buildIndex(e, idx, AnnLsh.Sharp)
     val ex = intercept[IllegalStateException] {
-      AnnLsh.search(spark, idx, e.limit(1), AnnLsh.Sharp, seed = 8L)
+      AnnLsh.search(spark, idx, q, AnnLsh.Sharp, seed = 8L)
     }
     assert(ex.getMessage.contains("seed"))
     intercept[IllegalStateException] {
@@ -102,7 +109,7 @@ class IndexManifestSpec extends SparkSpec {
     }
     // multiProbe is a query-side knob, NOT index contract: same bands/bits
     // with a different probe radius must pass the check.
-    AnnLsh.search(spark, idx, e.limit(1), AnnLsh.Sharp2).collect()
+    AnnLsh.search(spark, idx, q, AnnLsh.Sharp2).collect()
   }
 
   test("ivf search refuses a directory without a manifest; family mismatch refused") {
@@ -123,28 +130,47 @@ class IndexManifestSpec extends SparkSpec {
   }
 
   test("failed rebuild over an existing index leaves no stale manifest") {
-    import spark.implicits._
-    val idx = TempDirs.create("graft-mh-rebuild")
-    MinHashDedup.buildIndex(docsFixture, idx, seed = 42L)
-    IndexManifest.verify(spark, idx, Map("family" -> "minhash-lsh"), "spec")
+    graft.GraftExtensions.ensureRegistered(spark)
+    val e = PlantedEmbeddings.df(spark).limit(50)
+    val q = e.limit(2).select(col("vec_id").as("qid"), col("emb").as("qemb"))
     // A rebuild whose first table write dies mid-flight: the udf throws on
-    // every row, so the toks overwrite fails after the old manifest was
-    // already invalidated.
+    // every row, so the first job (a table write; IVF is passed knownN so
+    // it runs no count first) fails after the old manifest was already
+    // deleted.
     val boom = udf((s: String) => {
       if (s != null) throw new RuntimeException("boom"); s
     })
-    intercept[Exception] {
-      MinHashDedup.buildIndex(
-        docsFixture.withColumn("text", boom(col("text"))), idx, seed = 42L)
-    }
-    // Presence certifies a COMPLETE build: the wrecked dir must carry no
-    // manifest (the previous build's was deleted before the first
-    // overwrite), so every read/append path fails fast instead of
-    // accepting mixed old/new tables whose parameters happen to match.
-    assert(IndexManifest.read(spark, idx).isEmpty,
-      "stale manifest survived a failed rebuild")
-    intercept[IllegalStateException] {
-      MinHashDedup.appendToIndex(docsFixture, idx, seed = 42L)
+    val boomEmb = udf((v: Seq[Double]) => {
+      if (v != null) throw new RuntimeException("boom"); v
+    })
+    val brokenEmb = e.withColumn("emb", boomEmb(col("emb")))
+    // (family, input, broken input, build, a search or append that opens)
+    val families: Seq[(String, DataFrame, DataFrame, (DataFrame, String) => Unit,
+        String => Unit)] = Seq(
+      ("minhash", docsFixture, docsFixture.withColumn("text", boom(col("text"))),
+        (in, d) => MinHashDedup.buildIndex(in, d, seed = 42L),
+        d => MinHashDedup.appendToIndex(docsFixture, d, seed = 42L)),
+      ("ivf", e, brokenEmb, (in, d) => AnnIvf.fit(in, d, k = 4, knownN = 50L),
+        d => AnnIvf.search(spark, d, q)),
+      ("lsh", e, brokenEmb, (in, d) => AnnLsh.buildIndex(in, d),
+        d => AnnLsh.append(d, e.limit(1))),
+      ("pq", e, brokenEmb, (in, d) => AnnPq.fit(in, d),
+        d => AnnPq.append(spark, d, e.limit(1))),
+      ("ivfpq", e, brokenEmb, (in, d) => AnnIvfPq.fit(in, d, coarseK = 8),
+        d => AnnIvfPq.search(spark, d, q)))
+    families.foreach { case (family, input, broken, build, opens) =>
+      val idx = TempDirs.create(s"graft-$family-rebuild")
+      build(input, idx)
+      assert(IndexManifest.read(spark, idx).nonEmpty, s"$family: no manifest after a build")
+      intercept[Exception](build(broken, idx))
+      // Presence certifies a COMPLETE build: the wrecked dir must carry no
+      // manifest (the previous build's was deleted before the first
+      // overwrite), so every read/append path fails fast instead of
+      // accepting mixed old/new tables whose parameters happen to match.
+      assert(IndexManifest.read(spark, idx).isEmpty,
+        s"$family: stale manifest survived a failed rebuild")
+      val ex = intercept[IllegalStateException](opens(idx))
+      assert(ex.getMessage.contains(s"no ${IndexManifest.FILE}"), s"$family: ${ex.getMessage}")
     }
   }
 

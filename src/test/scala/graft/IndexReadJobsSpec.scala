@@ -92,10 +92,10 @@ class IndexReadJobsSpec extends SparkSpec {
   test("building pairsFromIndex runs only its candidate barrier's jobs") {
     val idx = TempDirs.create("graft-mh-jobs")
     MinHashDedup.buildIndex(docs, idx)
-    val manifest = IndexManifest.read(spark, idx)
+    val index = IndexManifest.open(spark, idx, Map.empty, "spec")
     val (_, barrier) = JobCount(spark)(Materialize(
       MinHashDedup.candidatePairs(MinHashDedup.bandSignatures(
-        IndexManifest.table(spark, idx, manifest, "sigs"))), "minhash-cands"))
+        index.table("sigs"))), "minhash-cands"))
     val (pairs, jobs) = JobCount(spark)(MinHashDedup.pairsFromIndex(spark, idx))
     assert(barrier > 0 && jobs == barrier,
       s"pairsFromIndex ran $jobs jobs while being built; its barrier runs $barrier")
@@ -151,7 +151,7 @@ class IndexReadJobsSpec extends SparkSpec {
         assert(declared.toDDL == ddl, s"$family/$name: DDL does not round-trip")
         assert(declared == ddlView(footerSchema(s"$d/$name")),
           s"$family/$name: recorded $ddl, wrote ${footerSchema(s"$d/$name").toDDL}")
-        assert(IndexManifest.table(spark, d, manifest, name).schema ==
+        assert(IndexManifest.open(spark, d, Map.empty, "spec").table(name).schema ==
           spark.read.parquet(s"$d/$name").schema, s"$family/$name: read schema")
       }
     }
