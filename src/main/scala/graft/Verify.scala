@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.core.Measure
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -25,28 +26,18 @@ object Verify {
         graft.core.TempDirs.delete(s"$outDir/$name")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Measure.str escapes every control character: a tab or CR in the
+    // SQL text would otherwise make the oracle compare's json.load fail
+    // and zero the correctness check.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Measure.obj(
+      SparkEntry.oracleSql.toSeq.map { case (k, v) => k -> Measure.str(v) }: _*))
     // Full registry listing: oracle_sql.json is only the SQL-expressible
     // SUBSET of the registry by contract, so tools that need "every
     // registered query" (scan_check's budgeted-but-unprobed cross-check)
     // must not use it as the registry — a future oracle-less query would
     // silently fall outside their guarantee.
     Files.writeString(Paths.get(s"$outDir/registry.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      Measure.arr(SparkEntry.queries.keys.toSeq.sorted.map(Measure.str)))
     graft.core.TempDirs.cleanupAll()
     spark.stop()
   }

@@ -244,16 +244,29 @@ object IndexManifest {
       * join silently drops, a degraded top-k with no error. */
     def append(tables: (String, DataFrame)*): Unit = {
       tables.foreach { case (name, df) =>
-        val want = schemaOf(name)
-        if (relaxed(want) != relaxed(df.schema))
-          throw new IllegalStateException(
-            s"$op: table '$name' at $indexDir has schema ${want.toDDL}, the " +
-              s"appended frame has ${df.schema.toDDL}")
+        if (relaxed(schemaOf(name)) != relaxed(df.schema)) refuse(name, df)
       }
       tables.foreach { case (name, df) =>
         df.write.mode("append").parquet(s"$indexDir/$name")
       }
     }
+
+    /** The [[append]] check for a frame the appended rows are derived
+      * from: each of its columns that table `name` records must carry the
+      * recorded type. A derivation that reads the column (IVF's cosine
+      * cell assignment reads `emb`) would otherwise fail on the wrong
+      * type first, with an error that names neither schema. */
+    def requireColumns(name: String, df: DataFrame): Unit = {
+      val want = schemaOf(name)
+      if (df.schema.fields.exists(f => want.fieldNames.contains(f.name) &&
+          relaxed(want(f.name).dataType) != relaxed(f.dataType)))
+        refuse(name, df)
+    }
+
+    private def refuse(name: String, df: DataFrame): Nothing =
+      throw new IllegalStateException(
+        s"$op: table '$name' at $indexDir has schema ${schemaOf(name).toDDL}, " +
+          s"the appended frame has ${df.schema.toDDL}")
   }
 
   /** `t` with every field, element and value nullable and no metadata. */

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -26,10 +26,8 @@ object CosineSimilarity {
 }
 
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends DoubleArrayInputs {
 
-  // No ExpectsInputTypes: AbstractDataType is private[sql] in Spark 4, so
-  // callers cast to array<double> explicitly (every call site does).
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
 

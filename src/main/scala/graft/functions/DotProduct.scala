@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -29,11 +29,8 @@ object DotProduct {
 }
 
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends DoubleArrayInputs {
 
-  // No ExpectsInputTypes: AbstractDataType is private[sql] in Spark 4, so
-  // callers cast to array<double> explicitly (every call site does) and
-  // checkInputDataTypes below enforces it at analysis time.
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
@@ -44,19 +41,6 @@ case class DotProduct(left: Expression, right: Expression)
   // primitive read of a null slot returns undefined content, typically
   // 0.0). Null-free equal-length inputs accumulate exactly as before.
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    def ok(t: DataType): Boolean = t match {
-      case org.apache.spark.sql.types.ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]

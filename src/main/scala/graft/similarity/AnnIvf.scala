@@ -177,6 +177,7 @@ object AnnIvf {
     // pointing append at a different index family's directory.
     val index = IndexManifest.open(s, indexDir,
       Map("family" -> "ivf-cosine"), "AnnIvf.append")
+    index.requireColumns("assigned", newVecs)
     index.append("assigned" -> assign(newVecs, index.table("centroids")))
   }
 

@@ -134,9 +134,18 @@ object StreamingOps {
 
   /** Run a stream over everything its source holds at start, then stop.
     * Every streaming query here starts and ends in this call, whatever its
-    * sink, so a change to per-micro-batch cost is made once. */
-  def runToEnd(writer: DataStreamWriter[Row]): Unit =
-    writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+    * sink, so a change to per-micro-batch cost is made once. A query whose
+    * caller owns no `checkpoint` runs on a TempDirs one, deleted when the
+    * run returns or throws: without one Spark creates a
+    * `temporary-<uuid>` dir under java.io.tmpdir and keeps it when the
+    * query fails. */
+  def runToEnd(writer: DataStreamWriter[Row],
+      checkpoint: Option[String] = None): Unit = {
+    val dir = checkpoint.getOrElse(graft.core.TempDirs.create("graft-stream-chk"))
+    try writer.option("checkpointLocation", dir)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally if (checkpoint.isEmpty) graft.core.TempDirs.delete(dir)
+  }
 
   /** Drain a streaming frame into a memory sink and return the final table. */
   def drain(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
@@ -455,8 +464,7 @@ object StreamingOps {
     def drainOnce(): Unit =
       runToEnd(closedHourCounts(replay(s, chunks)).writeStream.format("parquet")
         .option("path", s"$outDir/data")
-        .option("checkpointLocation", s"$outDir/chk")
-        .outputMode(OutputMode.Append()))
+        .outputMode(OutputMode.Append()), Some(s"$outDir/chk"))
     drainOnce()
     drainOnce() // second drain over the same checkpoint must add nothing
     s.read.parquet(s"$outDir/data")
@@ -546,8 +554,7 @@ object StreamingOps {
     runToEnd(replay(s, prepareChunks(s, dir)).writeStream
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
         mergeBatch(s, tableDir, batch.toDF(), id)
-      }
-      .option("checkpointLocation", s"$tableDir/chk"))
+      }, Some(s"$tableDir/chk"))
     val applied = new String(Files.readAllBytes(Paths.get(tableDir, "MANIFEST")),
       "UTF-8").trim.toLong
     s.read.parquet(s"$tableDir/v$applied")

@@ -1,10 +1,10 @@
 package graft.tools
 
 import graft.PlantedEmbeddings
+import graft.core.Measure
 import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh}
 
-/** Second-measured-decade evidence for the similarity tier (VERDICT r8
-  * item 9; extended to the full family set per VERDICT r9 item 6):
+/** Second-measured-decade evidence for the similarity tier:
   * fit + search latency AND recall for IVF, LSH, and IVF-PQ at the 10×
   * and 100× planted-cluster corpus sizes (5k → 50k vectors — the same
   * decade the relational scale suite measures as sf1 → sf10).
@@ -12,7 +12,7 @@ import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh}
   * The PLANTED fixture is used instead of the chained-rotation
   * `localdata/sf10` embeddings because the 64-dim rotation family runs
   * out of distinct transforms at a 100-replica chain and plants exact
-  * duplicates (documented fixture limit, BENCH_NOTES r7) — recall
+  * duplicates (a documented fixture limit, BENCH_NOTES.md) — recall
   * against duplicated ground truth would be ill-defined. Planted
   * clusters keep recall a REQUIREMENT at every scale: each query's true
   * neighbors are its cluster siblings by construction.
@@ -63,21 +63,22 @@ object AnnScale {
       def measure(family: String)(fit: String => Unit,
           search: String => org.apache.spark.sql.DataFrame): Unit = {
         val idx = graft.core.TempDirs.create(s"graft-annscale-$family-$numClusters")
-        val t0 = System.nanoTime()
-        fit(idx)
-        val fitS = (System.nanoTime() - t0) / 1e9
-        search(idx).count() // warm
-        val t1 = System.nanoTime()
-        val approx = search(idx).select("qid", "cand_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val searchS = (System.nanoTime() - t1) / 1e9
-        val recall = PlantedEmbeddings.recall(exact, approx)
-        // Locale-pinned decimals on the machine-parsed JSONL line
-        // (ADVICE r6 class, swept round 13): the f interpolator uses
-        // the default JVM locale; comma decimals would break the parse.
-        def jfmt(d: Double, digits: Int) = String.format(
-          java.util.Locale.ROOT, s"%.${digits}f", Double.box(d))
-        println(s"""{"family":"$family","n":$n,"num_clusters":$numClusters,"coarse_k":$coarseK,"nprobe":$nprobe,"queries":$nq,"fit_sec":${jfmt(fitS, 2)},"search_sec":${jfmt(searchS, 3)},"recall":${jfmt(recall, 4)}}""")
+        val fitS = Measure.time("annscale", s"$family fit")(fit(idx))
+        // A failed fit or warm search leaves nothing to time: the line
+        // reads -1 for what could not run instead of ending the sweep.
+        val warmed = fitS >= 0 &&
+          Measure.time("annscale", s"$family search warmup")(search(idx).count()) >= 0
+        val (searchS, approx) =
+          if (!warmed) (-1.0, None)
+          else Measure.timed("annscale", s"$family search")(
+            search(idx).select("qid", "cand_id").collect()
+              .map(r => (r.getLong(0), r.getLong(1))).toSet)
+        val recall = approx.map(PlantedEmbeddings.recall(exact, _)).getOrElse(-1.0)
+        println(Measure.obj("family" -> Measure.str(family), "n" -> n.toString,
+          "num_clusters" -> numClusters.toString, "coarse_k" -> coarseK.toString,
+          "nprobe" -> nprobe.toString, "queries" -> nq.toString,
+          "fit_sec" -> Measure.num(fitS, 2), "search_sec" -> Measure.num(searchS, 3),
+          "recall" -> Measure.num(recall, 4)))
       }
       if (families.contains("ivfpq"))
         measure("ivfpq")(

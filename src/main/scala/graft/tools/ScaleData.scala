@@ -42,8 +42,8 @@ object ScaleData {
     val tag = args.lift(3).getOrElse("")
     // Optional 5th arg: csv of table names to expand (default all). A
     // decade whose suite reads only `documents` doesn't need 600 M
-    // lineitem rows written first — partial dirs are supported by Bench's
-    // scale block (a missing table fails its query loudly with the -1
+    // lineitem rows written first — partial dirs are supported by
+    // BatchScale (a missing table fails its query loudly with the -1
     // sentinel, never silently).
     val tables = args.lift(4).map(_.split(",").map(_.trim).toSet)
     val spark = graft.core.Session.local(
@@ -60,13 +60,13 @@ object ScaleData {
 
   /** Every table an expansion can write — the src-sanity precondition
     * checks the WANTED subset of these exists before any destructive
-    * step (ADVICE r15). */
+    * step. */
   private val AllTables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Marker format since round 16 (ADVICE r15): line 1 = tag, line 2 =
-    * "factor=N". Pre-r16 markers carry only the tag line; readers treat
-    * their factor as unknown. Returns (tag, factor). */
+  /** Marker format: line 1 = tag, line 2 = "factor=N", so a partial
+    * re-expansion can verify both. Older markers carry only the tag line;
+    * readers treat their factor as unknown. Returns (tag, factor). */
   private def readMarker(f: java.io.File): (String, Option[Int]) = {
     val src = scala.io.Source.fromFile(f)
     val lines = try src.getLines().toList finally src.close()
@@ -84,33 +84,29 @@ object ScaleData {
     *   with level-1 replica i = j and planting exact duplicate documents
     *   across the two levels (fused LSH buckets, inflated pair counts).
     *   A sf1→sf10 run passes e.g. "b" so level-2 salts read `t~b3`,
-    *   disjoint from every level-1 salt by construction. Since round 14
-    *   this is ENFORCED, not advisory: every expansion stamps its tag
+    *   disjoint from every level-1 salt by construction. This is
+    *   ENFORCED, not advisory: every expansion stamps its tag
     *   into `_scale_tag.txt` in dst, and expanding a marked dir requires
     *   a fresh non-empty tag (a reused tag would not just collide salts —
     *   it would un-flip the embedding sign patterns back to exact
     *   duplicates, since sign flips square to one). The tag feeds
     *   the embedding sign-flip hash the same way, so level-2 sign
     *   patterns are independent of level-1's and chained embeddings stay
-    *   duplicate-free (the pre-round-13 cyclic rotation offered only 64
-    *   distinct transforms and excluded the embedding family from
-    *   chained-dir measurements; the sign-flip transform removed that
-    *   caveat).
+    *   duplicate-free at any chaining depth.
     *
-    *   Byte-inflation caveat (round 12): each salting level LENGTHENS
+    *   Byte-inflation caveat: each salting level LENGTHENS
     *   tokens (~2.7 chars/token per level — measured 7.29 chars/token at
     *   sf1 vs 9.99 at chained sf10, corpus bytes ×13.71 per ×10 docs;
     *   ×13.28 already at the FIRST level, sf0.1→sf1), so byte-bound
     *   operators (per-character explodes, string-heavy projections) read
     *   RAW time-exponents up to ~log10(13.7) = 1.14 when their per-byte
-    *   truth is 1.0. Since round 13 the Bench scale block measures the
-    *   per-dir corpus chars itself and emits `bytes_factor` +
-    *   `exponents_bytes` next to the raw exponents (VERDICT r12 item 3)
-    *   — read those for token/byte-bound queries. Vocab loads and
-    *   chars/token are in bench_evidence/r12_vocab_probe.txt. */
+    *   truth is 1.0. BatchScale therefore measures the per-dir corpus
+    *   chars itself and emits `bytes_factor` + `exponents_bytes` next to
+    *   the raw exponents — read those for token/byte-bound queries. Vocab
+    *   loads and chars/token are in bench_evidence/r12_vocab_probe.txt. */
   def expand(s: SparkSession, src: String, dst: String, factor: Int,
       tag: String = "", tables: Option[Set[String]] = None): Unit = {
-    // Chained-tag guard (ADVICE r13): expanding a ScaleData OUTPUT with
+    // Chained-tag guard: expanding a ScaleData OUTPUT with
     // the same tag (e.g. both default "") is worse than the token-salt
     // collision the scaladoc warns about — the embedding sign flips
     // square to one, so level-2 replica j applies level-1 replica j's
@@ -126,14 +122,14 @@ object ScaleData {
           "embedding sign patterns back to exact duplicates — pass a " +
           "distinct non-empty tag")
     }
-    // Partial re-expansion guard (ADVICE r14): writing a SUBSET of tables
+    // Partial re-expansion guard: writing a SUBSET of tables
     // under a new tag into a dst built with a different tag would leave
     // mixed-tag tables behind one marker — the chain guard above would
     // then reason over the wrong tag for the untouched tables. A FULL
     // re-expand legitimately rebrands (every table is rewritten); a
     // partial one must match the tag the dir already carries. A partial
-    // into an UNMARKED dir that already holds tables is refused too
-    // (round-15 review): pre-marker legacy dirs carry an unknowable tag,
+    // into an UNMARKED dir that already holds tables is refused too:
+    // pre-marker legacy dirs carry an unknowable tag,
     // so stamping this run's tag over them would vouch for salts it
     // never wrote — full-expand the dir or retrofit its true marker.
     val dstMarker = new java.io.File(dst, TagMarker)
@@ -145,7 +141,7 @@ object ScaleData {
             s"(tables=${tables.get.toSeq.sorted.mkString(",")}) with tag " +
             s"'${tag.trim}' would mix salts behind one marker — reuse tag " +
             s"'$dstTag' or rewrite the full dir")
-        // Factor must match too (ADVICE r15): a same-tag partial with a
+        // Factor must match too: a same-tag partial with a
         // DIFFERENT factor passes the tag check but leaves mixed-factor
         // tables (inconsistent key strides / row counts) behind one
         // marker — the same mixed-provenance class. A legacy marker
@@ -158,7 +154,7 @@ object ScaleData {
                 s"with factor $factor would mix key strides behind one " +
                 s"marker — reuse factor $df or rewrite the full dir"
             case None =>
-              s"$dst's marker carries no factor line (pre-r16 format): a " +
+              s"$dst's marker carries no factor line (older format): a " +
                 "partial re-expansion cannot verify stride consistency — " +
                 s"retrofit the marker (append 'factor=N' with the dir's " +
                 "true factor) or rewrite the full dir"
@@ -174,12 +170,12 @@ object ScaleData {
       }
     }
     def want(name: String): Boolean = tables.forall(_.contains(name))
-    // Src sanity BEFORE any destructive step (ADVICE r15): the rebrand
-    // invalidation below deletes dst's marker first, so a full re-expand
-    // with a typo'd src path used to destroy a valid dir's provenance
-    // marker without writing a single table. Every WANTED table must
-    // exist under src before the marker is touched; a doomed run now
-    // fails here with the dst untouched. (Existence only — a corrupt
+    // Src sanity BEFORE any destructive step: the rebrand invalidation
+    // below deletes dst's marker first, so a full re-expand with a typo'd
+    // src path would destroy a valid dir's provenance marker without
+    // writing a single table. Every WANTED table must exist under src
+    // before the marker is touched; a doomed run fails here with the dst
+    // untouched. (Existence only — a corrupt
     // table still fails mid-run, which is exactly what the
     // invalidate-first pattern below exists for.)
     val missingSrc = AllTables.filter(want)
@@ -187,7 +183,7 @@ object ScaleData {
     require(missingSrc.isEmpty,
       s"src $src is missing ${missingSrc.mkString(",")} — refusing before " +
         s"touching $dst (a doomed run must not invalidate its marker)")
-    // Rebrand invalidation (round-15 review): a FULL re-expand with a new
+    // Rebrand invalidation: a FULL re-expand with a new
     // tag spans many long parquet writes; a crash mid-run must not leave
     // the OLD marker vouching for a half-rebranded dir. Delete it first —
     // the fresh marker is re-stamped only after every table lands
@@ -195,7 +191,7 @@ object ScaleData {
     if (tables.isEmpty && dstMarker.isFile && !dstMarker.delete())
       throw new java.io.IOException(s"could not invalidate $dstMarker before rebrand")
     def rd(name: String): DataFrame = s.read.parquet(s"$src/$name.parquet")
-    // Fact tables repartition before write (round 14): the expansion's
+    // Fact tables repartition before write: the expansion's
     // lineage is narrow (read → explode → project, no shuffle), so the
     // output file count equals the SOURCE's — a single-file documents
     // input stays a single file (= one parquet row group = scan
@@ -254,9 +250,8 @@ object ScaleData {
     // events: written as TIMESTAMP micros (ts div 1000 — the same ns→µs
     // truncation Tables.t and DuckDB both apply to the driver fixture's
     // TIMESTAMP(NANOS) column), so DuckDB types the scaled table as
-    // TIMESTAMP and the events-family oracles hash-match at sf1+ (the r06
-    // raw-INT64 layout read as BIGINT and excluded the whole family from
-    // the scale-correctness evidence). Tables.t branches on the read
+    // TIMESTAMP and the events-family oracles hash-match at sf1+ (a raw
+    // INT64 layout reads as BIGINT there). Tables.t branches on the read
     // dtype, so both layouts stay loadable. Conf restored afterward —
     // expand() also runs on shared test sessions, where leaving
     // nanosAsLong set would change how a later plain spark.read sees
@@ -304,12 +299,10 @@ object ScaleData {
     // every norm and cosine — is preserved TERM FOR TERM (bitwise-equal
     // accumulation), while cross-replica dot products are sign-modulated
     // (near-orthogonal in expectation): replicas never fuse into the same
-    // near-dup neighborhoods. Unlike the previous 64-position cyclic
-    // rotation (which offered only 64 distinct transforms and planted
-    // exact duplicates past 64 replicas — the "embedding family excluded
-    // from chained dirs" caveat in BENCH_NOTES through round 13), the
-    // 2^64 possible sign patterns make collisions impossible in practice
-    // at any chaining depth; the tag feeds the hash so level-2 patterns
+    // near-dup neighborhoods. The 2^64 possible sign patterns make
+    // collisions impossible in practice at any chaining depth (a cyclic
+    // rotation of 64 positions would plant exact duplicates past 64
+    // replicas); the tag feeds the hash so level-2 patterns
     // are independent of level-1's (same mechanism as the token salt).
     // ScaleDataSpec asserts both invariants: bitwise-preserved
     // within-replica cosines, and zero duplicate vectors across a chained

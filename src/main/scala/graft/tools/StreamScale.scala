@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.{IoProbe, Measure}
 
 /** Streaming-tier scale measurement — the decade evidence the batch
   * (sf0.1→sf1→sf10) and similarity (AnnScale) tiers already carry,
@@ -25,31 +26,31 @@ package graft.tools
   * borderline reading is retested min-of-N in isolation before it is
   * believed.
   *
-  * The run brackets itself with the same 64 MB fsync'd write probe Bench
-  * uses, emitted as `#`-comment JSON lines that stream_diff skips, so a
-  * recorded epoch file carries the IO health of the window it was taken
-  * in. Capture with `grep -E '^#|\"query\"'` to keep the probe lines.
+  * The run brackets itself with the shared graft.core.IoProbe, emitted
+  * as `#`-comment JSON lines that stream_diff skips, so a recorded epoch
+  * file carries the IO health of the window it was taken in. Capture
+  * with `grep -E '^#|\"query\"'` to keep the probe lines.
   */
 object StreamScale {
 
-  /** Locale-pinned decimal rendering for every number on a parsed line:
-    * the f interpolator uses the default JVM locale, so a comma-decimal
-    * locale would emit invalid JSON and split each probe sample in two. */
-  private def fmt(d: Double, digits: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(d))
-
-  /** Three graft.core.IoProbe samples 5 s apart, ALL recorded: a single
-    * post-run sample reads the run's own page-cache writeback backlog,
-    * not the environment (measured: 93 MB/s immediately after a sf10
-    * drain, 438+ within a minute). Contention only ever subtracts, so
-    * the MAX sample is the environment's capability — that is what the
-    * healthy-band check applies to; the spread documents the artifact. */
-  private def printIoProbe(when: String, path: String): Unit = {
+  /** Three samples 5 s apart, all recorded: a single post-run sample reads
+    * the run's own page-cache writeback backlog, not the environment
+    * (93 MB/s right after a sf10 drain, 438+ within a minute). Contention
+    * only ever subtracts, so the max sample is the side's probe reading.
+    * `healthy` stamps the certification rule over every side so far: on
+    * the post line it certifies the whole run. */
+  private def ioProbe(when: String, path: String, pre: Option[Double]): Double = {
     val samples = (0 until 3).map { i =>
       if (i > 0) Thread.sleep(5000)
-      graft.core.IoProbe.mbPerSec(path)
+      IoProbe.mbPerSec(path)
     }
-    println(s"""# {"io_probe_mb_s":[${samples.map(fmt(_, 1)).mkString(",")}],"when":"$when","path":"$path"}""")
+    val best = samples.max
+    val healthy = IoProbe.certifies(pre.getOrElse(best), best)
+    println("# " + Measure.obj(
+      "io_probe_mb_s" -> Measure.arr(samples.map(Measure.num(_, 1))),
+      "when" -> Measure.str(when), "path" -> Measure.str(path),
+      "healthy" -> healthy.toString))
+    best
   }
   private val Queries = Seq(
     "q38_stream_tumbling", "q41_stream_dedup", "q_stream_stream_join",
@@ -71,14 +72,13 @@ object StreamScale {
     // runs the same pre-sink pipelines (measurementStreams) to the end
     // with no rows retained; both dirs are measured under it, so the
     // decade exponents stay comparable.
-    def runOnce(name: String, dir: String): Double = {
-      val (stream, mode) = graft.streaming.StreamingOps
-        .measurementStreams(name)(spark, dir)
-      val t0 = System.nanoTime()
-      graft.streaming.StreamingOps.runToEnd(
-        stream.writeStream.format("noop").outputMode(mode))
-      (System.nanoTime() - t0) / 1e9
-    }
+    def runOnce(name: String, dir: String): Double =
+      Measure.time("streamscale", name) {
+        val (stream, mode) = graft.streaming.StreamingOps
+          .measurementStreams(name)(spark, dir)
+        graft.streaming.StreamingOps.runToEnd(
+          stream.writeStream.format("noop").outputMode(mode))
+      }
     // Suite scope + run count: unknown names are dropped loudly (the
     // shared EnvSuite contract), malformed run counts fall back to the
     // default instead of crashing the measurement.
@@ -86,20 +86,24 @@ object StreamScale {
       Queries, Queries.contains, "streamscale")
     val nRuns = math.max(1, scala.util.Try(
       sys.env("SPARK_GRAFT_STREAM_RUNS").trim.toInt).getOrElse(2))
-    val probePath =
-      graft.core.IoProbe.path(spark.conf.getOption("spark.local.dir"))
-    printIoProbe("pre", probePath)
+    val probePath = IoProbe.path(spark.conf.getOption("spark.local.dir"))
+    val pre = ioProbe("pre", probePath, None)
     Seq(base, scaled).filter(d => new java.io.File(d).exists).foreach { dir =>
       val n = graft.core.Tables.t(spark, dir, "events").count()
       graft.streaming.StreamingOps.prepareChunks(spark, dir) // warm fixture
       suite.foreach { name =>
         runOnce(name, dir) // warm pass: plan compile + codegen
         val secs = (0 until nRuns).map(_ => runOnce(name, dir))
-        val best = secs.min
-        println(s"""{"query":"$name","dir":"$dir","events":$n,"sink":"noop","runs":[${secs.map(fmt(_, 3)).mkString(",")}],"min_sec":${fmt(best, 3)},"events_per_sec":${(n / best).toLong}}""")
+        val best = Measure.min(secs)
+        println(Measure.obj("query" -> Measure.str(name),
+          "dir" -> Measure.str(dir), "events" -> n.toString,
+          "sink" -> Measure.str("noop"),
+          "runs" -> Measure.arr(secs.map(Measure.num(_, 3))),
+          "min_sec" -> Measure.num(best, 3),
+          "events_per_sec" -> (if (best > 0) (n / best).toLong else -1L).toString))
       }
     }
-    printIoProbe("post", probePath)
+    ioProbe("post", probePath, Some(pre))
     graft.core.TempDirs.cleanupAll()
     spark.stop()
   }

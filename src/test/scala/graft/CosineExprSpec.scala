@@ -76,4 +76,18 @@ class CosineExprSpec extends SparkSpec {
       assert(!got(4).isNullAt(0) && got(4).getDouble(0) == 25.0 / (5.0 * 5.0))
     }
   }
+
+  test("array<float> input fails analysis naming both argument types") {
+    GraftExtensions.ensureRegistered(spark)
+    val df = Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f), Array(1.0, 2.0)))
+      .toDF("f1", "f2", "d")
+    Seq(("f1", "f2", "array<float> and array<float>"),
+        ("f1", "d", "array<float> and array<double>")).foreach { case (a, b, types) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(call_function("graft_cosine", col(a), col(b))).collect()
+      }
+      assert(e.getMessage.contains(s"graft_cosine requires two array<double> " +
+        s"arguments, got $types"), e.getMessage)
+    }
+  }
 }

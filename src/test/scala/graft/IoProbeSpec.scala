@@ -3,10 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.IoProbe
 
-/** Pins the shared IO probe's path resolution and failure contract —
-  * the round-13 review found the (since-deleted) StreamScale copy
-  * probing a junk directory named after the whole SPARK_LOCAL_DIRS
-  * comma list; these rules are now regression-locked. */
+/** Pins the shared IO probe's path resolution, failure contract and
+  * certification rule: a copy of the probe once mkdir'd a junk directory
+  * named after the whole SPARK_LOCAL_DIRS comma list, and each main that
+  * kept its own health rule handled the -1 sample its own way. */
 class IoProbeSpec extends AnyFunSuite {
 
   test("SPARK_LOCAL_DIRS comma list: first non-empty trimmed entry wins") {
@@ -33,5 +33,26 @@ class IoProbeSpec extends AnyFunSuite {
     // /dev/null is a file: mkdirs under it fails, probe must report -1
     // rather than throw (the probe is evidence, not a precondition).
     assert(IoProbe.mbPerSec("/dev/null/sub") == -1.0)
+  }
+
+  test("a window certifies only between two in-band probes that both ran") {
+    val ok = IoProbe.HealthyMbS
+    assert(IoProbe.certifies(ok, ok + 100))
+    assert(!IoProbe.certifies(ok - 1, ok + 100))
+    assert(!IoProbe.certifies(-1.0, ok + 100))
+    assert(!IoProbe.certifies(ok + 100, -1.0))
+  }
+
+  test("a -1 sample is not degraded, so it never waits") {
+    assert(IoProbe.degraded(IoProbe.HealthyMbS - 1))
+    assert(!IoProbe.degraded(IoProbe.HealthyMbS))
+    assert(!IoProbe.degraded(-1.0))
+    assert(IoProbe.awaitBand("/dev/null/sub", -1.0, 5, "spec", waitMs = 0)
+      == Seq(-1.0))
+    assert(IoProbe.awaitBand("/dev/null/sub", IoProbe.HealthyMbS, 5, "spec",
+      waitMs = 0) == Seq(IoProbe.HealthyMbS))
+    // Degraded: re-probes; the impossible dir reads -1 and ends the wait.
+    assert(IoProbe.awaitBand("/dev/null/sub", 10.0, 5, "spec", waitMs = 0)
+      == Seq(10.0, -1.0))
   }
 }

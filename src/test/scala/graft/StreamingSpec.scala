@@ -14,6 +14,22 @@ class StreamingSpec extends SparkSpec {
     assert(streamRows == batchRows)
   }
 
+  test("a failing drain leaves no temporary checkpoint under java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def temporaries: Set[String] =
+      Option(tmp.list()).toSeq.flatten.filter(_.startsWith("temporary-")).toSet
+    val boom = udf((t: String) =>
+      if (t != null) throw new IllegalStateException("planted drain failure") else t)
+    val stream = StreamingOps.replay(spark, StreamingOps.prepareChunks(spark, sf))
+      .select(boom(col("event_type")).as("t"))
+    val before = temporaries
+    intercept[Exception] {
+      StreamingOps.drain(stream, "failing_drain_sink",
+        org.apache.spark.sql.streaming.OutputMode.Append())
+    }
+    assert((temporaries -- before).isEmpty)
+  }
+
   test("q40 session windows equal the batch sessionization counts") {
     val streamRows = StreamingOps.q40(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
