@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CosineSimilarity, DotProduct, SimHash}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import graft.functions.{CosineSimilarity, DotProduct, MinHash, SimHash}
 
 /** Session extension: registers the engine's native expressions AND its
   * custom operator strategies. Attach with
@@ -33,7 +33,10 @@ object GraftExtensions {
       c => DotProduct(c(0), c(1))),
     ("graft_simhash",
       "graft_simhash(v) - 48-bit SimHash of a group's 48-bit token hashes",
-      c => SimHash(c(0))))
+      c => SimHash(c(0))),
+    ("graft_minhash",
+      "graft_minhash(hs[, seed]) - MinHash signature of an array of shingle hashes",
+      c => MinHash(c(0), c.lift(1).getOrElse(Literal(MinHash.DefaultSeed)))))
 
   /** Idempotent in-session registration for sessions built without the
     * extensions conf (e.g. the driver's own Verify session). */

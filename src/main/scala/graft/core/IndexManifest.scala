@@ -202,9 +202,14 @@ object IndexManifest {
         case None => Some(s"$k: missing from manifest, caller passed '$v'")
       }
     }
+    // A field the manifest lacks is a layout this version does not read
+    // (e.g. a MinHash index with a separate token table, from before the
+    // `layout` field): only a rebuild helps. A differing value may be the
+    // caller's parameter, so both fixes are named.
     if (bad.nonEmpty)
       throw new IllegalStateException(
-        s"$op: incompatible index at $indexDir — ${bad.mkString("; ")}")
+        s"$op: incompatible index at $indexDir — ${bad.mkString("; ")}; " +
+          "call with the index's parameters or rebuild with buildIndex/fit")
     new Index(s, indexDir, stored, op)
   }
 
@@ -237,11 +242,11 @@ object IndexManifest {
       * Tables are written in the order given, and there is no manifest
       * step to certify an append, so a caller passes the table its
       * readers join back to first: `vectors` before LSH buckets or PQ
-      * codes, MinHash `toks` before `sigs`. Searches find candidates in
-      * the later table and inner-join them to the earlier one, so an
-      * append that dies between the writes leaves orphan rows that no
-      * search reaches. The other order would leave candidates the rerank
-      * join silently drops, a degraded top-k with no error. */
+      * codes. Searches find candidates in the later table and inner-join
+      * them to the earlier one, so an append that dies between the writes
+      * leaves orphan rows that no search reaches. The other order would
+      * leave candidates the rerank join silently drops, a degraded top-k
+      * with no error. */
     def append(tables: (String, DataFrame)*): Unit = {
       tables.foreach { case (name, df) =>
         if (relaxed(schemaOf(name)) != relaxed(df.schema)) refuse(name, df)

@@ -20,8 +20,10 @@ import org.apache.spark.sql.functions.col
   * vocabulary-sized count table, a pair list). Then one write + k cheap
   * reads beats k replays of scan+shuffle at every scale. When NOT to:
   * corpus-sized frames consumed twice by cheap readers — the write can
-  * cost more than the replay (measured for MinHash token hashes,
-  * MinHashDedup.nearDuplicates doc).
+  * cost more than the replay. An exploded (doc, token) table is the
+  * typical case; MinHashDedup avoids it by keeping each document's
+  * shingle hashes as an array on its signature row, so the one barrier
+  * it writes serves the band join and the rerank.
   *
   * EAGER-EXECUTION CONTRACT: `apply` runs the write job at
   * DataFrame-CONSTRUCTION time, so any registry entry that uses a

@@ -2,24 +2,33 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.IndexManifest
+import graft.core.{IndexManifest, Materialize, TempDirs}
 import graft.core.Tables._
+import graft.functions.MinHash
 
 /** MinHash + LSH near-duplicate detection — the 100 TB scale path for
   * Q31's exact token-Jaccard pairs (SURVEY.md §2B Q43).
   *
   * Pipeline (all equi-join shuffles, never a global cross join):
-  *   1. tokenize → distinct (doc, token) pairs
-  *   2. token → 64-bit hash (xxhash64), then NUM_HASHES universal-hash
-  *      permutations h_i(x) = (a_i·x + b_i) mod p, min per doc — computed
-  *      as one groupBy with NUM_HASHES min() aggregates (single shuffle)
-  *   3. signature → BANDS bands of ROWS_PER_BAND values; band signature =
+  *   1. sign: one row per document with its distinct shingles' 64-bit
+  *      hashes (`hs`, xxhash64) and the native `graft_minhash(hs)`
+  *      signature of NUM_HASHES universal-hash minima — no explode, no
+  *      shuffle ([[signatures]])
+  *   2. signature → BANDS bands of ROWS_PER_BAND values; band signature =
   *      xxhash64 of the band's values
-  *   4. candidate pairs = docs sharing any (block, band, signature)
+  *   3. candidate pairs = docs sharing any (block, band, signature)
   *      bucket — a self-equi-join on the bucket key. The (lang, source)
   *      block key mirrors Q31's blocking and bounds bucket sizes.
-  *   5. exact Jaccard rerank of candidates only (array_intersect on the
-  *      per-doc distinct token arrays), keep pairs ≥ threshold
+  *   4. exact Jaccard rerank of candidates only: |A∩B| =
+  *      size(array_intersect) of the two rows' `hs`, keep pairs ≥
+  *      threshold
+  *
+  * The signature rows are the whole index: a persisted index is one
+  * `sigs` table, and steps 2–4 read nothing else.
+  *
+  * Precondition: `doc_id` is unique in the input, as it is in
+  * `documents`. Rows are signed one by one, so two rows with one id would
+  * both enter the band join as the same document.
   *
   * Band shape 16×2 gives candidate probability 1-(1-j²)¹⁶ — ≈ 0.990 at
   * j = 0.5 and ≥ 0.9998 at j = 0.65, so recall vs the exact Q31 pairs
@@ -28,28 +37,16 @@ import graft.core.Tables._
   * Determinism: fixed seed → fixed (a_i, b_i); no RNG at runtime.
   */
 object MinHashDedup {
-  val NUM_HASHES = 32
+  val NUM_HASHES: Int = MinHash.NumHashes
   val BANDS = 16
   val ROWS_PER_BAND: Int = NUM_HASHES / BANDS
-  /** Mersenne prime 2^31 - 1 — universal-hash modulus. 31-bit operands
-    * keep h·a within a long (≤ 2^62), so the codegen'd integer math never
-    * overflows under ANSI mode (Spark 4 default). */
-  val PRIME: Long = (1L << 31) - 1
-
-  /** Deterministic hash-family coefficients from the shared fixed-seed
-    * SplitMix64 stream. */
-  private def coeffs(seed: Long, n: Int): Array[(Long, Long)] = {
-    val rng = new graft.core.Rng(seed)
-    Array.fill(n)((
-      (rng.nextLong() & Long.MaxValue) % PRIME | 1L,
-      (rng.nextLong() & Long.MaxValue) % PRIME))
-  }
 
   /** Word w-shingles of the text column as an array (w = 1 → tokens).
     * Docs shorter than w yield an empty array (sequence() would otherwise
-    * count downward on a negative span). */
+    * count downward on a negative span). A NULL text reads as "", so the
+    * array is never NULL. */
   private def shingles(shingleSize: Int) = {
-    val toks = filter(split(col("text"), " "), _ =!= "")
+    val toks = filter(split(coalesce(col("text"), lit("")), " "), _ =!= "")
     if (shingleSize <= 1) toks
     else when(size(toks) >= shingleSize,
       transform(
@@ -58,21 +55,28 @@ object MinHashDedup {
       .otherwise(array())
   }
 
-  /** Distinct (doc_id, block keys, shingle) rows. shingleSize = 1 gives
-    * plain tokens (what the exact Q31 oracle uses); w > 1 gives word
-    * w-shingles, the standard unit for web-scale near-dup where unigram
-    * overlap is too forgiving. */
-  def tokens(docs: DataFrame, shingleSize: Int = 1): DataFrame =
-    docs.select(col("doc_id"), col("lang"), col("source"),
-        explode(array_distinct(shingles(shingleSize))).as("tok"))
-      .filter(col("tok") =!= "")
-
-  /** One row per doc with the NUM_HASHES minhash signature values plus
-    * n_toks = |distinct shingle set| — the set size rides the SAME single
-    * shuffle as the signature (one extra count aggregate), so the exact
-    * rerank never has to re-aggregate or re-ship token arrays. */
-  def signatures(docs: DataFrame, seed: Long = 42L, shingleSize: Int = 1): DataFrame =
-    signaturesOfHashes(hashedTokens(docs, shingleSize), seed)
+  /** One row per doc: (doc_id, lang, source, mh_0..mh_{NUM_HASHES-1},
+    * n_toks, hs). `hs` holds the xxhash64 of each distinct shingle
+    * (shingleSize = 1 gives plain tokens, what the exact Q31 oracle uses;
+    * w > 1 gives word w-shingles, the standard unit for web-scale near-dup
+    * where unigram overlap is too forgiving), n_toks = |hs| and the mh_*
+    * values are `graft_minhash(hs)`. A doc with no shingle gets no row, so
+    * no Jaccard denominator n1 + n2 − |A∩B| can be 0. */
+  def signatures(docs: DataFrame, seed: Long = MinHash.DefaultSeed,
+      shingleSize: Int = 1): DataFrame = {
+    graft.GraftExtensions.ensureRegistered(docs.sparkSession)
+    val keys = Seq(col("doc_id"), col("lang"), col("source"))
+    val hashed = docs
+      .select(keys :+ transform(array_distinct(shingles(shingleSize)),
+        t => xxhash64(t)).as("hs"): _*)
+      .filter(size(col("hs")) > 0)
+    // graft_minhash is evaluated once per row in its own projection; the
+    // NUM_HASHES element reads project from it.
+    val signed = hashed.select(keys ++ Seq(
+      call_function("graft_minhash", col("hs"), lit(seed)).as("mh"), col("hs")): _*)
+    signed.select(keys ++ (0 until NUM_HASHES).map(i => col("mh")(i).as(s"mh_$i")) ++
+      Seq(size(col("hs")).cast("long").as("n_toks"), col("hs")): _*)
+  }
 
   /** (doc_id, block keys, band, band_sig) — LSH bucket keys. */
   def bandSignatures(sigs: DataFrame): DataFrame = {
@@ -152,133 +156,94 @@ object MinHashDedup {
 
   /** Full pipeline: candidates reranked with exact Jaccard ≥ threshold
     * over the same shingle unit the signatures used. Returns (id1 < id2,
-    * jaccard) rows as [[finishPairs]] does: unordered, so no caller may
-    * rely on row order (sort on (id1, id2) if you need it).
+    * jaccard) rows as [[pairs]] does: unordered, so no caller may rely on
+    * row order (sort on (id1, id2) if you need it).
     *
-    * The rerank never ships token ARRAYS (joining two array<string> sides
-    * per candidate pair costs wide rows and a per-pair O(|A|+|B|) array
-    * intersection). Instead: |A∩B| falls out of two
-    * equi-joins over the flat (doc, token) rows restricted to candidate
-    * docs followed by a partial-aggregable count, and |A|,|B| ride the
-    * signature shuffle (n_toks). Jaccard = i / (n1 + n2 − i). Pairs with
-    * empty intersection drop out of the count join — correct, since their
-    * Jaccard is 0 < threshold. */
-  def nearDuplicates(docs: DataFrame, threshold: Double = 0.5, seed: Long = 42L,
-      shingleSize: Int = 1): DataFrame = {
-    require(threshold > 0.0, "threshold must be positive (zero-overlap pairs are never emitted)")
-    // One-shot path: materialize ONLY the signature table (it feeds both
-    // band-join sides plus the size lookup — without materialization the
-    // 32-way min aggregation recomputes per consumer) and rerank from
-    // inline tokenization. Persisting the token-hash table too (what
-    // buildIndex does) costs a corpus-sized write that only pays off when
-    // the index is queried more than once — measured at sf0.1, the write
-    // is slower than the two extra tokenize passes it saves here.
-    val sigs = graft.core.Materialize(
-      signatures(docs, seed, shingleSize), "minhash-sigs")
-    // Pair list materialized too: the rerank reads it twice (hub fan-out
-    // count + join side) and a re-derivation would replay the whole band
-    // self-join; the pairs table is tiny next to the corpus.
-    val cands = graft.core.Materialize(
-      candidatePairs(bandSignatures(sigs)), "minhash-cands")
-    val toks = tokens(docs, shingleSize)
-      .select(col("doc_id"), xxhash64(col("tok")).as("h"))
-    finishPairs(intersectionCounts(cands, toks), sigs, threshold)
+    * The signature rows are materialized once: they feed both band-join
+    * sides and both rerank sides, and each consumer would otherwise
+    * re-read and re-sign the corpus. */
+  def nearDuplicates(docs: DataFrame, threshold: Double = 0.5,
+      seed: Long = MinHash.DefaultSeed, shingleSize: Int = 1): DataFrame = {
+    requirePositive(threshold)
+    pairs(Materialize(signatures(docs, seed, shingleSize), "minhash-sigs"), threshold)
   }
 
   /** Index-contract manifest fields for [[graft.core.IndexManifest]]: the
     * parameters that must match between build and every later
-    * append/search, or band buckets and signatures silently diverge. */
+    * append/search, or band buckets and signatures silently diverge.
+    * `layout` names the one-`sigs`-table layout; an index in another
+    * layout (a separate token table) is refused with a rebuild message. */
   private def manifestFields(seed: Long, shingleSize: Int): Map[String, String] =
-    Map("family" -> "minhash-lsh", "seed" -> seed.toString,
-      "shingle_size" -> shingleSize.toString,
+    readFields ++ Map("seed" -> seed.toString, "shingle_size" -> shingleSize.toString)
+
+  /** The fields every read checks: seed and shingle unit are baked into
+    * the stored rows, so only the family, band shape and layout are
+    * checkable there. */
+  private val readFields: Map[String, String] =
+    Map("family" -> "minhash-lsh", "layout" -> "doc-rows",
       "num_hashes" -> NUM_HASHES.toString, "bands" -> BANDS.toString)
 
-  /** Persist the minhash index: the 64-bit token-hash table (one tokenize
-    * pass — the only time the raw corpus is touched) and the signature
-    * table computed FROM the persisted hashes. A production 100 TB
-    * pipeline builds this once per corpus version; every near-dup query
-    * (banding, rerank, sizes) is answered entirely from the index.
-    * Persisting toks also collapses what used to be three tokenize passes
-    * per query (signatures + both rerank sides) into one. */
-  def buildIndex(docs: DataFrame, indexDir: String, seed: Long = 42L,
+  /** Persist the minhash index: the [[signatures]] rows, one per
+    * document, in one `sigs` table. This is the only time the raw corpus
+    * is touched; every near-dup query (banding, rerank, sizes) is
+    * answered from this table. */
+  def buildIndex(docs: DataFrame, indexDir: String, seed: Long = MinHash.DefaultSeed,
       shingleSize: Int = 1): Unit =
     IndexManifest.build(docs.sparkSession, indexDir,
         manifestFields(seed, shingleSize)) { b =>
-      val toks = b.write("toks", hashedTokens(docs, shingleSize))
-      b.write("sigs", signaturesOfHashes(toks, seed))
+      b.write("sigs", signatures(docs, seed, shingleSize))
     }
 
-  /** The index's token-hash rows (doc_id, lang, source, h = xxhash64(tok)). */
-  private def hashedTokens(docs: DataFrame, shingleSize: Int): DataFrame =
-    tokens(docs, shingleSize)
-      .select(col("doc_id"), col("lang"), col("source"),
-        xxhash64(col("tok")).as("h"))
-
-  /** Signature rows from [[hashedTokens]] rows: the universal-hash input
-    * is pmod(xxhash64(tok), PRIME), projected once, not re-evaluated
-    * inside each of the NUM_HASHES min-aggregates (aggregate exprs are
-    * not reliably CSE'd). */
-  private def signaturesOfHashes(hashedToks: DataFrame, seed: Long): DataFrame = {
-    val cs = coeffs(seed, NUM_HASHES)
-    val hashed = hashedToks.withColumn("hp", pmod(col("h"), lit(PRIME)))
-    val aggs: Seq[Column] = cs.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("hp") * lit(a) + lit(b), lit(PRIME))).as(s"mh_$i")
-    }.toSeq :+ count(lit(1)).as("n_toks")
-    hashed.groupBy("doc_id", "lang", "source").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Incremental update: tokenize + sign ONLY the new docs (same hash
-    * family — the index contract) and parquet-append both tables; the
-    * existing corpus is never re-read. New-vs-old near-dup pairs then
-    * fall out of the next pairsFromIndex call's band join. */
-  def appendToIndex(newDocs: DataFrame, indexDir: String, seed: Long = 42L,
-      shingleSize: Int = 1): Unit = {
+  /** Incremental update: sign ONLY the new docs (same hash family — the
+    * index contract) and parquet-append their rows; the existing corpus
+    * is never re-read. New-vs-old near-dup pairs then fall out of the
+    * next pairsFromIndex call's band join. */
+  def appendToIndex(newDocs: DataFrame, indexDir: String, seed: Long = MinHash.DefaultSeed,
+      shingleSize: Int = 1): Unit =
     // Fail fast on a family mismatch: appending rows signed with a
     // different seed/shingle unit would not error — it would just stop
     // old-vs-new pairs from ever sharing a band bucket.
-    val index = IndexManifest.open(newDocs.sparkSession, indexDir,
-      manifestFields(seed, shingleSize), "MinHashDedup.appendToIndex")
-    // Tokenize+hash the new docs ONCE: persist() the hashed frame so the
-    // toks append materializes it and the signature aggregation reads the
-    // cache instead of re-tokenizing (re-reading the whole appended toks
-    // table would be worse — it scans the old corpus files too).
-    val hashedToks = hashedTokens(newDocs, shingleSize).persist()
-    try index.append("toks" -> hashedToks,
-      "sigs" -> signaturesOfHashes(hashedToks, seed))
-    finally hashedToks.unpersist()
-  }
+    IndexManifest.open(newDocs.sparkSession, indexDir,
+        manifestFields(seed, shingleSize), "MinHashDedup.appendToIndex")
+      .append("sigs" -> signatures(newDocs, seed, shingleSize))
 
   /** Near-dup pairs served ENTIRELY from a persisted index: banding, the
-    * bucket self-join, the |A|,|B| size lookup and the exact-intersection
-    * rerank all read the stored tables — no job touches the raw corpus.
-    * Materializing sigs also means the band join's two sides share one
-    * scan instead of recomputing the signature aggregation per consumer
-    * (the broadcast side of a bucket join cannot reuse the stream side's
-    * exchange). Rows are unordered, as [[finishPairs]] returns them. */
+    * bucket self-join and the exact rerank all read the stored `sigs`
+    * table — no job touches the raw corpus. Rows are unordered, as
+    * [[pairs]] returns them. */
   def pairsFromIndex(s: SparkSession, indexDir: String,
       threshold: Double = 0.5): DataFrame = {
-    require(threshold > 0.0, "threshold must be positive (zero-overlap pairs are never emitted)")
-    // Banding layout must match what the stored sigs were built with (seed
-    // and shingle unit are baked into the stored tables, so only the
-    // family + band shape are checkable here).
-    val index = IndexManifest.open(s, indexDir,
-      Map("family" -> "minhash-lsh", "num_hashes" -> NUM_HASHES.toString,
-        "bands" -> BANDS.toString), "MinHashDedup.pairsFromIndex")
-    val sigs = index.table("sigs")
-    val cands = graft.core.Materialize(
-      candidatePairs(bandSignatures(sigs)), "minhash-cands")
-    // The intersection join runs on the raw 64-bit token hash, not the
-    // token string — the same distinct-per-doc rows, ~60% less shuffle
-    // width. xxhash64 collisions within one doc pair (~|A||B|/2^64 ≈
-    // 1e-15) are the standard exact-in-practice hash-join trade.
-    val toks = index.table("toks").select("doc_id", "h")
-    finishPairs(intersectionCounts(cands, toks), sigs, threshold)
+    requirePositive(threshold)
+    pairs(IndexManifest.open(s, indexDir, readFields, "MinHashDedup.pairsFromIndex")
+      .table("sigs"), threshold)
   }
 
-  /** Per-pair fan-out cap for the exact-intersection rerank. A hub doc
-    * appearing in ~10⁴ candidate pairs concentrates ALL of its pair rows ×
-    * token rows in the one task owning its id1 hash — the same straggler
-    * class candidatePairs was salted against, one join later. */
+  private def requirePositive(threshold: Double): Unit =
+    require(threshold > 0.0, "threshold must be positive (zero-overlap pairs are never emitted)")
+
+  /** The one pair pipeline over signature rows: the band self-join, a
+    * barrier that writes the candidates and counts them in the same job,
+    * and the exact rerank. The barrier's count decides whether the rerank
+    * needs its hub salting at all ([[intersections]]). The (id1 < id2,
+    * jaccard) rows are NOT sorted: no caller may rely on row order (sort
+    * on (id1, id2) if you need it). A terminal sort would cost every pair
+    * read a range-partitioning exchange plus its sampling job, and at
+    * scale range-shuffle the whole pair set. */
+  private def pairs(sigs: DataFrame, threshold: Double): DataFrame = {
+    val (cands, n) = Materialize.observed[Long](candidatePairs(bandSignatures(sigs)),
+      TempDirs.create("graft-mat-minhash-cands"), count(lit(1)))
+    intersections(cands, n, sigs)
+      .select(col("id1"), col("id2"),
+        round(col("inter").cast("double") /
+          (col("n1") + col("n2") - col("inter")), 6).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** Per-document fan-out cap for the exact rerank. A hub doc appearing
+    * in ~10⁴ candidate pairs concentrates ALL of its pair rows in the one
+    * task owning its id1 hash, each row carrying its shingle array — the
+    * same straggler class candidatePairs was salted against, one join
+    * later. */
   val DEFAULT_MAX_PAIR_FANOUT = 4096
 
   /** Docs whose candidate fan-out (pairs as id1) exceeds the cap, with
@@ -300,46 +265,40 @@ object MinHashDedup {
         pmod(xxhash64(col("id2")), coalesce(col("gs"), lit(1))).cast("int"))
       .select("id1", "id2", "salt")
 
-  /** |A∩B| per candidate pair via two equi-joins over flat (doc, hash)
-    * rows — skew-hardened on the id1 side: hub docs' token rows are
-    * replicated gs ways (non-hub docs: once, salt 0 — the common case pays
-    * one broadcast left join and an explode of a 1-element range) and the
-    * pair side is salted to match, so no task receives more than ~cap
-    * pairs × tokens for any one doc. Join output is row-for-row identical
-    * to the unsalted shape (asserted in MinHashRerankSkewSpec). The second
-    * join keys on (id2, h) — the token hash disperses it, no salting
-    * needed. `cands` is consumed twice (fan-out count + join side), so
-    * callers pass a materialized frame. */
-  private[graft] def intersectionCounts(cands: DataFrame, toks: DataFrame,
+  /** (id1, id2, inter = |A∩B|, n1, n2) per candidate pair: each pair
+    * joins the (doc_id, n_toks, hs) rows of `sigs` on id1 and on id2, and
+    * |A∩B| is the size of the two `hs` arrays' intersection.
+    *
+    * The id1 join is hub-salted: a hub doc's one row is replicated gs
+    * ways and its pairs spread over the copies ([[saltedPairs]]), so no
+    * task receives more than ~cap pairs for any one doc. A doc's fan-out
+    * is at most `nCands`, the candidate count, so when `nCands` ≤ the cap
+    * the hub table is empty by construction and the plan joins on id1
+    * alone, with no fan-out aggregate. The counts are identical on both
+    * branches and for every cap (asserted in MinHashRerankSkewSpec and
+    * MinHashRerankPropertySpec). The id2 side is dispersed by the pairs'
+    * own spread and needs no salt. `cands` is read twice on the salted
+    * branch (fan-out count + join side), so callers pass a materialized
+    * frame. */
+  private[graft] def intersections(cands: DataFrame, nCands: Long, sigs: DataFrame,
       maxFanout: Int = DEFAULT_MAX_PAIR_FANOUT): DataFrame = {
-    val hubs = hubFanouts(cands, maxFanout)
-    val toksSalted = toks
-      .join(broadcast(hubs), col("doc_id") === col("hub_id"), "left")
-      .withColumn("salt",
-        explode(sequence(lit(0), coalesce(col("gs"), lit(1)) - 1)))
-      .select(col("doc_id").as("id1"), col("salt"), col("h"))
-    saltedPairs(cands, hubs)
-      .join(toksSalted, Seq("id1", "salt"))
-      .join(toks.select(col("doc_id").as("id2"), col("h")), Seq("id2", "h"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
-  }
-
-  /** Jaccard = i / (n1 + n2 − i) from intersection counts plus the n_toks
-    * sizes riding the signature table, then the threshold filter. The
-    * (id1, id2, jaccard) rows are NOT sorted: no caller may rely on row
-    * order (sort on (id1, id2) if you need it). A terminal sort would cost
-    * every pair read a range-partitioning exchange plus its sampling job,
-    * and at scale range-shuffle the whole pair set. */
-  private def finishPairs(inter: DataFrame, sigs: DataFrame,
-      threshold: Double): DataFrame = {
-    val sizes = sigs.select(col("doc_id"), col("n_toks"))
-    inter
-      .join(sizes.select(col("doc_id").as("id1"), col("n_toks").as("n1")), "id1")
-      .join(sizes.select(col("doc_id").as("id2"), col("n_toks").as("n2")), "id2")
+    def side(k: Int) = sigs.select(col("doc_id").as(s"id$k"),
+      col("n_toks").as(s"n$k"), col("hs").as(s"hs$k"))
+    val withId1 =
+      if (nCands <= maxFanout) cands.select("id1", "id2").join(side(1), "id1")
+      else {
+        val hubs = hubFanouts(cands, maxFanout)
+        val copies = side(1)
+          .join(broadcast(hubs), col("id1") === col("hub_id"), "left")
+          .withColumn("salt",
+            explode(sequence(lit(0), coalesce(col("gs"), lit(1)) - 1)))
+          .drop("hub_id", "gs")
+        saltedPairs(cands, hubs).join(copies, Seq("id1", "salt"))
+      }
+    withId1.join(side(2), "id2")
       .select(col("id1"), col("id2"),
-        round(col("inter").cast("double") /
-          (col("n1") + col("n2") - col("inter")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+        size(array_intersect(col("hs1"), col("hs2"))).as("inter"),
+        col("n1"), col("n2"))
   }
 
   /** Registry entry (rows-only driver check; recall vs Q31 in the spec). */

@@ -34,8 +34,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
   // NULL, never a plausible similarity, when the input is outside the
   // contract: arrays of different lengths, or a null element in either
   // array (a primitive read of a null slot returns undefined content,
-  // typically 0.0). Same rule as graft_dot. Null-free equal-length inputs
-  // accumulate exactly as before.
+  // typically 0.0). Same rule as graft_dot. A zero denominator (a
+  // zero-norm or empty array) is NULL too: 0/0 would be NaN, which a
+  // descending sort ranks above every similarity, while NULL sorts last.
+  // Every other input accumulates exactly as before.
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -49,7 +51,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val xi = x.getDouble(i); val yi = y.getDouble(i)
       dot += xi * yi; na += xi * xi; nb += yi * yi; i += 1
     }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    val norms = math.sqrt(na) * math.sqrt(nb)
+    if (norms == 0.0) null else dot / norms
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -61,6 +64,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val xi = ctx.freshName("xi")
       val yi = ctx.freshName("yi")
+      val norms = ctx.freshName("norms")
       s"""
         int $n = $a.numElements();
         if ($n != $b.numElements()) {
@@ -76,7 +80,14 @@ case class CosineSimilarity(left: Expression, right: Expression)
             double $yi = $b.getDouble($i);
             $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
           }
-          ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+          if (!${ev.isNull}) {
+            double $norms = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
+            if ($norms == 0.0) {
+              ${ev.isNull} = true;
+            } else {
+              ${ev.value} = $dot / $norms;
+            }
+          }
         }
       """
     })

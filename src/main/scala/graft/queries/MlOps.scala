@@ -135,7 +135,6 @@ object MlOps {
     // totals (bucket = first md5 byte) roll into a 256-row offset table
     // whose window is bounded, then each bucket scans independently.
     "q_weighted_sample" -> { (s, dir) =>
-      val k = lit(SampleK.toLong)
       val w = t(s, dir, "documents")
         .select(col("doc_id"), col("n_chars").cast("long").as("wt"),
           md5(col("doc_id").cast("string")).as("h"))

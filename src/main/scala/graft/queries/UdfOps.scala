@@ -30,7 +30,6 @@ object UdfOps {
     // Q36b — typed Aggregator (UDAF): priority-weighted mean order price
     // per status. Weight = 6 - priority digit (URGENT=5 … LOW=1).
     "q36_udaf_weighted_mean" -> { (s, dir) =>
-      import s.implicits._
       val wm = udaf(Udfs.WeightedMean)
       t(s, dir, "orders")
         .select(col("o_orderstatus"), col("o_totalprice"),

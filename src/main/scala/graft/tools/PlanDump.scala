@@ -36,7 +36,7 @@ object PlanDump {
       "q_simhash" -> "One corpus scan, one per-doc exchange: the 48 bit votes are ONE native graft_simhash aggregate (partial/final ObjectHashAggregate over the token hashes), not 48 sum columns",
       "q_asof_left" -> "LEFT outer as-of: same merge exec, right side null-extended",
       "q_hll_union" -> "Mergeable-sketch rollup: per-group HLL sketches, union re-merges sketch column (objHashAggregate)",
-      "q43_minhash_lsh" -> "Salted LSH dedup: window bucket-counts ride the band exchange (no count-join); hot buckets split into bounded triangle cells; rerank joins hub-salted with broadcast fan-out table; pairs end at the threshold filter (no global sort, no range exchange)",
+      "q43_minhash_lsh" -> "Salted LSH dedup: window bucket-counts ride the band exchange (no count-join); hot buckets split into bounded triangle cells; the exact rerank joins the signature rows on id1 and id2 and intersects their shingle-hash arrays (the hub fan-out table exists only when the candidate count exceeds the cap); pairs end at the threshold filter (no global sort, no range exchange)",
       "q_ann_lsh" -> "Radius-2 multi-probe LSH search from the persisted bucket table: fixed 79-lookup/band probe fan-out on the query side only, windowed top-k rerank; rows end at the per-query rank (no global sort, no range exchange)",
       "q_ann_ivf" -> "IVF search at the fixed production nprobe=16: broadcast centroid probe; the whole assigned table is scanned (broadcast at this size) and equi-joined on the probed cell ids, so only the exact rerank is cell-restricted; windowed top-k per query, no global sort",
       "q_span_dedup" -> "Cross-doc span ownership: window min over the span partition (one exchange, ONE corpus scan — no groupBy+join-back), then a partial-aggregable per-doc rollup; never doc×doc",

@@ -30,7 +30,6 @@ class AqeSkewJoinSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
 
-      import spark.implicits._
       // 50k rows on one hot key vs 5k spread over 100 keys.
       val left = spark.range(50000).select(lit(0L).as("k"), col("id").as("v"))
         .union(spark.range(5000).select((col("id") % 100 + 1).as("k"), col("id").as("v")))

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
-import graft.plans.{AsOfJoin, AsOfJoinExec}
+import graft.plans.AsOfJoin
 
 /** Custom as-of operator: handcrafted interleaved timelines with known
   * answers, physical-plan shape, and the inner-join drop semantics. */

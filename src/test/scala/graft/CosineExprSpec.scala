@@ -77,6 +77,26 @@ class CosineExprSpec extends SparkSpec {
     }
   }
 
+  test("a zero-norm or empty vector yields null and ranks below an exact match") {
+    GraftExtensions.ensureRegistered(spark)
+    val df = Seq(
+      (1L, Seq(1.0, 0.0), 10L, Seq(0.0, 0.0)),
+      (1L, Seq(1.0, 0.0), 20L, Seq(1.0, 0.0)),
+      (2L, Seq.empty[Double], 30L, Seq.empty[Double])).toDF("qid", "q", "cand_id", "v")
+    def ranked(in: org.apache.spark.sql.DataFrame) =
+      graft.similarity.AnnIvf.topKPerQuery(in.select(col("qid"), col("cand_id"),
+          call_function("graft_cosine", col("q"), col("v")).as("cos_sim")), 2)
+        .collect().map(r => (r.getLong(1), r.get(2), r.getInt(3))).sortBy(_._1)
+    val dir = graft.core.TempDirs.create("graft-cosspec-zero")
+    df.write.mode("overwrite").parquet(dir)
+    // Interpreted (local relation) and generated (parquet scan) paths.
+    Seq(ranked(df), ranked(spark.read.parquet(dir))).foreach { got =>
+      // A descending sort ranks NaN above 1.0 but NULL last.
+      assert(got.toSeq == Seq((10L, null, 2), (20L, 1.0, 1), (30L, null, 1)),
+        got.mkString(", "))
+    }
+  }
+
   test("array<float> input fails analysis naming both argument types") {
     GraftExtensions.ensureRegistered(spark)
     val df = Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f), Array(1.0, 2.0)))

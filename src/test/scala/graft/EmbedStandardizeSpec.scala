@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.queries.SimilarityOps
 
 /** q_embed_standardize invariants: the per-(label, dim) class means,

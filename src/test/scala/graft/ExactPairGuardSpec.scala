@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.queries.TextOps
 
 /** The exact pair tier's block-size contract (VERDICT r9 item 2): q31 and

@@ -17,7 +17,7 @@ class GraftExtensionsSpec extends SparkSpec {
     // Order-insensitive set compare: every native function the engine
     // registers, and nothing else.
     assert(ExtensionsAccess.registeredFunctionNames(ext).toSet
-      == Set("graft_cosine", "graft_dot", "graft_simhash"))
+      == Set("graft_cosine", "graft_dot", "graft_simhash", "graft_minhash"))
     assert(ExtensionsAccess.plannerStrategies(ext, spark)
       == Seq(graft.plans.AsOfJoinStrategy))
   }

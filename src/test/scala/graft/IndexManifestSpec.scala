@@ -188,14 +188,14 @@ class IndexManifestSpec extends SparkSpec {
     import spark.implicits._
     val idx = TempDirs.create("graft-mh-append-schema")
     MinHashDedup.buildIndex(docsFixture, idx, seed = 42L)
-    def files = Seq("toks", "sigs").map(t => new java.io.File(s"$idx/$t").list().toSet)
+    def files = new java.io.File(s"$idx/sigs").list().toSet
     val before = files
     val intIds = Seq((5, "en", "web", "the quick brown fox jumps over the lazy dogs"))
       .toDF("doc_id", "lang", "source", "text")
     val ex = intercept[IllegalStateException] {
       MinHashDedup.appendToIndex(intIds, idx, seed = 42L)
     }
-    Seq("'toks'", "doc_id BIGINT", "doc_id INT").foreach(w =>
+    Seq("'sigs'", "doc_id BIGINT", "doc_id INT").foreach(w =>
       assert(ex.getMessage.contains(w), s"message lacks $w: ${ex.getMessage}"))
     assert(files == before, "a refused append must write nothing")
     // Nullability alone is no mismatch: the same docs read back from
@@ -218,6 +218,28 @@ class IndexManifestSpec extends SparkSpec {
     Seq("'assigned'", "ARRAY<DOUBLE>", "ARRAY<FLOAT>").foreach(w =>
       assert(ex2.getMessage.contains(w), s"message lacks $w: ${ex2.getMessage}"))
     assert(new java.io.File(s"$ivf/assigned").list().toSet == assignedBefore)
+  }
+
+  test("a MinHash index with a separate token table is refused with a rebuild message") {
+    // The layout before one row per document: a `toks` (doc_id, lang,
+    // source, h) table beside a `sigs` table without `hs`, under a
+    // manifest with no `layout` field. Both entry points must refuse it
+    // at open, before any read could fail on the missing column.
+    val idx = TempDirs.create("graft-mh-toks-layout")
+    val sigs = MinHashDedup.signatures(docsFixture)
+    IndexManifest.build(spark, idx, Map("family" -> "minhash-lsh", "seed" -> "42",
+        "shingle_size" -> "1", "num_hashes" -> "32", "bands" -> "16")) { b =>
+      b.write("toks", sigs.select(col("doc_id"), col("lang"), col("source"),
+        explode(col("hs")).as("h")))
+      b.write("sigs", sigs.drop("hs"))
+    }
+    Seq[() => Any](
+        () => MinHashDedup.pairsFromIndex(spark, idx),
+        () => MinHashDedup.appendToIndex(docsFixture, idx)).foreach { call =>
+      val ex = intercept[IllegalStateException](call())
+      assert(ex.getMessage.contains("layout: missing from manifest") &&
+        ex.getMessage.contains("rebuild with buildIndex"), ex.getMessage)
+    }
   }
 
   test("search refuses an index whose manifest predates table schemas") {

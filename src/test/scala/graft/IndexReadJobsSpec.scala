@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, MapType, Metadata, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, MapType, Metadata, StructType}
 import graft.core.{IndexManifest, Materialize, TempDirs}
 import graft.dedup.MinHashDedup
 import graft.similarity.{AnnIvf, AnnIvfPq, AnnLsh, AnnPq}
@@ -103,6 +103,18 @@ class IndexReadJobsSpec extends SparkSpec {
       .toSet == Set((1L, 2L)))
   }
 
+  test("one pairsFromIndex read runs 7 jobs, building and collecting") {
+    val idx = TempDirs.create("graft-mh-collect-jobs")
+    MinHashDedup.buildIndex(docs, idx)
+    val (rows, jobs) = JobCount(spark)(MinHashDedup.pairsFromIndex(spark, idx).collect())
+    // The candidate barrier's write (band self-join, its count observed
+    // by the same job) and the rerank collect, which joins the signature
+    // rows twice. Below the fan-out cap there is no hub aggregate, so an
+    // extra job here is an extra pass over the index.
+    assert(jobs == 7, s"one pairsFromIndex read ran $jobs jobs")
+    assert(rows.length == 1)
+  }
+
   /** The Catalyst schema Spark stored in a parquet part file's footer. */
   private def footerSchema(tableDir: String): StructType = {
     val part = new java.io.File(tableDir).listFiles()
@@ -130,7 +142,7 @@ class IndexReadJobsSpec extends SparkSpec {
     val e = PlantedEmbeddings.df(spark)
     def dir(f: String) = TempDirs.create(s"graft-ddl-$f")
     val built = Seq(
-      ("minhash", Set("toks", "sigs"), { (d: String) => MinHashDedup.buildIndex(docs, d) }),
+      ("minhash", Set("sigs"), { (d: String) => MinHashDedup.buildIndex(docs, d) }),
       ("ivf", Set("centroids", "assigned"), { (d: String) => AnnIvf.fit(e, d, k = 8) }),
       ("lsh", Set("vectors", "buckets"), { (d: String) => AnnLsh.buildIndex(e, d) }),
       ("pq", Set("vectors", "codebook", "codes"), { (d: String) => AnnPq.fit(e, d) }),
@@ -159,6 +171,7 @@ class IndexReadJobsSpec extends SparkSpec {
     def field(family: String, table: String, col: String) =
       StructType.fromDDL(built.find(_._1 == family).get._4(s"table.$table"))(col)
     assert(!field("minhash", "sigs", "n_toks").nullable)
+    assert(field("minhash", "sigs", "hs").dataType == ArrayType(LongType))
     assert(!field("pq", "codebook", "code").nullable)
     assert(field("ivf", "assigned", "emb").dataType == ArrayType(DoubleType))
     assert(field("ivfpq", "codebook", "cw").dataType == ArrayType(DoubleType))

@@ -50,7 +50,6 @@ class LayoutGraphSpec extends SparkSpec {
   }
 
   test("zorder cells stay bounded rectangles past the 16-bit key domain") {
-    import spark.implicits._
     // Keys far beyond 65535: under the old bare mask, k and k+65536
     // collide into the same cell and a cell's min/max rectangle spans
     // ~the whole domain; the max-scaled quantizer instead aliases only

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import graft.core.Tables
 import graft.dedup.MinHashDedup
 import graft.queries.TextOps
@@ -34,19 +34,14 @@ class MinHashDedupSpec extends SparkSpec {
     val idx = graft.core.TempDirs.create("graft-minhash-idx")
     MinHashDedup.buildIndex(docs, idx)
     val fromIdx = MinHashDedup.pairsFromIndex(spark, idx)
-    // Plan-level no-refit proof: the candidate/banding side scans the
-    // persisted signature table — the 32-way min signature aggregation
-    // (32 mh_* min() columns) must NOT appear in the search plan (the
-    // only aggregates left are the rerank count and dedup).
+    // Plan-level no-refit proof: the rerank reads the persisted signature
+    // rows, and signing (the graft_minhash kernel over the shingle split)
+    // happens only in buildIndex, so the index-read plan holds neither
+    // (no corpus scan at all).
     val plan = fromIdx.queryExecution.executedPlan.toString
     assert(plan.contains(idx), s"pairs plan must scan the index dir:\n${plan.take(2000)}")
-    // The signature fit is the only place the min(pmod(...)) universal-hash
-    // aggregation lives, and tokenization only happens in buildIndex; the
-    // index-read plan must be free of both (no corpus scan at all). Bare
-    // pmod IS expected here — the skew-salting of the bucket self-join
-    // hashes doc_id into its split cell with pmod(xxhash64(doc_id), g).
-    assert(!plan.contains("min(pmod"), "signature fit aggregation leaked into the index-read path")
-    assert(!plan.contains("explode(split"), "corpus re-tokenization leaked into the index-read path")
+    assert(!plan.contains("graft_minhash"), "signing leaked into the index-read path")
+    assert(!plan.contains("split("), "corpus re-tokenization leaked into the index-read path")
     val a = fromIdx.select("id1", "id2").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = MinHashDedup.nearDuplicates(docs)
@@ -78,6 +73,47 @@ class MinHashDedupSpec extends SparkSpec {
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(after.contains((0L, 99999L)), s"appended duplicate not paired: ${after diff before}")
     assert(before.subsetOf(after), "append must not lose existing pairs")
+  }
+
+  test("after k appends pairsFromIndex equals a fresh build and the exact Jaccard") {
+    import spark.implicits._
+    val docs = Tables.t(spark, sf, "documents").select("doc_id", "lang", "source", "text")
+    // Planted near-duplicates: docs 0..11 again with their last token
+    // dropped, each under an id that lands in a later slice than its
+    // original. Two docs with no token must get no signature row.
+    val planted = docs.filter(col("doc_id") < 12).as[(Long, String, String, String)]
+      .collect().map { case (id, lang, src, text) =>
+        (10001L + id, lang, src, Option(text.split(" ").init.mkString(" "))) }
+    val all = docs.union((planted.toSeq ++ Seq((20000L, "en", "src0", Some("")),
+        (20001L, "en", "src0", Option.empty[String]))).toDF(docs.columns.toIndexedSeq: _*))
+    val k = 3
+    def slice(i: Int) = all.filter(pmod(col("doc_id"), lit(k + 1)) === i)
+    val idx = graft.core.TempDirs.create("graft-minhash-k-appends")
+    MinHashDedup.buildIndex(slice(0), idx)
+    (1 to k).foreach(i => MinHashDedup.appendToIndex(slice(i), idx))
+    val fresh = graft.core.TempDirs.create("graft-minhash-k-fresh")
+    MinHashDedup.buildIndex(all, fresh)
+    def read(dir: String) = MinHashDedup.pairsFromIndex(spark, dir).collect()
+      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val appended = read(idx)
+    assert(appended == read(fresh), "k appends must equal one fresh build")
+    // Plain-Scala exact Jaccard over the same blocks and tokens.
+    val rows = all.as[(Long, String, String, Option[String])].collect()
+    val toks = rows.map { case (id, _, _, t) =>
+      id -> t.getOrElse("").split(" ").filter(_.nonEmpty).toSet }.toMap
+    val block = rows.map { case (id, lang, src, _) => id -> (lang, src) }.toMap
+    def jaccard(a: Long, b: Long) = {
+      val inter = (toks(a) intersect toks(b)).size
+      BigDecimal(inter.toDouble / (toks(a).size + toks(b).size - inter))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    appended.foreach { case ((a, b), j) =>
+      assert(a < b && block(a) == block(b), s"pair ($a, $b) crosses blocks")
+      assert(j == jaccard(a, b) && j >= 0.5, s"pair ($a, $b): $j vs exact ${jaccard(a, b)}")
+    }
+    (0L until 12L).foreach(i =>
+      assert(appended.contains((i, 10001L + i)), s"planted pair ($i, ${10001L + i}) missed"))
+    assert(spark.read.parquet(s"$idx/sigs").count() == toks.count(_._2.nonEmpty))
   }
 
   test("2-gram shingles tighten similarity vs unigrams") {

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.dedup.MinHashDedup
 
-/** Planted-skew hardening for the LSH bucket self-join (round-3 judge
-  * "What's missing #4"): one (lang, source) block holding a degenerate
-  * hot bucket — half the corpus sharing every band signature — must not
-  * concentrate B²/2 pair generation in one task. The salted triangle
+/** Planted-skew hardening for the LSH bucket self-join: one (lang, source)
+  * block holding a degenerate hot bucket — half the corpus sharing every
+  * band signature — must not concentrate B²/2 pair generation in one
+  * task. The salted triangle
   * split bounds per-cell membership while producing the IDENTICAL pair
   * set (recall unchanged by construction, asserted as set equality). */
 class MinHashSkewSpec extends SparkSpec {

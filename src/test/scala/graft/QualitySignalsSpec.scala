@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.queries.TextOps
 
 /** Invariants tying the round-7 corpus-signal operators to ground truth

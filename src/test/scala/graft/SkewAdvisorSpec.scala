@@ -42,7 +42,6 @@ class SkewAdvisorSpec extends SparkSpec {
   }
 
   test("a live one-hot-key aggregation is flagged through the recorded run") {
-    import spark.implicits._
     val tuner = new Tuner(graft.core.TempDirs.create("graft-skew-store"), "skew")
     // 200k rows, 99% on one key; 8 reduce partitions with AQE coalescing
     // disabled so the hot partition stays visible to the task metrics.

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions._
 import graft.core.TempDirs
 import graft.tuner._
 

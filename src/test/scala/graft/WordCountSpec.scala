@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.queries.TextOps
 
 /** Ports the reference's end-to-end WordCount test
